@@ -583,7 +583,15 @@ def _mips_probe_order(meta: dict, centroids) -> "callable":
     co, denom = _mips_aug_denoms(meta["dot_route"], centroids)
 
     def order(q) -> list:
-        score = (co @ np.asarray(q, dtype=np.float64)) / denom
+        q = np.asarray(q, dtype=np.float64)
+        # rescale q by a power of two so its largest component lies in
+        # [0.5, 1): exact, rank-preserving, and it keeps a tiny query's
+        # products out of the subnormal range, where underflow would
+        # make the ranking depend on the query's magnitude
+        peak = float(np.max(np.abs(q), initial=0.0))
+        if 0.0 < peak < np.inf:
+            q = np.ldexp(q, -np.frexp(peak)[1])
+        score = (co @ q) / denom
         return [int(b) for b in np.argsort(-score, kind="stable")]
 
     return order

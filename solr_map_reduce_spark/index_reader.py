@@ -4265,61 +4265,22 @@ class SearchIndex:
 
     # -- C3: delete-by-query as filtered rewrite -----------------------
     def delete_where(self, condition: F.Column, out_path: str) -> "SearchIndex":
-        """Rewrite the artifact without rows matching ``condition`` (the
-        reference's build-time semantics: deletes are rebuild/merge-time
-        rewrites, SURVEY §2 C3/§7 hard-part 5).  Keeps layout and manifest.
+        """A copy of the artifact at ``out_path`` without rows matching
+        ``condition`` (the reference's build-time semantics: deletes are
+        rebuild/merge-time rewrites, SURVEY §2 C3/§7 hard-part 5): the
+        lock-consistent copy ``backup`` makes, then the in-place
+        ``IndexJob.delete_where`` on it — so the result keeps the layout,
+        the untouched shards' files and every serving sidecar, maintained
+        exactly as an in-place delete maintains them.
 
         SQL DELETE NULL semantics (same as ``IndexJob.delete_where``): a row
         where the predicate is NULL does NOT match and is kept."""
-        survivors = self.df().filter(~F.coalesce(condition, F.lit(False)))
-        (
-            survivors.repartition(self.shards, F.col(SHARD_COL))
-            .sortWithinPartitions(SHARD_COL, self.unique_key)
-            .write.mode("overwrite")
-            .partitionBy(SHARD_COL)
-            .parquet(out_path)
+        from solr_map_reduce_spark.indexing import _copy_artifact, _job_for
+
+        manifest, _meta = _copy_artifact(
+            self.path, out_path, self.spark, "delete_where"
         )
-        from solr_map_reduce_spark.fs import get_fs
-        from solr_map_reduce_spark.fs import join as fs_join
-
-        import uuid
-
-        fs = get_fs(out_path, self.spark)
-        out_manifest = dict(self.manifest)
-        out_manifest["generation"] = int(out_manifest.get("generation", 0)) + 1
-        out_manifest["generation_id"] = uuid.uuid4().hex
-        fs.write_text(
-            fs_join(out_path, MANIFEST), json.dumps(out_manifest, indent=2)
-        )
-        # sidecars: a pre-existing key-range file at out_path would name
-        # dead segments (false negatives) — drop it, then rebuild when the
-        # SOURCE artifact carried one, so the result keeps pruned lookups
-        from solr_map_reduce_spark.key_ranges import (
-            drop_key_ranges,
-            write_key_ranges,
-        )
-
-        drop_key_ranges(self.spark, out_path)
-        if self._load_key_ranges():
-            write_key_ranges(self.spark, out_path)
-        # serving structures the source carried must not silently vanish
-        # from the result: term blooms stay a correct SUPERSET under
-        # deletion (copy the bitmap file); BM25 stats change globally, so
-        # rebuild them over the survivors (this path already rewrites the
-        # whole artifact, so a stats pass is within its cost class — the
-        # in-place IndexJob.delete_where uses the O(touched) delta instead)
-        from solr_map_reduce_spark.fs import get_fs as _get_fs
-        from solr_map_reduce_spark.search_stats import write_search_stats
-        from solr_map_reduce_spark.term_blooms import BLOOMS
-
-        src_fs = _get_fs(self.path, self.spark)
-        if src_fs.exists(fs_join(self.path, BLOOMS)):
-            fs.write_text(
-                fs_join(out_path, BLOOMS),
-                src_fs.read_text(fs_join(self.path, BLOOMS)),
-            )
-        if self._load_stats():
-            write_search_stats(self.spark, out_path)
+        _job_for(manifest).delete_where(self.spark, out_path, condition)
         return SearchIndex.open(self.spark, out_path)
 
     # -- C7 ------------------------------------------------------------

@@ -32,17 +32,21 @@ coalescing keeps the writer from producing a small-files mess.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
+from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.fs import join as fs_join
 from solr_map_reduce_spark.operators import dedup as dedup_ops
 from solr_map_reduce_spark.operators.keys import generate_sequence_key, require_unique_key
 from solr_map_reduce_spark.operators.routing import with_shard_id
-from solr_map_reduce_spark.schema import IndexSchema
+from solr_map_reduce_spark.schema import Field, IndexSchema
 
 SHARD_COL = "shard"
 MICRO_COL = "_micro_shard"
@@ -105,9 +109,9 @@ class IndexJobConfig:
     term_blooms: bool = False
     # Stored BM25 statistics + term dictionary (_SEARCH_STATS.json +
     # _vocab/): bm25 queries serve from build-time structures instead of a
-    # per-query stats pass (search_stats.py); invalidated on mutation.
+    # per-query stats pass (search_stats.py); delta-maintained on mutation.
     search_stats: bool = False
-    # Per-segment key-range sidecar (_KEY_RANGES.json): point lookups read
+    # Per-segment key-range sidecar (_key_ranges/): point lookups read
     # only the segment files whose [min, max] admits the key — the Lucene
     # per-segment term-dictionary cost model (key_ranges.py).  One extra
     # column-pruned pass over the key column at build time.
@@ -224,12 +228,12 @@ class IndexJob:
         return self.resolve(self.route(df, generate_keys_from)).drop(MICRO_COL)
 
     # -- physical write ----------------------------------------------------
-    def _manifest(self, written, path: str) -> dict:
+    def _manifest_body(self, written: DataFrame) -> dict:
         """``written`` is the DataFrame as it went to the writer (shard col
         included); its full schema is persisted so an empty artifact — zero
         input rows write no parquet files — stays openable."""
         cfg = self.config
-        manifest = {
+        return {
             "shards": cfg.shards,
             "unique_key": cfg.schema.unique_key,
             "dedup": cfg.dedup,
@@ -239,50 +243,42 @@ class IndexJob:
             "analyzed": self._analyzed_manifest(written.columns),
             "schema_json": written.schema.json(),
         }
-        fs = get_fs(path, written.sparkSession)
-        # monotonic generation + unique id: live handles detect a mutated
-        # artifact by manifest CONTENT, immune to mtime granularity (two
-        # mutations in one ms quantum) and to identical-content rewrites
-        prev_gen = 0
-        try:
-            if fs.exists(fs_join(path, MANIFEST)):
-                prev_gen = int(
-                    json.loads(fs.read_text(fs_join(path, MANIFEST))).get(
-                        "generation", 0
-                    )
-                )
-        except Exception:
-            prev_gen = 0  # unreadable/torn: the fresh uuid still differs
-        import uuid
 
-        manifest["generation"] = prev_gen + 1
-        manifest["generation_id"] = uuid.uuid4().hex
-        fs.write_text(fs_join(path, MANIFEST), json.dumps(manifest, indent=2))
-        return manifest
-
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> dict:
-        """Write an already-resolved DataFrame as the sharded, key-sorted
-        artifact (A17/A18/A21).
-
-        ``repartition(shards, shard)`` + ``sortWithinPartitions(shard, key)``
-        + ``partitionBy(shard)``: each output task owns whole shard
-        directories and writes key-sorted row groups — parquet min/max stats
-        on the key then act like the term index for point lookups.
-        """
-        cfg = self.config
-        key = cfg.schema.unique_key
-        if MICRO_COL in df.columns:
-            df = df.drop(MICRO_COL)
-        writer_df = (
-            df.repartition(cfg.shards, F.col(SHARD_COL))
-            .sortWithinPartitions(SHARD_COL, key)
+    def _manifest(self, written: DataFrame, path: str) -> dict:
+        return _commit_manifest(
+            get_fs(path, written.sparkSession), path, self._manifest_body(written)
         )
-        writer = writer_df.write.mode(mode).partitionBy(SHARD_COL)
+
+    def _write_shards(
+        self, df: DataFrame, path: str, partitions: int | None = None,
+        mode: str = "overwrite",
+    ) -> None:
+        """The one artifact writer: every build and every shard rewrite
+        goes through here, so no path drifts off the artifact's codec or
+        file-size bound.  ``partitions`` hash-partitions on the shard and
+        key-sorts each task first (``_write_sorted_dedup`` arrives
+        already partitioned and sorted); ``partitionBy(shard)`` then gives
+        each output task whole shard directories of key-sorted row groups,
+        whose parquet min/max stats act like the term index for point
+        lookups."""
+        cfg = self.config
+        if partitions is not None:
+            df = df.repartition(partitions, F.col(SHARD_COL)).sortWithinPartitions(
+                SHARD_COL, cfg.schema.unique_key
+            )
+        writer = df.write.mode(mode).partitionBy(SHARD_COL)
         if cfg.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", cfg.max_records_per_file)
         if cfg.codec:
             writer = writer.option("compression", cfg.codec)
         writer.parquet(path)
+
+    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> dict:
+        """Write an already-resolved DataFrame as the sharded, key-sorted
+        artifact (A17/A18/A21): one task per shard."""
+        if MICRO_COL in df.columns:
+            df = df.drop(MICRO_COL)
+        self._write_shards(df, path, partitions=self.config.shards, mode=mode)
         return self._manifest(df, path)
 
     def _write_sorted_dedup(
@@ -317,12 +313,7 @@ class IndexJob:
                 .drop("_prev_key")
             )
         out = partitioned.drop(MICRO_COL).sortWithinPartitions(SHARD_COL, key)
-        writer = out.write.mode(mode).partitionBy(SHARD_COL)
-        if cfg.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", cfg.max_records_per_file)
-        if cfg.codec:
-            writer = writer.option("compression", cfg.codec)
-        writer.parquet(path)
+        self._write_shards(out, path, mode=mode)
         return self._manifest(out, path)
 
     def _next_generation(self, path: str, mode: str = "append") -> int:
@@ -395,45 +386,7 @@ class IndexJob:
                 # resolver collapsed columns (sort_updates) — re-derive placement
                 resolved = self._with_shard(resolved).drop(MICRO_COL)
             manifest = self.write(resolved, path, mode=mode)
-        # sidecar refresh mirrors the mutation paths (merge_into/delete_where/
-        # compact): gate on fs.exists as well as the config flag.  A
-        # mode="append" over an artifact whose sidecar was built by an
-        # EARLIER config (key_ranges=True then, False now) must still
-        # refresh — the appended files would otherwise be invisible to
-        # pruned lookups (false negatives) and count() would undercount.
-        # (mode="overwrite" wipes the directory, so exists() is False there.)
-        fs = get_fs(path, df.sparkSession)
-        from solr_map_reduce_spark.search_stats import (
-            STATS,
-            write_search_sidecars,
-            write_search_stats,
-        )
-        from solr_map_reduce_spark.term_blooms import BLOOMS, write_term_blooms
-
-        want_blooms = manifest.get("analyzed") and (
-            self.config.term_blooms or fs.exists(fs_join(path, BLOOMS))
-        )
-        want_stats = manifest.get("analyzed") and (
-            self.config.search_stats or fs.exists(fs_join(path, STATS))
-        )
-        if want_blooms and want_stats:
-            # full rebuild of both serving sidecars: ONE tokenized corpus
-            # pass per analyzed field instead of two (r13, guide §2.4) —
-            # the shared (term, shard) aggregate serves bitmaps and vocab.
-            # Self-gating: small corpora delegate back to the separate
-            # writers, which measure faster below ~128 MB of artifact.
-            write_search_sidecars(df.sparkSession, path)
-        elif want_blooms:
-            write_term_blooms(df.sparkSession, path)
-        elif want_stats:
-            write_search_stats(df.sparkSession, path)
-        from solr_map_reduce_spark.key_ranges import (
-            sidecar_exists,
-            write_key_ranges,
-        )
-
-        if self.config.key_ranges or sidecar_exists(fs, path):
-            write_key_ranges(df.sparkSession, path)
+        _build_sidecars(df.sparkSession, path, manifest, self.config)
         return manifest
 
     def go_live(
@@ -500,14 +453,12 @@ class IndexJob:
             "merge_into",
         )
         prepared = self.route(df, generate_keys_from).drop(MICRO_COL)
-        stamped_gen = None
+        plan_gen = self._next_generation(path)
         if self.config.doc_versions:
             # only the BATCH takes the new version; pre-existing rows keep
             # theirs (replaced docs resolve to the batch row, so a replace
-            # bumps — Solr's _version_ contract).  The value is re-checked
-            # under the mutation lock before any write.
-            stamped_gen = self._next_generation(path)
-            prepared = prepared.withColumn(VERSION_COL, F.lit(stamped_gen))
+            # bumps — Solr's _version_ contract)
+            prepared = prepared.withColumn(VERSION_COL, F.lit(plan_gen))
         touched = sorted(
             r[0] for r in prepared.select(SHARD_COL).distinct().collect()
         )
@@ -552,102 +503,12 @@ class IndexJob:
         if SHARD_COL not in resolved.columns:
             # resolver collapsed columns (sort_updates) — re-derive placement
             resolved = self._with_shard(resolved).drop(MICRO_COL)
-        cfg = self.config
-        key = cfg.schema.unique_key
-        with _mutation_lock(fs, path, "merge_into"):
-            if stamped_gen is not None and self._next_generation(path) != stamped_gen:
-                # another mutation committed between our stamp and the
-                # lock: writing now would record a manifest generation
-                # ABOVE the stamped _version_, and Topic consumers would
-                # permanently skip this batch — abort loudly, retry-safe
-                raise RuntimeError(
-                    f"concurrent mutation of {path!r} detected "
-                    f"(stamped generation {stamped_gen} is stale); retry"
-                )
-            tmp = path.rstrip("/") + "._merge_tmp"
-            writer_df = (
-                resolved.repartition(len(touched), F.col(SHARD_COL))
-                .sortWithinPartitions(SHARD_COL, key)
-            )
-            writer = writer_df.write.mode("overwrite").partitionBy(SHARD_COL)
-            if cfg.max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", cfg.max_records_per_file)
-            if cfg.codec:
-                writer = writer.option("compression", cfg.codec)
-            writer.parquet(tmp)
-            # global BM25 statistics changed — DELTA-maintain them, O(touched):
-            # old = touched shards pre-swap (still on disk), new = the staging
-            # rewrite; stats adjust by the difference and the term dictionary
-            # gets a df-delta merge.  All scans run here, BEFORE the swap; the
-            # closure finalizes (vocab promote + stats write) after it.  A
-            # full-corpus rebuild happens only when the sidecar is incomplete.
-            from solr_map_reduce_spark.search_stats import (
-                STATS,
-                prepare_stats_delta,
-                write_search_stats,
-            )
-
-            stats_finalize = None
-            stats_stored = fs.exists(fs_join(path, STATS))
-            if stats_stored:
-                stats_finalize = prepare_stats_delta(
-                    df.sparkSession, path, current, df.sparkSession.read.parquet(tmp)
-                )
-            # ANN delta maintenance: the batch keys + their POST-RESOLUTION
-            # rows (the resolver's winner is what must serve, whichever
-            # side it came from), materialized BEFORE the swap renames the
-            # staging files the lazy plans read.  O(batch keys) rows.
-            from solr_map_reduce_spark.extensions import ann_sidecar
-
-            ann_keys = ann_upserted = None
-            ann_pre_gen = ann_sidecar.manifest_generation_hash(fs, path)
-            ann_fields = [f for f, _s in ann_sidecar.sidecars(fs, path)]
-            if ann_fields:
-                ann_keys = (
-                    prepared.select(key).distinct()
-                    .localCheckpoint(eager=True)
-                )
-                staged_rows = df.sparkSession.read.parquet(tmp)
-                cols = [key] + [
-                    f for f in ann_fields if f in staged_rows.columns
-                ]
-                ann_upserted = (
-                    staged_rows.select(*cols)
-                    .join(ann_keys, on=key, how="left_semi")
-                    .localCheckpoint(eager=True)
-                )
-            _swap_shard_dirs(fs, path, tmp, [f"{SHARD_COL}={s}" for s in touched])
-            fs.delete(tmp)
-            manifest = self._manifest(resolved, path)
-            # a merge ADDS tokens: a stale bloom bitmap would be a false
-            # negative, so refresh the touched shards when a sidecar exists
-            # (deletes never need this — shrinking content keeps the bitmap a
-            # correct superset)
-            from solr_map_reduce_spark.term_blooms import BLOOMS, write_term_blooms
-
-            if manifest.get("analyzed") and fs.exists(fs_join(path, BLOOMS)):
-                write_term_blooms(df.sparkSession, path, shards=touched)
-            if stats_stored and manifest.get("analyzed"):
-                if stats_finalize is not None:
-                    stats_finalize()
-                else:
-                    write_search_stats(df.sparkSession, path)
-            # rewritten shard dirs have NEW segment file names — a stale range
-            # entry would be a false negative, so refresh the touched shards
-            # (rewrites only those shards' span files: O(touched) sidecar I/O)
-            from solr_map_reduce_spark.key_ranges import sidecar_exists, write_key_ranges
-
-            if sidecar_exists(fs, path):
-                write_key_ranges(df.sparkSession, path, shards=touched)
-            if ann_upserted is not None:
-                # epoch append + tombstones + generation re-pin AFTER the
-                # manifest rewrite above fixed the new generation hash:
-                # {!knn} keeps serving sublinearly across the upsert
-                ann_sidecar.delta_upsert(
-                    df.sparkSession, path, ann_upserted, ann_keys, key,
-                    ann_pre_gen,
-                )
-            return manifest
+        return self._rewrite(
+            df.sparkSession, path, "merge_into", resolved, touched, plan_gen,
+            "upsert", old=current,
+            keys=prepared.select(cfg.schema.unique_key).distinct(),
+            changed=resolved.columns, body=self._manifest_body(resolved),
+        )
 
     def update_fields(
         self,
@@ -768,13 +629,8 @@ class IndexJob:
             *[F.col(c).alias(f"_u_{c}") for c in upd_cols],
         )
         joined = current.join(F.broadcast(u), current[key] == F.col("_uk"), "left")
-        # one generation read for BOTH stamp sites (bump + insert), and
-        # re-checked under the mutation lock before any write
-        stamped_gen = (
-            self._next_generation(path)
-            if VERSION_COL in current.columns
-            else None
-        )
+        # one generation read for BOTH stamp sites (bump + insert)
+        plan_gen = self._next_generation(path)
         out_cols = []
         for c in current.columns:
             if c in upd_cols:
@@ -840,7 +696,7 @@ class IndexJob:
                 # doc's _version_ (Solr's contract) so Topic consumers
                 # re-deliver it
                 out_cols.append(
-                    F.when(F.col("_matched"), F.lit(stamped_gen))
+                    F.when(F.col("_matched"), F.lit(plan_gen))
                     .otherwise(current[c])
                     .alias(c)
                 )
@@ -851,7 +707,6 @@ class IndexJob:
             # absent keys become new docs: typed NULL for every
             # un-supplied column
             cur_schema = {f.name: f.dataType for f in current.schema.fields}
-            next_gen = stamped_gen
             full = inserts.select(
                 *[
                     (
@@ -861,7 +716,7 @@ class IndexJob:
                         # list/patterns as the value
                         F.lit(None).cast(cur_schema[c])
                         if ops.get(c) in ("remove", "removeregex")
-                        else F.lit(next_gen).cast(cur_schema[c])
+                        else F.lit(plan_gen).cast(cur_schema[c])
                         if c == VERSION_COL
                         else F.col(c)
                         if c in inserts.columns
@@ -882,84 +737,11 @@ class IndexJob:
                 updated = updated.withColumn(
                     info["tokens_col"], ANALYZERS[info["type"]](F.col(field))
                 )
-        with _mutation_lock(fs, path, "update_fields"):
-            if stamped_gen is not None and self._next_generation(path) != stamped_gen:
-                raise RuntimeError(
-                    f"concurrent mutation of {path!r} detected "
-                    f"(stamped generation {stamped_gen} is stale); retry"
-                )
-            tmp = path.rstrip("/") + "._update_tmp"
-            writer_df = (
-                updated.repartition(len(touched), F.col(SHARD_COL))
-                .sortWithinPartitions(SHARD_COL, key)
-            )
-            writer = writer_df.write.mode("overwrite").partitionBy(SHARD_COL)
-            if cfg.max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", cfg.max_records_per_file)
-            if cfg.codec:
-                writer = writer.option("compression", cfg.codec)
-            writer.parquet(tmp)
-            from solr_map_reduce_spark.search_stats import (
-                STATS,
-                prepare_stats_delta,
-                write_search_stats,
-            )
-
-            stats_finalize = None
-            stats_stored = fs.exists(fs_join(path, STATS))
-            if stats_stored:
-                stats_finalize = prepare_stats_delta(
-                    spark, path, current, spark.read.parquet(tmp)
-                )
-            # ANN delta: only sidecars whose vector column is among the
-            # updated columns need epoch maintenance (others re-pin below
-            # — their vectors are provably untouched); materialize the
-            # touched keys + post-update rows before the swap
-            from solr_map_reduce_spark.extensions import ann_sidecar
-
-            ann_keys = ann_upserted = None
-            ann_pre_gen = ann_sidecar.manifest_generation_hash(fs, path)
-            vec_updated = [
-                f for f, _s in ann_sidecar.sidecars(fs, path)
-                if f in upd_cols
-            ]
-            if vec_updated:
-                ann_keys = (
-                    updates.select(key).distinct()
-                    .localCheckpoint(eager=True)
-                )
-                ann_upserted = (
-                    spark.read.parquet(tmp)
-                    .select(key, *vec_updated)
-                    .join(ann_keys, on=key, how="left_semi")
-                    .localCheckpoint(eager=True)
-                )
-            _swap_shard_dirs(fs, path, tmp, [f"{SHARD_COL}={s}" for s in touched])
-            fs.delete(tmp)
-            # an update can ADD tokens to a shard: refresh blooms like merge
-            from solr_map_reduce_spark.term_blooms import BLOOMS, write_term_blooms
-
-            if analyzed and fs.exists(fs_join(path, BLOOMS)):
-                write_term_blooms(spark, path, shards=touched)
-            if stats_stored and analyzed:
-                if stats_finalize is not None:
-                    stats_finalize()
-                else:
-                    write_search_stats(spark, path)
-            from solr_map_reduce_spark.key_ranges import sidecar_exists, write_key_ranges
-
-            if sidecar_exists(fs, path):
-                write_key_ranges(spark, path, shards=touched)
-            bump_generation(fs, path)  # live handles must drop caches
-            if ann_upserted is not None:
-                ann_sidecar.delta_upsert(
-                    spark, path, ann_upserted, ann_keys, key, ann_pre_gen
-                )
-            # sidecars whose vector column the update provably did not
-            # touch just re-pin to the new generation — vectors, delta,
-            # and tombstones all remain exact
-            ann_sidecar.repin_only(spark, path, set(upd_cols), ann_pre_gen)
-            return manifest
+        return self._rewrite(
+            spark, path, "update_fields", updated, touched, plan_gen,
+            "update", old=current, keys=updates.select(key).distinct(),
+            changed=upd_cols,
+        )
 
     def delete_where(self, spark: SparkSession, path: str, condition) -> int:
         """Delete-by-query against the artifact (C3 as a MUTATION, the
@@ -969,102 +751,95 @@ class IndexJob:
         ``condition`` is a Column predicate (or SQL string).  Returns the
         number of rows deleted.  Deleting by unique key is the deleteById
         analog: ``delete_where(spark, path, F.col(key) == value)``."""
-        fs = get_fs(path, spark)
         if isinstance(condition, str):
             condition = F.expr(condition)
+        plan_gen = self._next_generation(path)
         # NULL-safe: a row where the predicate is NULL does NOT match the
         # delete (SQL DELETE semantics) and must be kept
         matches = F.coalesce(condition, F.lit(False))
         current = read_index(spark, path)
-        touched = sorted(
-            r[0]
-            for r in current.filter(matches).select(SHARD_COL).distinct().collect()
-        )
-        if not touched:
+        # matches per shard, from the pass that finds the touched shards;
+        # the commit's generation re-check keeps the count exact
+        hits = current.filter(matches).groupBy(SHARD_COL).count().collect()
+        if not hits:
             return 0
+        touched = sorted(r[SHARD_COL] for r in hits)
         subset = current.filter(F.col(SHARD_COL).isin(touched))
-        # ONE pass over the touched shards: the staging write's scan
-        # carries the before/deleted counters as an Observation instead
-        # of two extra count() scans under the mutation lock
-        from pyspark.sql import Observation
-
-        obs = Observation("delete_where")
-        observed = subset.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_before"),
-            F.sum(F.when(matches, 1).otherwise(0)).alias("n_deleted"),
+        self._rewrite(
+            spark, path, "delete_where", subset.filter(~matches), touched,
+            plan_gen, "delete", old=subset,
+            keys=subset.filter(matches).select(self.config.schema.unique_key),
         )
-        kept = observed.filter(~matches)
-        key = self.config.schema.unique_key
-        # ANN delta maintenance needs the deleted keys MATERIALIZED before
-        # the swap deletes the files the lazy plan reads (ids only — tiny)
-        from solr_map_reduce_spark.extensions import ann_sidecar
+        return sum(r["count"] for r in hits)
 
-        deleted_ids = None
-        if ann_sidecar.sidecars(fs, path):
-            deleted_ids = (
-                subset.filter(matches).select(key)
-                .localCheckpoint(eager=True)
-            )
-        cfg = self.config
-        with _mutation_lock(fs, path, "delete_where"):
-            tmp = path.rstrip("/") + "._delete_tmp"
-            writer_df = (
-                kept.repartition(len(touched), F.col(SHARD_COL))
-                .sortWithinPartitions(SHARD_COL, key)
-            )
-            # same writer contract as every other rewrite path: a delete
-            # must not drift touched shards off the artifact's
-            # compression codec / file-size bound
-            writer = writer_df.write.mode("overwrite").partitionBy(SHARD_COL)
-            if cfg.max_records_per_file:
-                writer = writer.option(
-                    "maxRecordsPerFile", cfg.max_records_per_file
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        path: str,
+        op: str,
+        rows: DataFrame,
+        touched: list[int],
+        plan_gen: int,
+        effect: str,
+        old: DataFrame | None = None,
+        keys: DataFrame | None = None,
+        changed=(),
+        body: dict | None = None,
+        defer_deletion: bool = False,
+    ) -> dict:
+        """The one commit path of every shard rewrite (merge, update,
+        delete, compaction) — the analog of the reference's job output
+        commit followed by the GoLive merge (mr/GoLive.java:46-168).
+
+        ``rows`` is the new content of the ``touched`` shards; ``effect``
+        names what the rewrite did to them (see ``_SIDECARS``), with
+        ``keys`` the batch or deleted keys, ``old`` the touched shards as
+        they were, and ``changed`` the columns whose values may differ.
+        Under the mutation lock, in this order: re-check that no other
+        mutation committed since the caller planned against ``plan_gen``
+        (the next generation, also the doc-version stamp); write the
+        staging dir; let every present sidecar prepare while the old
+        files are still readable; swap the shard dirs; commit Blooms,
+        stats and key ranges; advance the generation (``body`` replaces
+        the manifest's content when given); delta or re-pin the ANN
+        sidecars, which pin themselves to that generation.  Sidecars
+        commit BEFORE the generation moves, so a live handle that reloads
+        on the new generation never caches a pre-rewrite sidecar under
+        it.  Returns the committed manifest."""
+        fs = get_fs(path, spark)
+        with _mutation_lock(fs, path, op):
+            if self._next_generation(path) != plan_gen:
+                # committing now would lose the other mutation's view (and
+                # strand a stamped batch below Topic checkpoints): abort
+                # loudly, retry-safe
+                raise RuntimeError(
+                    f"concurrent mutation of {path!r} detected (planned "
+                    f"against generation {plan_gen - 1}); retry"
                 )
-            if cfg.codec:
-                writer = writer.option("compression", cfg.codec)
-            writer.parquet(tmp)
-            counts = obs.get
-            n_deleted = int(counts["n_deleted"] or 0)
-            # stored BM25 statistics are global — DELTA-maintain them like
-            # merge_into (old = touched pre-swap, new = the kept rows; ``kept``
-            # is a pure deterministic filter over the still-present old files,
-            # so it can be scanned directly pre-swap).  Fall back to
-            # invalidation only when the sidecar is incomplete.  Term blooms
-            # stay: a shrunk corpus keeps them a correct superset.
-            from solr_map_reduce_spark.search_stats import (
-                drop_search_stats,
-                prepare_stats_delta,
+            tmp = f"{path.rstrip('/')}._{op}_tmp"
+            self._write_shards(rows, tmp, partitions=len(touched))
+            rw = _Rewrite(
+                spark, fs, path, effect,
+                json.loads(fs.read_text(fs_join(path, MANIFEST))).get("analyzed", {}),
+                touched, self.config.schema.unique_key, old, rows, tmp, keys,
+                frozenset(changed),
             )
-
-            stats_finalize = prepare_stats_delta(spark, path, subset, kept)
+            due = [s for s in _SIDECARS if effect in s.cells and s.present(rw, False)]
+            states = [s.cells[effect][0](rw) if s.cells[effect][0] else None for s in due]
             _swap_shard_dirs(
-                fs, path, tmp, [f"{SHARD_COL}={s}" for s in touched],
-                remove_empty=True,
+                fs, path, tmp, [f"{SHARD_COL}={s}" for s in touched], defer_deletion
             )
             fs.delete(tmp)
-            if stats_finalize is not None:
-                stats_finalize()
-            else:
-                drop_search_stats(spark, path)
-            # segment files were renamed by the rewrite: refresh the touched
-            # shards' key ranges (stale names would be false negatives)
-            from solr_map_reduce_spark.key_ranges import sidecar_exists, write_key_ranges
-
-            if sidecar_exists(fs, path):
-                write_key_ranges(spark, path, shards=touched)
-            # pre-mutation generation gates the ANN maintenance below: a
-            # sidecar not pinned to it missed an earlier mutation and
-            # must stay stale rather than be revived
-            ann_pre_gen = ann_sidecar.manifest_generation_hash(fs, path)
-            bump_generation(fs, path)  # live handles must drop caches
-            if deleted_ids is not None:
-                # O(deleted) tombstones + generation re-pin: {!knn}
-                # stays on the routed sublinear path across the delete
-                ann_sidecar.delta_delete(
-                    spark, path, deleted_ids, key, ann_pre_gen
-                )
-            return n_deleted
+            commits = [(s.cells[effect][1], st, s.after_generation)
+                       for s, st in zip(due, states)]
+            for commit, state, late in commits:
+                if not late:
+                    commit(rw, state)
+            manifest = _commit_manifest(fs, path, body)
+            for commit, state, late in commits:
+                if late:
+                    commit(rw, state)
+            return manifest
 
     def dry_run(self, df: DataFrame, generate_keys_from: str | None = None, n: int = 20):
         """A24 dry-run: run the full logical pipeline client-side and return
@@ -1104,6 +879,215 @@ def _require_placement_parity(cfg: IndexJobConfig, manifest: dict, op: str) -> N
             "— run the same IndexJob configuration the artifact was built "
             "with (the reference reruns the same job)"
         )
+
+
+def _job_for(manifest: dict, **overrides) -> IndexJob:
+    """An IndexJob that places and sorts rows exactly as ``manifest``
+    says — for the rewrites that are not given a job (compaction, the
+    reader's delete)."""
+    key = manifest["unique_key"]
+    return IndexJob(IndexJobConfig(
+        schema=IndexSchema(fields=(Field(key, "string"),), unique_key=key),
+        shards=int(manifest["shards"]),
+        routing=manifest.get("routing", "solr"),
+        **overrides,
+    ))
+
+
+# -- the sidecar lifecycle --------------------------------------------------
+#
+# One table drives the four serving sidecars through every artifact
+# mutation.  A rewrite names its EFFECT on the touched shards:
+#
+#   "upsert"  rows replaced or added (the batch keys)          merge_into
+#   "update"  columns set on matched rows (the batch keys)     update_fields
+#   "delete"  rows removed (the deleted keys)                  delete_where
+#   "same"    content unchanged, every segment file renamed    compact
+#
+# and "build" is the full refresh after a build in either mode.  A cell is
+# ``(prepare, commit)``: ``prepare(rw)`` runs before the shard swap, while
+# the old files are still readable, and returns a state that
+# ``commit(rw, state)`` finishes after the swap.  An effect with no cell
+# keeps that sidecar as it is.  README "Sidecar lifecycle" writes the table
+# out.  Sidecar functions are looked up on their modules at call time, so
+# wrappers installed on those attributes (tracing spans) see every call.
+
+
+@dataclass
+class _Rewrite:
+    """What one commit did to the artifact, as the sidecar table reads it."""
+
+    spark: SparkSession
+    fs: object
+    path: str
+    effect: str
+    analyzed: dict
+    touched: list[int] | None = None  # None: every shard (a build)
+    key: str | None = None
+    old: DataFrame | None = None  # the touched shards before the rewrite
+    rows: DataFrame | None = None  # their new content, as staged
+    tmp: str | None = None  # the staging dir
+    keys: DataFrame | None = None  # batch or deleted keys
+    changed: frozenset = frozenset()  # columns whose values may differ
+
+    def staged(self) -> DataFrame:
+        # a delete's kept rows are a pure filter over old files still on
+        # disk, so they are scanned directly (that also covers a delete
+        # that emptied every touched shard and so staged no file); other
+        # rewrites read their staging output back
+        if self.effect == "delete":
+            return self.rows
+        return self.spark.read.parquet(self.tmp)
+
+
+def _blooms_present(rw: _Rewrite, requested: bool) -> bool:
+    return bool(rw.analyzed) and (
+        requested or rw.fs.exists(fs_join(rw.path, term_blooms.BLOOMS))
+    )
+
+
+def _blooms_write(rw: _Rewrite, _state) -> None:
+    # new tokens in a touched shard: a stale bitmap would be a false negative
+    term_blooms.write_term_blooms(rw.spark, rw.path, shards=rw.touched)
+
+
+def _stats_present(rw: _Rewrite, requested: bool) -> bool:
+    return bool(rw.analyzed) and (
+        requested or rw.fs.exists(fs_join(rw.path, search_stats.STATS))
+    )
+
+
+def _stats_delta(rw: _Rewrite):
+    # O(touched): scalar stats and the term dictionary adjust by
+    # agg(new) - agg(old); None when the stored sidecar is torn
+    return search_stats.prepare_stats_delta(rw.spark, rw.path, rw.old, rw.staged())
+
+
+def _stats_unchanged(rw: _Rewrite):
+    # unchanged content keeps a whole sidecar as it is
+    if search_stats._whole_stats(rw.spark, rw.fs, rw.path, rw.analyzed):
+        return lambda: None
+    return None
+
+
+def _stats_commit(rw: _Rewrite, finalize) -> None:
+    # a torn (or never prepared) sidecar is rebuilt over the whole corpus:
+    # stale global statistics would silently skew every score
+    if finalize is not None:
+        finalize()
+    else:
+        search_stats.write_search_stats(rw.spark, rw.path)
+
+
+def _ranges_present(rw: _Rewrite, requested: bool) -> bool:
+    return requested or key_ranges.sidecar_exists(rw.fs, rw.path)
+
+
+def _ranges_write(rw: _Rewrite, _state) -> None:
+    # rewritten shards have new segment file names: a stale entry would
+    # be a false negative
+    key_ranges.write_key_ranges(rw.spark, rw.path, shards=rw.touched)
+
+
+def _ann_present(rw: _Rewrite, _requested: bool) -> bool:
+    return bool(ann_sidecar.sidecars(rw.fs, rw.path))
+
+
+def _ann_changed_rows(rw: _Rewrite):
+    # the pre-rewrite generation gates the maintenance (a sidecar pinned
+    # elsewhere missed an earlier mutation and stays stale); the batch
+    # keys and their post-rewrite vectors are materialized before the swap
+    # renames the files their plans read — O(batch) rows
+    pre_gen = ann_sidecar.manifest_generation_hash(rw.fs, rw.path)
+    vec = [f for f, _s in ann_sidecar.sidecars(rw.fs, rw.path) if f in rw.changed]
+    if not vec:
+        return pre_gen, None, None
+    keys = rw.keys.localCheckpoint(eager=True)
+    rows = (
+        rw.staged().select(rw.key, *vec)
+        .join(keys, on=rw.key, how="left_semi")
+        .localCheckpoint(eager=True)
+    )
+    return pre_gen, keys, rows
+
+
+def _ann_upsert(rw: _Rewrite, state) -> None:
+    # epoch append + tombstones for the rewritten vectors; every sidecar
+    # whose vector column provably did not change just re-pins
+    pre_gen, keys, rows = state
+    if rows is not None:
+        ann_sidecar.delta_upsert(rw.spark, rw.path, rows, keys, rw.key, pre_gen)
+    ann_sidecar.repin_only(rw.spark, rw.path, rw.changed, pre_gen)
+
+
+def _ann_deleted_keys(rw: _Rewrite):
+    return (
+        ann_sidecar.manifest_generation_hash(rw.fs, rw.path),
+        rw.keys.localCheckpoint(eager=True),
+    )
+
+
+def _ann_delete(rw: _Rewrite, state) -> None:
+    ann_sidecar.delta_delete(rw.spark, rw.path, state[1], rw.key, state[0])
+
+
+class _Sidecar(NamedTuple):
+    name: str  # the module, and the IndexJobConfig flag requesting it
+    present: Callable  # (rw, requested) -> the sidecar is due
+    cells: dict  # effect -> (prepare | None, commit)
+    after_generation: bool = False  # commits after the generation advance
+
+
+_SIDECARS = (
+    # "delete"/"same": a bitmap over shrunk or unchanged content stays a
+    # correct superset
+    _Sidecar("term_blooms", _blooms_present, {
+        "build": (None, _blooms_write),
+        "upsert": (None, _blooms_write),
+        "update": (None, _blooms_write),
+    }),
+    _Sidecar("search_stats", _stats_present, {
+        "build": (None, _stats_commit),
+        "upsert": (_stats_delta, _stats_commit),
+        "update": (_stats_delta, _stats_commit),
+        "delete": (_stats_delta, _stats_commit),
+        "same": (_stats_unchanged, _stats_commit),
+    }),
+    _Sidecar("key_ranges", _ranges_present, dict.fromkeys(
+        ("build", "upsert", "update", "delete", "same"), (None, _ranges_write)
+    )),
+    # "build": an appended build leaves the sidecars stale (readers fall
+    # back to the exact scan) until build_ann; they store vectors by key,
+    # no file names, so the other effects maintain them in O(batch)
+    _Sidecar("ann_sidecar", _ann_present, {
+        "upsert": (_ann_changed_rows, _ann_upsert),
+        "update": (_ann_changed_rows, _ann_upsert),
+        "delete": (_ann_deleted_keys, _ann_delete),
+        "same": (_ann_changed_rows, _ann_upsert),  # nothing changed: re-pin
+    }, after_generation=True),
+)
+
+
+def _build_sidecars(
+    spark: SparkSession, path: str, manifest: dict, cfg: IndexJobConfig
+) -> None:
+    """The "build" column: fully refresh every sidecar the config requests
+    or the artifact already carries — an appended build must refresh a
+    sidecar an EARLIER config built, or its rows would be invisible to
+    pruned lookups (an overwrite wiped the directory, sidecars included)."""
+    rw = _Rewrite(spark, get_fs(path, spark), path, "build", manifest.get("analyzed", {}))
+    due = [
+        s for s in _SIDECARS
+        if "build" in s.cells and s.present(rw, getattr(cfg, s.name, False))
+    ]
+    fused = {"term_blooms", "search_stats"}
+    if fused <= {s.name for s in due}:
+        # ONE tokenized corpus pass per analyzed field serves both
+        # (self-gating: small corpora delegate back to the two writers)
+        search_stats.write_search_sidecars(spark, path)
+        due = [s for s in due if s.name not in fused]
+    for s in due:
+        s.cells["build"][1](rw, None)
 
 
 MUTATION_LOCK = "_MUTATION_LOCK"
@@ -1147,7 +1131,6 @@ def _mutation_lock(fs, path: str, op: str):
     import os
     import socket
     import time
-    import uuid
 
     lock = fs_join(path, MUTATION_LOCK)
     token = uuid.uuid4().hex
@@ -1229,35 +1212,48 @@ def clear_mutation_lock(path: str, spark: SparkSession | None = None) -> bool:
 _SWAP_TRASH = "_trash_swap"
 
 
-def bump_generation(fs, path: str) -> None:
-    """Rewrite the manifest with ``generation + 1`` and a fresh uuid.
-    EVERY in-place mutation that does not already rewrite the manifest
-    through ``_manifest()`` must call this: live ``SearchIndex`` handles
-    detect mutation by manifest CONTENT (index_reader._check_generation)
-    and would otherwise keep serving cached sidecars — and a memoized
-    DataFrame over segment files the mutation just renamed away."""
-    import uuid
-
+def _commit_manifest(fs, path: str, body: dict | None = None) -> dict | None:
+    """Write ``body`` (default: the current manifest's content) as the
+    manifest at ``generation + 1`` with a fresh uuid, and return it.
+    Live handles detect a mutated artifact by manifest CONTENT
+    (index_reader._check_generation), immune to mtime granularity and to
+    identical-content rewrites.  No manifest and no body: nothing to
+    advance."""
     mp = fs_join(path, MANIFEST)
-    if not fs.exists(mp):
-        return
-    m = json.loads(fs.read_text(mp))
-    m["generation"] = int(m.get("generation", 0)) + 1
-    m["generation_id"] = uuid.uuid4().hex
-    fs.write_text(mp, json.dumps(m, indent=2))
+    try:
+        current = json.loads(fs.read_text(mp)) if fs.exists(mp) else None
+    except Exception:
+        current = None  # unreadable/torn: the fresh uuid still differs
+    if body is None and current is None:
+        return None
+    manifest = dict(body if body is not None else current)
+    manifest["generation"] = int((current or {}).get("generation", 0)) + 1
+    manifest["generation_id"] = uuid.uuid4().hex
+    fs.write_text(mp, json.dumps(manifest, indent=2))
+    return manifest
+
+
+def bump_generation(fs, path: str) -> None:
+    """Advance the manifest generation of an artifact mutated in place
+    outside the shard-rewrite commit (e.g. an ANN sidecar compaction):
+    live ``SearchIndex`` handles would otherwise keep serving cached
+    sidecars — and a memoized DataFrame over renamed segment files."""
+    _commit_manifest(fs, path)
 
 
 def _swap_shard_dirs(
-    fs, path: str, tmp: str, shard_names: list[str], remove_empty: bool = False
+    fs, path: str, tmp: str, shard_names: list[str], keep_old: bool = False
 ) -> None:
     """Replace shard directories with their rewritten versions via
     rename-aside: old dirs move into ``<path>/_trash_swap/`` (an
     underscore-prefixed dir, invisible to Spark's partition discovery)
     BEFORE the new dir renames in, and the trash is deleted only at the
     end.  A crash mid-swap therefore never leaves a shard deleted with no
-    replacement — worst case the aside copy survives for manual recovery
-    (the old delete-then-rename order lost the whole shard on a crash
-    between the two calls)."""
+    replacement — worst case the aside copy survives for manual recovery.
+    A shard the rewrite emptied stages no dir and is retired.
+    ``keep_old`` keeps the replaced dirs at ``<path>._old.N`` instead of
+    deleting them (SolrMergeDriver --defer-deletion,
+    SolrMergeDriver.java:167-182)."""
     trash = fs_join(path, _SWAP_TRASH)
     if fs.exists(trash):
         # leftover trash from an interrupted earlier swap can be the
@@ -1266,24 +1262,22 @@ def _swap_shard_dirs(
         # deleting it here would void the manual-recovery guarantee
         # below.  Set it aside under a unique name instead; reclaiming
         # the space is the operator's explicit call after inspection.
-        import uuid as _uuid
-
-        aside = f"{trash}_abandoned_{_uuid.uuid4().hex[:8]}"
-        fs.rename(trash, aside)
+        fs.rename(trash, f"{trash}_abandoned_{uuid.uuid4().hex[:8]}")
     fs.mkdirs(trash)
     for dirname in shard_names:
         src = fs_join(tmp, dirname)
         dst = fs_join(path, dirname)
-        if not fs.isdir(src):
-            # rewrite emitted no rows for this shard: for a delete that
-            # means every row matched — retire the old dir; a merge keeps it
-            if remove_empty and fs.isdir(dst):
-                fs.rename(dst, fs_join(trash, dirname))
-            continue
         if fs.isdir(dst):
             fs.rename(dst, fs_join(trash, dirname))
-        fs.rename(src, dst)
-    fs.delete(trash)
+        if fs.isdir(src):
+            fs.rename(src, dst)
+    if not keep_old:
+        fs.delete(trash)
+        return
+    i = 0
+    while fs.exists(f"{path.rstrip('/')}._old.{i}"):
+        i += 1
+    fs.rename(trash, f"{path.rstrip('/')}._old.{i}")
 
 
 def read_index(spark: SparkSession, path: str) -> DataFrame:
@@ -1329,113 +1323,29 @@ def compact(
     preserving key order.  Idempotent per shard dir (A29's resumability:
     rerunning a shard overwrite is safe).
 
-    ``defer_deletion`` keeps the replaced directory as ``<path>._old.N``
-    instead of deleting it (SolrMergeDriver --defer-deletion,
-    SolrMergeDriver.java:167-182) so an external process can archive or
-    verify intermediates before reclaiming space."""
+    ``defer_deletion`` keeps the replaced shard directories at
+    ``<path>._old.N`` instead of deleting them (SolrMergeDriver
+    --defer-deletion, SolrMergeDriver.java:167-182) so an external process
+    can archive or verify intermediates before reclaiming space."""
     import math
 
     fs = get_fs(path, spark)
+    manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
     df = read_index(spark, path)
-    # preserve the artifact's key-sorted segment contract: sort by the
-    # manifest's unique_key, NOT whatever column happens to come first —
-    # point-lookup pruning relies on parquet min/max stats over the key
-    sort_key = None
-    manifest_path = fs_join(path, MANIFEST)
-    if fs.exists(manifest_path):
-        sort_key = json.loads(fs.read_text(manifest_path)).get("unique_key")
-    if sort_key is None or sort_key not in df.columns:
-        sort_key = [c for c in df.columns if c != SHARD_COL][0]
-    with _mutation_lock(fs, path, "compact"):
-        tmp = path.rstrip("/") + "._compact_tmp"
-        # capture BEFORE the swap: the sidecar dir is not carried over by the
-        # file-only metadata copy below (and would be stale if it were — every
-        # segment file gets renamed), so recompute afterwards when one existed
-        from solr_map_reduce_spark.key_ranges import sidecar_exists, write_key_ranges
-
-        had_key_ranges = sidecar_exists(fs, path)
-        shard_rows = df.groupBy(SHARD_COL).count().collect()
-        n_shards = len(shard_rows)
-        max_rows = max((r["count"] for r in shard_rows), default=0)
-        # one sorted task per shard, rolling a new file every per_file rows →
-        # exactly ceil(rows/per_file) <= max_segments contiguous-key-range
-        # segments per shard (the Lucene forceMerge(maxSegments) contract, A18)
-        per_file = max(1, math.ceil(max_rows / max_segments))
-        (
-            df.repartition(max(n_shards, 1), F.col(SHARD_COL))
-            .sortWithinPartitions(SHARD_COL, sort_key)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", per_file)
-            .partitionBy(SHARD_COL)
-            .parquet(tmp)
-        )
-        # carry artifact metadata (manifest, publish markers, resume checkpoint)
-        # over to the rewritten directory — the swap below discards the old dir
-        # wholesale, and e.g. a lost manifest makes a later merge_into mistake
-        # the artifact for absent
-        for entry in fs.listdir(path):
-            src = fs_join(path, entry)
-            if not fs.isdir(src) and entry != "_SUCCESS":  # tmp has its own
-                fs.copy_file(src, fs_join(tmp, entry))
-        # atomic-ish publish: swap directories (A21 rename-to-results analog)
-        bak = path.rstrip("/") + "._old"
-        if defer_deletion:
-            i = 0
-            while fs.exists(f"{bak}.{i}"):
-                i += 1
-            bak = f"{bak}.{i}"
-        fs.rename(path, bak)
-        fs.rename(tmp, path)
-        # compaction does not change CONTENT, so the stats sidecar stays valid —
-        # the file carry-over brought _SEARCH_STATS.json; move the _vocab/
-        # directory across too (a rename, no copy) so bm25/term_facet/suggest
-        # keep serving from stored structures after compaction
-        from solr_map_reduce_spark.search_stats import VOCAB_DIR as _VOCAB
-
-        if fs.isdir(fs_join(bak, _VOCAB)) and not fs.isdir(fs_join(path, _VOCAB)):
-            fs.rename(fs_join(bak, _VOCAB), fs_join(path, _VOCAB))
-        # the ANN sidecar survives compaction the same way: it stores
-        # vectors/codes keyed by document id (no segment-file
-        # references), and compaction does not change content — losing
-        # it here would silently degrade every {!knn} to the O(corpus)
-        # exact scan until an expensive rebuild.  Re-pinned to the
-        # post-bump generation below.
-        from solr_map_reduce_spark.extensions import ann_sidecar as _ann
-
-        if fs.isdir(fs_join(bak, _ann.ANN_DIR)) and not fs.isdir(
-            fs_join(path, _ann.ANN_DIR)
-        ):
-            fs.rename(fs_join(bak, _ann.ANN_DIR), fs_join(path, _ann.ANN_DIR))
-        ann_pre_gen = _ann.manifest_generation_hash(fs, path)
-        if not defer_deletion:
-            fs.delete(bak)
-        # every segment file was renamed by the rewrite: recompute the key-range
-        # sidecar when the pre-compact artifact carried one (a stale or
-        # copied-over entry would be a false negative)
-        if had_key_ranges:
-            from solr_map_reduce_spark.key_ranges import drop_key_ranges
-
-            drop_key_ranges(spark, path)  # a copied-over legacy file is stale
-            write_key_ranges(spark, path)
-        # the metadata carry-over copies FILES only: a surviving
-        # _SEARCH_STATS.json without its _vocab/ directory would crash the next
-        # stats-served query — invalidate (queries fall back to computing)
-        from solr_map_reduce_spark.search_stats import (
-            STATS,
-            VOCAB_DIR,
-            drop_search_stats,
-        )
-
-        if fs.exists(fs_join(path, STATS)) and not fs.isdir(fs_join(path, VOCAB_DIR)):
-            drop_search_stats(spark, path)
-        # the carry-over copied the manifest byte-identical; every segment
-        # file was just renamed, so live handles MUST see a new generation
-        bump_generation(fs, path)
-        # ANN sidecars carried across stay exact (content unchanged):
-        # re-pin them to the bumped generation — sidecars NOT pinned to
-        # the pre-compact generation missed an earlier mutation and stay
-        # stale per the sticky-staleness rule
-        _ann.repin_only(spark, path, set(), ann_pre_gen)
+    shard_rows = df.groupBy(SHARD_COL).count().collect()
+    if not shard_rows:
+        return
+    # one sorted task per shard (sorted by the manifest's unique key: the
+    # key-sorted segment contract point lookups rely on), rolling a new
+    # file every per_file rows → exactly ceil(rows/per_file) <=
+    # max_segments contiguous-key-range segments per shard (the Lucene
+    # forceMerge(maxSegments) contract, A18)
+    per_file = max(1, math.ceil(max(r["count"] for r in shard_rows) / max_segments))
+    job = _job_for(manifest, max_records_per_file=per_file)
+    job._rewrite(
+        spark, path, "compact", df, sorted(r[SHARD_COL] for r in shard_rows),
+        job._next_generation(path), "same", defer_deletion=defer_deletion,
+    )
 
 
 BACKUP_META = "_BACKUP_META.json"
@@ -1475,20 +1385,30 @@ def backup(path: str, dest: str, spark: SparkSession | None = None) -> dict:
     readers are unaffected (parquet files are immutable between swaps).
     At 100 TB prefer filesystem-level snapshots where available; this
     path is the portable contract."""
+    return _copy_artifact(path, dest, spark, "backup", BACKUP_META)[1]
+
+
+def _copy_artifact(
+    path: str, dest: str, spark, op: str, meta_name: str | None = None
+) -> tuple[dict, dict]:
+    """``backup``'s lock-consistent copy of the artifact at ``path`` to a
+    new ``dest``; the copy metadata lands in ``meta_name`` (when given)
+    before the finished tree renames into place.  Returns the copied
+    manifest and the metadata."""
     fs = get_fs(path, spark)
     if type(fs) is not type(get_fs(dest, spark)):
         # LocalFS would treat "s3a://bucket/x" as a literal local dir and
-        # "succeed" without producing a backup — same-FS-kind is required
+        # "succeed" without producing a copy — same-FS-kind is required
         # (publish's contract); copy across filesystems explicitly
         raise ValueError(
-            f"backup needs source and dest on the same filesystem kind "
+            f"{op} needs source and dest on the same filesystem kind "
             f"({path!r} -> {dest!r}); copy across afterwards"
         )
     if not fs.exists(fs_join(path, MANIFEST)):
         raise ValueError(f"{path!r} is not an index artifact (no manifest)")
     if fs.exists(dest):
-        raise ValueError(f"backup dest {dest!r} already exists")
-    with _mutation_lock(fs, path, "backup"):
+        raise ValueError(f"{op} dest {dest!r} already exists")
+    with _mutation_lock(fs, path, op):
         manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
         tmp = dest.rstrip("/") + "._tmp"
         if fs.exists(tmp):
@@ -1502,9 +1422,10 @@ def backup(path: str, dest: str, spark: SparkSession | None = None) -> dict:
             "generation_id": manifest.get("generation_id"),
             "files": n,
         }
-        fs.write_text(fs_join(tmp, BACKUP_META), json.dumps(meta, indent=2))
+        if meta_name:
+            fs.write_text(fs_join(tmp, meta_name), json.dumps(meta, indent=2))
         fs.rename(tmp, dest)
-        return meta
+    return manifest, meta
 
 
 def restore(backup_path: str, live_path: str,

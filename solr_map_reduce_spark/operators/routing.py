@@ -24,8 +24,8 @@ with shards=4, numPartitions=64 → "test" → partition 3, "foobar" → 13.
 
 Scale notes: the slice lookup here is a binary search over sorted ranges (the
 reference has a TODO for exactly this — java:71).  The DataFrame-facing op is
-an Arrow-batched pandas UDF backed by :func:`murmur3_x86_32_batch` (numpy
-lane-parallel, zero per-row Python).  Spark's builtin ``F.hash`` is
+an Arrow-native scalar UDF backed by :func:`murmur3_x86_32_arrow` (numpy
+lane-parallel over the Arrow buffers, zero per-row Python).  Spark's builtin ``F.hash`` is
 murmur3-32 but with seed 42 and non-standard tail handling, so it cannot
 provide bit parity (``routing="native"`` opts into it when parity is not
 needed).  A pure-JVM bit-parity expression was built and MEASURED, not
@@ -44,7 +44,6 @@ import bisect
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -116,27 +115,13 @@ def _utf8_flat(arr) -> tuple[np.ndarray, np.ndarray]:
     return offsets, flat
 
 
-def murmur3_x86_32_batch(strings: "pd.Series", seed: int = 0) -> np.ndarray:
-    """Vectorized murmur3_x86_32 over the UTF-8 bytes of a string batch.
-
-    Bit-identical to :func:`murmur3_x86_32`; processes all rows lane-by-lane
-    in numpy uint32 arithmetic (natural wraparound).  The UTF-8 flattening
-    goes through Arrow (``pa.Array.from_pandas`` → offsets + data buffers),
-    so there is no per-row Python encode at all — measured 7.5x over a
-    ``[s.encode() for s in batch]`` loop on 600k short keys.  Returns int32
-    array.
-    """
-    if len(strings) == 0:
-        return np.empty(0, dtype=np.int32)
-    arr = pa.Array.from_pandas(strings, type=pa.large_string())
-    return murmur3_x86_32_arrow(arr, seed)
-
-
 def murmur3_x86_32_arrow(arr, seed: int = 0) -> np.ndarray:
-    """:func:`murmur3_x86_32_batch` for an Arrow string array — the same
-    lane-parallel kernel reading the Arrow offsets/data buffers directly,
-    with NO pandas materialization (an ``arrow_udf`` feeds this without
-    ever constructing per-row Python strings).  Returns int32 array."""
+    """Vectorized murmur3_x86_32 over the UTF-8 bytes of an Arrow string
+    array, bit-identical to :func:`murmur3_x86_32`: all rows are processed
+    lane-by-lane in numpy uint32 arithmetic (natural wraparound), reading
+    the Arrow offsets/data buffers directly — an ``arrow_udf`` feeds this
+    without ever constructing per-row Python strings.  Returns int32
+    array."""
     n = len(arr)
     if n == 0:
         return np.empty(0, dtype=np.int32)
@@ -352,36 +337,46 @@ def shard_id_column(key: Column | str, shards: int, num_partitions: int | None =
 
     @arrow_udf(IntegerType())
     def _route(ids: pa.Array) -> pa.Array:
-        # Null/type parity with the pandas predecessor: a NULL key hashed
-        # as the string "None" (pandas astype(str)), non-string inputs as
-        # their string rendering (all library callers cast JVM-side).
-        if isinstance(ids, pa.ChunkedArray):
-            ids = ids.combine_chunks()
-        if not pa.types.is_large_string(ids.type):
-            ids = ids.cast(pa.large_string())
-        if ids.null_count:
-            ids = ids.fill_null("None")
-        raw = murmur3_x86_32_arrow(ids).astype(np.int64)
-        hashes = raw
-        # composite "shard!doc" ids (rare): '!' is 0x21, a single UTF-8
-        # byte that never occurs inside a multi-byte sequence, so one
-        # vectorized scan of the flat buffer flags the batch; only then
-        # are the affected rows materialized for the spliced hash.  The
-        # root shard uses the composite-spliced hash; the within-shard
-        # offset always uses the full-key murmur3 (the raw batch hash),
-        # matching micro_shard_of.
-        offsets, flat = _utf8_flat(ids)
-        bang = np.flatnonzero(flat == 0x21)
+        return _micro_shard_ids(ids, starts_arr, per_shard)
+
+    return _route(F.col(key) if isinstance(key, str) else key)
+
+
+def _micro_shard_ids(ids, starts_arr: np.ndarray, per_shard: int) -> pa.Array:
+    """The kernel of :func:`shard_id_column`: micro shard per key of an
+    Arrow string array, equal to :meth:`ShardRouter.micro_shard_of`."""
+    # Null/type parity with the pandas predecessor: a NULL key hashed
+    # as the string "None" (pandas astype(str)), non-string inputs as
+    # their string rendering (all library callers cast JVM-side).
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    if not pa.types.is_large_string(ids.type):
+        ids = ids.cast(pa.large_string())
+    if ids.null_count:
+        ids = ids.fill_null("None")
+    raw = murmur3_x86_32_arrow(ids).astype(np.int64)
+    hashes = raw
+    # composite "shard!doc" ids (rare): '!' is 0x21, a single UTF-8
+    # byte that never occurs inside a multi-byte sequence, so one
+    # vectorized scan of the flat buffer flags the batch; only then
+    # are the affected rows materialized for the spliced hash.  The scan
+    # covers only this array's bytes: a sliced array shares its parent's
+    # buffer, whose bytes outside [offsets[0], offsets[-1]) belong to
+    # other rows.  The root shard uses the composite-spliced hash; the
+    # within-shard offset always uses the full-key murmur3 (the raw batch
+    # hash), matching micro_shard_of.
+    offsets, flat = _utf8_flat(ids)
+    if len(ids):
+        lo = int(offsets[0])
+        bang = lo + np.flatnonzero(flat[lo:int(offsets[-1])] == 0x21)
         if bang.size:
             rows = np.unique(np.searchsorted(offsets, bang, side="right") - 1)
             hashes = raw.copy()
             fixes = [composite_id_hash(ids[int(i)].as_py()) for i in rows]
             hashes[rows] = np.array(fixes, dtype=np.int64)
-        roots = np.searchsorted(starts_arr, hashes, side="right") - 1
-        micro = roots * per_shard + ((raw & INT_MAX) % per_shard)
-        return pa.array(micro.astype(np.int32), type=pa.int32())
-
-    return _route(F.col(key) if isinstance(key, str) else key)
+    roots = np.searchsorted(starts_arr, hashes, side="right") - 1
+    micro = roots * per_shard + ((raw & INT_MAX) % per_shard)
+    return pa.array(micro.astype(np.int32), type=pa.int32())
 
 
 def with_shard_id(

@@ -443,16 +443,11 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
     from solr_map_reduce_spark.indexing import MANIFEST
 
     fs = get_fs(path, spark)
-    stats = load_search_stats(spark, path)
-    if not stats:
-        return None
     manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
     analyzed: dict = manifest.get("analyzed", {})
-    if not analyzed or set(stats) != set(analyzed):
-        return None  # sidecar out of step with the schema: full rebuild
-    for field in analyzed:
-        if not fs.exists(fs_join(path, f"{VOCAB_DIR}/{field}")):
-            return None  # vocab missing (corrupt/partial): full rebuild
+    stats = _whole_stats(spark, fs, path, analyzed)
+    if stats is None:
+        return None
 
     meta = load_vocab_meta(fs, path)
     n_buckets = int(meta["n_buckets"]) if meta else N_VOCAB_BUCKETS
@@ -565,6 +560,20 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
         return new_stats
 
     return finalize
+
+
+def _whole_stats(spark: SparkSession, fs, path: str, analyzed: dict) -> dict | None:
+    """The stored stats when the sidecar covers exactly the ``analyzed``
+    fields, each with its vocab dir; None when it is absent, out of step
+    with the schema or torn (corrupt/partial) — rebuild it whole."""
+    from solr_map_reduce_spark.fs import join as fs_join
+
+    stats = load_search_stats(spark, path)
+    if not stats or not analyzed or set(stats) != set(analyzed):
+        return None
+    if not all(fs.exists(fs_join(path, f"{VOCAB_DIR}/{f}")) for f in analyzed):
+        return None
+    return stats
 
 
 def load_search_stats(spark: SparkSession, path: str) -> dict | None:

@@ -738,16 +738,20 @@ class TestCoreReviewRegressions:
         assert os.path.isdir(os.path.join(out, "_vocab"))
         idx = SearchIndex.open(spark, out)
         assert len(idx.bm25(["alpha"], k=2).collect()) == 2
-        # but a stats file whose _vocab/ was genuinely lost still gets
-        # invalidated by the safety guard (a dangling STATS would crash the
-        # next stats-served query)
+        # but a stats file whose _vocab/ was genuinely lost is torn (a
+        # dangling STATS would crash the next stats-served query): compaction
+        # rebuilds it whole, as every other mutation path does
         import shutil
+
+        from solr_map_reduce_spark.search_stats import load_search_stats, write_search_stats
 
         shutil.rmtree(os.path.join(out, "_vocab"))
         compact(spark, out, max_segments=1)
-        assert not os.path.exists(os.path.join(out, "_SEARCH_STATS.json"))
+        assert os.path.isdir(os.path.join(out, "_vocab", "text"))
+        rebuilt = load_search_stats(spark, out)
+        assert rebuilt == write_search_stats(spark, out)
         idx2 = SearchIndex.open(spark, out)
-        assert len(idx2.bm25(["alpha"], k=2).collect()) == 2  # computed fallback
+        assert len(idx2.bm25(["alpha"], k=2).collect()) == 2
 
 
 class TestGoLive:

@@ -2,7 +2,9 @@
 cover — vectorized/scalar hash parity on arbitrary unicode, routing range
 totality, dedup resolver laws, complex-phrase window vs brute force."""
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -10,9 +12,10 @@ from solr_map_reduce_spark.operators.routing import (
     INT_MAX,
     INT_MIN,
     ShardRouter,
+    _micro_shard_ids,
     composite_id_hash,
     murmur3_x86_32,
-    murmur3_x86_32_batch,
+    murmur3_x86_32_arrow,
     partition_ranges,
 )
 
@@ -24,9 +27,27 @@ texts = st.text(min_size=0, max_size=64)
 @settings(max_examples=300, deadline=None)
 @given(st.lists(texts, min_size=1, max_size=50))
 def test_murmur3_batch_matches_scalar(strings):
-    batch = murmur3_x86_32_batch(pd.Series(strings))
+    batch = murmur3_x86_32_arrow(pa.array(strings, type=pa.large_string()))
     scalar = [murmur3_x86_32(s.encode("utf-8")) for s in strings]
     assert batch.tolist() == scalar
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(texts.map(lambda s: s + "!x"), min_size=1, max_size=5),
+    st.lists(texts, min_size=1, max_size=20),
+    st.lists(texts.map(lambda s: "a!" + s), min_size=1, max_size=5),
+    st.integers(min_value=1, max_value=8),
+)
+def test_routing_kernel_reads_only_its_slice(before, keys, after, shards):
+    # a sliced Arrow array shares its parent's data buffer: composite-id
+    # bytes ('!') of the rows around the slice must not reach its routing
+    router = ShardRouter(shards=shards, num_partitions=shards * 4)
+    starts = np.array([r[0] for r in router._ranges], dtype=np.int64)
+    whole = pa.array(before + keys + after, type=pa.large_string())
+    sliced = whole.slice(len(before), len(keys))
+    got = _micro_shard_ids(sliced, starts, 4).to_pylist()
+    assert got == [router.micro_shard_of(k) for k in keys]
 
 
 @settings(max_examples=200, deadline=None)
