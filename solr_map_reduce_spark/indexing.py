@@ -1083,7 +1083,6 @@ def _build_sidecars(
     fused = {"term_blooms", "search_stats"}
     if fused <= {s.name for s in due}:
         # ONE tokenized corpus pass per analyzed field serves both
-        # (self-gating: small corpora delegate back to the two writers)
         search_stats.write_search_sidecars(spark, path)
         due = [s for s in due if s.name not in fused]
     for s in due:

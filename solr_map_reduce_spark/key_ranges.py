@@ -39,9 +39,7 @@ Mutation safety: any rewrite changes file names, so a stale sidecar could
 MISS rows (false negative).  Every engine mutation path refreshes the
 sidecar in the same operation — ``merge_into`` and ``delete_where``
 recompute the touched shards (rewriting only those shards' span files),
-``compact`` recomputes all (its rewrite renames every segment).  External
-mutators that bypass the engine must call ``write_key_ranges`` or
-``drop_key_ranges`` (degrade to the shard scan) themselves.
+``compact`` recomputes all (its rewrite renames every segment).
 
 At 100 TB: ~800k segments across thousands of shards (SCALING.md's
 estimate).  The monolithic format would be an ~80 MB JSON parsed per open
@@ -512,21 +510,6 @@ def load_key_ranges(spark: SparkSession, path: str) -> KeyRanges | None:
             data.get("key_type", "string"), eager=data.get("shards", {})
         )
     return None
-
-
-def drop_key_ranges(spark: SparkSession, path: str) -> None:
-    """Remove the sidecar (both layouts) — the escape hatch for EXTERNAL
-    mutators that rewrite artifact files without refreshing (engine paths
-    refresh via ``write_key_ranges`` instead); a stale entry would be a
-    false negative, absence merely degrades to the shard scan."""
-    from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
-
-    fs = get_fs(path, spark)
-    for sub in (KEY_RANGES, KEY_RANGES_DIR):
-        full = fs_join(path, sub)
-        if fs.exists(full):
-            fs.delete(full)
 
 
 def next_prefix(prefix: str) -> str | None:

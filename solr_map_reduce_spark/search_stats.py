@@ -63,12 +63,11 @@ from pyspark.sql import Observation, SparkSession
 STATS = "_SEARCH_STATS.json"
 VOCAB_DIR = "_vocab"
 VOCAB_META = "_VOCAB_META.json"
-# Legacy/default bucket count: reads of a meta-less vocab dir assume it, and
-# callers may pass it explicitly.  WRITES size the count adaptively instead
-# (``_auto_buckets``) — a fixed 64 writes 64 near-empty files per field at
-# fixture scale and multi-GB bucket files at 100 TB; the right count scales
-# with the corpus.  Readers take the count from _VOCAB_META.json, so any
-# value is served correctly.
+# Legacy/default bucket count: reads of a meta-less vocab dir assume it.
+# WRITES size the count from the artifact instead (``_auto_buckets``) — a
+# fixed 64 writes 64 near-empty files per field at fixture scale and
+# multi-GB bucket files at 100 TB.  Readers take the count from
+# _VOCAB_META.json, so any value is served correctly.
 N_VOCAB_BUCKETS = 64
 _VOCAB_SCHEMA = "term string, df bigint, bucket int"
 
@@ -76,23 +75,23 @@ _VOCAB_SCHEMA = "term string, df bigint, bucket int"
 # projection of the corpus, so this is an order-of-magnitude dial, not a
 # file-size promise: 8 MB/bucket puts a ~0.5 GB artifact at the old default
 # (64) and covers [floor 8 .. cap 4096] over fixture scale to 100 TB-ish
-# estimates.  Env-overridable (deployments with atypically rich vocabularies
-# can lower it) — parameterised, not a local[32] constant.
-_VOCAB_BUCKET_TARGET_BYTES = int(
-    __import__("os").environ.get("SMRS_VOCAB_BUCKET_TARGET_BYTES", 8 << 20)
-)
+# estimates.
+_VOCAB_BUCKET_TARGET_BYTES = 8 << 20
 
 
-def _auto_buckets(idx) -> int:
-    """Scale-adaptive vocab bucket count from Catalyst's scan-size estimate
-    of the artifact (same estimator the fused-build gate uses): the smallest
-    power of two n in [8, 4096] with n * target >= estimate.  Power-of-two
-    steps keep the count stable under small estimate drift; the floor stops
-    fixture-scale builds from writing dozens of near-empty files (measured
-    r13: 64 -> 8 buckets cut the sf0.1 docs vocab write ~32%); the cap
-    bounds the partition-dir fanout a point lookup must list."""
-    raw = idx._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    est = raw if isinstance(raw, int) else int(raw.toString())
+def _size_estimate(df) -> int:
+    """Catalyst's optimized-plan size estimate of ``df``, in bytes."""
+    raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return raw if isinstance(raw, int) else int(raw.toString())
+
+
+def _auto_buckets(est: int) -> int:
+    """Vocab bucket count for an artifact of ``est`` bytes: the smallest
+    power of two n in [8, 4096] with n * target >= est.  Power-of-two steps
+    keep the count stable under small estimate drift; the floor stops
+    fixture-scale builds from writing dozens of near-empty files (measured:
+    64 -> 8 buckets cut the sf0.1 docs vocab write ~32%); the cap bounds
+    the partition-dir fanout a point lookup must list."""
     n = 8
     while n < 4096 and est > n * _VOCAB_BUCKET_TARGET_BYTES:
         n *= 2
@@ -124,14 +123,39 @@ def load_vocab_meta(fs, path: str) -> dict | None:
     return json.loads(fs.read_text(full))
 
 
-def write_search_stats(
-    spark: SparkSession, path: str, n_buckets: int | None = None
-) -> dict | None:
-    """Compute and persist BM25 statistics + the term dictionary for every
-    analyzed field of the artifact at ``path``.  Returns the stats dict
-    (None when the artifact has no analyzed fields).  ``n_buckets=None``
-    sizes the bucket count from the artifact's scan estimate
-    (:func:`_auto_buckets`); an explicit count is honored as given."""
+def _write_vocab_meta(fs, path: str, n_buckets: int) -> None:
+    from solr_map_reduce_spark.fs import join as fs_join
+
+    fs.write_text(
+        fs_join(path, VOCAB_DIR, VOCAB_META),
+        json.dumps({"n_buckets": int(n_buckets), "hash": "crc32"}),
+    )
+
+
+def _write_buckets(vocab, n_buckets: int, out: str) -> None:
+    """Write a ``(term, df)`` dictionary hash-bucketed by term: one
+    term-sorted file per ``bucket=N`` dir."""
+    (
+        vocab.withColumn("bucket", _bucket_expr(n_buckets))
+        .repartition(F.col("bucket"))
+        .sortWithinPartitions("bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(out)
+    )
+
+
+def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
+    """The one full build of the stats sidecar: BM25 statistics + the term
+    dictionary for every analyzed field of the artifact at ``path``, one
+    tokenized corpus pass per field.  Per field, ``field_pass(field,
+    observed, tokens_col, write)`` derives the ``(term, df)`` dictionary
+    from ``observed`` (the artifact) and hands it to ``write``; the
+    scalar statistics ride that job as an ``Observation`` on the
+    pre-explode rows instead of running their own corpus scan.  The
+    ``_SEARCH_STATS.json`` commit marker goes DOWN before any vocab dir is
+    in flux and UP last.  Returns the stats (None when the artifact has no
+    analyzed fields)."""
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
     from solr_map_reduce_spark.indexing import MANIFEST, read_index
@@ -141,95 +165,52 @@ def write_search_stats(
     analyzed: dict = manifest.get("analyzed", {})
     if not analyzed:
         return None
-    # commit marker DOWN while the vocab dirs are in flux (a rebuild over
-    # an existing sidecar would otherwise serve old scalars + new vocab)
     if fs.exists(fs_join(path, STATS)):
         fs.delete(fs_join(path, STATS))
     idx = read_index(spark, path)
-    if n_buckets is None:
-        n_buckets = _auto_buckets(idx)
+    n_buckets = _auto_buckets(_size_estimate(idx))
     stats: dict = {}
     for field, info in analyzed.items():
-        tokens_col = info["tokens_col"]
-        # The scalar aggregates ride the vocab-write job as an Observation
-        # on the pre-explode rows instead of running their own corpus scan
-        # (r13: 2 scans/field -> 1; at 100 TB one full corpus pass per
-        # analyzed field).  The observed expressions are byte-identical to
-        # _field_aggregates' (count all rows / sum+count of visible token
-        # lengths), and they see exactly the rows that job scans: the
-        # observe node sits ABOVE the scan and BELOW the explode, and this
-        # is a full unfiltered read of the artifact, same as before.
-        toks = _real_toks(tokens_col)
+        out = fs_join(path, f"{VOCAB_DIR}/{field}")
         obs = Observation()
-        observed = idx.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(toks)).alias("sum_dl"),
-            F.count(F.size(toks)).alias("n_dl"),
+        observed = idx.observe(obs, *_length_aggs(info["tokens_col"]))
+        field_pass(
+            field, observed, info["tokens_col"],
+            lambda vocab: _write_buckets(vocab, n_buckets, out),
         )
-        (
-            _term_df(observed, tokens_col, "df")
-            .withColumn("bucket", _bucket_expr(n_buckets))
-            .repartition(F.col("bucket"))
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
-        )
-        row = obs.get
-        stats[field] = {
-            "n_docs": int(row["n_docs"]),
-            "sum_dl": int(row["sum_dl"] or 0),
-            "n_dl": int(row["n_dl"]),
-        }
-    fs.write_text(
-        fs_join(path, VOCAB_DIR, VOCAB_META),
-        json.dumps({"n_buckets": int(n_buckets), "hash": "crc32"}),
-    )
+        stats[field] = _length_stats(obs.get)
+    _write_vocab_meta(fs, path, n_buckets)
     fs.write_text(fs_join(path, STATS), json.dumps(stats))  # marker UP last
     return stats
 
 
-# Corpus-size gate for the fused sidecar build: below this many bytes of
-# artifact data the separate writers win (the fused plan's extra exchange
-# + persisted (term, shard) aggregate cost more than the corpus scan they
-# save — measured r13: 1.2 MB docs fixture −3.5% for fused, 86 MB a wash,
-# 323 MB fused wins 25%, and at 100 TB the saved corpus pass dominates by
-# orders of magnitude).  Env-overridable so deployments can move the
-# crossover without a code change; the default keeps fixture-scale builds
-# (and the driver's bench) on the measured-faster path at each scale.
-_FUSED_MIN_BYTES = int(
-    __import__("os").environ.get("SMRS_FUSED_SIDECAR_MIN_BYTES", 128 << 20)
-)
+def write_search_stats(spark: SparkSession, path: str) -> dict | None:
+    """Compute and persist BM25 statistics + the term dictionary for every
+    analyzed field of the artifact at ``path``.  Returns the stats dict
+    (None when the artifact has no analyzed fields)."""
+    return _write_vocab(
+        spark, path,
+        lambda _field, observed, tokens_col, write: write(
+            _term_df(observed, tokens_col, "df")
+        ),
+    )
 
 
 def write_search_sidecars(
-    spark: SparkSession,
-    path: str,
-    n_buckets: int | None = None,
-    m: int | None = None,
-    k: int | None = None,
-    min_bytes: int | None = None,
+    spark: SparkSession, path: str
 ) -> tuple[dict | None, dict | None]:
     """Full rebuild of BOTH serving sidecars (term blooms + BM25
-    stats/vocab) from ONE tokenized corpus pass per analyzed field —
-    when the corpus is big enough for that pass to matter (the
-    ``min_bytes`` gate above, Catalyst's scan-size estimate); smaller
-    artifacts delegate to the separate writers, which measure faster
-    there.  Outputs are byte-identical on every path.
+    stats/vocab) from ONE tokenized corpus pass per analyzed field, with
+    outputs byte-identical to ``write_term_blooms`` + ``write_search_stats``.
 
-    ``write_term_blooms`` and ``write_search_stats`` each scan + explode
-    the stored token column; when a full build wants both, the shared
-    per-``(term, shard)`` doc-count aggregate below serves the two of
-    them — the bloom bitmaps need term PRESENCE per shard (all tokens,
+    Both of those scan + explode the stored token column; here one
+    per-``(term, shard)`` doc-count aggregate serves the two of them —
+    the bloom bitmaps need term PRESENCE per shard (all tokens,
     reversed-copy markers included), the vocab needs the per-term doc
     count (visible tokens only), and both are projections of that one
-    aggregate.  The scalar BM25 stats ride the same job as an
-    ``Observation`` on the pre-explode rows, exactly as in
-    ``write_search_stats``.  Per analyzed field the build pays one
-    corpus scan + explode instead of two; the aggregate itself (|vocab|
-    x |shards| rows, far smaller than the corpus) is persisted across
-    the two projections and unpersisted before the next field.
+    aggregate.  The aggregate (|vocab| x |shards| rows, far smaller than
+    the corpus) is persisted across the projections and unpersisted
+    before the next field.
 
     Equivalences (vs the separate writers, verified byte-identical in
     tests): a visible term appears in ``array_distinct(tokens)`` iff it
@@ -240,70 +221,23 @@ def write_search_sidecars(
     every doc lives in exactly one shard.
 
     Subset refreshes (``write_term_blooms(shards=...)``) and delta
-    maintenance keep the dedicated writers — this is the full-rebuild
-    fast path only.  Crash consistency is the stats writer's: the
-    ``_SEARCH_STATS.json`` commit marker goes DOWN before any vocab dir
-    is in flux and UP last; the blooms JSON stays a single atomic write.
-
-    Returns ``(blooms_sidecar, stats)`` (both None when the artifact has
-    no analyzed fields)."""
-    import base64
-
+    maintenance keep the dedicated writers.  Returns ``(blooms_sidecar,
+    stats)`` (both None when the artifact has no analyzed fields)."""
+    from solr_map_reduce_spark.extensions.search import REV_MARK
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
+    from solr_map_reduce_spark.indexing import SHARD_COL
     from solr_map_reduce_spark.term_blooms import (
         BLOOMS,
         DEFAULT_K,
-        DEFAULT_M,
-        _positions_col,
+        _auto_bloom_m,
+        _bitmaps,
+        _max_shard_terms,
     )
 
-    from solr_map_reduce_spark import term_blooms as _tb
-    from solr_map_reduce_spark.term_blooms import write_term_blooms
+    blooms: dict = {}
 
-    explicit_m = m is not None
-    k = DEFAULT_K if k is None else k
-    fs = get_fs(path, spark)
-    manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
-    analyzed: dict = manifest.get("analyzed", {})
-    if not analyzed:
-        return None, None
-    idx = read_index(spark, path)
-    if n_buckets is None:
-        n_buckets = _auto_buckets(idx)  # same estimator on both paths below
-    raw = idx._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    est = raw if isinstance(raw, int) else int(raw.toString())
-    threshold = _FUSED_MIN_BYTES if min_bytes is None else min_bytes
-    if threshold > 0 and est < threshold:
-        blooms = write_term_blooms(
-            spark, path, m=(m if explicit_m else None), k=k
-        )
-        stats_only = write_search_stats(spark, path, n_buckets)
-        return blooms, stats_only
-    # bloom width for the auto path: gate + data-driven sizing IDENTICAL
-    # to write_term_blooms (same Catalyst estimate, and the per-shard
-    # distinct-term counts below come from the same distinct (term, shard)
-    # set) — the fused and delegated builds stay byte-equal at every scale
-    auto_small_m = (not explicit_m) and est < _tb._ADAPTIVE_BLOOM_MIN_BYTES
-    # commit marker DOWN while the vocab dirs are in flux (same protocol
-    # as write_search_stats)
-    if fs.exists(fs_join(path, STATS)):
-        fs.delete(fs_join(path, STATS))
-    from solr_map_reduce_spark.extensions.search import REV_MARK
-
-    blooms_sidecar: dict = {}
-    stats: dict = {}
-    for field, info in analyzed.items():
-        tokens_col = info["tokens_col"]
-        toks = _real_toks(tokens_col)
-        obs = Observation()
-        observed = idx.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(toks)).alias("sum_dl"),
-            F.count(F.size(toks)).alias("n_dl"),
-        )
+    def field_pass(field, observed, tokens_col, write) -> None:
         placement = (
             observed.select(
                 F.col(SHARD_COL).alias("_s"),
@@ -314,71 +248,27 @@ def write_search_sidecars(
             .persist()
         )
         try:
-            (
+            # coalesce: a sum is nullable, a count is not — the vocab
+            # files' schema must match write_search_stats'
+            write(
                 placement.filter(~F.col("term").startswith(REV_MARK))
                 .groupBy("term")
-                .agg(F.sum("_n").alias("df"))
-                .withColumn("bucket", _bucket_expr(n_buckets))
-                .repartition(F.col("bucket"))
-                .sortWithinPartitions("bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
+                .agg(F.coalesce(F.sum("_n"), F.lit(0)).alias("df"))
             )
-            row = obs.get
-            stats[field] = {
-                "n_docs": int(row["n_docs"]),
-                "sum_dl": int(row["sum_dl"] or 0),
-                "n_dl": int(row["n_dl"]),
+            m = _auto_bloom_m(_max_shard_terms(placement))
+            blooms[field] = {
+                "m": m,
+                "k": DEFAULT_K,
+                "shards": _bitmaps(placement, "term", m, DEFAULT_K),
             }
-            if explicit_m:
-                m_f = m
-            elif auto_small_m:
-                m_f = DEFAULT_M
-            else:
-                # per-shard distinct-term count is a cheap job over the
-                # already-persisted aggregate (|vocab| x |shards| rows)
-                m_f = _tb._auto_bloom_m(
-                    max(
-                        (
-                            int(r["count"])
-                            for r in placement.groupBy("_s").count().collect()
-                        ),
-                        default=0,
-                    )
-                )
-            per_shard_pos = (
-                placement.select(
-                    "_s", F.explode(_positions_col(F.col("term"), m_f, k)).alias("_p")
-                )
-                .distinct()
-                .collect()
-            )
         finally:
             placement.unpersist()
-        bitmaps: dict[str, bytearray] = {}
-        for r in per_shard_pos:
-            s = str(int(r["_s"]))
-            bm = bitmaps.get(s)
-            if bm is None:
-                bm = bitmaps[s] = bytearray(m_f // 8)
-            p = r["_p"]
-            bm[p // 8] |= 1 << (p % 8)
-        blooms_sidecar[field] = {
-            "m": m_f,
-            "k": k,
-            "shards": {
-                s: base64.b64encode(bytes(bm)).decode()
-                for s, bm in bitmaps.items()
-            },
-        }
-    fs.write_text(fs_join(path, BLOOMS), json.dumps(blooms_sidecar))
-    fs.write_text(
-        fs_join(path, VOCAB_DIR, VOCAB_META),
-        json.dumps({"n_buckets": int(n_buckets), "hash": "crc32"}),
-    )
-    fs.write_text(fs_join(path, STATS), json.dumps(stats))  # marker UP last
-    return blooms_sidecar, stats
+
+    stats = _write_vocab(spark, path, field_pass)
+    if stats is None:
+        return None, None
+    get_fs(path, spark).write_text(fs_join(path, BLOOMS), json.dumps(blooms))
+    return blooms, stats
 
 
 def _real_toks(tokens_col: str) -> F.Column:
@@ -392,15 +282,28 @@ def _real_toks(tokens_col: str) -> F.Column:
     return _visible_toks(F.col(tokens_col))
 
 
-def _field_aggregates(df, tokens_col: str) -> tuple[int, int, int]:
-    """(n_docs, sum_dl, n_dl) of one token column over ``df``."""
+def _length_aggs(tokens_col: str) -> list[F.Column]:
+    """A field's BM25 scalars over a DataFrame's rows: the row count and
+    the sum/count of visible token-array lengths."""
     toks = _real_toks(tokens_col)
-    row = df.agg(
+    return [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(toks)).alias("sum_dl"),
         F.count(F.size(toks)).alias("n_dl"),
-    ).collect()[0]
-    return (int(row["n_docs"]), int(row["sum_dl"] or 0), int(row["n_dl"]))
+    ]
+
+
+def _length_stats(row) -> dict:
+    return {
+        "n_docs": int(row["n_docs"]),
+        "sum_dl": int(row["sum_dl"] or 0),
+        "n_dl": int(row["n_dl"]),
+    }
+
+
+def _field_aggregates(df, tokens_col: str) -> dict:
+    """{n_docs, sum_dl, n_dl} of one token column over ``df``."""
+    return _length_stats(df.agg(*_length_aggs(tokens_col)).collect()[0])
 
 
 def _term_df(df, tokens_col: str, out_name: str):
@@ -460,11 +363,7 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
         o = _field_aggregates(old_subset, tokens_col)
         n = _field_aggregates(new_subset, tokens_col)
         s = stats[field]
-        new_stats[field] = {
-            "n_docs": int(s["n_docs"]) - o[0] + n[0],
-            "sum_dl": int(s["sum_dl"]) - o[1] + n[1],
-            "n_dl": int(s["n_dl"]) - o[2] + n[2],
-        }
+        new_stats[field] = {key: int(s[key]) - o[key] + n[key] for key in o}
         delta = (
             _term_df(old_subset, tokens_col, "_df_old")
             .join(_term_df(new_subset, tokens_col, "_df_new"), "term", "full_outer")
@@ -505,16 +404,11 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
                 ).alias("df"),
             )
             .filter(F.col("df") > 0)
-            .withColumn("bucket", _bucket_expr(n_buckets))
         )
         # materialize NOW (reads old shard files + stored vocab buckets,
         # both of which move/disappear at swap time)
-        (
-            merged.repartition(F.col("bucket"))
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(fs_join(path, f"{VOCAB_DIR}/{field}__pending"))
+        _write_buckets(
+            merged, n_buckets, fs_join(path, f"{VOCAB_DIR}/{field}__pending")
         )
         pending[field] = touched
 
@@ -552,10 +446,7 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
             fs.delete(pend)
         fs.delete(trash)
         if migrating:
-            fs.write_text(
-                fs_join(path, VOCAB_DIR, VOCAB_META),
-                json.dumps({"n_buckets": int(n_buckets), "hash": "crc32"}),
-            )
+            _write_vocab_meta(fs, path, n_buckets)
         fs.write_text(fs_join(path, STATS), json.dumps(new_stats))
         return new_stats
 
@@ -585,19 +476,6 @@ def load_search_stats(spark: SparkSession, path: str) -> dict | None:
     if not fs.exists(full):
         return None
     return json.loads(fs.read_text(full))
-
-
-def drop_search_stats(spark: SparkSession, path: str) -> None:
-    """Invalidate after a mutation — stale global statistics would silently
-    skew scores, so queries must fall back to computing them."""
-    from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
-
-    fs = get_fs(path, spark)
-    for sub in (STATS, VOCAB_DIR):
-        full = fs_join(path, sub)
-        if fs.exists(full):
-            fs.delete(full)
 
 
 def term_dfs(

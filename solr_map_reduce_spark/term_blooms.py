@@ -10,8 +10,9 @@ a handful of shards.  The sidecar closes that gap:
 
 Build: one pass over the stored token column — ``(shard, token)`` distinct,
 k positions per token via ``xxhash64(token, i) % m`` (JVM-side), distinct
-positions per shard collected (bounded by m, default 2^16 bits = 8 KiB per
-shard) and packed into a bitmap driver-side.
+positions per shard collected and packed into a bitmap driver-side.  The
+width m is sized from the largest per-shard distinct-term count
+(:func:`_auto_bloom_m`, 2^16 to 2^24 bits = 8 KiB to 2 MiB per shard).
 
 Query: ``SearchIndex.contains_all/any/phrase`` intersect the query terms
 with each shard's bitmap and add a ``shard IN (candidates)`` partition
@@ -27,42 +28,32 @@ from __future__ import annotations
 
 import base64
 import json
+import warnings
+from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 BLOOMS = "_TERM_BLOOMS.json"
-DEFAULT_M = 1 << 16  # bits per shard bitmap (8 KiB)
+DEFAULT_M = 1 << 16  # bitmap width floor (8 KiB per shard)
 DEFAULT_K = 4
-MAX_M = 1 << 24  # adaptive cap: 2 MiB bitmap per shard per field
+MAX_M = 1 << 24  # width cap: 2 MiB bitmap per shard per field
 
-# Scale-adaptive bitmap width (r13, same pattern as the fused-build gate
-# and the vocab bucket count): a fixed m saturates on a large corpus —
-# at m=2^16/k=4 a shard with 1 M distinct terms drives the false-positive
-# rate to ~1.0 and candidate_shards degenerates to "all shards", i.e. the
-# pruning the sidecar exists for silently stops working.  Above the gate
-# the writer sizes m from the OBSERVED per-shard distinct-term count
-# (bits-per-term target below; 16 bits/term at k=4 gives FP ~0.24%);
-# below it the fixture-scale default (2^16, today's bytes) is provably
-# sufficient and the build keeps its single-job shape.  Both knobs are
-# env-overridable so deployments can move them without a code change.
-_BLOOM_BITS_PER_TERM = int(
-    __import__("os").environ.get("SMRS_BLOOM_BITS_PER_TERM", 16)
-)
-_ADAPTIVE_BLOOM_MIN_BYTES = int(
-    __import__("os").environ.get("SMRS_ADAPTIVE_BLOOM_MIN_BYTES", 128 << 20)
-)
+# Bits per distinct term a full build sizes the bitmap for: 16 at k=4 gives
+# a false-positive rate of ~0.24%.  A fixed width would saturate on a large
+# corpus — at m=2^16/k=4 a shard with 1 M distinct terms drives the rate to
+# ~1.0 and candidate_shards degenerates to "all shards".
+_BLOOM_BITS_PER_TERM = 16
 
 
-def _auto_bloom_m(n_terms: int, bits_per_term: int | None = None) -> int:
+def _auto_bloom_m(n_terms: int) -> int:
     """Smallest power-of-two bitmap width in [DEFAULT_M, MAX_M] giving at
-    least ``bits_per_term`` bits per distinct term (the max over shards).
-    Powers of two keep ``pmod(xxhash64, m)`` a mask and make any two
-    widths fold-compatible; the cap bounds the sidecar JSON (base64 of
+    least ``_BLOOM_BITS_PER_TERM`` bits per distinct term (the max over
+    shards).  Powers of two keep ``pmod(xxhash64, m)`` a mask and make any
+    two widths fold-compatible; the cap bounds the sidecar JSON (base64 of
     m/8 bytes per shard per field) at 100 TB scale, degrading FP
     gracefully instead of growing the artifact without bound."""
-    bpt = _BLOOM_BITS_PER_TERM if bits_per_term is None else bits_per_term
-    need = max(int(n_terms), 0) * max(int(bpt), 1)
+    need = max(int(n_terms), 0) * _BLOOM_BITS_PER_TERM
     m = DEFAULT_M
     while m < MAX_M and m < need:
         m <<= 1
@@ -77,7 +68,41 @@ def _positions_col(token: F.Column, m: int, k: int) -> F.Column:
     )
 
 
-_POSITIONS_MEMO: dict[tuple[int, int, str], list[int]] = {}
+def _max_shard_terms(terms) -> int:
+    """Largest per-shard distinct-term count of a distinct ``(_s, term)``
+    set — one cheap job over the (persisted) set the bitmap job reads
+    anyway, not a second corpus pass."""
+    return max(
+        (int(r["count"]) for r in terms.groupBy("_s").count().collect()),
+        default=0,
+    )
+
+
+def _bitmaps(terms, term_col: str, m: int, k: int) -> dict[str, str]:
+    """Base64 bitmap per shard of a distinct ``(_s, term_col)`` set.  The
+    distinct (shard, position) pairs are collected directly and packed
+    driver-side: grouping them per shard first would add a full exchange
+    of the position set only to reshape rows the driver unpacks anyway
+    (the collected volume is bounded by shards x m either way)."""
+    bitmaps: dict[str, bytearray] = {}
+    for row in (
+        terms.select("_s", F.explode(_positions_col(F.col(term_col), m, k)).alias("_p"))
+        .distinct()
+        .collect()
+    ):
+        s = str(int(row["_s"]))
+        bm = bitmaps.get(s)
+        if bm is None:
+            bm = bitmaps[s] = bytearray(m // 8)
+        p = row["_p"]
+        bm[p // 8] |= 1 << (p % 8)
+    return {s: base64.b64encode(bytes(bm)).decode() for s, bm in bitmaps.items()}
+
+
+# (m, k, term) -> positions, LRU-capped: a long-lived serving process sees
+# an unbounded stream of distinct query terms
+_POSITIONS_MEMO: OrderedDict[tuple[int, int, str], list[int]] = OrderedDict()
+_POSITIONS_MEMO_CAP = 4096
 
 
 def _terms_positions(
@@ -87,197 +112,95 @@ def _terms_positions(
     at build time (one tiny local job on a |terms|-row DataFrame).
     Memoized per (m, k, term): repeated queries — the serving pattern —
     skip the job entirely."""
-    missing = [t for t in terms if (m, k, t) not in _POSITIONS_MEMO]
+    out: dict[str, list[int]] = {}
+    for t in terms:
+        if (m, k, t) in _POSITIONS_MEMO:
+            _POSITIONS_MEMO.move_to_end((m, k, t))
+            out[t] = _POSITIONS_MEMO[(m, k, t)]
+    missing = [t for t in terms if t not in out]
     if missing:
         df = spark.createDataFrame([(t,) for t in missing], "term string")
         rows = df.select(
             "term", _positions_col(F.col("term"), m, k).alias("pos")
         ).collect()
         for r in rows:
-            _POSITIONS_MEMO[(m, k, r["term"])] = list(r["pos"])
-    return {t: _POSITIONS_MEMO[(m, k, t)] for t in terms}
+            out[r["term"]] = _POSITIONS_MEMO[(m, k, r["term"])] = list(r["pos"])
+        while len(_POSITIONS_MEMO) > _POSITIONS_MEMO_CAP:
+            _POSITIONS_MEMO.popitem(last=False)
+    return out
 
 
 def write_term_blooms(
-    spark: SparkSession,
-    path: str,
-    m: int | None = None,
-    k: int | None = None,
-    shards: list[int] | None = None,
+    spark: SparkSession, path: str, shards: list[int] | None = None
 ) -> dict | None:
     """Compute and persist per-shard bitmaps for every analyzed field of the
-    artifact at ``path``.  ``shards`` restricts the recompute to those shard
-    dirs (partition-pruned scan) and merges into the existing sidecar — the
-    ``merge_into`` refresh path.  Returns the sidecar dict (None when the
-    artifact has no analyzed fields).
+    artifact at ``path``.  Returns the sidecar dict (None when the artifact
+    has no analyzed fields).
 
-    ``m=None`` (the default) sizes the bitmap: a subset refresh ADOPTS the
-    stored sidecar's per-field (m, k) — recomputing touched shards at the
-    params the untouched bitmaps already have, instead of escalating a
-    custom-m artifact to an O(corpus) full rebuild on every delta touch;
-    a full rebuild takes DEFAULT_M below the adaptive gate (fixture-scale
-    bytes unchanged) and :func:`_auto_bloom_m` of the observed per-shard
-    distinct-term count above it.  An explicit ``m`` is honored exactly as
-    before, including the escalate-on-mismatch subset semantics; an
-    explicit ``k`` that differs from the stored per-field k likewise
-    escalates a subset refresh to a full rebuild (the untouched bitmaps
-    were probed at different positions, so they cannot be merged into).
-    Adopted refreshes re-check saturation: when the touched shards'
-    distinct-term count leaves the stored width under half the
-    bits-per-term target, a loud warning recommends a full re-size."""
+    A full build sizes each field's width with :func:`_auto_bloom_m` from
+    the largest per-shard distinct-term count.  ``shards`` restricts the
+    recompute to those shard dirs (partition-pruned scan) and merges into
+    the existing sidecar — the ``merge_into`` refresh path.  It ADOPTS the
+    stored per-field (m, k), so the untouched bitmaps stay valid by
+    construction; when the sidecar is absent or misses an analyzed field
+    the untouched shards' bitmaps cannot be kept, and the refresh rebuilds
+    in full (a missing shard would be a query false negative).  Adopted
+    refreshes re-check saturation: when the touched shards' distinct-term
+    count leaves the stored width under half the bits-per-term target, a
+    loud warning recommends a full re-size."""
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
     from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
 
-    k0 = DEFAULT_K if k is None else k
     fs = get_fs(path, spark)
     manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
     analyzed: dict = manifest.get("analyzed", {})
     if not analyzed:
         return None
-
     existing: dict = {}
-    adopted: dict[str, tuple[int, int]] | None = None
-    if shards is not None:
-        if fs.exists(fs_join(path, BLOOMS)):
-            existing = json.loads(fs.read_text(fs_join(path, BLOOMS)))
-        if m is None:
-            # auto: adopt the stored per-field params — the untouched
-            # shards' bitmaps stay valid by construction.  An EXPLICIT k
-            # that differs from any stored field's k cannot be adopted
-            # (the untouched bitmaps were built with different probe
-            # positions): fall through to the escalate-to-full-rebuild
-            # path, same as an explicit-m mismatch (ADVICE r13).
-            if (
-                existing
-                and all(
-                    "m" in existing.get(f, {}) and "k" in existing.get(f, {})
-                    for f in analyzed
-                )
-                and (
-                    k is None
-                    or all(int(existing[f]["k"]) == k0 for f in analyzed)
-                )
-            ):
-                adopted = {
-                    f: (int(existing[f]["m"]), int(existing[f]["k"]))
-                    for f in analyzed
-                }
-            else:
-                shards = None
-                existing = {}
-        # an explicit-m subset refresh can only MERGE into a compatible
-        # sidecar: if the sidecar is absent or any field's (m, k) differ,
-        # the untouched shards' bitmaps can't be kept (params changed) nor
-        # recomputed from the filtered scan — escalate to a full rebuild,
-        # else the missing shards would silently become query false
-        # negatives
-        elif not existing or any(
-            existing.get(f, {}).get("m") != m or existing.get(f, {}).get("k") != k0
-            for f in analyzed
-        ):
-            shards = None
-            existing = {}
+    if shards is not None and fs.exists(fs_join(path, BLOOMS)):
+        existing = json.loads(fs.read_text(fs_join(path, BLOOMS)))
+    # a subset refresh needs a stored (m, k) for every analyzed field
+    if not all({"m", "k"} <= set(existing.get(f, {})) for f in analyzed):
+        shards, existing = None, {}
 
     idx = read_index(spark, path)
     if shards is not None:
         idx = idx.filter(F.col(SHARD_COL).isin([int(s) for s in shards]))
-
-    # bitmap-width resolution for the full-rebuild auto path: DEFAULT_M
-    # below the adaptive gate (same Catalyst estimator as the fused-build
-    # and vocab-bucket gates), data-driven per field above it (params=None
-    # marks "size from the observed distinct-term count in the loop")
-    params: dict[str, tuple[int, int]] | None
-    if adopted is not None:
-        params = adopted
-    elif m is not None:
-        params = {f: (m, k0) for f in analyzed}
-    else:
-        raw = idx._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est = raw if isinstance(raw, int) else int(raw.toString())
-        if est < _ADAPTIVE_BLOOM_MIN_BYTES:
-            params = {f: (DEFAULT_M, k0) for f in analyzed}
-        else:
-            params = None
-
     sidecar: dict = {}
     for field, info in analyzed.items():
-        tokens_col = info["tokens_col"]
-        # The distinct (shard, position) pairs are collected directly and
-        # grouped into bitmaps driver-side (r13): the former
-        # groupBy(shard).collect_set added a THIRD full exchange of the
-        # position set only to reshape rows the driver unpacks anyway —
-        # the collected volume is identical either way (bounded by
-        # shards x m positions, the same bound the bitmap itself has).
-        terms_df = (
+        terms = (
             idx.select(
                 F.col(SHARD_COL).alias("_s"),
-                F.explode(F.array_distinct(F.col(tokens_col))).alias("_t"),
+                F.explode(F.array_distinct(F.col(info["tokens_col"]))).alias("_t"),
             )
             .distinct()
+            .persist()
         )
-        if params is None or adopted is not None:
-            # adaptive width / adoption saturation check: one cheap count
-            # job over the persisted distinct (shard, term) set the
-            # positions job reads anyway — NOT a second corpus pass
-            terms_df = terms_df.persist()
-            n_max = max(
-                (
-                    int(r["count"])
-                    for r in terms_df.groupBy("_s").count().collect()
-                ),
-                default=0,
-            )
-        if params is None:
-            m_f, k_f = _auto_bloom_m(n_max), k0
-        else:
-            m_f, k_f = params[field]
-            if adopted is not None and n_max and m_f < n_max * max(
-                _BLOOM_BITS_PER_TERM // 2, 1
-            ):
-                # Adopted refreshes keep the stored width forever, so a
-                # corpus that grew past the width's design point would
-                # silently decay to FP ~1 — pruning dies while the build
-                # cost stays (ADVICE r13).  The touched shards' distinct-
-                # term count is already in hand; warn loudly when the
-                # stored m gives under HALF the bits-per-term target so
-                # the operator re-sizes with one full rebuild instead of
-                # this path escalating O(corpus) work on every delta.
-                import warnings
-
-                warnings.warn(
-                    f"term-bloom sidecar for field {field!r}: stored "
-                    f"m={m_f} gives {m_f / n_max:.1f} bits/term for "
-                    f"{n_max} distinct terms in the refreshed shards "
-                    f"(target {_BLOOM_BITS_PER_TERM}); shard pruning is "
-                    "degrading — run a full write_term_blooms(spark, "
-                    "path) to re-size the bitmaps",
-                    stacklevel=2,
-                )
-        per_shard_pos = (
-            terms_df.select(
-                "_s", F.explode(_positions_col(F.col("_t"), m_f, k_f)).alias("_p")
-            )
-            .distinct()
-            .collect()
-        )
-        if params is None or adopted is not None:
-            terms_df.unpersist()
-        prev = existing.get(field, {})
-        if prev and (prev.get("m") != m_f or prev.get("k") != k_f):
-            prev = {}  # parameter change: full rebuild semantics
-        shard_maps: dict = dict(prev.get("shards", {})) if prev else {}
-        bitmaps: dict[str, bytearray] = {}
-        for row in per_shard_pos:
-            s = str(int(row["_s"]))
-            bm = bitmaps.get(s)
-            if bm is None:
-                bm = bitmaps[s] = bytearray(m_f // 8)
-            p = row["_p"]
-            bm[p // 8] |= 1 << (p % 8)
-        for s, bm in bitmaps.items():
-            shard_maps[s] = base64.b64encode(bytes(bm)).decode()
-        sidecar[field] = {"m": m_f, "k": k_f, "shards": shard_maps}
+        try:
+            n_max = _max_shard_terms(terms)
+            if shards is None:
+                m, k = _auto_bloom_m(n_max), DEFAULT_K
+            else:
+                m, k = int(existing[field]["m"]), int(existing[field]["k"])
+                if n_max and m < n_max * max(_BLOOM_BITS_PER_TERM // 2, 1):
+                    # an adopted width never grows, so a corpus that outgrew
+                    # it would silently decay to FP ~1: pruning dies while
+                    # the build cost stays
+                    warnings.warn(
+                        f"term-bloom sidecar for field {field!r}: stored "
+                        f"m={m} gives {m / n_max:.1f} bits/term for "
+                        f"{n_max} distinct terms in the refreshed shards "
+                        f"(target {_BLOOM_BITS_PER_TERM}); shard pruning is "
+                        "degrading — run a full write_term_blooms(spark, "
+                        "path) to re-size the bitmaps",
+                        stacklevel=2,
+                    )
+            shard_maps = dict(existing.get(field, {}).get("shards", {}))
+            shard_maps.update(_bitmaps(terms, "_t", m, k))
+        finally:
+            terms.unpersist()
+        sidecar[field] = {"m": m, "k": k, "shards": shard_maps}
 
     fs.write_text(fs_join(path, BLOOMS), json.dumps(sidecar))
     return sidecar

@@ -1,4 +1,4 @@
-"""write_search_sidecars (the r13 one-pass full rebuild of blooms + BM25
+"""write_search_sidecars (the one-pass full rebuild of blooms + BM25
 stats/vocab) must produce sidecars IDENTICAL to the separate writers —
 including on a text_general_rev field, where the bloom bitmaps must keep
 the U+0001-marked reversed copies while the vocab/stats must ignore them
@@ -31,88 +31,13 @@ SCHEMA = IndexSchema(
 
 
 @pytest.fixture(scope="module")
-def pair(spark, tmp_path_factory):
-    """The same bare artifact twice: ``a`` gets the separate writers,
-    ``b`` the fused one."""
-    rows = [
-        (str(i), f"alpha beta word{i % 7} " + ("target " * (i % 3)),
-         f"title{i % 5} wildcard")
-        for i in range(90)
-    ]
-    df = spark.createDataFrame(rows, "id string, text string, title string")
-    root = tmp_path_factory.mktemp("fusedidx")
-    a = str(root / "a")
-    job = IndexJob(
-        IndexJobConfig(schema=SCHEMA, shards=4, dedup="none", routing="native")
-    )
-    job.build(df, a)  # no sidecar flags: writers run explicitly below
-    b = str(root / "b")
-    shutil.copytree(a, b)
-    write_term_blooms(spark, a)
-    write_search_stats(spark, a)
-    write_search_sidecars(spark, b, min_bytes=0)  # force the fused path
-    return a, b
-
-
-def test_stats_identical(spark, pair):
-    a, b = pair
-    assert load_search_stats(spark, a) == load_search_stats(spark, b)
-
-
-def test_blooms_identical_including_reversed_copies(spark, pair):
-    a, b = pair
-    ba, bb = load_term_blooms(spark, a), load_term_blooms(spark, b)
-    assert set(ba) == set(bb) == {"text", "title"}
-    for f in ba:
-        assert ba[f]["m"] == bb[f]["m"] and ba[f]["k"] == bb[f]["k"]
-        assert dict(ba[f]["shards"]) == dict(bb[f]["shards"])
-
-
-def test_vocab_identical_rows_and_meta(spark, pair):
-    a, b = pair
-    for field in ("text", "title"):
-        va = spark.read.parquet(os.path.join(a, "_vocab", field))
-        vb = spark.read.parquet(os.path.join(b, "_vocab", field))
-        assert va.schema == vb.schema
-        rows_a = [tuple(r) for r in va.orderBy("bucket", "term").collect()]
-        rows_b = [tuple(r) for r in vb.orderBy("bucket", "term").collect()]
-        assert rows_a == rows_b and rows_a
-        # the rev field's vocab must hold NO reversed-marked terms
-        assert not any(t.startswith("\x01") for t, _df, _bkt in rows_b)
-    meta_a = json.loads(
-        open(os.path.join(a, "_vocab", "_VOCAB_META.json")).read()
-    )
-    meta_b = json.loads(
-        open(os.path.join(b, "_vocab", "_VOCAB_META.json")).read()
-    )
-    assert meta_a == meta_b
-
-
-def test_size_gate_delegates_below_threshold(spark, pair, monkeypatch):
-    """Below the size gate the dispatcher must hand off to the separate
-    writers (measured faster at small scale) instead of the fused plan."""
-    import solr_map_reduce_spark.term_blooms as tb
-
-    calls = []
-    orig = tb.write_term_blooms
-
-    def spy(*a, **kw):
-        calls.append(1)
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(tb, "write_term_blooms", spy)
-    _a, b = pair
-    write_search_sidecars(spark, b)  # default threshold >> tiny corpus
-    assert calls, "expected delegation to write_term_blooms below the gate"
-
-
-def test_adaptive_bloom_m_identical_on_both_paths(spark, tmp_path, monkeypatch):
-    """With the r13 adaptive bitmap width forced on (gate at 0 and an
-    inflated bits-per-term target so the tiny corpus still outgrows the
-    floor), the fused and delegated builders must pick the SAME width from
-    the same per-shard distinct-term counts and stay byte-identical —
-    including the rev field, whose marked reversed copies DOUBLE its
-    distinct-term count on both paths alike."""
+def pairs(spark, tmp_path_factory):
+    """The same bare artifact twice per bloom sizing: ``a`` gets the
+    separate writers, ``b`` the fused one.  The inflated bits-per-term
+    target makes the tiny corpus outgrow the 2^16 width floor, so both
+    writers must pick the same width from the same per-shard distinct-term
+    counts — the rev field's marked reversed copies DOUBLE its count on
+    both alike."""
     import solr_map_reduce_spark.term_blooms as tb
 
     rows = [
@@ -121,31 +46,76 @@ def test_adaptive_bloom_m_identical_on_both_paths(spark, tmp_path, monkeypatch):
         for i in range(90)
     ]
     df = spark.createDataFrame(rows, "id string, text string, title string")
-    a = str(tmp_path / "a")
     job = IndexJob(
         IndexJobConfig(schema=SCHEMA, shards=4, dedup="none", routing="native")
     )
-    job.build(df, a)
-    b = str(tmp_path / "b")
-    shutil.copytree(a, b)
-    monkeypatch.setattr(tb, "_ADAPTIVE_BLOOM_MIN_BYTES", 0)
-    monkeypatch.setattr(tb, "_BLOOM_BITS_PER_TERM", 50_000)
-    write_term_blooms(spark, a)
-    write_search_stats(spark, a)
-    write_search_sidecars(spark, b, min_bytes=0)  # force the fused path
-    ba, bb = load_term_blooms(spark, a), load_term_blooms(spark, b)
-    assert set(ba) == set(bb) == {"text", "title"}
-    for f in ba:
-        assert ba[f]["m"] == bb[f]["m"] and ba[f]["k"] == bb[f]["k"]
-        assert ba[f]["m"] > tb.DEFAULT_M  # the width actually grew
-        assert dict(ba[f]["shards"]) == dict(bb[f]["shards"])
+    out = []
+    for bits in (tb._BLOOM_BITS_PER_TERM, 50_000):
+        root = tmp_path_factory.mktemp(f"fusedidx{bits}")
+        a, b = str(root / "a"), str(root / "b")
+        job.build(df, a)  # no sidecar flags: writers run explicitly below
+        shutil.copytree(a, b)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(tb, "_BLOOM_BITS_PER_TERM", bits)
+            write_term_blooms(spark, a)
+            write_search_stats(spark, a)
+            write_search_sidecars(spark, b)
+        out.append((a, b))
+    return out
+
+
+def test_stats_identical(spark, pairs):
+    for a, b in pairs:
+        assert load_search_stats(spark, a) == load_search_stats(spark, b)
+
+
+def test_blooms_identical_including_reversed_copies(spark, pairs):
+    import solr_map_reduce_spark.term_blooms as tb
+
+    widths = []
+    for a, b in pairs:
+        ba, bb = load_term_blooms(spark, a), load_term_blooms(spark, b)
+        assert set(ba) == set(bb) == {"text", "title"}
+        for f in ba:
+            assert ba[f]["m"] == bb[f]["m"] and ba[f]["k"] == bb[f]["k"]
+            assert dict(ba[f]["shards"]) == dict(bb[f]["shards"])
+        widths.append(ba["text"]["m"])
+    assert widths[0] == tb.DEFAULT_M < widths[1]  # the width actually grew
+
+
+def _parquet_bytes(vocab_dir):
+    """{bucket dir: sorted contents of its parquet files} — file names
+    carry a per-write id, contents must not."""
+    out = {}
+    for d, _dirs, files in os.walk(vocab_dir):
+        out[os.path.relpath(d, vocab_dir)] = sorted(
+            open(os.path.join(d, f), "rb").read()
+            for f in files if f.endswith(".parquet")
+        )
+    return out
+
+
+def test_vocab_identical_rows_and_meta(spark, pairs):
+    for a, b in pairs:
+        for field in ("text", "title"):
+            va = _parquet_bytes(os.path.join(a, "_vocab", field))
+            vb = _parquet_bytes(os.path.join(b, "_vocab", field))
+            assert va == vb and any(va.values())
+            # the rev field's vocab must hold NO reversed-marked terms
+            rows = spark.read.parquet(os.path.join(b, "_vocab", field)).collect()
+            assert rows and not any(r["term"].startswith("\x01") for r in rows)
+        meta_a = json.loads(
+            open(os.path.join(a, "_vocab", "_VOCAB_META.json")).read()
+        )
+        meta_b = json.loads(
+            open(os.path.join(b, "_vocab", "_VOCAB_META.json")).read()
+        )
+        assert meta_a == meta_b
 
 
 def test_build_inner_routes_both_through_dispatcher(spark, tmp_path):
     """A build with both sidecar flags produces a complete, loadable pair
-    through write_search_sidecars — at this tiny scale the size gate
-    delegates to the separate writers, which must yield the same
-    artifacts (the equivalence tests above pin the fused path itself)."""
+    through write_search_sidecars."""
     rows = [(str(i), "alpha beta gamma") for i in range(20)]
     df = spark.createDataFrame(rows, "id string, text string")
     path = str(tmp_path / "index")

@@ -718,29 +718,6 @@ class TestAdaptiveBucketCount:
     size); readers always follow _VOCAB_META.json, so any count serves
     correctly."""
 
-    def test_explicit_count_is_honored(self, spark, built, tmp_path):
-        import os
-        import shutil
-
-        from solr_map_reduce_spark.fs import get_fs
-        from solr_map_reduce_spark.search_stats import (
-            load_vocab_meta,
-            term_dfs,
-            write_search_stats,
-        )
-
-        path = str(tmp_path / "index")
-        shutil.copytree(built, path)
-        write_search_stats(spark, path, n_buckets=16)
-        meta = load_vocab_meta(get_fs(path, spark), path)
-        assert int(meta["n_buckets"]) == 16
-        dirs = [
-            d for d in os.listdir(os.path.join(path, "_vocab", "text"))
-            if d.startswith("bucket=")
-        ]
-        assert all(int(d.split("=")[1]) < 16 for d in dirs)
-        assert term_dfs(spark, path, "text", ["alpha"])["alpha"] == 120
-
     def test_count_scales_with_estimate(self, spark, built, tmp_path,
                                         monkeypatch):
         import shutil
@@ -751,19 +728,12 @@ class TestAdaptiveBucketCount:
 
         path = str(tmp_path / "index")
         shutil.copytree(built, path)
-        est_raw = (
-            read_index(spark, path)
-            ._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        est = est_raw if isinstance(est_raw, int) else int(est_raw.toString())
+        est = ss._size_estimate(read_index(spark, path))
         assert est > 0
         # target chosen so the SAME artifact now wants 4 doublings past the
-        # floor: smallest power of two n with n * target >= est
-        target = max(1, est // 100)
-        monkeypatch.setattr(ss, "_VOCAB_BUCKET_TARGET_BYTES", target)
-        expect = 8
-        while expect < 4096 and est > expect * target:
-            expect *= 2
+        # floor
+        monkeypatch.setattr(ss, "_VOCAB_BUCKET_TARGET_BYTES", max(1, est // 100))
+        expect = ss._auto_buckets(est)
         assert expect > 8  # the test actually exercises the scaling loop
         ss.write_search_stats(spark, path)
         meta = ss.load_vocab_meta(get_fs(path, spark), path)
@@ -777,13 +747,6 @@ class TestAdaptiveBucketCount:
         import solr_map_reduce_spark.search_stats as ss
 
         target = ss._VOCAB_BUCKET_TARGET_BYTES
-
-        def size(est):
-            n = 8
-            while n < 4096 and est > n * target:
-                n *= 2
-            return n
-
-        assert size(0) == 8 and size(target * 8) == 8
-        assert size(target * 8 + 1) == 16
-        assert size(10**15) == 4096
+        assert ss._auto_buckets(0) == 8 and ss._auto_buckets(target * 8) == 8
+        assert ss._auto_buckets(target * 8 + 1) == 16
+        assert ss._auto_buckets(10**15) == 4096

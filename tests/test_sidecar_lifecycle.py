@@ -280,3 +280,26 @@ def test_mutation_paths_reach_sidecars_only_through_the_table(module):
              if name in MUTATORS[module]}
     assert set(found) == MUTATORS[module]
     assert found == {name: [] for name in found}
+
+
+ENV_READS = {"environ", "environb", "getenv"}
+
+
+def test_only_the_session_reads_the_environment():
+    """Sizing rules are constants or derived from the artifact, never
+    environment knobs: only session.py (the deployment's Spark settings)
+    may read os.environ / os.getenv, in any spelling."""
+    readers = set()
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            rel = os.path.relpath(os.path.join(root, f), PKG)
+            if not f.endswith(".py") or rel == "session.py":
+                continue
+            with open(os.path.join(root, f)) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                # os.environ / __import__("os").environ (attr), a bare
+                # imported name (id), `from os import getenv` (alias name)
+                if {getattr(node, a, None) for a in ("attr", "id", "name")} & ENV_READS:
+                    readers.add(rel)
+    assert readers == set()

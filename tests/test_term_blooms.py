@@ -60,6 +60,27 @@ def test_rare_term_prunes_to_few_shards(spark, built):
     assert candidate_shards(spark, blooms, "text", ["notinthecorpus"], "all") == []
 
 
+def test_positions_memo_is_lru_capped(spark, built, monkeypatch):
+    """A serving process sees an unbounded stream of distinct query terms:
+    the query-term positions memo stays within its cap, and evicted terms
+    recompute to the same answers."""
+    from collections import OrderedDict
+
+    import solr_map_reduce_spark.term_blooms as tb
+
+    blooms = load_term_blooms(spark, built)
+    terms = ["zanzibar", "common"] + [f"row{i}" for i in range(10)]
+    want = {t: candidate_shards(spark, blooms, "text", [t], "all") for t in terms}
+    monkeypatch.setattr(tb, "_POSITIONS_MEMO", OrderedDict())
+    monkeypatch.setattr(tb, "_POSITIONS_MEMO_CAP", 4)
+    for t in terms + terms[:3]:
+        assert candidate_shards(spark, blooms, "text", [t], "all") == want[t]
+        assert len(tb._POSITIONS_MEMO) <= 4
+    union = sorted(set().union(*want.values()))
+    assert candidate_shards(spark, blooms, "text", terms, "any") == union
+    assert len(tb._POSITIONS_MEMO) <= 4
+
+
 def test_results_identical_with_and_without_pruning(spark, built):
     idx = SearchIndex.open(spark, built)
     pruned = {r["id"] for r in idx.contains_all(["zanzibar"]).collect()}
@@ -154,66 +175,29 @@ def test_no_false_negatives_randomized(spark, tmp_path):
         assert truth[term] <= cand, f"false negative for {term}"
 
 
-def test_subset_refresh_with_param_change_escalates_to_full(spark, tmp_path):
-    """A shards= refresh against a sidecar built with different (m, k) must
-    rebuild ALL shards — merging is impossible and keeping only the touched
-    shards would silently drop the others' bitmaps (query false negatives)."""
-    import pyspark.sql.functions as F
+def test_subset_refresh_auto_adopts_stored_params(spark, tmp_path, monkeypatch):
+    """A shards= refresh (what merge_into issues) ADOPTS the stored
+    sidecar's (m, k) instead of re-sizing with an O(corpus) full rebuild on
+    every delta touch: touched shards are recomputed at the stored width,
+    untouched bitmaps survive byte-for-byte, and every shard stays present
+    (no query false negatives)."""
+    from solr_map_reduce_spark import term_blooms as tb
 
-    from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig
-    from solr_map_reduce_spark.schema import Field, IndexSchema
-    from solr_map_reduce_spark.term_blooms import load_term_blooms, write_term_blooms
-
-    schema = IndexSchema(
-        fields=(Field("id", "string", required=True), Field("text", "text_general")),
-        unique_key="id",
-    )
     out = str(tmp_path / "idx")
     df = spark.range(0, 200).select(
         F.col("id").cast("string").alias("id"),
         F.concat(F.lit("tok"), (F.col("id") % 7).cast("string")).alias("text"),
     )
     IndexJob(
-        IndexJobConfig(schema=schema, shards=4, micro_shards=8, dedup="none")
+        IndexJobConfig(schema=SCHEMA, shards=4, micro_shards=8, dedup="none")
     ).build(df, out)
-    write_term_blooms(spark, out, m=1 << 14)  # non-default params
-    # subset refresh with an EXPLICIT mismatching m
-    write_term_blooms(spark, out, m=1 << 16, shards=[0])
-    blooms = load_term_blooms(spark, out)
-    info = blooms["text"]
-    assert info["m"] == 1 << 16  # rebuilt at the requested params
-    assert set(info["shards"]) == {"0", "1", "2", "3"}  # NO shard lost
-
-
-def test_subset_refresh_auto_adopts_stored_params(spark, tmp_path):
-    """A shards= refresh with m=None (what merge_into issues, r13) ADOPTS
-    the stored sidecar's (m, k) instead of escalating a custom-m artifact
-    to an O(corpus) full rebuild on every delta touch: touched shards are
-    recomputed at the stored width, untouched bitmaps survive byte-for-
-    byte, and every shard stays present (no query false negatives)."""
-    import pyspark.sql.functions as F
-
-    from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig
-    from solr_map_reduce_spark.schema import Field, IndexSchema
-    from solr_map_reduce_spark.term_blooms import load_term_blooms, write_term_blooms
-
-    schema = IndexSchema(
-        fields=(Field("id", "string", required=True), Field("text", "text_general")),
-        unique_key="id",
-    )
-    out = str(tmp_path / "idx")
-    df = spark.range(0, 200).select(
-        F.col("id").cast("string").alias("id"),
-        F.concat(F.lit("tok"), (F.col("id") % 7).cast("string")).alias("text"),
-    )
-    IndexJob(
-        IndexJobConfig(schema=schema, shards=4, micro_shards=8, dedup="none")
-    ).build(df, out)
-    write_term_blooms(spark, out, m=1 << 14)  # non-default params
-    before = load_term_blooms(spark, out)["text"]
-    write_term_blooms(spark, out, shards=[0])  # auto m -> adopt stored
-    info = load_term_blooms(spark, out)["text"]
-    assert info["m"] == 1 << 14 and info["k"] == before["k"]
+    monkeypatch.setattr(tb, "_BLOOM_BITS_PER_TERM", 50_000)
+    before = tb.write_term_blooms(spark, out)["text"]  # non-default width
+    monkeypatch.undo()
+    assert before["m"] > tb.DEFAULT_M
+    tb.write_term_blooms(spark, out, shards=[0])  # adopt stored, no re-size
+    info = tb.load_term_blooms(spark, out)["text"]
+    assert info["m"] == before["m"] and info["k"] == before["k"]
     assert set(info["shards"]) == {"0", "1", "2", "3"}
     for s, bm in before["shards"].items():
         if s != "0":
@@ -236,17 +220,16 @@ def test_auto_bloom_m_sizing():
     assert _auto_bloom_m(4097) == 1 << 17
     assert _auto_bloom_m(1_000_000) == 1 << 24  # 16M bits for 1M terms
     assert _auto_bloom_m(10**12) == MAX_M  # capped, graceful FP degradation
-    assert _auto_bloom_m(4097, bits_per_term=8) == DEFAULT_M
     m = _auto_bloom_m(123_456)
     assert m & (m - 1) == 0 and DEFAULT_M <= m <= MAX_M
 
 
-@pytest.mark.slow  # forced-gate 20k-term scale variant; sizing arithmetic + both-path byte-equality covered fast
-def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path, monkeypatch):
-    """With the adaptive gate forced on, a full rebuild sizes m from the
-    observed per-shard distinct-term count (> DEFAULT_M when the target
-    calls for it), candidate_shards serves from the stored width, and the
-    Bloom no-false-negative guarantee holds for every present term."""
+@pytest.mark.slow  # 20k-term scale variant; sizing arithmetic + both-path byte-equality covered fast
+def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path):
+    """A full rebuild sizes m from the observed per-shard distinct-term
+    count (> DEFAULT_M when the target calls for it), candidate_shards
+    serves from the stored width, and the Bloom no-false-negative guarantee
+    holds for every present term."""
     import pyspark.sql.functions as F
 
     from solr_map_reduce_spark import term_blooms as tb
@@ -267,7 +250,6 @@ def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path, monkeypatch):
     IndexJob(
         IndexJobConfig(schema=schema, shards=2, micro_shards=4, dedup="none")
     ).build(df, out)
-    monkeypatch.setattr(tb, "_ADAPTIVE_BLOOM_MIN_BYTES", 0)
     sidecar = tb.write_term_blooms(spark, out)
     info = sidecar["text"]
     # the observed per-shard max (~10k terms) needs > 2^16 bits at
@@ -290,35 +272,6 @@ def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path, monkeypatch):
     for r in rows:
         cand = tb.candidate_shards(spark, blooms, "text", [r["t"]], "all")
         assert cand is not None and int(r["s"]) in cand
-
-
-def test_subset_refresh_explicit_k_mismatch_escalates(spark, tmp_path):
-    """auto-m + EXPLICIT k that differs from the stored per-field k must
-    escalate to a full rebuild, not silently adopt the stored k (r13
-    ADVICE): the untouched bitmaps were probed at different positions, so
-    a merge would leave probe-position-incompatible bitmaps behind."""
-    out = str(tmp_path / "idx")
-    df = spark.range(0, 200).select(
-        F.col("id").cast("string").alias("id"),
-        F.concat(F.lit("tok"), (F.col("id") % 7).cast("string")).alias("text"),
-    )
-    IndexJob(
-        IndexJobConfig(schema=SCHEMA, shards=4, micro_shards=8, dedup="none")
-    ).build(df, out)
-    write_term_blooms(spark, out, m=1 << 14, k=4)
-    before = load_term_blooms(spark, out)["text"]
-    # auto m, explicit DIFFERENT k -> full rebuild at (gate-resolved m, k=8)
-    write_term_blooms(spark, out, k=8, shards=[0])
-    info = load_term_blooms(spark, out)["text"]
-    assert info["k"] == 8  # the caller's k, not the adopted stored k
-    assert set(info["shards"]) == {"0", "1", "2", "3"}  # NO shard lost
-    # every bitmap re-derived at the new k (k=8 sets more positions than
-    # k=4 over the same terms, so equality would mean a stale merge)
-    assert any(info["shards"][s] != before["shards"][s] for s in info["shards"])
-    # matching explicit k still adopts (m stays the stored non-default)
-    write_term_blooms(spark, out, k=8, shards=[1])
-    again = load_term_blooms(spark, out)["text"]
-    assert again["m"] == info["m"] and again["k"] == 8
 
 
 def test_adopted_refresh_warns_on_saturated_width(spark, tmp_path, monkeypatch):
@@ -344,11 +297,12 @@ def test_adopted_refresh_warns_on_saturated_width(spark, tmp_path, monkeypatch):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         write_term_blooms(spark, out, shards=[0])
-    # force saturation: target 16 bits/term needs m >= 150*8 to stay
-    # quiet at the half-target line; a 1024-bit stored width is far under
-    write_term_blooms(spark, out, m=1 << 10, k=2)
+    # saturate: a target of 50k bits/term leaves the stored 2^16 width far
+    # under half of it for ~150 terms/shard, as a corpus that outgrew its
+    # width would
+    monkeypatch.setattr(tb, "_BLOOM_BITS_PER_TERM", 50_000)
     with pytest.warns(UserWarning, match="bits/term .* shard pruning is degrading"):
         write_term_blooms(spark, out, shards=[0])
     # the adopted refresh still merged correctly despite the warning
     info = load_term_blooms(spark, out)["text"]
-    assert info["m"] == 1 << 10 and set(info["shards"]) == {"0", "1", "2", "3"}
+    assert info["m"] == tb.DEFAULT_M and set(info["shards"]) == {"0", "1", "2", "3"}
