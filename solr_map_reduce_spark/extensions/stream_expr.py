@@ -1419,7 +1419,7 @@ class StreamCompiler:
         # stored; otherwise fold a metadata-only count(*) into the plan
         # as a broadcast 1-row crossJoin — either way compile stays free
         # of eager scans
-        ranges = src._load_key_ranges()
+        ranges = src._sidecar("key_ranges")
         if ranges is not None:
             n_docs_col = F.lit(float(ranges.total_rows()))
             n_docs_row = None
@@ -2009,7 +2009,7 @@ class StreamCompiler:
             F.broadcast(dfreq), stream["node"] == F.col("_sn_val"), "left"
         ).drop("_sn_val")
         # numDocs: sidecar O(1), else a metadata-only broadcast 1-row
-        ranges = getattr(src, "_load_key_ranges", lambda: None)()
+        ranges = getattr(src, "_sidecar", lambda _name: None)("key_ranges")
         if ranges is not None:
             n_docs = F.lit(float(ranges.total_rows()))
         else:

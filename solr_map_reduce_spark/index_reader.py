@@ -28,9 +28,20 @@ from collections.abc import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
 from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
+from solr_map_reduce_spark.lru import LRU
 from solr_map_reduce_spark.operators.routing import ShardRouter
 
+# The read side's sidecar loaders, each run at most once per artifact
+# generation by SearchIndex._sidecar.  A loader returns None for a sidecar
+# that is absent or in a layout this engine does not write; readers then
+# take the exact unpruned / computed path.
+_SIDECAR_LOADERS = {
+    "blooms": term_blooms.load_term_blooms,
+    "stats": search_stats.load_search_stats,
+    "key_ranges": key_ranges.load_key_ranges,
+}
 
 
 def _parse_mlt_local_params(params: dict) -> "tuple[int, dict]":
@@ -94,35 +105,18 @@ class SearchIndex:
         self.routing: str = manifest.get("routing", "solr")
         # root-shard placement only depends on the hash ring split (C8)
         self._router = ShardRouter(shards=self.shards, num_partitions=self.shards)
-        self._blooms: dict | None | bool = False  # False = not yet loaded
-        self._key_ranges: dict | None | bool = False  # False = not yet loaded
-        # per-instance memo of (field, terms) -> df values: repeated queries
-        # against one handle (the serving pattern) skip the vocab scan.
-        # LRU-capped: a long-lived serving handle fielding millions of
-        # DISTINCT queries must not grow a dict without bound
-        from collections import OrderedDict
-
-        self._stats_cache: dict | None | bool = False
-        self._dfs_memo: "OrderedDict" = OrderedDict()
-        self._dfs_memo_cap = 1024
-        # compiled-query memo (the Solr queryResultCache analog's PLAN
-        # half): repeated identical queries skip the parse + analyze +
-        # Bloom-prune plan build.  Execution still runs — results are
-        # never cached stale — and _check_generation drops the memo on
-        # any artifact mutation (the embedded file listing would be
-        # stale).  LRU-capped like the df memo.
-        self._plan_memo: "OrderedDict" = OrderedDict()
-        self._plan_memo_cap = 256
+        # Everything derived from one artifact generation, emptied together
+        # by _check_generation (the Solr searcher's caches, dropped with it
+        # on commit): the loaded sidecars ("blooms", "stats", "key_ranges"),
+        # the artifact DataFrame ("df": file listing + footer schema cost
+        # tens of ms per read), the read schema ("schema"), ANN handles
+        # (("ann", field)); and two LRUs — (field, terms) -> dfs plus fuzzy
+        # expansions, and compiled query plans (the queryResultCache's plan
+        # half: execution still runs, so results are never cached stale).
+        self._cache: dict = {}
+        self._dfs_memo = LRU(1024)
+        self._plan_memo = LRU(256)
         self._warned_no_stats_fq = False
-        # per-generation memo of the artifact DataFrame: spark.read
-        # analysis (file listing + footer schema) costs tens of ms per
-        # call — a serving handle pays it once per artifact generation,
-        # not once per query (dropped by _check_generation on mutation)
-        self._df_memo: DataFrame | None = None
-        self._schema_memo = None  # parsed read schema, same lifetime
-        # ANN sidecar handles, keyed by field; dropped on generation
-        # change (a mutated artifact must not serve a stale vector index)
-        self._ann_memo: dict = {}
         # named other-collection handles for {!join fromIndex=...}
         # (attach_collection); handle-level registry, survives this
         # artifact's generation changes (each attached handle guards
@@ -167,16 +161,8 @@ class SearchIndex:
         from solr_map_reduce_spark.fs import get_fs
         from solr_map_reduce_spark.fs import join as fs_join
 
-        from collections import OrderedDict
-
-        self._blooms = False
-        self._key_ranges = False
-        self._stats_cache = False
-        self._dfs_memo = OrderedDict()
-        self._plan_memo = OrderedDict()
-        self._df_memo = None
-        self._schema_memo = None
-        self._ann_memo = {}
+        for memo in (self._cache, self._dfs_memo, self._plan_memo):
+            memo.clear()
         try:
             fs = get_fs(self.path, self.spark)
             self.manifest = json.loads(fs.read_text(fs_join(self.path, MANIFEST)))
@@ -211,9 +197,18 @@ class SearchIndex:
 
     def df(self) -> DataFrame:
         self._check_generation()
-        if self._df_memo is None:
-            self._df_memo = read_index(self.spark, self.path)
-        return self._df_memo
+        if "df" not in self._cache:
+            self._cache["df"] = read_index(self.spark, self.path)
+        return self._cache["df"]
+
+    def _sidecar(self, name: str):
+        """The current generation's ``name`` sidecar (a key of
+        ``_SIDECAR_LOADERS``), loaded once per generation; None when it
+        is absent or in a layout this engine does not write."""
+        self._check_generation()
+        if name not in self._cache:
+            self._cache[name] = _SIDECAR_LOADERS[name](self.spark, self.path)
+        return self._cache[name]
 
     # -- C1 ------------------------------------------------------------
     def count(self) -> int:
@@ -222,7 +217,7 @@ class SearchIndex:
         the same docCount in segment metadata) — every engine mutation
         refreshes the sidecar, so the counts are exact; without a sidecar,
         a parquet metadata-only count (still no data scan)."""
-        ranges = self._load_key_ranges()
+        ranges = self._sidecar("key_ranges")
         if ranges is not None:
             return ranges.total_rows()
         return self.df().count()
@@ -237,40 +232,19 @@ class SearchIndex:
         return self._router.micro_shard_of(str(key))
 
     def _segment_pruned(self, keys: Sequence[object]) -> DataFrame | None:
-        """Segment-file pruning via the ``_KEY_RANGES.json`` sidecar
+        """Segment-file pruning via the key-range sidecar
         (key_ranges.py): a DataFrame over ONLY the segment files whose
         stored [min, max] admits one of the keys — the Lucene per-segment
         term-dictionary cost model.  None when no sidecar is stored
         (callers fall back to the shard-pruned scan).  Works under
         ``routing="native"`` too, where driver-side shard math is
         unavailable: the ranges alone restore the pruning."""
-        from solr_map_reduce_spark.key_ranges import candidate_files
-
-        if not self._load_key_ranges():
+        ranges = self._sidecar("key_ranges")
+        if ranges is None:
             return None
         shards = {self._shard_of(str(k)) for k in keys}
         shard = shards if None not in shards else None
-        cands = candidate_files(self._key_ranges, keys, shard=shard)
-        return self._files_df(cands)
-
-    def _load_stats(self) -> dict | None:
-        """Lazy per-handle memo of the search-stats sidecar."""
-        self._check_generation()
-        if self._stats_cache is False:
-            from solr_map_reduce_spark.search_stats import load_search_stats
-
-            self._stats_cache = load_search_stats(self.spark, self.path)
-        return self._stats_cache
-
-    def _load_key_ranges(self) -> dict | None:
-        """Lazy per-handle memo of the key-range sidecar (mirrors the
-        _blooms/_stats_cache pattern)."""
-        self._check_generation()
-        if self._key_ranges is False:
-            from solr_map_reduce_spark.key_ranges import load_key_ranges
-
-            self._key_ranges = load_key_ranges(self.spark, self.path)
-        return self._key_ranges
+        return self._files_df(ranges.candidate_files(keys, shard=shard))
 
     @property
     def columns(self) -> list[str]:
@@ -284,16 +258,14 @@ class SearchIndex:
     def _read_schema(self):
         import pyspark.sql.types as T
 
-        if self._schema_memo is not None:
-            return self._schema_memo
-        sj = self.manifest.get("schema_json")
-        if sj:
-            st = T.StructType.fromJson(json.loads(sj))
-            if set(st.fieldNames()) == set(self.columns):
-                self._schema_memo = T.StructType([st[c] for c in self.columns])
-                return self._schema_memo
-        self._schema_memo = self.df().schema
-        return self._schema_memo
+        if "schema" not in self._cache:
+            sj = self.manifest.get("schema_json")
+            st = T.StructType.fromJson(json.loads(sj)) if sj else None
+            if st is not None and set(st.fieldNames()) == set(self.columns):
+                self._cache["schema"] = T.StructType([st[c] for c in self.columns])
+            else:
+                self._cache["schema"] = self.df().schema
+        return self._cache["schema"]
 
     def _files_df(self, cands: list[tuple[int, str]] | None) -> DataFrame | None:
         from solr_map_reduce_spark.fs import join as fs_join
@@ -310,13 +282,10 @@ class SearchIndex:
         """Contiguous key scan ``lo <= key <= hi`` (either bound None =
         unbounded), segment-pruned through the key-range sidecar when one
         is stored: only files whose span overlaps the range are read."""
+        ranges = self._sidecar("key_ranges")
         out = None
-        if self._load_key_ranges():
-            from solr_map_reduce_spark.key_ranges import candidate_files_range
-
-            out = self._files_df(
-                candidate_files_range(self._key_ranges, lo=lo, hi=hi)
-            )
+        if ranges is not None:
+            out = self._files_df(ranges.candidate_files_range(lo=lo, hi=hi))
         if out is None:
             out = self.df()
         key = F.col(self.unique_key)
@@ -335,17 +304,12 @@ class SearchIndex:
         # pruning only under a string key: a numeric sidecar coerces the
         # prefix to a NUMBER, whose range is not the string-prefix range
         # ("12" would wrongly exclude 120)
-        ranges = self._load_key_ranges()
-        if ranges and ranges.get("key_type") == "string":
-            from solr_map_reduce_spark.key_ranges import (
-                candidate_files_range,
-                next_prefix,
-            )
-
-            nxt = next_prefix(prefix)
+        ranges = self._sidecar("key_ranges")
+        if ranges is not None and ranges.key_type == "string":
+            nxt = key_ranges.next_prefix(prefix)
             out = self._files_df(
-                candidate_files_range(
-                    self._key_ranges, lo=prefix, hi=nxt, hi_exclusive=nxt is not None
+                ranges.candidate_files_range(
+                    lo=prefix, hi=nxt, hi_exclusive=nxt is not None
                 )
             )
         if out is None:
@@ -2244,17 +2208,11 @@ class SearchIndex:
         ``_vocab`` dictionary sidecar (the same LRU the BM25 path
         uses — a serving handle answering repeated function queries
         never re-reads the bucket)."""
-        from solr_map_reduce_spark.search_stats import term_dfs
-
         memo_key = (fname, tuple(sorted(terms)))
-        if memo_key in self._dfs_memo:
-            self._dfs_memo.move_to_end(memo_key)
-        else:
-            self._dfs_memo[memo_key] = term_dfs(
+        if memo_key not in self._dfs_memo:
+            self._dfs_memo[memo_key] = search_stats.term_dfs(
                 self.spark, self.path, fname, list(terms)
             )
-            while len(self._dfs_memo) > self._dfs_memo_cap:
-                self._dfs_memo.popitem(last=False)
         return self._dfs_memo[memo_key]
 
     def _tokens_col(self, field: str | None = None) -> str:
@@ -2312,19 +2270,17 @@ class SearchIndex:
         bitmap admits the query (term_blooms.py sidecar; no false
         negatives, so results are identical to the full scan).  Without a
         sidecar this is just ``df()``."""
-        from solr_map_reduce_spark.term_blooms import candidate_shards, load_term_blooms
-
-        self._check_generation()
-        if self._blooms is False:
-            self._blooms = load_term_blooms(self.spark, self.path)
+        blooms = self._sidecar("blooms")
         out = self.df()
-        if not self._blooms:
+        if not blooms:
             return out
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
         if fname is None:
             return out
-        shards = candidate_shards(self.spark, self._blooms, fname, list(terms), mode)
+        shards = term_blooms.candidate_shards(
+            self.spark, blooms, fname, list(terms), mode
+        )
         if shards is None:
             return out
         return out.filter(F.col(SHARD_COL).isin(shards))
@@ -2373,18 +2329,16 @@ class SearchIndex:
         Bloom-prunable token-OR.  None when no vocab sidecar exists
         (callers fall back to the per-token corpus scan).  Memoized
         per handle (LRU), like the BM25 df memo."""
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         if not stats or fname not in stats:
             return None
         key = ("__fuzzy__", fname, needle, max_edits)
         if key in self._dfs_memo:
-            self._dfs_memo.move_to_end(key)
             return self._dfs_memo[key]
         from solr_map_reduce_spark.fs import join as fs_join
-        from solr_map_reduce_spark.search_stats import _VOCAB_SCHEMA, VOCAB_DIR
 
-        vocab = self.spark.read.schema(_VOCAB_SCHEMA).parquet(
-            fs_join(self.path, f"{VOCAB_DIR}/{fname}")
+        vocab = self.spark.read.schema(search_stats._VOCAB_SCHEMA).parquet(
+            fs_join(self.path, f"{search_stats.VOCAB_DIR}/{fname}")
         )
         n = len(needle)
         rows = (
@@ -2395,11 +2349,8 @@ class SearchIndex:
             .select("term")
             .collect()
         )
-        out = sorted(r["term"] for r in rows)
-        self._dfs_memo[key] = out
-        while len(self._dfs_memo) > self._dfs_memo_cap:
-            self._dfs_memo.popitem(last=False)
-        return out
+        self._dfs_memo[key] = sorted(r["term"] for r in rows)
+        return self._dfs_memo[key]
 
     def _fuzzy_expander(self, default_field: str | None):
         """The ``fuzzy_expand`` hook for boolean_predicate, bound to this
@@ -2435,7 +2386,6 @@ class SearchIndex:
             if synonyms else None,
         )
         if memo_key in self._plan_memo:
-            self._plan_memo.move_to_end(memo_key)
             return self._plan_memo[memo_key]
 
         lp = search.parse_local_params(q)
@@ -2463,8 +2413,6 @@ class SearchIndex:
                 scan = self.df()
             out = scan.filter(pred)
         self._plan_memo[memo_key] = out
-        while len(self._plan_memo) > self._plan_memo_cap:
-            self._plan_memo.popitem(last=False)
         return out
 
     def _compile_predicate(
@@ -3244,7 +3192,6 @@ class SearchIndex:
         derived inline before the filter applies, preserving the same
         invariance."""
         from solr_map_reduce_spark.extensions import search
-        from solr_map_reduce_spark.search_stats import term_dfs
 
         if isinstance(kw.get("boost_col"), str):
             # Solr function-query SYNTAX for boost= (edismax boost=recip(...)):
@@ -3256,23 +3203,14 @@ class SearchIndex:
             )
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         scan = self.df()
         if stats and fname in stats:
             s = stats[fname]
             norm_terms = [t.lower() for t in terms]
-            memo_key = (fname, tuple(sorted(norm_terms)))
-            if memo_key in self._dfs_memo:
-                self._dfs_memo.move_to_end(memo_key)  # LRU touch
-            else:
-                self._dfs_memo[memo_key] = term_dfs(
-                    self.spark, self.path, fname, norm_terms
-                )
-                while len(self._dfs_memo) > self._dfs_memo_cap:
-                    self._dfs_memo.popitem(last=False)
             kw = dict(kw)
             kw["stored_stats"] = (s["n_docs"], s["sum_dl"], s["n_dl"])
-            kw["stored_dfs"] = self._dfs_memo[memo_key]
+            kw["stored_dfs"] = self._dfs_for(fname, norm_terms)
             scan = self._bloom_pruned(norm_terms, fname, "any")
         elif fq is not None:
             # no sidecar: derive collection-wide stats BEFORE filtering so
@@ -3454,7 +3392,6 @@ class SearchIndex:
         final dismax score — recency/popularity boosting without
         touching matching or the per-field statistics."""
         from solr_map_reduce_spark.extensions import search
-        from solr_map_reduce_spark.search_stats import term_dfs
 
         if "boost" in kw:
             kw = dict(kw)
@@ -3512,7 +3449,7 @@ class SearchIndex:
             kw["pf_specs"] = pf_specs
 
         analyzed: dict = self.manifest.get("analyzed", {})
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         specs: dict = {}
         for fname, weight in qf.items():
             if fname not in analyzed:
@@ -3537,17 +3474,8 @@ class SearchIndex:
             if stats and fname in stats:
                 s = stats[fname]
                 toks = sorted({t for wt in word_tokens for t in wt})
-                memo_key = (fname, tuple(toks))
-                if memo_key in self._dfs_memo:
-                    self._dfs_memo.move_to_end(memo_key)
-                else:
-                    self._dfs_memo[memo_key] = term_dfs(
-                        self.spark, self.path, fname, toks
-                    )
-                    while len(self._dfs_memo) > self._dfs_memo_cap:
-                        self._dfs_memo.popitem(last=False)
                 spec["stored_stats"] = (s["n_docs"], s["sum_dl"], s["n_dl"])
-                spec["stored_dfs"] = self._dfs_memo[memo_key]
+                spec["stored_dfs"] = self._dfs_for(fname, toks)
             specs[fname] = spec
         return search.bm25_dismax(
             self.df(), specs, k=k, id_col=self.unique_key, tie=tie, **kw
@@ -3564,7 +3492,7 @@ class SearchIndex:
 
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         if stats and fname in stats:
             vocab = self.spark.read.parquet(
                 fs_join(self.path, f"{VOCAB_DIR}/{fname}")
@@ -3751,7 +3679,7 @@ class SearchIndex:
         for w in words:
             toks = self.analyze_terms([w], fname)
             needles.append(toks[0] if toks else w.lower())
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         if stats and fname in stats:
             dfs = self._dfs_for(fname, sorted(set(needles)))
         else:
@@ -3899,8 +3827,6 @@ class SearchIndex:
         member)."""
         import math
 
-        from solr_map_reduce_spark.search_stats import term_dfs
-
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
         tokens_col = self._tokens_col(fname)
@@ -3917,10 +3843,10 @@ class SearchIndex:
             # Solr MLT mintf: terms below the in-document frequency
             # threshold never become interesting terms
             tf = {t: c for t, c in tf.items() if c >= min_tf}
-        stats = self._load_stats()
+        stats = self._sidecar("stats")
         if stats and fname in stats:
             n_docs = stats[fname]["n_docs"]
-            dfs = term_dfs(self.spark, self.path, fname, sorted(tf))
+            dfs = search_stats.term_dfs(self.spark, self.path, fname, sorted(tf))
             scored = [
                 (t, tf[t] * math.log(1 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)))
                 for t in tf
@@ -3992,7 +3918,7 @@ class SearchIndex:
             key=self.unique_key, field=field, kind=kind,
             n_centroids=n_centroids, nprobe=nprobe, **fit_kw,
         )
-        self._ann_memo.pop(field, None)
+        self._cache.pop(("ann", field), None)
         # {!knn} plans served BEFORE this build were memoized as exact
         # corpus scans (build_ann does not bump the artifact
         # generation): drop them so the identical query text routes
@@ -4011,7 +3937,7 @@ class SearchIndex:
         from solr_map_reduce_spark.extensions import ann_sidecar
 
         out = ann_sidecar.compact(self.spark, self.path, field)
-        self._ann_memo.pop(field, None)
+        self._cache.pop(("ann", field), None)
         self._plan_memo.clear()  # routed plans pin pre-fold bucket files
         return out
 
@@ -4025,33 +3951,25 @@ class SearchIndex:
         from solr_map_reduce_spark.fs import get_fs
 
         self._check_generation()
-        memo = self._ann_memo.get(field)
-        if memo is not None:
-            return memo if memo != "absent" else None
+        key = ("ann", field)
+        if key in self._cache:
+            return self._cache[key]
         side = ann_sidecar.side_path(self.path, field)
         meta = ann_sidecar.load_meta(get_fs(self.path, self.spark), side)
-        if meta is None:
-            self._ann_memo[field] = "absent"
+        if meta is not None and meta.get("built_generation") != self._generation:
+            # stale sidecar: the artifact mutated since the build — don't
+            # memoize the miss (a rebuild under the same handle must be
+            # picked up), just decline to route
             return None
-        if meta.get("built_generation") != self._generation:
-            # stale sidecar: the artifact mutated since the build —
-            # don't memoize "absent" (a rebuild under the same handle
-            # must be picked up), just decline to route
-            return None
-        kind = meta.get("kind", "ivf")
-        try:
-            if kind == "ivf":
-                idx = sim.IvfIndex.load(self.spark, side)
-            elif kind == "ivfpq":
-                idx = sim.IvfPqIndex.load(self.spark, side)
-            else:
-                self._ann_memo[field] = "absent"
-                return None
-        except Exception:
-            self._ann_memo[field] = "absent"
-            return None
-        handle = (kind, idx, side, meta)
-        self._ann_memo[field] = handle
+        kind = meta.get("kind", "ivf") if meta is not None else None
+        loader = {"ivf": sim.IvfIndex, "ivfpq": sim.IvfPqIndex}.get(kind)
+        handle = None
+        if loader is not None:
+            try:
+                handle = (kind, loader.load(self.spark, side), side, meta)
+            except Exception:
+                pass  # unreadable: served as absent
+        self._cache[key] = handle
         return handle
 
     def _knn_via_ann(
@@ -4405,7 +4323,7 @@ class _FnQueryContext:
                 ) from None
             cnt = F.size(F.filter(F.col(tok), lambda x: x == F.lit(term)))
             return F.coalesce(cnt.cast("double"), F.lit(0.0))
-        stats = idx._load_stats()
+        stats = idx._sidecar("stats")
         if not stats or field not in stats:
             raise search.QuerySyntaxError(
                 f"{fn}({field!r}, ...) needs the search-stats sidecar "

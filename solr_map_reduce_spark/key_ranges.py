@@ -18,10 +18,10 @@ manifest per partition, loaded lazily):
 A point lookup loads ONLY the routed shard's span file and bisects the
 sorted spans — per-lookup work is O(log segments-in-shard), bounded by the
 admitted shard, never O(total files).  ``count()`` is O(1) from the META
-row totals with zero span-file reads.  The legacy monolithic
-``_KEY_RANGES.json`` (format 1: ``{"key_type": ..., "shards": {"0":
-{file: [lo, hi, rows]}}}``) remains readable as a compat fallback for
-externally produced sidecars.
+row totals with zero span-file reads.  This is the only layout read: any
+other (the monolithic ``_KEY_RANGES.json`` of older builds) reads as no
+sidecar, i.e. unpruned exact scans until the next build or mutation writes
+this one.
 
 Build: one column-pruned pass over the key column grouped by
 ``input_file_name()`` — no shuffle wider than (file, min, max).
@@ -42,7 +42,7 @@ recompute the touched shards (rewriting only those shards' span files),
 ``compact`` recomputes all (its rewrite renames every segment).
 
 At 100 TB: ~800k segments across thousands of shards (SCALING.md's
-estimate).  The monolithic format would be an ~80 MB JSON parsed per open
+estimate).  One whole-artifact file would be an ~80 MB JSON parsed per open
 and walked per lookup; the partitioned layout keeps each shard's span file
 KB-scale, loads only the shard(s) a query routes to, and answers inside a
 shard by bisect.
@@ -57,8 +57,7 @@ from collections.abc import Mapping
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-KEY_RANGES = "_KEY_RANGES.json"  # legacy monolithic (format 1, read-compat)
-KEY_RANGES_DIR = "_key_ranges"  # shard-partitioned layout (format 2)
+KEY_RANGES_DIR = "_key_ranges"
 META = "_META.json"
 
 # Spark DataType.simpleString() names (what write_key_ranges stores)
@@ -73,15 +72,14 @@ def _relative_file(full: str, shard: int) -> str:
     return full[i + len(marker):] if i >= 0 else full.rsplit("/", 1)[-1]
 
 
-def _coerce(ranges, value):
-    """Coerce a bound/key to the key column's comparison domain.  Raises
-    (TypeError/ValueError) when the value can't inhabit that domain —
+def _coerce(kt: str, value):
+    """Coerce a bound/key to the comparison domain of key type ``kt``.
+    Raises (TypeError/ValueError) when the value can't inhabit that domain —
     callers then SKIP pruning rather than risk a divergent comparison.
 
     String keys require actual ``str`` inputs: Spark compares a string
     column against a numeric literal by CASTING THE COLUMN ("007" == 7
     matches), which lexicographic pruning would wrongly exclude."""
-    kt = ranges.get("key_type", "string") if isinstance(ranges, Mapping) else ranges
     if kt in _INT_TYPES:
         return int(str(value))  # int("3.5") raises -> no pruning, stays exact
     if kt in _FLOAT_TYPES:
@@ -174,38 +172,22 @@ class KeyRanges(Mapping):
     of that shard and are memoized — a point lookup against a routed key
     touches one shard's span file, regardless of total shard/file count.
 
-    Also implements the legacy monolithic dict's Mapping interface
-    (``ranges["key_type"]`` / ``ranges["shards"]``) for callers/tests that
-    want the whole picture; ``["shards"]`` materializes every shard file.
+    The Mapping view (``ranges["key_type"]`` / ``ranges["shards"]``) gives
+    the whole picture; ``["shards"]`` materializes every shard file.
     """
 
-    def __init__(self, key_type: str, *, fs=None, base: str | None = None,
-                 shard_rows: dict | None = None,
-                 eager: dict | None = None):
+    def __init__(self, key_type: str, fs, base: str, shard_rows: dict):
         self.key_type = key_type
         self._fs = fs
-        self._base = base  # .../_key_ranges  (None => fully eager/monolithic)
+        self._base = base  # .../_key_ranges
         # shard id (str) -> row total; doubles as the shard directory
-        self._shard_rows = dict(shard_rows or {})
-        self._raw: dict[str, dict] = {}  # shard -> {fname: [lo, hi, n]}
+        self._shard_rows = dict(shard_rows)
+        self._raw: dict[str, dict | None] = {}  # shard -> {fname: [lo, hi, n]}
         self._spans: dict[str, _ShardSpans] = {}
-        if eager is not None:
-            for s, files in eager.items():
-                self._raw[str(s)] = dict(files)
-            if shard_rows is None:
-                self._shard_rows = {
-                    s: sum(int(v[2]) for v in files.values())
-                    for s, files in self._raw.items()
-                }
 
     # -- loading -------------------------------------------------------
     def shard_ids(self) -> list[str]:
         return sorted(self._shard_rows, key=lambda s: int(s))
-
-    @property
-    def is_partitioned(self) -> bool:
-        """True for the shard-partitioned (format 2) layout."""
-        return self._base is not None
 
     @property
     def shard_rows(self) -> dict:
@@ -215,9 +197,7 @@ class KeyRanges(Mapping):
     def has_span_file(self, s) -> bool:
         """True when shard ``s``'s span file is on disk (existence check
         only — the file is NOT read).  A shard listed in META without a
-        span file is a torn sidecar (e.g. an interrupted migration)."""
-        if self._base is None:
-            return str(s) in self._raw or str(int(s)) in self._raw
+        span file is a torn sidecar (e.g. an interrupted write)."""
         from solr_map_reduce_spark.fs import join as fs_join
 
         return self._fs.exists(fs_join(self._base, f"shard_{int(s)}.json"))
@@ -225,24 +205,21 @@ class KeyRanges(Mapping):
     def _load_raw(self, s: str) -> dict | None:
         """That shard's {file: [lo, hi, n]} — or None when the shard is
         listed in META but its span file is MISSING (a torn sidecar, e.g.
-        an interrupted migration).  None means "unknown file set": callers
+        an interrupted write).  None means "unknown file set": callers
         must decline pruning for queries touching that shard — returning {}
         would silently hide every row of the shard (a legitimately empty
         shard has an empty span FILE, distinguishing the two)."""
         if s not in self._raw:
-            if self._base is None:
-                self._raw[s] = {}
-            else:
-                from solr_map_reduce_spark.fs import join as fs_join
+            from solr_map_reduce_spark.fs import join as fs_join
 
-                full = fs_join(self._base, f"shard_{s}.json")
-                if not self._fs.exists(full):
-                    self._raw[s] = None
-                else:
-                    data = json.loads(self._fs.read_text(full))
-                    self._raw[s] = {
-                        name: [lo, hi, n] for name, lo, hi, n in data["files"]
-                    }
+            full = fs_join(self._base, f"shard_{s}.json")
+            if not self._fs.exists(full):
+                self._raw[s] = None
+            else:
+                data = json.loads(self._fs.read_text(full))
+                self._raw[s] = {
+                    name: [lo, hi, n] for name, lo, hi, n in data["files"]
+                }
         return self._raw[s]
 
     def _load_spans(self, s: str) -> _ShardSpans | None:
@@ -314,7 +291,7 @@ class KeyRanges(Mapping):
             out.extend((int(s), name) for name in spans.overlap(lo_c, hi_c, hi_exclusive))
         return sorted(out)
 
-    # -- legacy Mapping interface --------------------------------------
+    # -- Mapping view --------------------------------------------------
     def _all_shards(self) -> dict:
         for s in self.shard_ids():
             self._load_raw(s)
@@ -335,12 +312,10 @@ class KeyRanges(Mapping):
 
 
 def sidecar_exists(fs, path: str) -> bool:
-    """True when either sidecar layout is present at ``path``."""
+    """True when the sidecar is present at ``path``."""
     from solr_map_reduce_spark.fs import join as fs_join
 
-    return fs.exists(fs_join(path, KEY_RANGES_DIR, META)) or fs.exists(
-        fs_join(path, KEY_RANGES)
-    )
+    return fs.exists(fs_join(path, KEY_RANGES_DIR, META))
 
 
 def write_key_ranges(
@@ -355,9 +330,8 @@ def write_key_ranges(
     files are never opened).  A shard META lists but whose span file is
     missing (torn sidecar) is recomputed from its parquet alongside the
     touched shards — never written as empty, which would hide its rows.
-    A legacy monolithic ``_KEY_RANGES.json`` found here is migrated
-    (absorbed then deleted).  Returns a format-1-shaped dict covering the
-    shards this call computed or migrated (the full artifact on a full
+    Returns ``{"key_type", "shards": {shard: {file: [lo, hi, rows]}}}``
+    covering the shards this call computed (the full artifact on a full
     rebuild)."""
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
@@ -368,7 +342,6 @@ def write_key_ranges(
     key = manifest["unique_key"]
 
     carried_rows: dict[str, int] = {}  # untouched shard -> prior META total
-    carried_spans: dict[str, dict] = {}  # legacy-migrated untouched shards
     if shards is not None:
         prior = load_key_ranges(spark, path)
         if prior is None:
@@ -377,7 +350,7 @@ def write_key_ranges(
             # from pruned lookups/count — escalate to a full build (same
             # policy as write_term_blooms)
             shards = None
-        elif prior.is_partitioned:
+        else:
             # O(touched) in driver reads too: untouched shards' span files
             # are never OPENED — only their META row totals carry forward
             # (has_span_file is an existence check, not a read)
@@ -397,15 +370,6 @@ def write_key_ranges(
                     torn.add(int(s))
             if torn:
                 shards = sorted({int(s) for s in shards} | torn)
-        else:
-            # legacy monolithic prior: the single file is already parsed in
-            # memory — absorb every untouched shard into the new layout
-            touched = {str(int(s)) for s in shards}
-            for s, files in prior["shards"].items():
-                if s in touched:
-                    continue
-                carried_spans[s] = dict(files)
-                carried_rows[s] = sum(int(v[2]) for v in files.values())
 
     idx = read_index(spark, path)
     if shards is not None:
@@ -426,11 +390,8 @@ def write_key_ranges(
     )
 
     key_type = idx.schema[key].dataType.simpleString()
-    # carried_spans (legacy-migration absorbs) always need their span files
-    # written: the monolithic source file is deleted below, so a META that
-    # listed them without span files would tear the sidecar
-    shard_maps: dict = dict(carried_spans)
-    refreshed: set[str] = set(carried_spans)
+    shard_maps: dict = {}
+    refreshed: set[str] = set()
     for row in per_file:
         s = str(int(row["_s"]))
         refreshed.add(s)
@@ -479,16 +440,12 @@ def write_key_ranges(
     # old META (stale but self-consistent with the still-present old span
     # files) or no sidecar at all — never a partial new one
     fs.write_text(fs_join(base, META), json.dumps(meta))
-    legacy = fs_join(path, KEY_RANGES)
-    if fs.exists(legacy):
-        fs.delete(legacy)  # migrated — one source of truth
     return {"key_type": key_type, "shards": shard_maps}
 
 
 def load_key_ranges(spark: SparkSession, path: str) -> KeyRanges | None:
-    """Open the sidecar at ``path`` — the partitioned layout when present,
-    else the legacy monolithic file (compat for externally produced
-    sidecars) — as a lazy :class:`KeyRanges` handle; None when absent."""
+    """Open the sidecar at ``path`` as a lazy :class:`KeyRanges` handle;
+    None when absent."""
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
 
@@ -502,12 +459,6 @@ def load_key_ranges(spark: SparkSession, path: str) -> KeyRanges | None:
             fs=fs,
             base=base,
             shard_rows=meta.get("shard_rows", {}),
-        )
-    legacy = fs_join(path, KEY_RANGES)
-    if fs.exists(legacy):
-        data = json.loads(fs.read_text(legacy))
-        return KeyRanges(
-            data.get("key_type", "string"), eager=data.get("shards", {})
         )
     return None
 
@@ -535,78 +486,9 @@ def next_prefix(prefix: str) -> str | None:
     return None
 
 
-def candidate_files_range(
-    ranges, lo=None, hi=None, hi_exclusive: bool = False
-) -> list[tuple[int, str]] | None:
-    """(shard, file) pairs whose [min, max] OVERLAPS the key range
-    [lo, hi] (either bound may be None = unbounded), or None when the
-    sidecar can't answer.  Used for contiguous key scans — with composite
-    ids (``root!suffix``, Solr's routing syntax) all of a root's docs are
-    both co-sharded and sort-adjacent, so a ``root!`` prefix scan touches
-    one shard's few segments.  Accepts a :class:`KeyRanges` handle or a
-    raw format-1 dict."""
-    if isinstance(ranges, KeyRanges):
-        return ranges.candidate_files_range(lo=lo, hi=hi, hi_exclusive=hi_exclusive)
-    try:
-        lo_c = _coerce(ranges, lo) if lo is not None else None
-        hi_c = _coerce(ranges, hi) if hi is not None else None
-    except (TypeError, ValueError):
-        return None
-    if _is_nan(lo_c) or _is_nan(hi_c):
-        return None  # NaN bound: comparison semantics diverge — no pruning
-    out: list[tuple[int, str]] = []
-    for s, files in ranges.get("shards", {}).items():
-        for fname, (flo, fhi, _n) in files.items():
-            try:
-                flo_c, fhi_c = _coerce(ranges, flo), _coerce(ranges, fhi)
-            except (TypeError, ValueError):
-                out.append((int(s), fname))  # malformed bounds: keep (superset)
-                continue
-            if _is_nan(flo_c) or _is_nan(fhi_c):
-                out.append((int(s), fname))  # unknown span: keep (superset)
-                continue
-            if lo_c is not None and fhi_c < lo_c:
-                continue
-            if hi_c is not None and (
-                flo_c >= hi_c if hi_exclusive else flo_c > hi_c
-            ):
-                continue
-            out.append((int(s), fname))
-    return sorted(out)
-
-
 def candidate_files(
-    ranges, keys, shard=None
+    ranges: KeyRanges, keys, shard=None
 ) -> list[tuple[int, str]] | None:
-    """(shard, file) pairs whose [min, max] admits ANY of the keys, or None
-    when the sidecar can't answer (unknown key type coercion failure).
-    ``shard`` (an int or a set of ints) narrows the walk to the shards the
-    router already placed the keys in — a key can only live in its routed
-    shard, so files elsewhere are skipped even if their span matches.
-    Accepts a :class:`KeyRanges` handle or a raw format-1 dict."""
-    if isinstance(ranges, KeyRanges):
-        return ranges.candidate_files(keys, shard=shard)
-    try:
-        wanted = [_coerce(ranges, k) for k in keys]
-    except (TypeError, ValueError):
-        return None
-    if any(_is_nan(k) for k in wanted):
-        return None  # NaN key: comparison semantics diverge — no pruning
-    allowed = None
-    if shard is not None:
-        allowed = {int(shard)} if isinstance(shard, int) else {int(x) for x in shard}
-    out: list[tuple[int, str]] = []
-    for s, files in ranges.get("shards", {}).items():
-        if allowed is not None and int(s) not in allowed:
-            continue
-        for fname, (lo, hi, _n) in files.items():
-            try:
-                lo_c, hi_c = _coerce(ranges, lo), _coerce(ranges, hi)
-            except (TypeError, ValueError):
-                out.append((int(s), fname))  # malformed bounds: keep (superset)
-                continue
-            if _is_nan(lo_c) or _is_nan(hi_c):
-                out.append((int(s), fname))  # unknown span: keep (superset)
-            elif any(lo_c <= k <= hi_c for k in wanted):
-                out.append((int(s), fname))
-    return sorted(out)
+    """Function spelling of :meth:`KeyRanges.candidate_files`
+    (``perfbench/layers.py`` imports it by this name)."""
+    return ranges.candidate_files(keys, shard=shard)

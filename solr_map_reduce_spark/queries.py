@@ -1859,7 +1859,7 @@ def c9_block_join_child(spark, sf_dir):
 @_register(
     "c2_segment_lookup",
     "SELECT doc_id, text FROM documents WHERE doc_id = 7",
-    "C2 point lookup served through the _KEY_RANGES.json segment sidecar: "
+    "C2 point lookup served through the _key_ranges/ segment sidecar: "
     "only the segment files whose stored [min, max] admits the key are read "
     "(key_ranges.py — the Lucene per-segment term-dictionary cost model)",
 )
@@ -1870,7 +1870,7 @@ def c2_segment_lookup(spark, sf_dir):
 @_register(
     "c2_key_range",
     "SELECT doc_id, text FROM documents WHERE doc_id BETWEEN 100 AND 120",
-    "Contiguous key-range scan segment-pruned through _KEY_RANGES.json "
+    "Contiguous key-range scan segment-pruned through _key_ranges/ "
     "(the composite-id root!* scan shape, key_ranges.py)",
 )
 def c2_key_range(spark, sf_dir):

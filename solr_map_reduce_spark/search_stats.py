@@ -63,12 +63,6 @@ from pyspark.sql import Observation, SparkSession
 STATS = "_SEARCH_STATS.json"
 VOCAB_DIR = "_vocab"
 VOCAB_META = "_VOCAB_META.json"
-# Legacy/default bucket count: reads of a meta-less vocab dir assume it.
-# WRITES size the count from the artifact instead (``_auto_buckets``) — a
-# fixed 64 writes 64 near-empty files per field at fixture scale and
-# multi-GB bucket files at 100 TB.  Readers take the count from
-# _VOCAB_META.json, so any value is served correctly.
-N_VOCAB_BUCKETS = 64
 _VOCAB_SCHEMA = "term string, df bigint, bucket int"
 
 # ~bytes of SOURCE artifact per vocab bucket.  The vocab is a sublinear
@@ -114,7 +108,7 @@ def term_bucket(term: str, n_buckets: int) -> int:
 
 
 def load_vocab_meta(fs, path: str) -> dict | None:
-    """The vocab layout descriptor, or None for a legacy unbucketed dir."""
+    """The vocab layout descriptor, or None when there is none."""
     from solr_map_reduce_spark.fs import join as fs_join
 
     full = fs_join(path, VOCAB_DIR, VOCAB_META)
@@ -330,9 +324,7 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
       with a BUCKET-PRUNED scan (partition filter on the changed terms'
       buckets) and writes only those buckets to a ``<field>__pending``
       staging dir — the vocab write is O(changed-term buckets), not
-      O(|vocab|).  A legacy unbucketed vocab is migrated to the bucketed
-      layout in the same operation (one full rewrite, then O(changed)
-      forever after).
+      O(|vocab|).
 
     Returns a ``finalize()`` closure to call AFTER the artifact swap; it
     takes the ``_SEARCH_STATS.json`` commit marker DOWN (readers fall
@@ -352,12 +344,10 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
     if stats is None:
         return None
 
-    meta = load_vocab_meta(fs, path)
-    n_buckets = int(meta["n_buckets"]) if meta else N_VOCAB_BUCKETS
-    migrating = meta is None  # legacy unbucketed vocab: full rewrite once
+    n_buckets = int(load_vocab_meta(fs, path)["n_buckets"])
 
     new_stats: dict = {}
-    pending: dict[str, list[int] | None] = {}  # field -> touched buckets
+    pending: dict[str, list[int]] = {}  # field -> touched buckets
     for field, info in analyzed.items():
         tokens_col = info["tokens_col"]
         o = _field_aggregates(old_subset, tokens_col)
@@ -375,24 +365,18 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
                 != F.coalesce(F.col("_df_new"), F.lit(0))
             )
         )
-        vocab_dir = fs_join(path, f"{VOCAB_DIR}/{field}")
-        if migrating:
-            vocab = spark.read.parquet(vocab_dir).select("term", "df")
-            touched: list[int] | None = None  # whole-dir swap
-        else:
-            delta = delta.withColumn("bucket", _bucket_expr(n_buckets))
-            touched = sorted(
-                int(r["bucket"])
-                for r in delta.select("bucket").distinct().collect()
-            )
-            # explicit schema: planning never opens data-file footers, so
-            # untouched buckets are never read even at analysis time
-            vocab = (
-                spark.read.schema(_VOCAB_SCHEMA)
-                .parquet(vocab_dir)
-                .filter(F.col("bucket").isin(touched))
-                .select("term", "df")
-            )
+        delta = delta.withColumn("bucket", _bucket_expr(n_buckets))
+        touched = sorted(
+            int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
+        )
+        # explicit schema: planning never opens data-file footers, so
+        # untouched buckets are never read even at analysis time
+        vocab = (
+            spark.read.schema(_VOCAB_SCHEMA)
+            .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
+            .filter(F.col("bucket").isin(touched))
+            .select("term", "df")
+        )
         merged = (
             vocab.join(delta.select("term", "_df_old", "_df_new"), "term", "full_outer")
             .select(
@@ -425,15 +409,9 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
         for field, touched in pending.items():
             cur = fs_join(path, f"{VOCAB_DIR}/{field}")
             pend = fs_join(path, f"{VOCAB_DIR}/{field}__pending")
-            if touched is None:
-                # legacy migration: whole-dir swap into the bucketed layout
-                if fs.exists(cur):
-                    fs.rename(cur, fs_join(trash, field))
-                fs.rename(pend, cur)
-                continue
-            # bucketed: swap ONLY the touched buckets' partition dirs; a
-            # touched bucket with no pending dir lost all its terms —
-            # remove it (its old contents would otherwise serve stale dfs)
+            # swap ONLY the touched buckets' partition dirs; a touched
+            # bucket with no pending dir lost all its terms — remove it
+            # (its old contents would otherwise serve stale dfs)
             fs.mkdirs(fs_join(trash, field))
             for b in touched:
                 bname = f"bucket={b}"
@@ -445,8 +423,6 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
                     fs.rename(pend_b, cur_b)
             fs.delete(pend)
         fs.delete(trash)
-        if migrating:
-            _write_vocab_meta(fs, path, n_buckets)
         fs.write_text(fs_join(path, STATS), json.dumps(new_stats))
         return new_stats
 
@@ -468,12 +444,16 @@ def _whole_stats(spark: SparkSession, fs, path: str, analyzed: dict) -> dict | N
 
 
 def load_search_stats(spark: SparkSession, path: str) -> dict | None:
+    """The stored statistics, or None unless both the commit marker and
+    the vocab layout descriptor are present: a ``_vocab`` without
+    ``_VOCAB_META.json`` is not a layout this engine reads, so it serves as
+    no sidecar (computed statistics) until a mutation rebuilds it."""
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
 
     fs = get_fs(path, spark)
     full = fs_join(path, STATS)
-    if not fs.exists(full):
+    if not fs.exists(full) or load_vocab_meta(fs, path) is None:
         return None
     return json.loads(fs.read_text(full))
 
@@ -489,19 +469,13 @@ def term_dfs(
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
 
-    fs = get_fs(path, spark)
-    meta = load_vocab_meta(fs, path)
-    vocab_dir = fs_join(path, f"{VOCAB_DIR}/{field}")
-    if meta is None:  # legacy unbucketed layout
-        vocab = spark.read.parquet(vocab_dir)
-    else:
-        n = int(meta["n_buckets"])
-        buckets = sorted({term_bucket(t, n) for t in terms})
-        vocab = (
-            spark.read.schema(_VOCAB_SCHEMA)
-            .parquet(vocab_dir)
-            .filter(F.col("bucket").isin(buckets))
-        )
+    n = int(load_vocab_meta(get_fs(path, spark), path)["n_buckets"])
+    buckets = sorted({term_bucket(t, n) for t in terms})
+    vocab = (
+        spark.read.schema(_VOCAB_SCHEMA)
+        .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
+        .filter(F.col("bucket").isin(buckets))
+    )
     rows = vocab.filter(F.col("term").isin(list(terms))).select("term", "df").collect()
     out = {t: 0 for t in terms}
     out.update({r["term"]: int(r["df"]) for r in rows})

@@ -29,10 +29,11 @@ from __future__ import annotations
 import base64
 import json
 import warnings
-from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
+
+from solr_map_reduce_spark.lru import LRU
 
 BLOOMS = "_TERM_BLOOMS.json"
 DEFAULT_M = 1 << 16  # bitmap width floor (8 KiB per shard)
@@ -99,10 +100,8 @@ def _bitmaps(terms, term_col: str, m: int, k: int) -> dict[str, str]:
     return {s: base64.b64encode(bytes(bm)).decode() for s, bm in bitmaps.items()}
 
 
-# (m, k, term) -> positions, LRU-capped: a long-lived serving process sees
-# an unbounded stream of distinct query terms
-_POSITIONS_MEMO: OrderedDict[tuple[int, int, str], list[int]] = OrderedDict()
-_POSITIONS_MEMO_CAP = 4096
+# (m, k, term) -> positions
+_POSITIONS_MEMO: LRU = LRU(4096)
 
 
 def _terms_positions(
@@ -115,7 +114,6 @@ def _terms_positions(
     out: dict[str, list[int]] = {}
     for t in terms:
         if (m, k, t) in _POSITIONS_MEMO:
-            _POSITIONS_MEMO.move_to_end((m, k, t))
             out[t] = _POSITIONS_MEMO[(m, k, t)]
     missing = [t for t in terms if t not in out]
     if missing:
@@ -125,8 +123,6 @@ def _terms_positions(
         ).collect()
         for r in rows:
             out[r["term"]] = _POSITIONS_MEMO[(m, k, r["term"])] = list(r["pos"])
-        while len(_POSITIONS_MEMO) > _POSITIONS_MEMO_CAP:
-            _POSITIONS_MEMO.popitem(last=False)
     return out
 
 

@@ -2,16 +2,15 @@
 lookups, mutation-safe refresh — the Lucene per-segment term-dictionary
 cost model over the sharded parquet artifact."""
 
+import json
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from solr_map_reduce_spark.index_reader import SearchIndex
 from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact
-from solr_map_reduce_spark.key_ranges import (
-    KEY_RANGES,
-    candidate_files,
-    load_key_ranges,
-)
+from solr_map_reduce_spark.key_ranges import load_key_ranges
 from solr_map_reduce_spark.schema import Field, IndexSchema
 
 SCHEMA = IndexSchema(
@@ -39,6 +38,19 @@ def _docs(spark, n=400, start=0):
     )
 
 
+def _sidecar_at(path, key_type, files):
+    """Write a one-shard sidecar in the current layout (``files``: its
+    ``[name, lo, hi, rows]`` entries) under ``path`` and load it."""
+    base = os.path.join(path, "_key_ranges")
+    os.makedirs(base)
+    with open(os.path.join(base, "shard_0.json"), "w") as f:
+        json.dump({"files": files}, f)
+    with open(os.path.join(base, "_META.json"), "w") as f:
+        rows = {"0": sum(n for *_, n in files)}
+        json.dump({"format": 2, "key_type": key_type, "shard_rows": rows}, f)
+    return load_key_ranges(None, path)
+
+
 @pytest.fixture(scope="module")
 def artifact(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kr") / "idx")
@@ -48,8 +60,6 @@ def artifact(spark, tmp_path_factory):
 
 class TestSidecar:
     def test_sidecar_covers_every_segment_file(self, spark, artifact):
-        import os
-
         ranges = load_key_ranges(spark, artifact)
         assert ranges is not None and ranges["key_type"] == "string"
         listed = set()
@@ -73,7 +83,7 @@ class TestSidecar:
     def test_candidate_files_narrow(self, spark, artifact):
         ranges = load_key_ranges(spark, artifact)
         total = sum(len(f) for f in ranges["shards"].values())
-        cands = candidate_files(ranges, ["k00007"])
+        cands = ranges.candidate_files(["k00007"])
         assert 0 < len(cands) < total
 
 
@@ -203,11 +213,9 @@ class TestRangeAndPrefixScan:
         # numeric bounds against a string key: Spark casts the COLUMN
         # (ANSI: errors loudly; legacy: numeric compare) — lexicographic
         # pruning would silently diverge, so the sidecar declines to prune
-        from solr_map_reduce_spark.key_ranges import candidate_files_range
-
         ranges = load_key_ranges(spark, artifact)
-        assert candidate_files_range(ranges, lo=100, hi=109) is None
-        assert candidate_files(ranges, [100]) is None
+        assert ranges.candidate_files_range(lo=100, hi=109) is None
+        assert ranges.candidate_files([100]) is None
 
     def test_float_key_no_truncation(self, spark, tmp_path):
         out = str(tmp_path / "idx_float")
@@ -246,8 +254,6 @@ class TestMutationRefresh:
         rows = idx.get("k01020").collect()
         assert len(rows) == 1 and rows[0]["val"] == 1020
         # and the sidecar has no dangling (pre-rewrite) file names
-        import os
-
         ranges = load_key_ranges(spark, out)
         for s, files in ranges["shards"].items():
             for f in files:
@@ -276,8 +282,6 @@ class TestMutationRefresh:
         assert SearchIndex.open(spark, out).count() == 415
 
     def test_compact_recomputes(self, spark, tmp_path):
-        import os
-
         out = str(tmp_path / "idx_compact")
         job = _job()
         job.build(_docs(spark), out)
@@ -311,8 +315,6 @@ class TestReviewRegressions:
         assert idx.get("k00399").count() == 1
 
     def test_nan_key_bound_never_hides_rows(self, spark, tmp_path):
-        from solr_map_reduce_spark.key_ranges import candidate_files
-
         out = str(tmp_path / "idx_nan")
         schema = IndexSchema(
             fields=(Field("k", "double", required=True),), unique_key="k"
@@ -328,37 +330,29 @@ class TestReviewRegressions:
         ).build(df, out)
         ranges = load_key_ranges(spark, out)
         # the NaN-poisoned span still admits ordinary keys (superset rule)
-        cands = candidate_files(ranges, [2.0])
+        cands = ranges.candidate_files([2.0])
         assert cands, ranges
         idx = SearchIndex.open(spark, out)
         assert idx.get(2.0).count() == 1
 
 
 class TestThirdReviewRegressions:
-    def test_timestamp_key_refuses_pruning(self):
-        from solr_map_reduce_spark.key_ranges import (
-            candidate_files,
-            candidate_files_range,
-        )
-
-        ranges = {
-            "key_type": "timestamp",
-            "shards": {"0": {"f0.parquet": ["2020-01-05 23:00:00", "2020-01-06 00:00:00", 2]}},
-        }
+    def test_timestamp_key_refuses_pruning(self, tmp_path):
+        ranges = _sidecar_at(str(tmp_path), "timestamp", [
+            ["f0.parquet", "2020-01-05 23:00:00", "2020-01-06 00:00:00", 2],
+        ])
         # Python string compare of serialized timestamps diverges from
         # Spark's typed compare ('T' vs ' ') — pruning must decline
-        assert candidate_files(ranges, ["2020-01-05T12:00"]) is None
-        assert candidate_files_range(ranges, lo="2020-01-05T12:00") is None
+        assert ranges.candidate_files(["2020-01-05T12:00"]) is None
+        assert ranges.candidate_files_range(lo="2020-01-05T12:00") is None
 
     def test_get_many_narrows_to_routed_shards(self, spark, artifact):
-        from solr_map_reduce_spark.key_ranges import candidate_files
-
         idx = SearchIndex.open(spark, artifact)
         keys = ["k00001", "k00399"]
         routed = {idx._shard_of(k) for k in keys}
         if None in routed:
             pytest.skip("solr routing unavailable")
-        cands = candidate_files(load_key_ranges(spark, artifact), keys, shard=routed)
+        cands = load_key_ranges(spark, artifact).candidate_files(keys, shard=routed)
         assert cands and {s for s, _ in cands} <= routed
 
     def test_reader_delete_where_keeps_null_predicate_rows(self, spark, tmp_path):
@@ -390,13 +384,11 @@ class TestPartitionedSidecar:
     the admitted shard, not total file count; count() is O(1) from META."""
 
     def test_layout_on_disk(self, spark, artifact):
-        import os
-
         base = os.path.join(artifact, "_key_ranges")
         assert os.path.isfile(os.path.join(base, "_META.json"))
         shard_files = [f for f in os.listdir(base) if f.startswith("shard_")]
         assert len(shard_files) == 2  # one span file per shard
-        assert not os.path.exists(os.path.join(artifact, KEY_RANGES))
+        assert not os.path.exists(os.path.join(artifact, "_KEY_RANGES.json"))
 
     def test_point_lookup_loads_only_admitted_shard(self, spark, tmp_path):
         # artificially high segment count: 16 micro-shards, 10-row files
@@ -413,10 +405,8 @@ class TestPartitionedSidecar:
         assert len(hit) == 1 and hit[0]["val"] == 123
         # the handle inside the SearchIndex loaded ONLY the routed shard's
         # span file — work bounded by the admitted shard, not total files
-        assert idx._key_ranges.loaded_shards() == {str(routed)}
+        assert idx._sidecar("key_ranges").loaded_shards() == {str(routed)}
         # and the admitted file set is tiny vs the artifact's segment count
-        import os
-
         total_files = sum(
             len(os.listdir(os.path.join(out, d)))
             for d in os.listdir(out)
@@ -433,37 +423,20 @@ class TestPartitionedSidecar:
         assert ranges.loaded_shards() == set()  # no span file was read
 
     def test_bisect_matches_linear_walk(self, spark, artifact):
-        from solr_map_reduce_spark.key_ranges import candidate_files
-
         ranges = load_key_ranges(spark, artifact)
-        legacy = {"key_type": ranges["key_type"], "shards": ranges["shards"]}
+
+        def linear(key):
+            return sorted(
+                (int(s), name)
+                for s, files in ranges["shards"].items()
+                for name, (lo, hi, _) in files.items()
+                if lo <= key <= hi
+            )
+
         for key in ("k00000", "k00123", "k00399", "zzz"):
-            assert candidate_files(ranges, [key]) == candidate_files(legacy, [key])
-
-    def test_legacy_monolithic_still_readable(self, spark, tmp_path):
-        """An externally produced _KEY_RANGES.json (format 1) keeps working
-        end to end — compat fallback."""
-        import json
-        import os
-        import shutil
-
-        out = str(tmp_path / "idx_legacy")
-        src_job = _job()
-        src_job.build(_docs(spark), out)
-        ranges = load_key_ranges(spark, out)
-        legacy = {"key_type": ranges["key_type"], "shards": ranges["shards"]}
-        shutil.rmtree(os.path.join(out, "_key_ranges"))
-        with open(os.path.join(out, KEY_RANGES), "w") as f:
-            json.dump(legacy, f)
-        idx = SearchIndex.open(spark, out)
-        assert idx.count() == 400
-        rows = idx.get("k00123").collect()
-        assert len(rows) == 1 and rows[0]["val"] == 123
-        assert 0 < len(idx.get("k00123").inputFiles()) < 10
+            assert ranges.candidate_files([key]) == linear(key)
 
     def test_subset_refresh_rewrites_only_touched_span_files(self, spark, tmp_path):
-        import os
-
         out = str(tmp_path / "idx_touch")
         job = _job()
         job.build(_docs(spark), out)
@@ -491,79 +464,23 @@ class TestPartitionedSidecar:
             else:
                 assert after[f] == before[f]  # untouched span file intact
 
-    def test_malformed_bounds_keep_file_superset(self):
+    def test_malformed_bounds_keep_file_superset(self, tmp_path):
         """ADVICE r4: a hand-edited sidecar entry with null/malformed
         bounds must not raise out of get()/key_range() — the file is kept
         (superset rule), matching the NaN-span handling."""
-        from solr_map_reduce_spark.key_ranges import (
-            KeyRanges,
-            candidate_files,
-            candidate_files_range,
-        )
-
-        legacy = {
-            "key_type": "bigint",
-            "shards": {"0": {"ok.parquet": [10, 20, 5], "bad.parquet": [None, "x", 3]}},
-        }
-        assert candidate_files(legacy, [15]) == [(0, "bad.parquet"), (0, "ok.parquet")]
-        assert candidate_files(legacy, [999]) == [(0, "bad.parquet")]
-        assert candidate_files_range(legacy, lo=11, hi=12) == [
-            (0, "bad.parquet"), (0, "ok.parquet"),
-        ]
-        handle = KeyRanges("bigint", eager=legacy["shards"])
-        assert handle.candidate_files([15]) == [(0, "bad.parquet"), (0, "ok.parquet")]
-        assert handle.candidate_files([999]) == [(0, "bad.parquet")]
-        assert handle.candidate_files_range(lo=11, hi=12) == [
-            (0, "bad.parquet"), (0, "ok.parquet"),
-        ]
+        ranges = _sidecar_at(str(tmp_path), "bigint", [
+            ["ok.parquet", 10, 20, 5], ["bad.parquet", None, "x", 3],
+        ])
+        both = [(0, "bad.parquet"), (0, "ok.parquet")]
+        assert ranges.candidate_files([15]) == both
+        assert ranges.candidate_files([999]) == [(0, "bad.parquet")]
+        assert ranges.candidate_files_range(lo=11, hi=12) == both
 
 
 class TestFifthReviewRegressions:
-    def test_legacy_migration_on_subset_refresh_covers_all_shards(
-        self, spark, tmp_path
-    ):
-        """r5 self-review: merge_into over an artifact carrying a LEGACY
-        monolithic sidecar migrates to the partitioned layout — the
-        untouched shards' span files must be written from the legacy
-        entries, or their rows would vanish from pruned lookups."""
-        import json
-        import os
-        import shutil
-
-        out = str(tmp_path / "idx_mig")
-        job = _job()
-        job.build(_docs(spark), out)
-        # rewrite the sidecar back to the legacy format
-        ranges = load_key_ranges(spark, out)
-        legacy = {"key_type": ranges["key_type"], "shards": ranges["shards"]}
-        shutil.rmtree(os.path.join(out, "_key_ranges"))
-        with open(os.path.join(out, KEY_RANGES), "w") as f:
-            json.dump(legacy, f)
-        # a one-key merge touches ONE shard; the refresh migrates formats
-        batch = _docs(spark, n=1, start=7000)
-        routed = job.route(batch).select("shard").distinct().collect()
-        touched = {int(r["shard"]) for r in routed}
-        job.merge_into(batch, out)
-        assert not os.path.exists(os.path.join(out, KEY_RANGES))  # migrated
-        base = os.path.join(out, "_key_ranges")
-        span_files = {f for f in os.listdir(base) if f.startswith("shard_")}
-        assert span_files == {"shard_0.json", "shard_1.json"}  # BOTH shards
-        idx = SearchIndex.open(spark, out)
-        # keys in the UNTOUCHED shard must still be retrievable via pruning
-        untouched_keys = [
-            k for k in ("k00000", "k00123", "k00399")
-            if idx._shard_of(k) not in touched
-        ]
-        assert untouched_keys
-        for k in untouched_keys:
-            assert idx.get(k).count() == 1, k
-        assert idx.count() == 401
-
     def test_missing_span_file_declines_pruning_not_empty(self, spark, tmp_path):
         """A torn sidecar (META lists a shard whose span file is gone) must
         fall back to the full scan — never an empty result."""
-        import os
-
         out = str(tmp_path / "idx_torn")
         _job().build(_docs(spark), out)
         os.remove(os.path.join(out, "_key_ranges", "shard_1.json"))
@@ -582,9 +499,6 @@ class TestSixthReviewRegressions:
         shard's spans from its parquet — the old code wrote an empty
         shard_N.json (shard_rows=0), turning the tear into permanent
         silent false negatives."""
-        import json
-        import os
-
         out = str(tmp_path / "idx_heal")
         job = _job()
         job.build(_docs(spark), out)
@@ -618,9 +532,6 @@ class TestSixthReviewRegressions:
         driver-side READS too — untouched shards contribute only their
         META row totals.  Proven by poisoning the untouched shard's span
         file with invalid JSON: any read would crash the refresh."""
-        import json
-        import os
-
         out = str(tmp_path / "idx_noread")
         job = _job()
         job.build(_docs(spark), out)

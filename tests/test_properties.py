@@ -2,6 +2,11 @@
 cover — vectorized/scalar hash parity on arbitrary unicode, routing range
 totality, dedup resolver laws, complex-phrase window vs brute force."""
 
+import contextlib
+import json
+import os
+import tempfile
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -191,17 +196,24 @@ def test_pack_weights_laws(weights, budget):
 # -- key-range sidecar pruning laws -----------------------------------------
 
 from solr_map_reduce_spark.key_ranges import (  # noqa: E402
-    candidate_files,
-    candidate_files_range,
+    load_key_ranges,
     next_prefix,
 )
 
 
-def _ranges_from(spans, key_type):
-    return {
-        "key_type": key_type,
-        "shards": {"0": {f"f{i}.parquet": [lo, hi, 1] for i, (lo, hi) in enumerate(spans)}},
-    }
+@contextlib.contextmanager
+def _one_shard_sidecar(spans, key_type):
+    """A loaded sidecar, in the layout the engine writes, whose shard 0
+    holds ``spans`` as files f0.parquet, f1.parquet, ..."""
+    files = [[f"f{i}.parquet", lo, hi, 1] for i, (lo, hi) in enumerate(spans)]
+    meta = {"format": 2, "key_type": key_type, "shard_rows": {"0": len(files)}}
+    with tempfile.TemporaryDirectory() as path:
+        base = os.path.join(path, "_key_ranges")
+        os.makedirs(base)
+        for name, body in (("shard_0.json", {"files": files}), ("_META.json", meta)):
+            with open(os.path.join(base, name), "w") as f:
+                json.dump(body, f)
+        yield load_key_ranges(None, path)
 
 
 @settings(max_examples=200, deadline=None)
@@ -218,12 +230,11 @@ def _ranges_from(spans, key_type):
 def test_candidate_files_no_false_negatives_int(spans, data):
     """A key inside ANY stored span must keep that span's file — pruning may
     over-select, never under-select."""
-    ranges = _ranges_from(spans, "bigint")
     i = data.draw(st.integers(0, len(spans) - 1))
     lo, hi = spans[i]
     key = data.draw(st.integers(lo, hi))
-    cands = candidate_files(ranges, [key])
-    assert (0, f"f{i}.parquet") in cands
+    with _one_shard_sidecar(spans, "bigint") as ranges:
+        assert (0, f"f{i}.parquet") in ranges.candidate_files([key])
 
 
 @settings(max_examples=200, deadline=None)
@@ -239,11 +250,11 @@ def test_candidate_files_no_false_negatives_int(spans, data):
 )
 def test_candidate_files_range_overlap_complete_str(spans, data):
     """Every file whose span intersects the query range is admitted."""
-    ranges = _ranges_from(spans, "string")
     i = data.draw(st.integers(0, len(spans) - 1))
     flo, fhi = spans[i]
     # a query range guaranteed to intersect span i (anchored at its lo)
-    cands = candidate_files_range(ranges, lo=flo, hi=fhi)
+    with _one_shard_sidecar(spans, "string") as ranges:
+        cands = ranges.candidate_files_range(lo=flo, hi=fhi)
     assert (0, f"f{i}.parquet") in cands
     for j, (jlo, jhi) in enumerate(spans):
         if jhi >= flo and jlo <= fhi:  # intersects -> must be admitted
@@ -262,9 +273,29 @@ def test_next_prefix_bounds_every_extension(prefix, suffix):
         assert s < nxt
 
 
-# -- r5: partitioned-sidecar bisect path equals the linear walk -------------
+def _bisect_equals_linear(spans, key_type, keys):
+    """The handle's sorted-span bisect admits EXACTLY the files a linear
+    walk over the spans admits, for point keys and for closed, half-open
+    and open-ended ranges."""
 
-from solr_map_reduce_spark.key_ranges import KeyRanges  # noqa: E402
+    def linear(admit):
+        return sorted(
+            (0, f"f{i}.parquet") for i, span in enumerate(spans) if admit(*span)
+        )
+
+    lo, hi = min(keys), max(keys)
+    with _one_shard_sidecar(spans, key_type) as ranges:
+        assert ranges.candidate_files(keys) == linear(
+            lambda a, b: any(a <= k <= b for k in keys)
+        )
+        assert ranges.candidate_files_range(lo=lo, hi=hi) == linear(
+            lambda a, b: b >= lo and a <= hi
+        )
+        assert ranges.candidate_files_range(lo=lo, hi=hi, hi_exclusive=True) == linear(
+            lambda a, b: b >= lo and a < hi
+        )
+        assert ranges.candidate_files_range(hi=hi) == linear(lambda a, b: a <= hi)
+        assert ranges.candidate_files_range(lo=lo) == linear(lambda a, b: b >= lo)
 
 
 @settings(max_examples=200, deadline=None)
@@ -279,24 +310,7 @@ from solr_map_reduce_spark.key_ranges import KeyRanges  # noqa: E402
     st.lists(st.integers(-10**6 - 5, 10**6 + 5), min_size=1, max_size=5),
 )
 def test_keyranges_bisect_equals_linear_int(spans, keys):
-    """The class's sorted-span bisect must admit EXACTLY the same files as
-    the legacy linear walk, for point keys and for ranges."""
-    legacy = _ranges_from(spans, "bigint")
-    handle = KeyRanges("bigint", eager=legacy["shards"])
-    assert handle.candidate_files(keys) == candidate_files(legacy, keys)
-    lo, hi = min(keys), max(keys)
-    assert handle.candidate_files_range(lo=lo, hi=hi) == candidate_files_range(
-        legacy, lo=lo, hi=hi
-    )
-    assert handle.candidate_files_range(
-        lo=lo, hi=hi, hi_exclusive=True
-    ) == candidate_files_range(legacy, lo=lo, hi=hi, hi_exclusive=True)
-    assert handle.candidate_files_range(lo=None, hi=hi) == candidate_files_range(
-        legacy, lo=None, hi=hi
-    )
-    assert handle.candidate_files_range(lo=lo, hi=None) == candidate_files_range(
-        legacy, lo=lo, hi=None
-    )
+    _bisect_equals_linear(spans, "bigint", keys)
 
 
 @settings(max_examples=150, deadline=None)
@@ -311,13 +325,7 @@ def test_keyranges_bisect_equals_linear_int(spans, keys):
     st.lists(st.text(min_size=1, max_size=6), min_size=1, max_size=4),
 )
 def test_keyranges_bisect_equals_linear_str(spans, keys):
-    legacy = _ranges_from(spans, "string")
-    handle = KeyRanges("string", eager=legacy["shards"])
-    assert handle.candidate_files(keys) == candidate_files(legacy, keys)
-    lo, hi = min(keys), max(keys)
-    assert handle.candidate_files_range(lo=lo, hi=hi) == candidate_files_range(
-        legacy, lo=lo, hi=hi
-    )
+    _bisect_equals_linear(spans, "string", keys)
 
 
 # ---------------------------------------------------------------------------

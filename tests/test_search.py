@@ -1791,7 +1791,7 @@ class TestRevMarkerHygiene:
         assert rev_idx.query("dlrow~1").count() == 0
 
     def test_bm25_and_sidecar_count_real_tokens_only(self, rev_idx):
-        stats = rev_idx._load_stats()["text"]
+        stats = rev_idx._sidecar("stats")["text"]
         # 7 REAL tokens across the corpus (2 + 3 + 2), not 14
         assert stats["sum_dl"] == 7
         # vocab has no marker terms; spellcheck/suggest never surface them

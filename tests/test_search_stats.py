@@ -457,36 +457,6 @@ class TestBucketedVocab:
         dfs = term_dfs(spark, path, "text", ["alpha", "freshbucketterm"])
         assert dfs["alpha"] == 121 and dfs["freshbucketterm"] == 1
 
-    def test_legacy_unbucketed_vocab_migrates_on_merge(self, spark, built, tmp_path):
-        """An artifact whose vocab predates bucketing (flat parquet, no
-        _VOCAB_META.json) is migrated to the bucketed layout by the next
-        incremental merge — one full rewrite, then O(changed) forever."""
-        import os
-        import shutil
-
-        path = str(tmp_path / "index")
-        shutil.copytree(built, path)
-        flat = (
-            spark.read.parquet(os.path.join(path, "_vocab", "text"))
-            .select("term", "df")
-        )
-        flat_rows = flat.collect()
-        shutil.rmtree(os.path.join(path, "_vocab"))
-        spark.createDataFrame(flat_rows, "term string, df bigint").write.parquet(
-            os.path.join(path, "_vocab", "text")
-        )
-        add = spark.createDataFrame(
-            [("mig-new", "alpha migterm")], "id string, text string"
-        )
-        IndexJob(_cfg()).merge_into(add, path)
-        assert os.path.exists(os.path.join(path, "_vocab", "_VOCAB_META.json"))
-        assert any(
-            d.startswith("bucket=")
-            for d in os.listdir(os.path.join(path, "_vocab", "text"))
-        )
-        dfs = term_dfs(spark, path, "text", ["alpha", "migterm"])
-        assert dfs["alpha"] == 121 and dfs["migterm"] == 1
-
 
 class TestStatsCommitMarker:
     """Round-6: ``_SEARCH_STATS.json`` is the commit marker for the whole
@@ -668,7 +638,7 @@ class TestServingHandleHygiene:
 
     def test_dfs_memo_lru_cap_holds(self, spark, built):
         idx = SearchIndex.open(spark, built)
-        idx._dfs_memo_cap = 3
+        idx._dfs_memo.cap = 3
         probes = [["alpha"], ["beta"], ["common"], ["target"], ["word1"]]
         for terms in probes:
             idx.bm25(terms, k=2).collect()

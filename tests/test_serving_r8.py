@@ -557,7 +557,7 @@ class TestPlanMemo:
         out = str(tmp_path / "cap")
         IndexJob(IndexJobConfig(schema=schema, shards=1, dedup="none")).build(df, out)
         idx = SearchIndex.open(spark, out)
-        idx._plan_memo_cap = 4
+        idx._plan_memo.cap = 4
         for i in range(10):
             idx.query(f"term{i}")
         assert len(idx._plan_memo) == 4

@@ -4,7 +4,9 @@ sidecar (term Blooms, BM25 stats + ``_vocab``, key ranges, ANN) answers
 exactly what a fresh rebuild would; a torn stats sidecar is rebuilt by every
 path; the reader's delete keeps every sidecar; sidecars commit before the
 generation advance; and the mutation paths reach the sidecars only through
-the one policy table."""
+the one policy table.  On the read side, sidecars load only through one
+loader table, every bounded memo is the one LRU, and a layout the engine no
+longer writes reads as no sidecar."""
 
 import ast
 import json
@@ -282,6 +284,23 @@ def test_mutation_paths_reach_sidecars_only_through_the_table(module):
     assert found == {name: [] for name in found}
 
 
+def _package_trees():
+    for root, _dirs, files in os.walk(PKG):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full) as fh:
+                    yield os.path.relpath(full, PKG), ast.parse(fh.read())
+
+
+def _names(tree):
+    # an attribute (attr), a bare name (id), an imported or defined name (name)
+    for node in ast.walk(tree):
+        for a in ("attr", "id", "name"):
+            if isinstance(getattr(node, a, None), str):
+                yield getattr(node, a)
+
+
 ENV_READS = {"environ", "environb", "getenv"}
 
 
@@ -289,17 +308,67 @@ def test_only_the_session_reads_the_environment():
     """Sizing rules are constants or derived from the artifact, never
     environment knobs: only session.py (the deployment's Spark settings)
     may read os.environ / os.getenv, in any spelling."""
-    readers = set()
-    for root, _dirs, files in os.walk(PKG):
-        for f in files:
-            rel = os.path.relpath(os.path.join(root, f), PKG)
-            if not f.endswith(".py") or rel == "session.py":
-                continue
-            with open(os.path.join(root, f)) as fh:
-                tree = ast.parse(fh.read())
-            for node in ast.walk(tree):
-                # os.environ / __import__("os").environ (attr), a bare
-                # imported name (id), `from os import getenv` (alias name)
-                if {getattr(node, a, None) for a in ("attr", "id", "name")} & ENV_READS:
-                    readers.add(rel)
-    assert readers == set()
+    readers = {rel for rel, tree in _package_trees() if set(_names(tree)) & ENV_READS}
+    assert readers <= {"session.py"}
+
+
+LOADERS = {"load_term_blooms", "load_search_stats", "load_key_ranges"}
+
+
+def test_one_lru_and_one_sidecar_loader_table():
+    """Every bounded memo is the one LRU class, and the reader loads its
+    sidecars only through its loader table (where a freshness check
+    belongs)."""
+    trees = dict(_package_trees())
+    assert {rel for rel, tree in trees.items()
+            if {"move_to_end", "popitem"} & set(_names(tree))} == {"lru.py"}
+    table = [node for node in trees["index_reader.py"].body
+             if isinstance(node, ast.Assign)
+             and [getattr(t, "id", None) for t in node.targets] == ["_SIDECAR_LOADERS"]]
+    assert len(table) == 1 and LOADERS <= set(_names(table[0]))
+    rest = [n for n in trees["index_reader.py"].body if n is not table[0]]
+    assert not LOADERS & {name for node in rest for name in _names(node)}
+
+
+# -- older layouts ------------------------------------------------------------
+
+
+def _rows_of(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
+    """Key ranges only as the monolithic _KEY_RANGES.json and a _vocab
+    without _VOCAB_META.json are layouts the engine no longer writes: they
+    serve exactly like no sidecar, and the next merge writes the current
+    stats layout."""
+    bare = str(tmp_path / "bare")
+    shutil.copytree(artifact, bare)
+    for side in ("_key_ranges", "_vocab"):
+        shutil.rmtree(os.path.join(bare, side))
+    os.remove(os.path.join(bare, "_SEARCH_STATS.json"))
+    ranges = SearchIndex.open(spark, artifact)._sidecar("key_ranges")
+    with open(os.path.join(artifact, "_KEY_RANGES.json"), "w") as fh:
+        json.dump({"key_type": ranges["key_type"], "shards": ranges["shards"]}, fh)
+    shutil.rmtree(os.path.join(artifact, "_key_ranges"))
+    vocab = os.path.join(artifact, "_vocab")
+    text_vocab = os.path.join(vocab, "text")
+    flat = spark.read.parquet(text_vocab).select("term", "df").collect()
+    shutil.rmtree(vocab)
+    spark.createDataFrame(flat, "term string, df bigint").write.parquet(text_vocab)
+
+    older, want = SearchIndex.open(spark, artifact), SearchIndex.open(spark, bare)
+    assert older._sidecar("key_ranges") is None and older._sidecar("stats") is None
+    assert older.count() == want.count() == 60
+    for read in (
+        lambda idx: idx.get("k007"),
+        lambda idx: idx.key_range("k010", "k020"),
+        lambda idx: idx.prefix_key("k01"),
+        lambda idx: idx.bm25(["common", "w3", "t5"], k=20),
+        lambda idx: idx.terms(limit=50),
+    ):
+        assert _rows_of(read(older)) == _rows_of(read(want))
+
+    _merge(spark, artifact)
+    assert os.path.exists(os.path.join(vocab, "_VOCAB_META.json"))
+    _assert_stats_fresh(spark, artifact)

@@ -64,15 +64,13 @@ def test_positions_memo_is_lru_capped(spark, built, monkeypatch):
     """A serving process sees an unbounded stream of distinct query terms:
     the query-term positions memo stays within its cap, and evicted terms
     recompute to the same answers."""
-    from collections import OrderedDict
-
     import solr_map_reduce_spark.term_blooms as tb
 
     blooms = load_term_blooms(spark, built)
     terms = ["zanzibar", "common"] + [f"row{i}" for i in range(10)]
     want = {t: candidate_shards(spark, blooms, "text", [t], "all") for t in terms}
-    monkeypatch.setattr(tb, "_POSITIONS_MEMO", OrderedDict())
-    monkeypatch.setattr(tb, "_POSITIONS_MEMO_CAP", 4)
+    monkeypatch.setattr(tb._POSITIONS_MEMO, "cap", 4)
+    tb._POSITIONS_MEMO.clear()
     for t in terms + terms[:3]:
         assert candidate_shards(spark, blooms, "text", [t], "all") == want[t]
         assert len(tb._POSITIONS_MEMO) <= 4
