@@ -25,6 +25,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
+from solr_map_reduce_spark.session import local_frame
+
 
 def _as_double(col: F.Column) -> F.Column:
     return col.cast(T.ArrayType(T.DoubleType()))
@@ -440,8 +442,10 @@ def mmr_rerank(
         remaining.discard(best)
     out_rows = [(i, r + 1) for r, i in enumerate(selected)]
     id_field = scored.schema[id_col]
-    return df.sparkSession.createDataFrame(
-        out_rows, T.StructType([id_field, T.StructField("mmr_rank", T.IntegerType(), False)])
+    return local_frame(
+        df.sparkSession,
+        out_rows,
+        T.StructType([id_field, T.StructField("mmr_rank", T.IntegerType(), False)]),
     )
 
 

@@ -100,6 +100,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from solr_map_reduce_spark.extensions.search import QuerySyntaxError
+from solr_map_reduce_spark.session import local_frame
 
 
 # --------------------------------------------------------------- parser
@@ -699,8 +700,8 @@ class StreamCompiler:
         # stream used to smoke-test expression plumbing
         if len(node.args) != 1 or isinstance(node.args[0], Call):
             raise QuerySyntaxError('echo() takes one text arg')
-        return self._session().createDataFrame(
-            [(node.args[0],)], "echo string"
+        return local_frame(
+            self._session(), [(node.args[0],)], "echo string"
         ), None
 
     def _c_tuple(self, node: Call):
@@ -718,8 +719,8 @@ class StreamCompiler:
             except ValueError:
                 vals.append(v)
                 fields.append(f"{k} string")
-        return self._session().createDataFrame(
-            [tuple(vals)], ", ".join(fields)
+        return local_frame(
+            self._session(), [tuple(vals)], ", ".join(fields)
         ), None
 
     def _c_select(self, node: Call):
@@ -1291,10 +1292,10 @@ class StreamCompiler:
             .distinct()
         )
         spark = base.sparkSession
-        frontier = spark.createDataFrame(
-            [(frm, [frm])], "node string, path array<string>"
+        frontier = local_frame(
+            spark, [(frm, [frm])], "node string, path array<string>"
         )
-        empty = spark.createDataFrame([], "path array<string>")
+        empty = local_frame(spark, [], "path array<string>")
         if frm == to:
             return frontier.select("path"), None
         for _level in range(depth):
@@ -1608,8 +1609,8 @@ class StreamCompiler:
             # observed row comes back field-less); fall back to a direct
             # count — cheap exactly when the batch is tiny/empty
             n = stream.count()
-        summary = stream.sparkSession.createDataFrame(
-            [(n,)], "batchIndexed long"
+        summary = local_frame(
+            stream.sparkSession, [(n,)], "batchIndexed long"
         )
         return summary, None
 
@@ -1796,8 +1797,8 @@ class StreamCompiler:
             else:
                 fields.append(f"{k} string")
                 vals.append(str(r))
-        return self._session().createDataFrame(
-            [tuple(vals)], ", ".join(fields)
+        return local_frame(
+            self._session(), [tuple(vals)], ", ".join(fields)
         ), None
 
     def _let_value(self, val, variables):

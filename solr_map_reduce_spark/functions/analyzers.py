@@ -775,9 +775,8 @@ def _py_whitespace(text: str | None) -> list[str] | None:
 
 
 # Driver-side row kernels, one per analyzer: SearchIndex.analyze_terms runs
-# these in-process over the handful of query terms instead of launching a
-# Spark job (the |terms|-row createDataFrame + UDF + collect cost ~100 ms on
-# the serving hot path).  Each MUST tokenize identically to its Column twin
+# these in-process over the handful of query terms (the rule is stated on
+# session.local_frame).  Each MUST tokenize identically to its Column twin
 # above — parity-tested in tests/test_analyzers.py.
 PY_ANALYZERS = {
     # F.array(col) wraps a NULL value as [None] — mirror it exactly

@@ -32,6 +32,7 @@ from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
 from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
 from solr_map_reduce_spark.lru import LRU
 from solr_map_reduce_spark.operators.routing import ShardRouter
+from solr_map_reduce_spark.session import local_frame
 
 # The read side's sidecar loaders, each run at most once per artifact
 # generation by SearchIndex._sidecar.  A loader returns None for a sidecar
@@ -273,9 +274,14 @@ class SearchIndex:
         if cands is None:
             return None
         if not cands:  # no segment can hold any admitted key
-            return self.spark.createDataFrame([], self._read_schema())
+            return local_frame(self.spark, [], self._read_schema())
         paths = [fs_join(self.path, f"{SHARD_COL}={s}", f) for s, f in cands]
-        out = self.spark.read.option("basePath", self.path).parquet(*paths)
+        # schema-pinned: zero footer inference, so planning runs no job
+        out = (
+            self.spark.read.schema(self._read_schema())
+            .option("basePath", self.path)
+            .parquet(*paths)
+        )
         return out.select(self.columns)
 
     def key_range(self, lo=None, hi=None) -> DataFrame:
@@ -2261,7 +2267,7 @@ class SearchIndex:
         if py is not None:
             return [tok for t in terms for tok in (py(t) or [])]
         fn = ANALYZERS[atype]
-        df = self.spark.createDataFrame([(t,) for t in terms], "t string")
+        df = local_frame(self.spark, [(t,) for t in terms], "t string")
         rows = df.select(fn(F.col("t")).alias("toks")).collect()
         return [tok for r in rows for tok in (r["toks"] or [])]
 
@@ -3705,9 +3711,7 @@ class SearchIndex:
                 ).collect()
             ]
             candidates.append(sugg)
-        empty = self.spark.createDataFrame(
-            [], "collation string, hits long"
-        )
+        empty = local_frame(self.spark, [], "collation string, hits long")
         if not any_misspelled:
             return empty
         combos = list(itertools.islice(
@@ -3738,8 +3742,8 @@ class SearchIndex:
         ]
         out = [x for x in out if x[1] > 0]
         out.sort(key=lambda x: (-x[1], x[0]))
-        return self.spark.createDataFrame(
-            out[:max_collations], "collation string, hits long"
+        return local_frame(
+            self.spark, out[:max_collations], "collation string, hits long"
         )
 
     def highlight(
@@ -3846,7 +3850,7 @@ class SearchIndex:
         stats = self._sidecar("stats")
         if stats and fname in stats:
             n_docs = stats[fname]["n_docs"]
-            dfs = search_stats.term_dfs(self.spark, self.path, fname, sorted(tf))
+            dfs = self._dfs_for(fname, sorted(tf))
             scored = [
                 (t, tf[t] * math.log(1 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)))
                 for t in tf
@@ -4171,7 +4175,8 @@ class SearchIndex:
             )
             from pyspark.sql.types import DoubleType, StructField, StructType
 
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(r[self.unique_key], float(r["score"])) for r in hits],
                 StructType([key_field, StructField("score", DoubleType())]),
             )

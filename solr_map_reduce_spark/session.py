@@ -11,8 +11,10 @@ data model treats all dates as UTC instants (Solr dates are
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _ENGINE_DEFAULTS: dict[str, str] = {
     # Adaptive execution: runtime partition coalescing + skew-join handling.
@@ -102,3 +104,33 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side rows (tuples in ``schema`` order), for
+    bounded row counts only: query terms, a top-k answer, a literal tuple.
+
+    The rows cross into Spark as one ``pyarrow.Table``, which the JVM
+    turns into a local relation: no job and no Python worker, whether or
+    not ``spark.sql.execution.arrow.pyspark.enabled`` is set.  A frame
+    built from a Python list instead costs a job and a worker (~0.45 CPU-s
+    on 2 cores) even when it is empty, which on the serving hot path is
+    most of a query's cost.  Work that fits in the driver, such as query
+    analysis (``PY_ANALYZERS``) and Bloom probes (``term_blooms``), stays
+    there and never builds a frame at all.  ``schema`` is a
+    ``StructType`` or a DDL string; the string is parsed without a job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -18,6 +18,9 @@ Query: ``SearchIndex.contains_all/any/phrase`` intersect the query terms
 with each shard's bitmap and add a ``shard IN (candidates)`` partition
 filter before the scan — Bloom semantics guarantee NO false negatives, so
 results are identical; false positives only cost scanning an extra shard.
+The query terms' positions are computed in the driver by a Python port of
+Spark's XXH64 (:func:`_term_positions`), equal bit for bit to the build
+expression :func:`_positions_col`, so a probe runs no Spark job.
 
 Mutation safety: deleting rows leaves bitmaps a superset (still correct);
 ``merge_into`` ADDS tokens, so it refreshes the touched shards' bitmaps
@@ -32,8 +35,6 @@ import warnings
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
-
-from solr_map_reduce_spark.lru import LRU
 
 BLOOMS = "_TERM_BLOOMS.json"
 DEFAULT_M = 1 << 16  # bitmap width floor (8 KiB per shard)
@@ -100,29 +101,69 @@ def _bitmaps(terms, term_col: str, m: int, k: int) -> dict[str, str]:
     return {s: base64.b64encode(bytes(bm)).decode() for s, bm in bitmaps.items()}
 
 
-# (m, k, term) -> positions
-_POSITIONS_MEMO: LRU = LRU(4096)
+_MASK = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
 
 
-def _terms_positions(
-    spark: SparkSession, terms: list[str], m: int, k: int
-) -> dict[str, list[int]]:
-    """Positions for query terms, computed by the SAME JVM expression used
-    at build time (one tiny local job on a |terms|-row DataFrame).
-    Memoized per (m, k, term): repeated queries — the serving pattern —
-    skip the job entirely."""
-    out: dict[str, list[int]] = {}
-    for t in terms:
-        if (m, k, t) in _POSITIONS_MEMO:
-            out[t] = _POSITIONS_MEMO[(m, k, t)]
-    missing = [t for t in terms if t not in out]
-    if missing:
-        df = spark.createDataFrame([(t,) for t in missing], "term string")
-        rows = df.select(
-            "term", _positions_col(F.col("term"), m, k).alias("pos")
-        ).collect()
-        for r in rows:
-            out[r["term"]] = _POSITIONS_MEMO[(m, k, r["term"])] = list(r["pos"])
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _MASK
+
+
+def _fmix(h: int) -> int:
+    h = ((h ^ (h >> 33)) * _P2) & _MASK
+    h = ((h ^ (h >> 29)) * _P3) & _MASK
+    return h ^ (h >> 32)
+
+
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _MASK, 31) * _P1) & _MASK
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """Spark's ``XXH64.hashUnsafeBytes`` (standard XXH64, little-endian
+    lanes) as an unsigned 64-bit value."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _MASK, (seed + _P2) & _MASK, seed,
+             (seed - _P1) & _MASK]
+        while i <= n - 32:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _MASK
+        for lane in v:
+            h = ((h ^ _round(0, lane)) * _P1 + _P4) & _MASK
+    else:
+        h = (seed + _P5) & _MASK
+    h = (h + n) & _MASK
+    while i <= n - 8:
+        h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _MASK
+        i += 8
+    if i + 4 <= n:
+        h ^= (int.from_bytes(data[i:i + 4], "little") * _P1) & _MASK
+        h = (_rotl(h, 23) * _P2 + _P3) & _MASK
+        i += 4
+    for b in data[i:]:
+        h ^= (b * _P5) & _MASK
+        h = (_rotl(h, 11) * _P1) & _MASK
+    return _fmix(h)
+
+
+def _term_positions(term: str, m: int, k: int) -> list[int]:
+    """The k bloom positions of a query term, computed in the driver and
+    equal to :func:`_positions_col`: ``xxhash64(term, i)`` hashes the
+    UTF-8 bytes with seed 42, then the int ``i`` (Spark's ``hashInt``)
+    seeded with that hash; ``pmod`` of the signed result by m."""
+    h = _xxh64(term.encode("utf-8"), 42)
+    out = []
+    for i in range(k):
+        x = _xxh64(i.to_bytes(4, "little", signed=True), h)
+        out.append((x - (1 << 64) if x >> 63 else x) % m)
     return out
 
 
@@ -223,12 +264,13 @@ def candidate_shards(
     """Shards that can possibly satisfy the term query, or None when the
     sidecar doesn't cover the field (no pruning).  ``mode='all'`` keeps a
     shard when EVERY term might be present (AND/phrase), ``'any'`` when ANY
-    might be (OR)."""
+    might be (OR).  The probe runs in the driver; ``spark`` is unused and
+    kept for positional callers."""
     info = blooms.get(field)
     if not info or not terms:
         return None
     m, k = int(info["m"]), int(info["k"])
-    positions = _terms_positions(spark, list(terms), m, k)
+    positions = {t: _term_positions(t, m, k) for t in terms}
     bitmaps = {
         int(s): base64.b64decode(b64) for s, b64 in info["shards"].items()
     }

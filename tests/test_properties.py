@@ -837,3 +837,38 @@ def test_normalize_url_is_idempotent(urls):
     ).collect()
     for r in got:
         assert r["once"] == r["twice"], urls
+
+
+# -- driver-side Bloom positions vs the build expression ---------------------
+
+# every ASCII length from 0 to 70 bytes rides in each batch, so the 4-, 8-
+# and 32-byte lane boundaries of XXH64 are always crossed; st.text() adds
+# multi-byte characters at arbitrary offsets
+_BOUNDARY_STRINGS = ["".join(chr(97 + (7 * i) % 26) for i in range(n)) for n in range(71)]
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(st.text(max_size=40), min_size=0, max_size=40),
+    st.one_of(st.integers(3, 24).map(lambda e: 1 << e), st.integers(1, 1 << 24)),
+    st.integers(1, 6),
+)
+def test_driver_bloom_positions_equal_the_build_expression(strings, m, k):
+    """``_term_positions`` (the query-side XXH64 port) must equal
+    ``_positions_col`` (the JVM expression the bitmaps were built with) on
+    any string and any width: one differing position is a Bloom false
+    negative."""
+    import pyspark.sql.functions as F
+
+    from solr_map_reduce_spark.session import get_spark, local_frame
+    from solr_map_reduce_spark.term_blooms import _positions_col, _term_positions
+
+    spark = get_spark(app_name="smrs-tests", master="local[4]",
+                      shuffle_partitions=4)
+    terms = sorted(set(strings) | set(_BOUNDARY_STRINGS))
+    rows = local_frame(spark, [(t,) for t in terms], "t string").select(
+        "t", _positions_col(F.col("t"), m, k).alias("p")
+    ).collect()
+    assert len(rows) == len(terms)
+    for r in rows:
+        assert _term_positions(r["t"], m, k) == list(r["p"]), (r["t"], m, k)

@@ -193,6 +193,23 @@ def test_more_like_this(spark, built):
     assert set(ids) & word1_family
 
 
+def test_repeated_more_like_this_reads_the_vocab_once(spark, built, monkeypatch):
+    """MLT term selection takes its document frequencies from the handle's
+    df LRU, like bm25: a repeated request does not rescan the vocab."""
+    from solr_map_reduce_spark import search_stats
+
+    real, calls = search_stats.term_dfs, []
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(search_stats, "term_dfs", counting)
+    idx = SearchIndex.open(spark, built)
+    first = idx._mlt_terms("1")
+    assert idx._mlt_terms("1") == first and len(calls) == 1
+
+
 def test_more_like_this_missing_key_raises(spark, built):
     idx = SearchIndex.open(spark, built)
     with pytest.raises(KeyError):

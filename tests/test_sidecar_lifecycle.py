@@ -372,3 +372,76 @@ def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
     _merge(spark, artifact)
     assert os.path.exists(os.path.join(vocab, "_VOCAB_META.json"))
     _assert_stats_fresh(spark, artifact)
+
+
+# -- read job budget ------------------------------------------------------------
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn`` runs, counted per job group by the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("default", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_planning_runs_no_job(spark, base):
+    """On a warm handle over an artifact with every sidecar, planning a
+    search, facet or get runs no Spark job (Bloom probes run in the driver,
+    segment reads are schema-pinned), a sidecar knn answer and a get no
+    segment admits are local frames that collect without a job."""
+    idx = SearchIndex.open(spark, base)
+    idx.search(q="w1 AND common", filters={"v": 1}, select=["id"], limit=5).collect()
+    idx.facet("v", q="t3").collect()
+    idx.get("k001").collect()
+    idx.knn(QUERIES[0].tolist(), k=5).collect()
+    # fresh terms and keys: nothing a warm-up could have memoized
+    reads = {
+        "search": lambda: idx.search(q="w2 AND t4", filters={"v": 1},
+                                     select=["id"], limit=5),
+        "facet": lambda: idx.facet("v", q="t5"),
+        "get": lambda: idx.get("k007"),
+        "get_absent": lambda: idx.get("zzz-absent").collect(),
+    }
+    knn = idx.knn(QUERIES[1].tolist(), k=5)
+    reads["knn_collect"] = knn.collect
+    assert {name: _jobs(spark, f"budget-{name}", fn) for name, fn in reads.items()} == {
+        name: 0 for name in reads
+    }
+    assert len(knn.collect()) == 5 and idx.get("zzz-absent").count() == 0
+
+
+LOCAL_FRAME_MODULES = ("index_reader.py", "term_blooms.py",
+                       "extensions/similarity.py", "extensions/stream_expr.py",
+                       "session.py")
+
+
+def _enclosing_functions(tree, name):
+    """Names of the innermost functions whose bodies name ``name``."""
+    found = set()
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if name in (getattr(node, "attr", None), getattr(node, "id", None)):
+            found.add(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_local_frames_are_built_only_by_the_helper():
+    """Driver-side rows cross into Spark only through session.local_frame
+    (an Arrow table: no job, no Python worker)."""
+    found = {}
+    for rel in LOCAL_FRAME_MODULES:
+        with open(os.path.join(PKG, rel)) as fh:
+            fns = _enclosing_functions(ast.parse(fh.read()), "createDataFrame")
+        if fns:
+            found[rel] = fns
+    assert found == {"session.py": {"local_frame"}}

@@ -60,25 +60,6 @@ def test_rare_term_prunes_to_few_shards(spark, built):
     assert candidate_shards(spark, blooms, "text", ["notinthecorpus"], "all") == []
 
 
-def test_positions_memo_is_lru_capped(spark, built, monkeypatch):
-    """A serving process sees an unbounded stream of distinct query terms:
-    the query-term positions memo stays within its cap, and evicted terms
-    recompute to the same answers."""
-    import solr_map_reduce_spark.term_blooms as tb
-
-    blooms = load_term_blooms(spark, built)
-    terms = ["zanzibar", "common"] + [f"row{i}" for i in range(10)]
-    want = {t: candidate_shards(spark, blooms, "text", [t], "all") for t in terms}
-    monkeypatch.setattr(tb._POSITIONS_MEMO, "cap", 4)
-    tb._POSITIONS_MEMO.clear()
-    for t in terms + terms[:3]:
-        assert candidate_shards(spark, blooms, "text", [t], "all") == want[t]
-        assert len(tb._POSITIONS_MEMO) <= 4
-    union = sorted(set().union(*want.values()))
-    assert candidate_shards(spark, blooms, "text", terms, "any") == union
-    assert len(tb._POSITIONS_MEMO) <= 4
-
-
 def test_results_identical_with_and_without_pruning(spark, built):
     idx = SearchIndex.open(spark, built)
     pruned = {r["id"] for r in idx.contains_all(["zanzibar"]).collect()}
