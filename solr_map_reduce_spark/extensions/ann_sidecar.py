@@ -6,7 +6,10 @@ Layout under ``<index>/_ann/<field>/``:
 - ``_IVF_MANIFEST.json`` / ``_IVFPQ_MANIFEST.json`` + ``vectors/`` or
   ``codes/`` partitioned by coarse bucket — the
   :class:`~solr_map_reduce_spark.extensions.similarity.IvfIndex` /
-  ``IvfPqIndex`` persistence (epoch-0 base).
+  ``IvfPqIndex`` persistence (epoch-0 base).  The manifest records the
+  base's schema; every read of the base, the delta and the tombstones is
+  pinned to it, and a sidecar without one is an older layout
+  (:func:`load` returns None).
 - ``_ANN_META.json`` — ``{kind, field, nprobe, built_generation,
   epoch}``.  ``built_generation`` pins the sidecar to the artifact
   manifest's content hash; a mismatch reads as STALE and the query
@@ -109,6 +112,34 @@ def sidecars(fs, index_path: str) -> list[tuple[str, str]]:
         if fs.exists(fs_join(side, ANN_META)):
             out.append((d, side))
     return out
+
+
+def _base(kind: str, index) -> "tuple[str, StructType | None]":
+    """(sub-dir, recorded schema) of a loaded index's epoch-0 base."""
+    pinned = index.vectors_schema if kind == "ivf" else index.codes_schema
+    schema = StructType.fromJson(pinned) if pinned else None
+    return ("vectors" if kind == "ivf" else "codes"), schema
+
+
+def load(spark: SparkSession, side: str, meta: dict):
+    """``(kind, index, sub, schema)`` for the sidecar at ``side``: the
+    loaded IvfIndex / IvfPqIndex, the sub-dir of its base and the schema
+    the base was written with.  None when the kind is unknown, the sidecar
+    is unreadable, or its manifest records no base schema (an older
+    layout: serving answers exactly and maintenance leaves it stale until
+    ``build_ann``)."""
+    from solr_map_reduce_spark.extensions import similarity as sim
+
+    kind = meta.get("kind", "ivf")
+    cls = {"ivf": sim.IvfIndex, "ivfpq": sim.IvfPqIndex}.get(kind)
+    if cls is None:
+        return None
+    try:
+        index = cls.load(spark, side)
+    except Exception:
+        return None
+    sub, schema = _base(kind, index)
+    return None if schema is None else (kind, index, sub, schema)
 
 
 # -- build ---------------------------------------------------------------
@@ -507,10 +538,8 @@ def _dot_route_stats(spark: SparkSession, side: str, ivf) -> "dict | None":
     them).  ``None`` when the corpus holds no vectors."""
     from solr_map_reduce_spark.extensions.similarity import _as_double, l2_norm
 
-    reader = spark.read
-    if ivf.vectors_schema:
-        reader = reader.schema(StructType.fromJson(ivf.vectors_schema))
-    rows = reader.parquet(fs_join(side, "vectors"))
+    sub, schema = _base("ivf", ivf)
+    rows = spark.read.schema(schema).parquet(fs_join(side, sub))
     nrm = l2_norm(_as_double(F.col(ivf.vec_col)))
     got = (
         rows.filter(
@@ -759,33 +788,24 @@ def _all_unit_norms(
 
 # -- serve ---------------------------------------------------------------
 
-def _tombstone_schema(key_field: StructField) -> StructType:
-    return StructType([key_field, StructField("tomb_epoch", LongType())])
-
-
-def _with_epoch_field(schema_json: dict | None) -> StructType | None:
-    if not schema_json:
-        return None
-    st = StructType.fromJson(schema_json)
-    return StructType(st.fields + [StructField(EPOCH_COL, LongType())])
+def _read_delta(spark, side: str, schema: StructType) -> DataFrame:
+    """The upsert delta: base rows (``schema``) stamped with their epoch."""
+    epoch = StructField(EPOCH_COL, LongType())
+    return spark.read.schema(StructType(schema.fields + [epoch])).parquet(
+        fs_join(side, DELTA)
+    )
 
 
 def _read_tombstones(
-    spark, fs, side: str, pinned: dict | None, key: str
+    spark, fs, side: str, schema: StructType, key: str
 ) -> DataFrame | None:
-    """(key, tomb_epoch) rows, schema-pinned from the base's key field;
+    """(key, tomb_epoch) rows, the key typed as in the base ``schema``;
     None when the sidecar has no tombstones."""
     tomb_path = fs_join(side, TOMBSTONES)
     if not fs.exists(tomb_path):
         return None
-    kf = next(
-        (f for f in StructType.fromJson(pinned).fields if f.name == key),
-        None,
-    ) if pinned else None
-    reader = spark.read
-    if kf is not None:
-        reader = reader.schema(_tombstone_schema(kf))
-    return reader.parquet(tomb_path)
+    tomb = StructType([schema[key], StructField("tomb_epoch", LongType())])
+    return spark.read.schema(tomb).parquet(tomb_path)
 
 
 def _apply_liveness(rows: DataFrame, tombstones: DataFrame, key: str) -> DataFrame:
@@ -853,27 +873,18 @@ def probe_topk(
         probe = [int(b) for b in d.argsort()[:nprobe]]
     key = ivf.id_col
 
-    pinned = index.vectors_schema if kind == "ivf" else index.codes_schema
-    sub = "vectors" if kind == "ivf" else "codes"
-    reader = spark.read
-    if pinned:
-        reader = reader.schema(StructType.fromJson(pinned))
-    rows = reader.parquet(fs_join(side, sub)).filter(
+    sub, schema = _base(kind, index)
+    rows = spark.read.schema(schema).parquet(fs_join(side, sub)).filter(
         F.col(ivf.bucket_col).isin(probe)
     ).withColumn(EPOCH_COL, F.lit(0).cast("long"))
 
-    delta_path = fs_join(side, DELTA)
-    if fs.exists(delta_path):
-        dschema = _with_epoch_field(pinned)
-        dreader = spark.read
-        if dschema is not None:
-            dreader = dreader.schema(dschema)
-        delta = dreader.parquet(delta_path).filter(
+    if fs.exists(fs_join(side, DELTA)):
+        delta = _read_delta(spark, side, schema).filter(
             F.col(ivf.bucket_col).isin(probe)
         )
         rows = rows.unionByName(delta.select(rows.columns))
 
-    tomb = _read_tombstones(spark, fs, side, pinned, key)
+    tomb = _read_tombstones(spark, fs, side, schema, key)
     if tomb is not None:
         # liveness before the top-k; AQE broadcasts the (small)
         # per-key tombstone maximum
@@ -971,9 +982,10 @@ def delta_upsert(
     Lucene contract).  ``upserted_rows`` must be MATERIALIZED by the
     caller before the staging swap.  O(batch) work.
 
-    Sidecars whose pinned base schema predates the epoch layout, or
-    whose meta is not pinned to ``pre_gen`` (they missed an earlier
-    mutation), are left stale (exact fallback until rebuild)."""
+    Sidecars that do not :func:`load` (an older layout without a
+    recorded base schema, or unreadable), or whose meta is not pinned to
+    ``pre_gen`` (they missed an earlier mutation), are left stale (exact
+    fallback until rebuild)."""
     from solr_map_reduce_spark.extensions import similarity as sim
 
     fs = get_fs(index_path, spark)
@@ -986,22 +998,10 @@ def delta_upsert(
             continue  # already stale before this mutation: stay stale
         if field not in upserted_rows.columns:
             continue  # stale: the batch did not carry this vector column
-        kind = meta.get("kind", "ivf")
-        try:
-            if kind == "ivf":
-                index = sim.IvfIndex.load(spark, side)
-            else:
-                index = sim.IvfPqIndex.load(spark, side)
-        except Exception:
-            continue
-        pinned = (
-            index.vectors_schema if kind == "ivf" else index.codes_schema
-        )
-        if not pinned:
-            # legacy sidecar without a pinned base schema: appending
-            # epoch-stamped delta would mix schemas — leave it stale
-            # (exact fallback until build_ann reruns)
-            continue
+        loaded = load(spark, side, meta)
+        if loaded is None:
+            continue  # stale: no epoch-stamped delta can match its base
+        kind, index, _sub, _schema = loaded
         epoch = int(meta.get("epoch", 0)) + 1
         meta["epoch"] = epoch
         vec_rows = upserted_rows.select(key, field).filter(
@@ -1077,18 +1077,16 @@ def compact(spark: SparkSession, index_path: str, field: str) -> dict:
     meta = load_meta(fs, side)
     if meta is None:
         raise ValueError(f"no ANN sidecar for field {field!r}")
-    kind = meta.get("kind", "ivf")
-    from solr_map_reduce_spark.extensions import similarity as sim
-
-    index = (
-        sim.IvfIndex.load(spark, side) if kind == "ivf"
-        else sim.IvfPqIndex.load(spark, side)
-    )
+    loaded = load(spark, side, meta)
+    if loaded is None:
+        raise ValueError(
+            f"ANN sidecar for {field!r} is unreadable or an older layout — "
+            "rebuild with build_ann"
+        )
+    kind, index, sub, schema = loaded
     ivf = index if kind == "ivf" else index.ivf
     key = ivf.id_col
     bucket_col = ivf.bucket_col
-    pinned = index.vectors_schema if kind == "ivf" else index.codes_schema
-    sub = "vectors" if kind == "ivf" else "codes"
     has_delta = fs.exists(fs_join(side, DELTA))
     has_tomb = fs.exists(fs_join(side, TOMBSTONES))
     if not has_delta and not has_tomb:
@@ -1123,18 +1121,9 @@ def compact(spark: SparkSession, index_path: str, field: str) -> dict:
         meta["built_generation"] = "__compacting__"
         write_meta(fs, side, meta)  # belt + braces while we rewrite
 
-        reader = spark.read
-        if pinned:
-            reader = reader.schema(StructType.fromJson(pinned))
-        base = reader.parquet(fs_join(side, sub))
-        delta = None
-        if has_delta:
-            dreader = spark.read
-            ds = _with_epoch_field(pinned)
-            if ds is not None:
-                dreader = dreader.schema(ds)
-            delta = dreader.parquet(fs_join(side, DELTA))
-        tomb = _read_tombstones(spark, fs, side, pinned, key)
+        base = spark.read.schema(schema).parquet(fs_join(side, sub))
+        delta = _read_delta(spark, side, schema) if has_delta else None
+        tomb = _read_tombstones(spark, fs, side, schema, key)
 
         affected = set()
         if delta is not None:

@@ -10,6 +10,12 @@ work of the inverted index:
   shard (the term-index analog);
 - columnar storage → projection (C5) reads only requested columns.
 
+Every read is pinned to the schema the artifact's writer recorded in the
+manifest (``indexing.artifact_schema``), so planning one infers nothing from
+parquet footers and runs no Spark job; a manifest without a recorded schema
+is refused at ``open``.  A sidecar in a layout the engine no longer writes
+reads as absent, and the query takes the exact unpruned path.
+
     idx = SearchIndex.open(spark, path)
     idx.count()                         # C1
     idx.get("doc-42")                   # C2 (prunes to one shard)
@@ -29,7 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
-from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
+from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, artifact_schema
 from solr_map_reduce_spark.lru import LRU
 from solr_map_reduce_spark.operators.routing import ShardRouter
 from solr_map_reduce_spark.session import local_frame
@@ -109,12 +115,13 @@ class SearchIndex:
         # Everything derived from one artifact generation, emptied together
         # by _check_generation (the Solr searcher's caches, dropped with it
         # on commit): the loaded sidecars ("blooms", "stats", "key_ranges"),
-        # the artifact DataFrame ("df": file listing + footer schema cost
-        # tens of ms per read), the read schema ("schema"), ANN handles
+        # the artifact DataFrame ("df": its file listing costs tens of ms
+        # per read), the manifest's read schema ("schema"), ANN handles
         # (("ann", field)); and two LRUs — (field, terms) -> dfs plus fuzzy
         # expansions, and compiled query plans (the queryResultCache's plan
         # half: execution still runs, so results are never cached stale).
         self._cache: dict = {}
+        self._read_schema()  # refuses a manifest with no recorded schema
         self._dfs_memo = LRU(1024)
         self._plan_memo = LRU(256)
         self._warned_no_stats_fq = False
@@ -199,7 +206,9 @@ class SearchIndex:
     def df(self) -> DataFrame:
         self._check_generation()
         if "df" not in self._cache:
-            self._cache["df"] = read_index(self.spark, self.path)
+            self._cache["df"] = self.spark.read.schema(self._read_schema()).parquet(
+                self.path
+            )
         return self._cache["df"]
 
     def _sidecar(self, name: str):
@@ -251,21 +260,13 @@ class SearchIndex:
     def columns(self) -> list[str]:
         """Artifact column order (data columns + shard), from the manifest —
         no file listing needed."""
-        cols = self.manifest.get("columns")
-        if cols:
-            return list(cols) + [SHARD_COL]
-        return self.df().columns
+        return self._read_schema().fieldNames()
 
     def _read_schema(self):
-        import pyspark.sql.types as T
-
+        """The schema the artifact's writer recorded (``artifact_schema``),
+        once per generation: every read of the artifact is pinned to it."""
         if "schema" not in self._cache:
-            sj = self.manifest.get("schema_json")
-            st = T.StructType.fromJson(json.loads(sj)) if sj else None
-            if st is not None and set(st.fieldNames()) == set(self.columns):
-                self._cache["schema"] = T.StructType([st[c] for c in self.columns])
-            else:
-                self._cache["schema"] = self.df().schema
+            self._cache["schema"] = artifact_schema(self.manifest)
         return self._cache["schema"]
 
     def _files_df(self, cands: list[tuple[int, str]] | None) -> DataFrame | None:
@@ -330,10 +331,7 @@ class SearchIndex:
         lookup by str(key) — the filter and the pruning disagree.
         Coercing to str makes get(42) == get('42'), the same contract
         get_many always had."""
-        try:
-            dt = self.df().schema[self.unique_key].dataType.simpleString()
-        except Exception:
-            return list(keys)
+        dt = self._read_schema()[self.unique_key].dataType.simpleString()
         if dt == "string":
             return [k if isinstance(k, str) else str(k) for k in keys]
         return list(keys)
@@ -2341,11 +2339,7 @@ class SearchIndex:
         key = ("__fuzzy__", fname, needle, max_edits)
         if key in self._dfs_memo:
             return self._dfs_memo[key]
-        from solr_map_reduce_spark.fs import join as fs_join
-
-        vocab = self.spark.read.schema(search_stats._VOCAB_SCHEMA).parquet(
-            fs_join(self.path, f"{search_stats.VOCAB_DIR}/{fname}")
-        )
+        vocab = search_stats.read_vocab(self.spark, self.path, fname)
         n = len(needle)
         rows = (
             vocab
@@ -3493,17 +3487,11 @@ class SearchIndex:
         field has one, else one explode/groupBy pass over the stored token
         column.  Every dictionary-shaped component (term_facet, suggest,
         spellcheck, terms) serves from this."""
-        from solr_map_reduce_spark.fs import join as fs_join
-        from solr_map_reduce_spark.search_stats import VOCAB_DIR
-
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
         stats = self._sidecar("stats")
         if stats and fname in stats:
-            vocab = self.spark.read.parquet(
-                fs_join(self.path, f"{VOCAB_DIR}/{fname}")
-            ).select("term", "df")  # drop the bucket partition column
-            return fname, vocab
+            return fname, search_stats.read_vocab(self.spark, self.path, fname)
         tokens_col = self._tokens_col(fname)
         return fname, (
             self.df()
@@ -3948,10 +3936,9 @@ class SearchIndex:
     def _ann_sidecar(self, field: str):
         """(kind, loaded index, sidecar path, meta) when a
         generation-current ANN sidecar exists for ``field``, else None
-        (missing, unreadable, or built against a mutated-away
-        generation)."""
+        (missing, unreadable, an older layout ``ann_sidecar.load``
+        refuses, or built against a mutated-away generation)."""
         from solr_map_reduce_spark.extensions import ann_sidecar
-        from solr_map_reduce_spark.extensions import similarity as sim
         from solr_map_reduce_spark.fs import get_fs
 
         self._check_generation()
@@ -3965,14 +3952,8 @@ class SearchIndex:
             # memoize the miss (a rebuild under the same handle must be
             # picked up), just decline to route
             return None
-        kind = meta.get("kind", "ivf") if meta is not None else None
-        loader = {"ivf": sim.IvfIndex, "ivfpq": sim.IvfPqIndex}.get(kind)
-        handle = None
-        if loader is not None:
-            try:
-                handle = (kind, loader.load(self.spark, side), side, meta)
-            except Exception:
-                pass  # unreadable: served as absent
+        loaded = None if meta is None else ann_sidecar.load(self.spark, side, meta)
+        handle = None if loaded is None else (loaded[0], loaded[1], side, meta)
         self._cache[key] = handle
         return handle
 
@@ -4001,8 +3982,6 @@ class SearchIndex:
         fills or every bucket has been read — at full probe the result
         is provably the exact filtered top-k, so the guaranteed-k
         fallback and the exactness fallback are the same loop end."""
-        from solr_map_reduce_spark.extensions import ann_sidecar
-
         handle = self._ann_sidecar(field)
         if handle is None:
             return None
@@ -4169,10 +4148,7 @@ class SearchIndex:
             hits = self._ann_probe_hits(
                 handle, qvec, k, {}, filter_keys, "cosine"
             )
-            key_field = next(
-                f for f in self.df().schema.fields
-                if f.name == self.unique_key
-            )
+            key_field = self._read_schema()[self.unique_key]
             from pyspark.sql.types import DoubleType, StructField, StructType
 
             return local_frame(

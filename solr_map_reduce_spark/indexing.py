@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
@@ -934,10 +935,11 @@ class _Rewrite:
         # a delete's kept rows are a pure filter over old files still on
         # disk, so they are scanned directly (that also covers a delete
         # that emptied every touched shard and so staged no file); other
-        # rewrites read their staging output back
+        # rewrites read their staging output back, pinned to the schema
+        # they were written with
         if self.effect == "delete":
             return self.rows
-        return self.spark.read.parquet(self.tmp)
+        return self.spark.read.schema(self.rows.schema).parquet(self.tmp)
 
 
 def _blooms_present(rw: _Rewrite, requested: bool) -> bool:
@@ -1279,36 +1281,32 @@ def _swap_shard_dirs(
     fs.rename(trash, f"{path.rstrip('/')}._old.{i}")
 
 
+def artifact_schema(manifest: dict) -> T.StructType:
+    """The schema the artifact's writer recorded in ``manifest``, in the
+    order Spark reads it: the data columns, then ``shard``.  A manifest
+    without one is an older layout this engine does not read."""
+    schema_json = manifest.get("schema_json")
+    if not schema_json:
+        raise ValueError(
+            "artifact manifest has no 'schema_json': an older layout this "
+            "engine does not read; rebuild the artifact"
+        )
+    st = T.StructType.fromJson(json.loads(schema_json))
+    return T.StructType(
+        [f for f in st.fields if f.name != SHARD_COL] + [st[SHARD_COL]]
+    )
+
+
 def read_index(spark: SparkSession, path: str) -> DataFrame:
     """Open the artifact; ``shard`` is a partition column → pruning works.
 
-    An empty artifact (zero input rows → no parquet files) can't infer a
-    schema; the manifest's persisted schema backs an empty DataFrame so
-    every read-side op still works."""
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        fs = get_fs(path, spark)
-        manifest_path = fs_join(path, MANIFEST)
-        if not fs.exists(manifest_path):
-            raise
-        # the empty-DataFrame fallback is ONLY for a genuinely dataless
-        # artifact (zero input rows wrote no parquet files).  If any shard
-        # dir holds data files, the read failed for a real reason (corrupt
-        # footer, transient IO) — surface it; returning empty would make
-        # queries silently report zero rows
-        for entry in fs.listdir(path):
-            full = fs_join(path, entry)
-            if entry.startswith(f"{SHARD_COL}=") and fs.isdir(full):
-                if any(f.endswith(".parquet") for f in fs.listdir(full)):
-                    raise
-        manifest = json.loads(fs.read_text(manifest_path))
-        schema_json = manifest.get("schema_json")
-        if not schema_json:
-            raise
-        import pyspark.sql.types as T
-
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(schema_json)))
+    The engine reads every dataset it writes with the schema its writer
+    recorded, never by inferring one from the parquet footers: the read
+    plans with no Spark job, and an empty artifact (zero input rows wrote
+    no parquet files) opens as an empty DataFrame of the same schema.  A
+    manifest without a recorded schema is refused (``artifact_schema``)."""
+    manifest = json.loads(get_fs(path, spark).read_text(fs_join(path, MANIFEST)))
+    return spark.read.schema(artifact_schema(manifest)).parquet(path)
 
 
 def compact(

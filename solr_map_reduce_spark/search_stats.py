@@ -139,6 +139,18 @@ def _write_buckets(vocab, n_buckets: int, out: str) -> None:
     )
 
 
+def read_vocab(spark: SparkSession, path: str, field: str, buckets=None):
+    """``field``'s stored term dictionary as ``(term, df)`` rows, read with
+    the schema its writer recorded (no footer inference: planning runs no
+    job); ``buckets`` prunes the read to those hash-bucket dirs."""
+    from solr_map_reduce_spark.fs import join as fs_join
+
+    vocab = spark.read.schema(_VOCAB_SCHEMA).parquet(fs_join(path, VOCAB_DIR, field))
+    if buckets is not None:
+        vocab = vocab.filter(F.col("bucket").isin(list(buckets)))
+    return vocab.select("term", "df")
+
+
 def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
     """The one full build of the stats sidecar: BM25 statistics + the term
     dictionary for every analyzed field of the artifact at ``path``, one
@@ -369,14 +381,8 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
         touched = sorted(
             int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
         )
-        # explicit schema: planning never opens data-file footers, so
-        # untouched buckets are never read even at analysis time
-        vocab = (
-            spark.read.schema(_VOCAB_SCHEMA)
-            .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
-            .filter(F.col("bucket").isin(touched))
-            .select("term", "df")
-        )
+        # pinned schema: untouched buckets are never read, not even to plan
+        vocab = read_vocab(spark, path, field, touched)
         merged = (
             vocab.join(delta.select("term", "_df_old", "_df_new"), "term", "full_outer")
             .select(
@@ -467,16 +473,12 @@ def term_dfs(
     the term dictionary is billions of rows across the bucket dirs; a
     query touches only its own terms' buckets."""
     from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
 
     n = int(load_vocab_meta(get_fs(path, spark), path)["n_buckets"])
     buckets = sorted({term_bucket(t, n) for t in terms})
-    vocab = (
-        spark.read.schema(_VOCAB_SCHEMA)
-        .parquet(fs_join(path, f"{VOCAB_DIR}/{field}"))
-        .filter(F.col("bucket").isin(buckets))
-    )
-    rows = vocab.filter(F.col("term").isin(list(terms))).select("term", "df").collect()
+    rows = read_vocab(spark, path, field, buckets).filter(
+        F.col("term").isin(list(terms))
+    ).collect()
     out = {t: 0 for t in terms}
     out.update({r["term"]: int(r["df"]) for r in rows})
     return out

@@ -231,20 +231,30 @@ def test_invalid_routing_rejected():
 
 
 def test_empty_input_build(spark, tmp_path):
-    """Building from zero rows must produce a valid, openable artifact."""
+    """Building from zero rows must produce a valid, openable artifact: the
+    recorded schema opens it as an empty DataFrame, and a merge onto it
+    writes the batch."""
     from solr_map_reduce_spark.index_reader import SearchIndex
 
-    empty = spark.createDataFrame(
-        [], "id string, text string, lang string, source string, n_chars long"
-    )
+    cols = "id string, text string, lang string, source string, n_chars long"
     out = str(tmp_path / "empty_idx")
     job = IndexJob(IndexJobConfig(schema=DOC_SCHEMA, shards=2, dedup="retain_most_recent",
                                   order_field="n_chars"))
-    job.build(empty, out)
+    job.build(spark.createDataFrame([], cols), out)
     idx = SearchIndex.open(spark, out)
     assert idx.count() == 0
     assert idx.get("nope").count() == 0
+    assert idx.get_many(["a", "b"]).count() == 0
+    assert idx.key_range("a", "z").count() == 0
     assert idx.facet("lang").count() == 0
+
+    job.merge_into(spark.createDataFrame(
+        [("a", "alpha beta", "en", "web", 10), ("b", "gamma", "de", "web", 5)], cols
+    ), out)
+    assert idx.count() == 2
+    got = idx.get_many(["a", "b"]).orderBy("id").collect()
+    assert [r["lang"] for r in got] == ["en", "de"]
+    assert read_index(spark, out).columns == idx.df().columns
 
 
 def test_merge_into_incremental_reindex(spark, sf_dir, tmp_path):

@@ -5,8 +5,9 @@ exactly what a fresh rebuild would; a torn stats sidecar is rebuilt by every
 path; the reader's delete keeps every sidecar; sidecars commit before the
 generation advance; and the mutation paths reach the sidecars only through
 the one policy table.  On the read side, sidecars load only through one
-loader table, every bounded memo is the one LRU, and a layout the engine no
-longer writes reads as no sidecar."""
+loader table, every bounded memo is the one LRU, a layout the engine no
+longer writes reads as no sidecar, and every dataset the engine writes is read
+back with the schema its writer recorded."""
 
 import ast
 import json
@@ -21,7 +22,13 @@ from solr_map_reduce_spark import term_blooms
 from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.index_reader import SearchIndex
-from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact
+from solr_map_reduce_spark.indexing import (
+    IndexJob,
+    IndexJobConfig,
+    _Rewrite,
+    compact,
+    read_index,
+)
 from solr_map_reduce_spark.key_ranges import write_key_ranges
 from solr_map_reduce_spark.schema import Field, IndexSchema
 from solr_map_reduce_spark.search_stats import load_search_stats, write_search_stats
@@ -338,15 +345,23 @@ def _rows_of(df):
 
 
 def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
-    """Key ranges only as the monolithic _KEY_RANGES.json and a _vocab
-    without _VOCAB_META.json are layouts the engine no longer writes: they
-    serve exactly like no sidecar, and the next merge writes the current
-    stats layout."""
+    """Key ranges only as the monolithic _KEY_RANGES.json, a _vocab without
+    _VOCAB_META.json and an ANN sidecar whose manifest records no base schema
+    are layouts the engine no longer writes: they serve exactly like no
+    sidecar, the next merge writes the current stats layout and leaves the
+    ANN sidecar stale, and a manifest without a recorded schema is
+    refused."""
     bare = str(tmp_path / "bare")
     shutil.copytree(artifact, bare)
-    for side in ("_key_ranges", "_vocab"):
+    for side in ("_key_ranges", "_vocab", "_ann"):
         shutil.rmtree(os.path.join(bare, side))
     os.remove(os.path.join(bare, "_SEARCH_STATS.json"))
+    ivf_manifest = os.path.join(artifact, "_ann", "embedding", "_IVF_MANIFEST.json")
+    with open(ivf_manifest) as fh:
+        ivf = json.load(fh)
+    del ivf["vectors_schema"]
+    with open(ivf_manifest, "w") as fh:
+        json.dump(ivf, fh)
     ranges = SearchIndex.open(spark, artifact)._sidecar("key_ranges")
     with open(os.path.join(artifact, "_KEY_RANGES.json"), "w") as fh:
         json.dump({"key_type": ranges["key_type"], "shards": ranges["shards"]}, fh)
@@ -359,6 +374,7 @@ def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
 
     older, want = SearchIndex.open(spark, artifact), SearchIndex.open(spark, bare)
     assert older._sidecar("key_ranges") is None and older._sidecar("stats") is None
+    assert older._ann_sidecar("embedding") is None
     assert older.count() == want.count() == 60
     for read in (
         lambda idx: idx.get("k007"),
@@ -366,12 +382,26 @@ def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
         lambda idx: idx.prefix_key("k01"),
         lambda idx: idx.bm25(["common", "w3", "t5"], k=20),
         lambda idx: idx.terms(limit=50),
+        lambda idx: idx.knn(QUERIES[0].tolist(), k=10),
     ):
         assert _rows_of(read(older)) == _rows_of(read(want))
 
     _merge(spark, artifact)
     assert os.path.exists(os.path.join(vocab, "_VOCAB_META.json"))
     _assert_stats_fresh(spark, artifact)
+    fs = get_fs(artifact, spark)
+    meta = ann_sidecar.load_meta(fs, ann_sidecar.side_path(artifact, "embedding"))
+    assert meta["built_generation"] != ann_sidecar.manifest_generation_hash(fs, artifact)
+
+    manifest_path = os.path.join(bare, "_INDEX_MANIFEST.json")
+    with open(manifest_path) as fh:
+        manifest = json.load(fh)
+    del manifest["schema_json"]
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    for open_ in (read_index, SearchIndex.open):
+        with pytest.raises(ValueError, match="schema_json"):
+            open_(spark, bare)
 
 
 # -- read job budget ------------------------------------------------------------
@@ -414,9 +444,94 @@ def test_read_planning_runs_no_job(spark, base):
     assert len(knn.collect()) == 5 and idx.get("zzz-absent").count() == 0
 
 
-LOCAL_FRAME_MODULES = ("index_reader.py", "term_blooms.py",
-                       "extensions/similarity.py", "extensions/stream_expr.py",
-                       "session.py")
+def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
+    """The reads that pay a live handle's generation reload plan from the
+    manifest's recorded schema, as do opening the artifact and reading a
+    rewrite's staging dir back: no footer inference, so no job."""
+    idx = SearchIndex.open(spark, artifact)
+    idx.get("k001").collect()
+    _merge(spark, artifact)
+    reads = {
+        "get": lambda: idx.get("k070"),
+        "get_many": lambda: idx.get_many(["k003", "k070"]),
+        "key_range": lambda: idx.key_range("k010", "k020"),
+        "prefix_key": lambda: idx.prefix_key("k07"),
+        "read_index": lambda: read_index(spark, artifact),
+    }
+    assert {name: _jobs(spark, f"reload-{name}", fn) for name, fn in reads.items()} == {
+        name: 0 for name in reads
+    }
+    assert idx.get("k070").count() == 1
+
+    rows = read_index(spark, artifact)
+    tmp = artifact + "._staged_tmp"
+    _job()._write_shards(rows, tmp, partitions=2)
+    rw = _Rewrite(spark, get_fs(artifact, spark), artifact, "upsert", {},
+                  rows=rows, tmp=tmp)
+    staged = []
+    assert _jobs(spark, "reload-staged", lambda: staged.append(rw.staged())) == 0
+    assert _rows_of(staged[0]) == _rows_of(rows)
+
+
+# Modules whose reads of engine-written datasets the guards below cover.
+ENGINE_READ_MODULES = ("indexing.py", "index_reader.py", "search_stats.py",
+                       "term_blooms.py", "key_ranges.py",
+                       "extensions/ann_sidecar.py")
+
+
+def _chain(node, assigned, seen=()):
+    """Attribute names along a method chain, following a bare-name
+    receiver to what the enclosing function assigned to it."""
+    if isinstance(node, ast.Attribute):
+        return [node.attr, *_chain(node.value, assigned, seen)]
+    if isinstance(node, ast.Call):
+        return _chain(node.func, assigned, seen)
+    if isinstance(node, ast.Name) and node.id not in seen:
+        return [a for value in assigned.get(node.id, ())
+                for a in _chain(value, assigned, (*seen, node.id))]
+    return []
+
+
+def _unpinned_reads(tree):
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        assigned = {}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        assigned.setdefault(t.id, []).append(node.value)
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"):
+                chain = _chain(node.func.value, assigned)
+                if "write" not in chain and "schema" not in chain:
+                    yield node.lineno
+
+
+def test_engine_reads_are_pinned_to_the_recorded_schema():
+    """Every parquet read of a dataset the engine wrote chains through
+    ``.schema(...)``: the writer's recorded schema, never footer inference
+    (a Spark job per open).  Write chains are exempt.  The ``_vocab``
+    layout is named only by its module, whose one reader serves every
+    caller."""
+    found = {}
+    for rel in ENGINE_READ_MODULES:
+        with open(os.path.join(PKG, rel)) as fh:
+            lines = sorted(set(_unpinned_reads(ast.parse(fh.read()))))
+        if lines:
+            found[rel] = lines
+    assert found == {}
+    vocab = {rel for rel, tree in _package_trees()
+             if {"_VOCAB_SCHEMA", "VOCAB_DIR"} & set(_names(tree))}
+    assert vocab == {"search_stats.py"}
+
+
+LOCAL_FRAME_MODULES = ("index_reader.py", "term_blooms.py", "indexing.py",
+                       "search_stats.py", "key_ranges.py",
+                       "extensions/ann_sidecar.py", "extensions/similarity.py",
+                       "extensions/stream_expr.py", "session.py")
 
 
 def _enclosing_functions(tree, name):
