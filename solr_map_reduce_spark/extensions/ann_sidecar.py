@@ -27,7 +27,18 @@ Liveness rule (the versioned-exclusion contract): a stored row of key
 epoch and appends the post-resolution rows at that same epoch, so
 exactly one row per present key is alive; a delete tombstones at a new
 epoch with no append, so none is.  The rule is applied BEFORE the
-top-k, over probe-pruned rows only.
+top-k, over probe-pruned rows only, in two twins that must agree:
+:func:`alive_mask` against the tombstones' per-key maximum
+(:func:`tombstone_max`) when serving, and the Spark join
+:func:`_apply_liveness` when :func:`compact` folds whole buckets.
+
+Serving (:func:`probe_topk`) runs in the driver, as a Solr searcher
+answers a vector query in-process: the probed ``bucket=N`` files of the
+base and the delta are read one at a time through ``fs.read_parquet``,
+pinned to the recorded schema, scored with the Spark path's own
+arithmetic and cut to a running top-k, so a sidecar knn page runs no
+Spark job on any filesystem scheme.  A ``{!knn preFilter=}`` adds one
+job: finding which probed keys the filter admits.
 
 Crash-safety (two-phase meta): every mutation first writes the meta
 with the NEW epoch but the OLD generation (consuming the epoch — a
@@ -790,10 +801,15 @@ def _all_unit_norms(
 
 def _read_delta(spark, side: str, schema: StructType) -> DataFrame:
     """The upsert delta: base rows (``schema``) stamped with their epoch."""
-    epoch = StructField(EPOCH_COL, LongType())
-    return spark.read.schema(StructType(schema.fields + [epoch])).parquet(
-        fs_join(side, DELTA)
-    )
+    return spark.read.schema(_delta_schema(schema)).parquet(fs_join(side, DELTA))
+
+
+def _delta_schema(schema: StructType) -> StructType:
+    return StructType(schema.fields + [StructField(EPOCH_COL, LongType())])
+
+
+def _tombstone_schema(schema: StructType, key: str) -> StructType:
+    return StructType([schema[key], StructField("tomb_epoch", LongType())])
 
 
 def _read_tombstones(
@@ -804,8 +820,7 @@ def _read_tombstones(
     tomb_path = fs_join(side, TOMBSTONES)
     if not fs.exists(tomb_path):
         return None
-    tomb = StructType([schema[key], StructField("tomb_epoch", LongType())])
-    return spark.read.schema(tomb).parquet(tomb_path)
+    return spark.read.schema(_tombstone_schema(schema, key)).parquet(tomb_path)
 
 
 def _apply_liveness(rows: DataFrame, tombstones: DataFrame, key: str) -> DataFrame:
@@ -819,35 +834,79 @@ def _apply_liveness(rows: DataFrame, tombstones: DataFrame, key: str) -> DataFra
     )
 
 
-def probe_topk(
-    spark: SparkSession,
-    side: str,
-    meta: dict,
-    index,
-    qvec: list,
-    k: int,
-    nprobe: int,
-    filter_keys: DataFrame | None = None,
-    metric: str = "cosine",
-) -> DataFrame:
-    """(key, score) top-k over the probed buckets of base ∪ delta with
-    the liveness rule applied — all reads partition-pruned to nprobe
-    bucket dirs and schema-pinned (zero footer inference).  ``index`` is
-    the loaded IvfIndex / IvfPqIndex.
+def tombstone_max(fs, side: str, schema: StructType, key: str):
+    """The tombstones' per-key maximum ``tomb_epoch`` as ``(keys, tmax)``
+    (a pyarrow array of non-null keys, an int64 numpy array), read in the
+    driver; None when the sidecar has no tombstones."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    ``filter_keys`` (one key column) restricts candidates BEFORE the
-    top-k — the routed form of Solr 9.1's {!knn preFilter=}: probed
-    rows semi-join the filter's key set, so the page is the true top-k
-    of (probed buckets ∩ filter), never a post-filtered underfill.  At
-    scale the probed side is the nprobe/n_centroids fraction and AQE
-    broadcasts whichever side is smaller."""
+    from solr_map_reduce_spark.fs import data_files, read_parquet
+
+    tomb = _tombstone_schema(schema, key)
+    files = data_files(fs, fs_join(side, TOMBSTONES))
+    if not files:
+        return None
+    table = pa.concat_tables([read_parquet(fs, f, tomb) for f in files])
+    grouped = table.group_by(key).aggregate([("tomb_epoch", "max")])
+    grouped = grouped.filter(
+        pc.and_(grouped[key].is_valid(), grouped["tomb_epoch_max"].is_valid())
+    )
+    return (
+        grouped[key].combine_chunks(),
+        grouped["tomb_epoch_max"].to_numpy().astype(np.int64),
+    )
+
+
+def alive_mask(keys, epochs, tombstones) -> "np.ndarray":
+    """Driver-side twin of :func:`_apply_liveness` over one batch of
+    stored rows: ``keys`` (pyarrow) at ``epochs`` (numpy int64) are alive
+    iff no tombstone for the key has ``tomb_epoch`` above the row's epoch;
+    a NULL key matches no tombstone, as in the join."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if tombstones is None:
+        return np.ones(len(keys), dtype=bool)
+    tkeys, tmax = tombstones
+    at = pc.index_in(keys, value_set=tkeys)
+    hit = at.is_valid().to_numpy(zero_copy_only=False)
+    alive = np.ones(len(keys), dtype=bool)
+    pos = at.to_numpy(zero_copy_only=False)[hit].astype(np.int64)
+    alive[hit] = np.asarray(epochs)[hit] >= tmax[pos]
+    return alive
+
+
+def _keep_topk(keys: list, scores, k: int) -> tuple:
+    """``(keys, scores)`` of the ``k`` best pairs in Spark's
+    ``orderBy(desc(score), key)`` order, NaN standing for a NULL score
+    (sorted last); a numpy partition narrows the candidates first, so the
+    Python sort sees O(k) pairs (ties at the cut all kept)."""
     import numpy as np
 
-    from solr_map_reduce_spark.extensions import similarity as sim
+    scores = np.asarray(scores, dtype=np.float64)
+    if len(scores) > k:
+        rank = np.where(np.isnan(scores), -np.inf, scores)
+        cut = -np.partition(-rank, k - 1)[k - 1]
+        near = np.flatnonzero(rank >= cut)
+        keys = [keys[i] for i in near]
+        scores = scores[near]
 
-    fs = get_fs(side, spark)
-    kind = meta.get("kind", "ivf")
-    ivf = index if kind == "ivf" else index.ivf
+    def spark_order(i: int) -> tuple:
+        # NULL scores last, -0.0 equal to 0.0 (as Python compares them),
+        # then the key ascending with NULL keys first
+        null = bool(np.isnan(scores[i]))
+        return (null, 0.0 if null else -scores[i], keys[i] is not None, keys[i])
+
+    order = sorted(range(len(keys)), key=spark_order)[:k]
+    return [keys[i] for i in order], scores[order]
+
+
+def _probe_order(meta: dict, kind: str, ivf, qvec, nprobe: int, metric: str) -> list:
+    """The first ``nprobe`` bucket ids in the query's probe order."""
+    import numpy as np
+
     # probe-ranking space: unit for ivfpq (the base was fit on UNIT
     # vectors — _unit_normalized in build/delta_upsert), corpus-RMS
     # for an adaptively-calibrated ivf sidecar, raw otherwise — the
@@ -867,62 +926,139 @@ def probe_topk(
                 "non-unit dot probe needs the sidecar's MIPS stats "
                 "(dot_route) — rebuild with build_ann"
             )
-        probe = _mips_probe_order(meta, ivf.centroids)(q)[:nprobe]
-    else:
-        d = ((ivf.centroids - q[None, :]) ** 2).sum(axis=1)
-        probe = [int(b) for b in d.argsort()[:nprobe]]
-    key = ivf.id_col
+        return _mips_probe_order(meta, ivf.centroids)(q)[:nprobe]
+    d = ((ivf.centroids - q[None, :]) ** 2).sum(axis=1)
+    return [int(b) for b in d.argsort()[:nprobe]]
 
-    sub, schema = _base(kind, index)
-    rows = spark.read.schema(schema).parquet(fs_join(side, sub)).filter(
-        F.col(ivf.bucket_col).isin(probe)
-    ).withColumn(EPOCH_COL, F.lit(0).cast("long"))
 
-    if fs.exists(fs_join(side, DELTA)):
-        delta = _read_delta(spark, side, schema).filter(
-            F.col(ivf.bucket_col).isin(probe)
-        )
-        rows = rows.unionByName(delta.select(rows.columns))
+def probe_topk(
+    spark: SparkSession,
+    side: str,
+    meta: dict,
+    index,
+    qvec: list,
+    k: int,
+    nprobe: int,
+    filter_keys: DataFrame | None = None,
+    metric: str = "cosine",
+) -> DataFrame:
+    """(key, score) top-k over the probed buckets of base ∪ delta with
+    the liveness rule applied, answered in the driver: the probed
+    ``bucket=N`` files of the base and of ``delta/`` (and the tombstones)
+    are read one at a time through :func:`fs.read_parquet`, pinned to the
+    recorded schema, scored with the Spark path's own arithmetic
+    (:func:`similarity.fold_scores` for IVF, the shared ADC kernel for
+    IVF-PQ) and cut to a running top-k in Spark's ``orderBy(desc(score),
+    key)`` order — driver memory is O(largest probed file + k), and no
+    Spark job runs.  The page comes back as a local frame.  ``index`` is
+    the loaded IvfIndex / IvfPqIndex.
 
-    tomb = _read_tombstones(spark, fs, side, schema, key)
-    if tomb is not None:
-        # liveness before the top-k; AQE broadcasts the (small)
-        # per-key tombstone maximum
-        rows = _apply_liveness(rows, tomb, key)
+    ``filter_keys`` (one key column) restricts candidates BEFORE the
+    top-k — the routed form of Solr 9.1's {!knn preFilter=}: every probed
+    live (key, score) pair is kept, the keys among them that the filter's
+    key set holds come back from one Spark job (:func:`_admitted_keys`),
+    and the page is cut from those, so it is the true top-k of (probed
+    buckets ∩ filter), never a post-filtered underfill."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType
 
-    rows = rows.drop(EPOCH_COL)
-    if filter_keys is not None:
-        rows = rows.join(
-            filter_keys.select(F.col(filter_keys.columns[0]).alias(key)),
-            on=key,
-            how="left_semi",
-        )
-    if kind == "ivf":
-        if metric == "dot":
-            # IVF stores RAW vectors, so any metric scores exactly over
-            # the probed candidates; only probe SELECTION is
-            # metric-sensitive.  NULL-score shape + post-limit filter
-            # (see cosine_topk): a pre-limit finite filter would get
-            # the dot fold substituted into its pushed-down predicate
-            # and score every probed row twice.
-            scored = sim.attach_dot_score(
-                rows.select(key, ivf.vec_col), qvec, score_col="score",
-                vec_col=ivf.vec_col, nonfinite="null",
-            ).select(key, "score")
-            return (
-                scored.orderBy(F.desc("score"), F.col(key)).limit(k)
-                .filter(F.col("score").isNotNull())
-            )
-        return sim.cosine_topk(rows, qvec, k, id_col=key, vec_col=ivf.vec_col)
-    if metric == "dot" and not meta.get("unit_norms"):
+    from solr_map_reduce_spark.extensions import similarity as sim
+    from solr_map_reduce_spark.fs import data_files, read_parquet
+    from solr_map_reduce_spark.session import local_frame
+
+    fs = get_fs(side, spark)
+    kind = meta.get("kind", "ivf")
+    ivf = index if kind == "ivf" else index.ivf
+    if kind == "ivfpq" and metric == "dot" and not meta.get("unit_norms"):
         # PQ codes are unit-encoded: stored norms are gone, so ADC can
         # rank dot only when every stored vector's norm is 1 (where
         # cosine == dot).  The caller gates on meta["unit_norms"] too;
         # this is the defense-in-depth raise.
-        raise ValueError(
-            "ivfpq ADC serves dot only on a unit-norm corpus"
-        )
-    return index.pq.topk(rows, qvec, k=k, bucket_col=ivf.bucket_col)
+        raise ValueError("ivfpq ADC serves dot only on a unit-norm corpus")
+    probe = _probe_order(meta, kind, ivf, qvec, nprobe, metric)
+    key = ivf.id_col
+    sub, schema = _base(kind, index)
+    tombstones = tombstone_max(fs, side, schema, key)
+    if kind == "ivf":
+        value_col = ivf.vec_col
+    else:
+        value_col = "pq_code"
+        lut, bias = index.pq.adc_tables(qvec)
+
+    def scored(bucket: int, table, epochs) -> tuple:
+        """(keys, scores) of one file's live rows with a usable score."""
+        keys = table[key].combine_chunks()
+        if kind == "ivf":
+            scores = sim.fold_scores(table[value_col].combine_chunks(), qvec, metric)
+            usable = ~np.isnan(scores)
+        else:
+            codes = table[value_col].combine_chunks()
+            usable = codes.is_valid().to_numpy(zero_copy_only=False)
+            scores = np.full(len(codes), np.nan)
+            flat = codes.filter(codes.is_valid()).flatten()
+            # a NaN score is NULL, as the UDF's NaN crosses Arrow as NULL
+            scores[usable] = sim.adc_lut_sum(
+                lut,
+                flat.to_numpy(zero_copy_only=False).astype(np.int64)
+                .reshape(-1, len(lut)),
+            ) + (0.0 if bias is None else bias[bucket])
+        keep = usable & alive_mask(keys, epochs, tombstones)
+        return keys.filter(pa.array(keep)).to_pylist(), scores[keep]
+
+    keys: list = []
+    scores = np.empty(0)
+    for bucket in probe:
+        part = f"{ivf.bucket_col}={bucket}"
+        batches = [
+            (f, schema, None) for f in data_files(fs, fs_join(side, sub, part))
+        ] + [
+            (f, _delta_schema(schema), EPOCH_COL)
+            for f in data_files(fs, fs_join(side, DELTA, part))
+        ]
+        for f, file_schema, epoch_col in batches:
+            cols = [key, value_col] + ([epoch_col] if epoch_col else [])
+            t = read_parquet(fs, f, file_schema, columns=cols)
+            epochs = (
+                t[epoch_col].to_numpy(zero_copy_only=False) if epoch_col
+                else np.zeros(t.num_rows, dtype=np.int64)
+            )
+            got_keys, got_scores = scored(bucket, t, epochs)
+            keys, scores = keys + got_keys, np.concatenate([scores, got_scores])
+            if filter_keys is None:
+                keys, scores = _keep_topk(keys, scores, k)
+    if filter_keys is not None:
+        admitted = _admitted_keys(filter_keys, keys)
+        keep = [i for i, k_ in enumerate(keys) if k_ in admitted]
+        keys, scores = _keep_topk([keys[i] for i in keep], scores[keep], k)
+    return local_frame(
+        spark, [(k_, None if s_ != s_ else s_) for k_, s_ in zip(keys, scores.tolist())],
+        StructType([schema[key], StructField("score", DoubleType())]),
+    )
+
+
+def _sql_literal(value) -> str:
+    """A string or numeric key as a Spark SQL literal."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return repr(value)
+
+
+def _admitted_keys(filter_keys: DataFrame, keys: list) -> set:
+    """The probed ``keys`` present in ``filter_keys``' one column, found by
+    ONE Spark job: an IN list of the probed keys filters the key set and
+    only the matches come back, at most one row per probed key under the
+    serving contract (the unique key is unique).  No job when nothing was
+    probed.  The IN list is one SQL string, parsed once in the JVM: a
+    Column literal per key would cost a py4j round trip each."""
+    present = [k_ for k_ in keys if k_ is not None]
+    if not present:
+        return set()
+    col = filter_keys.columns[0]
+    cond = F.expr(
+        f"`{col.replace('`', '``')}` IN ({', '.join(map(_sql_literal, present))})"
+    )
+    return {r[0] for r in filter_keys.select(col).filter(cond).collect()}
 
 
 # -- delta maintenance ---------------------------------------------------

@@ -3,12 +3,18 @@
 - ``cosine_topk`` — brute-force exact top-k, entirely JVM-side
   (``zip_with`` dot product + ``aggregate`` fold, codegen'd): the correctness
   baseline, O(n) scan per query, embarrassingly parallel.
+- ``fold_scores`` — the same fold in the driver over an Arrow column of
+  stored vectors, bit-identical to ``attach_cosine_score`` /
+  ``attach_dot_score``: what the ANN sidecar's driver-side probe scores
+  with.  ``adc_lut_sum`` is the one IVF-PQ ADC kernel, shared by
+  ``PqCodec.topk``'s UDF and that probe.
 - ``IvfIndex`` — inverted-file ANN: k-means centroids fitted driver-side on a
   bounded sample (centroid count is small by construction), assignment via a
   vectorized numpy matmul pandas UDF, search prunes to the ``nprobe`` nearest
   buckets.  At scale the assigned table is written partitioned by bucket so
   bucket pruning is a partition-pruned scan, mirroring how the index artifact
-  prunes by shard.
+  prunes by shard; serving reads just the probed bucket files
+  (``extensions/ann_sidecar.probe_topk``).
 - ``cosine_pairs_lsh`` — near-duplicate pairs by embedding cosine, blocked by
   random-hyperplane signatures (sign-LSH) so no cross join.
 """
@@ -169,6 +175,55 @@ def attach_dot_score(
         ~F.isnan(d) & (d != float("inf")) & (d != float("-inf")), d
     )
     return inner.select(*keep, score.alias(score_col))
+
+
+def fold_scores(vectors, query: Sequence[float], metric: str = "cosine") -> np.ndarray:
+    """Driver-side twin of :func:`attach_cosine_score` /
+    :func:`attach_dot_score` with ``nonfinite="null"``, over a pyarrow
+    list array of stored vectors: float64 scores, NaN where the Spark
+    score is NULL (a NULL vector or element, a length other than the
+    query's, a zero-norm vector for cosine, a non-finite score).
+
+    Bit-identical to the Spark folds: the same sequential order (products,
+    then adds in index order, from 0.0), done column by column over the
+    matrix of well-formed rows, in IEEE doubles with no fused
+    multiply-add on either side."""
+    import pyarrow.compute as pc
+
+    if metric not in ("cosine", "dot"):
+        raise ValueError(f"fold metric {metric!r} unsupported (cosine, dot)")
+    qn = _query_norm(query) if metric == "cosine" else None
+    q = np.asarray(query, dtype=np.float64)
+    d = len(q)
+    out = np.full(len(vectors), np.nan)
+    lengths = pc.list_value_length(vectors).to_numpy(zero_copy_only=False)
+    rows = np.flatnonzero(
+        vectors.is_valid().to_numpy(zero_copy_only=False)
+        & (np.nan_to_num(lengths, nan=-1) == d)
+    )
+    if not len(rows):
+        return out
+    values = vectors.values
+    at = (
+        vectors.offsets.to_numpy(zero_copy_only=False)[rows, None]
+        + np.arange(d)[None, :]
+    )
+    m = values.to_numpy(zero_copy_only=False).astype(np.float64)[at]
+    null_element = values.is_null().to_numpy(zero_copy_only=False)[at].any(axis=1)
+    with np.errstate(all="ignore"):
+        dot = np.zeros(len(rows))
+        for i in range(d):
+            dot = dot + m[:, i] * q[i]
+        if metric == "dot":
+            score = dot
+        else:
+            nn = np.zeros(len(rows))
+            for i in range(d):
+                nn = nn + m[:, i] * m[:, i]
+            score = np.where(nn != 0.0, dot / (np.sqrt(nn) * qn), np.nan)
+    score[null_element | ~np.isfinite(score)] = np.nan
+    out[rows] = score
+    return out
 
 
 def dot_to_query(vec_col: F.Column, query: Sequence[float]) -> F.Column:
@@ -1096,6 +1151,14 @@ def knn_classify(
     )
 
 
+def adc_lut_sum(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """The ADC kernel: each row of ``codes`` (n x m codebook indices,
+    int64) scores the sum of its ``m`` lookups in ``lut`` (m x ksub).  One
+    function for the Spark UDF (:meth:`PqCodec.topk`) and the driver-side
+    probe (``ann_sidecar.probe_topk``), so both sum in the same order."""
+    return lut[np.arange(lut.shape[0])[None, :], codes].sum(axis=1)
+
+
 class PqCodec:
     """Product quantization (Jégou et al. 2011): split a d-dim vector into
     ``m`` subvectors, k-means each subspace to ``ksub`` centroids, store a
@@ -1244,6 +1307,22 @@ class PqCodec:
             _enc_res(F.col(self.vec_col), F.col(bucket_col).cast("long")),
         )
 
+    def adc_tables(self, query: Sequence[float]) -> tuple:
+        """``(lut, bias)`` for an ADC scan: the (m x ksub) inner-product
+        lookup table of the unit query, and in residual mode the
+        per-bucket constant q̂·c_bucket (None otherwise).  A code row's
+        score is ``adc_lut_sum(lut, codes) + bias[bucket]``."""
+        q = np.asarray(query, dtype=np.float64)
+        q = q / np.linalg.norm(q)
+        lut = np.stack(
+            [
+                self.codebooks[s] @ q[s * self.dsub : (s + 1) * self.dsub]
+                for s in range(self.m)
+            ]
+        )  # (m, ksub)
+        bias = self.coarse @ q if self.coarse is not None else None
+        return lut, bias
+
     def topk(
         self,
         encoded: DataFrame,
@@ -1260,25 +1339,15 @@ class PqCodec:
         TakeOrdered.  Residual mode adds the per-bucket constant
         q̂·c_bucket (an n_centroids-long broadcast table) so the score
         is q̂·(c + r) — cosine over the decoded vector."""
-        q = np.asarray(query, dtype=np.float64)
-        q = q / np.linalg.norm(q)
-        lut = np.stack(
-            [
-                self.codebooks[s] @ q[s * self.dsub : (s + 1) * self.dsub]
-                for s in range(self.m)
-            ]
-        )  # (m, ksub)
-        coarse = self.coarse
-        if coarse is not None and not bucket_col:
+        lut, bias = self.adc_tables(query)
+        if self.coarse is not None and not bucket_col:
             raise ValueError(
                 "residual PqCodec.topk needs bucket_col (the per-bucket "
                 "score constant is keyed by the stored assignment)"
             )
-        bias = coarse @ q if coarse is not None else None  # (n_centroids,)
 
         def _lut_sum(codes: pd.Series) -> np.ndarray:
-            C = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
-            return lut[np.arange(lut.shape[0])[None, :], C].sum(axis=1)
+            return adc_lut_sum(lut, np.array(codes.tolist(), dtype=np.int64))
 
         if bias is None:
             @pandas_udf(T.DoubleType())

@@ -21,6 +21,12 @@ Two implementations behind one small interface:
 ``get_fs(path)`` picks by URI scheme.  All paths are passed through
 verbatim — callers join with :func:`join` (URI-safe, unlike
 ``os.path.join``).
+
+Serving lookups whose input is a handful of small files (ANN bucket
+probes, BM25 df lookups) read them in the driver: :func:`data_files` lists
+a dataset dir the way Spark's reader does, and :func:`read_parquet` decodes
+one file's bytes with pyarrow, pinned to the schema its writer recorded.
+Neither runs a Spark job, on any scheme.
 """
 
 from __future__ import annotations
@@ -70,6 +76,10 @@ class LocalFS:
 
     def read_text(self, path: str) -> str:
         with open(path, encoding="utf-8") as f:
+            return f.read()
+
+    def read_bytes(self, path: str) -> bytes:
+        with open(path, "rb") as f:
             return f.read()
 
     def write_text(self, path: str, text: str) -> None:
@@ -168,6 +178,14 @@ class HadoopFS:
             return str(
                 self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
             )
+        finally:
+            stream.close()
+
+    def read_bytes(self, path: str) -> bytes:
+        fs = self._fs(path)
+        stream = fs.open(self._path(path))
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
         finally:
             stream.close()
 
@@ -271,3 +289,34 @@ def get_fs(path: str, spark=None):
             "to reach the Hadoop filesystem through"
         )
     return HadoopFS(spark)
+
+
+def data_files(fs, path: str) -> list[str]:
+    """The data files directly under dataset dir ``path``, sorted; names
+    starting with ``_`` or ``.`` (``_SUCCESS``, checksums) are skipped, as
+    Spark's reader skips them.  Empty when ``path`` does not exist."""
+    if not fs.exists(path):
+        return []
+    return [join(path, n) for n in fs.listdir(path) if not n.startswith(("_", "."))]
+
+
+def read_parquet(fs, path: str, schema, columns=None, filters=None):
+    """One parquet file as a ``pyarrow.Table``, decoded in the driver from
+    the bytes ``fs`` reads — the engine's one driver-side parquet reader.
+    ``schema`` is the schema the dataset's writer recorded (a Spark
+    ``StructType`` or DDL string); the read is pinned to it, as every Spark
+    read of an engine-written dataset is, and a recorded column the file
+    does not hold (a partition column) reads as null.  ``columns`` and
+    ``filters`` are pyarrow's: filters prune row groups by their
+    statistics, then rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return pq.read_table(
+        pa.BufferReader(fs.read_bytes(path)), schema=to_arrow_schema(schema),
+        columns=columns, filters=filters,
+    )

@@ -3966,8 +3966,8 @@ class SearchIndex:
         filter_keys: DataFrame | None = None,
         metric: str = "cosine",
     ) -> DataFrame | None:
-        """Serve {!knn} from the field's ANN sidecar: nprobe
-        partition-pruned bucket reads -> bounded (id, score) topK ->
+        """Serve {!knn} from the field's ANN sidecar: driver-side reads
+        of the nprobe probed bucket dirs -> bounded (id, score) topK ->
         file-pruned key lookups for the full rows.  None when no
         current sidecar exists (caller falls back to the exact scan).
         Total IO: nprobe/n_centroids of the vector table (base ∪

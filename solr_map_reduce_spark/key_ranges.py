@@ -435,6 +435,8 @@ def write_key_ranges(
     shard_rows = dict(carried_rows)  # untouched shards: prior totals, no reads
     for s in refreshed:
         shard_rows[s] = sum(int(v[2]) for v in shard_maps.get(s, {}).values())
+    # by shard number: the same artifact always writes the same bytes
+    shard_rows = {s: shard_rows[s] for s in sorted(shard_rows, key=int)}
     meta = {"format": 2, "key_type": key_type, "shard_rows": shard_rows}
     # META written LAST: a reader needs it, so a crash mid-write leaves the
     # old META (stale but self-consistent with the still-present old span

@@ -24,14 +24,18 @@ Build: one pass over the stored token column — ``n_docs`` (all rows),
 ``sum_dl``/``n_dl`` (token-array lengths), and the term dictionary via
 ``explode(array_distinct) → groupBy(term).count()``.
 
-Query: ``SearchIndex.bm25`` reads the |Q| needed df values with a
-bucket-partition-pruned + predicate-pushdown vocab scan (the query
-terms' buckets are computed driver-side with the same crc32) and embeds
-all statistics as literals — the query plan is then ONE corpus pass +
-TakeOrdered, with no stats aggregate and no checkpoint.  Scores are
-bit-identical to the computed path: every stored quantity is an integer
-(exact in IEEE doubles), and ``avgdl = sum_dl / n_dl`` is exactly what
-``avg(dl)`` evaluates to.
+Query: ``SearchIndex.bm25`` looks up the |Q| needed df values in the
+driver (:func:`term_dfs`): the query terms' buckets are computed with the
+same crc32, and only those ``bucket=N`` files are read, through
+``fs.read_parquet`` with a ``term in (...)`` filter that the term-sorted
+row groups prune — planning a bm25 runs no Spark job, on any filesystem
+scheme.  All statistics are embedded as literals, so the query plan is
+ONE corpus pass + TakeOrdered, with no stats aggregate and no
+checkpoint.  Scores are bit-identical to the computed path: every stored
+quantity is an integer (exact in IEEE doubles), and ``avgdl = sum_dl /
+n_dl`` is exactly what ``avg(dl)`` evaluates to.  The bulk readers of the
+dictionary (delta merge, fuzzy expansion, the term dictionary) keep the
+Spark reader :func:`read_vocab`.
 
 Mutation: ``merge_into`` and ``delete_where`` DELTA-MAINTAIN the sidecar
 (:func:`prepare_stats_delta`): n_docs/sum_dl/n_dl are adjusted by the
@@ -175,6 +179,9 @@ def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
         fs.delete(fs_join(path, STATS))
     idx = read_index(spark, path)
     n_buckets = _auto_buckets(_size_estimate(idx))
+    # an artifact with no data file scans no partition, so no observed
+    # metrics ever arrive: its statistics are zero
+    empty = not idx.inputFiles()
     stats: dict = {}
     for field, info in analyzed.items():
         out = fs_join(path, f"{VOCAB_DIR}/{field}")
@@ -184,7 +191,10 @@ def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
             field, observed, info["tokens_col"],
             lambda vocab: _write_buckets(vocab, n_buckets, out),
         )
-        stats[field] = _length_stats(obs.get)
+        stats[field] = (
+            {"n_docs": 0, "sum_dl": 0, "n_dl": 0} if empty
+            else _length_stats(obs.get)
+        )
     _write_vocab_meta(fs, path, n_buckets)
     fs.write_text(fs_join(path, STATS), json.dumps(stats))  # marker UP last
     return stats
@@ -467,18 +477,25 @@ def load_search_stats(spark: SparkSession, path: str) -> dict | None:
 def term_dfs(
     spark: SparkSession, path: str, field: str, terms: list[str]
 ) -> dict[str, int]:
-    """df for each query term from the stored vocabulary — a |terms|-row
-    predicate-pushdown scan, partition-pruned to the |Q| buckets the query
-    terms hash into (computed driver-side); absent terms get 0.  At 100 TB
-    the term dictionary is billions of rows across the bucket dirs; a
-    query touches only its own terms' buckets."""
-    from solr_map_reduce_spark.fs import get_fs
+    """df for each query term from the stored vocabulary, read in the
+    driver: only the |Q| ``bucket=N`` dirs the query terms hash into
+    (computed driver-side), each file through ``fs.read_parquet`` with a
+    ``term in (...)`` filter — bucket files are term-sorted, so row groups
+    prune by their min/max.  No Spark job runs; absent terms get 0."""
+    from solr_map_reduce_spark.fs import data_files, get_fs, read_parquet
+    from solr_map_reduce_spark.fs import join as fs_join
 
-    n = int(load_vocab_meta(get_fs(path, spark), path)["n_buckets"])
-    buckets = sorted({term_bucket(t, n) for t in terms})
-    rows = read_vocab(spark, path, field, buckets).filter(
-        F.col("term").isin(list(terms))
-    ).collect()
+    fs = get_fs(path, spark)
+    n = int(load_vocab_meta(fs, path)["n_buckets"])
+    by_bucket: dict[int, list[str]] = {}
+    for t in dict.fromkeys(terms):
+        by_bucket.setdefault(term_bucket(t, n), []).append(t)
     out = {t: 0 for t in terms}
-    out.update({r["term"]: int(r["df"]) for r in rows})
+    for b, wanted in sorted(by_bucket.items()):
+        for f in data_files(fs, fs_join(path, VOCAB_DIR, field, f"bucket={b}")):
+            got = read_parquet(
+                fs, f, _VOCAB_SCHEMA, columns=["term", "df"],
+                filters=[("term", "in", wanted)],
+            )
+            out.update(zip(got["term"].to_pylist(), map(int, got["df"].to_pylist())))
     return out

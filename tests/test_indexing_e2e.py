@@ -231,22 +231,26 @@ def test_invalid_routing_rejected():
 
 
 def test_empty_input_build(spark, tmp_path):
-    """Building from zero rows must produce a valid, openable artifact: the
-    recorded schema opens it as an empty DataFrame, and a merge onto it
-    writes the batch."""
+    """Building from zero rows with every sidecar must produce a valid,
+    openable artifact: the recorded schema opens it as an empty DataFrame,
+    its BM25 statistics are zero, and a merge onto it writes the batch."""
     from solr_map_reduce_spark.index_reader import SearchIndex
+    from solr_map_reduce_spark.search_stats import load_search_stats
 
     cols = "id string, text string, lang string, source string, n_chars long"
     out = str(tmp_path / "empty_idx")
     job = IndexJob(IndexJobConfig(schema=DOC_SCHEMA, shards=2, dedup="retain_most_recent",
-                                  order_field="n_chars"))
+                                  order_field="n_chars", term_blooms=True,
+                                  search_stats=True, key_ranges=True))
     job.build(spark.createDataFrame([], cols), out)
     idx = SearchIndex.open(spark, out)
+    assert load_search_stats(spark, out) == {"text": {"n_docs": 0, "sum_dl": 0, "n_dl": 0}}
     assert idx.count() == 0
     assert idx.get("nope").count() == 0
     assert idx.get_many(["a", "b"]).count() == 0
     assert idx.key_range("a", "z").count() == 0
     assert idx.facet("lang").count() == 0
+    assert idx.bm25(["alpha"], k=5).count() == 0
 
     job.merge_into(spark.createDataFrame(
         [("a", "alpha beta", "en", "web", 10), ("b", "gamma", "de", "web", 5)], cols
@@ -254,6 +258,7 @@ def test_empty_input_build(spark, tmp_path):
     assert idx.count() == 2
     got = idx.get_many(["a", "b"]).orderBy("id").collect()
     assert [r["lang"] for r in got] == ["en", "de"]
+    assert [r["id"] for r in idx.bm25(["alpha"], k=5).collect()] == ["a"]
     assert read_index(spark, out).columns == idx.df().columns
 
 

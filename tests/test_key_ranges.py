@@ -10,7 +10,7 @@ import pytest
 
 from solr_map_reduce_spark.index_reader import SearchIndex
 from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact
-from solr_map_reduce_spark.key_ranges import load_key_ranges
+from solr_map_reduce_spark.key_ranges import load_key_ranges, write_key_ranges
 from solr_map_reduce_spark.schema import Field, IndexSchema
 
 SCHEMA = IndexSchema(
@@ -258,6 +258,21 @@ class TestMutationRefresh:
         for s, files in ranges["shards"].items():
             for f in files:
                 assert os.path.exists(os.path.join(out, f"shard={s}", f))
+
+    def test_meta_bytes_are_stable(self, spark, tmp_path):
+        # a full write and every subset refresh of the same artifact write
+        # byte-equal _META.json: shard_rows is ordered by shard number
+        out = str(tmp_path / "idx_meta")
+        _job().build(_docs(spark), out)
+        meta = os.path.join(out, "_key_ranges", "_META.json")
+        write_key_ranges(spark, out)
+        with open(meta, "rb") as f:
+            full = f.read()
+        assert list(json.loads(full)["shard_rows"]) == ["0", "1"]
+        for shards in ([0], [1]):
+            write_key_ranges(spark, out, shards=shards)
+            with open(meta, "rb") as f:
+                assert f.read() == full, shards
 
     def test_delete_where_refreshes(self, spark, tmp_path):
         out = str(tmp_path / "idx_del")

@@ -423,10 +423,13 @@ class TestStalenessAndVariants:
         got = self._routed_equals_exact(idx, q, k=5)
         assert 900 not in got
 
-    def test_delta_probe_plan_stays_partition_pruned(self, spark, tmp_path):
-        # with delta + tombstones present, BOTH the base and the delta
-        # scans must still prune to the probed bucket dirs, and the
-        # tombstone liveness join must broadcast (never shuffle the probe)
+    def test_delta_probe_plan_stays_partition_pruned(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # with delta + tombstones present, the probe opens only the files
+        # under the probed bucket dirs of the base and the delta, plus the
+        # tombstones, counted through the driver-side parquet reader
+        from solr_map_reduce_spark import fs as fs_mod
         from solr_map_reduce_spark.extensions import ann_sidecar
 
         idx = _build_artifact(spark, str(tmp_path / "idx"))
@@ -439,13 +442,27 @@ class TestStalenessAndVariants:
         )
         job.merge_into(batch, idx.path)
         kind, index, side, meta = idx._ann_sidecar("embedding")
+        opened = []
+        read = fs_mod.read_parquet
+        monkeypatch.setattr(
+            fs_mod, "read_parquet",
+            lambda fs, path, *a, **kw: opened.append(path) or read(fs, path, *a, **kw),
+        )
         top = ann_sidecar.probe_topk(
             spark, side, meta, index, list(QUERIES[0]), k=5, nprobe=2
         )
-        plan = top._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("PartitionFilters: [bucket") >= 2, plan
-        assert "BroadcastHashJoin" in plan and \
-            "SortMergeJoin" not in plan, plan
+        probe = ann_sidecar._probe_order(meta, kind, index, QUERIES[0], 2, "cosine")
+        local = fs_mod.LocalFS()
+        allowed = [
+            f
+            for sub in ("vectors", "delta")
+            for b in probe
+            for f in fs_mod.data_files(local, os.path.join(side, sub, f"bucket={b}"))
+        ]
+        tombs = fs_mod.data_files(local, os.path.join(side, "tombstones"))
+        assert tombs and any("/delta/" in f for f in allowed)
+        assert sorted(opened) == sorted(allowed + tombs)
+        assert len(top.collect()) == 5
         idx = _build_artifact(spark, str(tmp_path / "idx"))
         idx.build_ann("embedding", kind="ivf", n_centroids=NC, nprobe=NC)
         out = idx.compact_ann("embedding")

@@ -872,3 +872,187 @@ def test_driver_bloom_positions_equal_the_build_expression(strings, m, k):
     assert len(rows) == len(terms)
     for r in rows:
         assert _term_positions(r["t"], m, k) == list(r["p"]), (r["t"], m, k)
+
+
+# -- driver-side ANN probe == its Spark counterpart, bit for bit --------------
+
+def _spark():
+    from solr_map_reduce_spark.session import get_spark
+
+    return get_spark(app_name="smrs-tests", master="local[4]", shuffle_partitions=4)
+
+
+def _bits(x):
+    """A score's exact bits (NaN, the NULL marker, compares equal)."""
+    import struct
+
+    return None if x is None or x != x else struct.pack("<d", x)
+
+
+# the values the fold must agree on: zeros of both signs, the non-finite,
+# products that overflow or underflow, and ordinary numbers
+_elements = st.one_of(
+    st.sampled_from([0.0, -0.0, float("nan"), float("inf"), float("-inf"),
+                     1e300, -1e300, 5e-324]),
+    st.floats(-1e3, 1e3, allow_nan=False, allow_infinity=False),
+)
+
+
+@st.composite
+def _fold_case(draw):
+    dim = draw(st.integers(min_value=1, max_value=5))
+    elem = draw(st.sampled_from(["double", "float"]))
+    query = draw(st.lists(st.floats(-10, 10, allow_nan=False, allow_subnormal=False)
+                          .filter(lambda x: x != 0.0), min_size=dim, max_size=dim))
+    vector = st.one_of(
+        st.none(),
+        st.just([0.0] * dim),
+        st.lists(st.one_of(_elements, st.none()), min_size=dim, max_size=dim),
+        st.lists(_elements, min_size=0, max_size=dim + 2),  # length mismatch
+    )
+    vectors = draw(st.lists(vector, min_size=1, max_size=12))
+    if elem == "float":
+        with np.errstate(all="ignore"):
+            vectors = [
+                None if v is None else
+                [None if x is None else float(np.float32(x)) for x in v]
+                for v in vectors
+            ]
+    return elem, query, vectors
+
+
+@settings(max_examples=40, deadline=None)
+@given(_fold_case(), st.sampled_from(["cosine", "dot"]))
+def test_driver_fold_equals_spark_fold(case, metric):
+    from solr_map_reduce_spark.extensions import similarity as sim
+    from solr_map_reduce_spark.session import local_frame
+
+    import pytest
+
+    elem, query, vectors = case
+    frame = local_frame(_spark(), list(enumerate(vectors)), f"id long, v array<{elem}>")
+    attach = sim.attach_cosine_score if metric == "cosine" else sim.attach_dot_score
+    arrow = pa.array(vectors, type=pa.list_(pa.float64() if elem == "double"
+                                            else pa.float32()))
+    if metric == "cosine" and not np.sqrt(np.sum(np.square(query))):
+        # a query whose norm underflows to zero is refused by both
+        with pytest.raises(ValueError, match="zero-magnitude"):
+            attach(frame, query, vec_col="v", nonfinite="null")
+        with pytest.raises(ValueError, match="zero-magnitude"):
+            sim.fold_scores(arrow, query, metric)
+        return
+    want = {
+        r["id"]: _bits(r["score"])
+        for r in attach(frame, query, vec_col="v", nonfinite="null").collect()
+    }
+    got = sim.fold_scores(arrow, query, metric)
+    assert {i: _bits(float(x)) for i, x in enumerate(got)} == want
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(st.tuples(st.sampled_from("abcdef"), st.integers(0, 4)),
+             min_size=0, max_size=15),
+    st.lists(st.tuples(st.one_of(st.sampled_from("abcdeg"), st.none()),
+                       st.one_of(st.integers(0, 5), st.none())),
+             min_size=1, max_size=10),
+)
+def test_driver_liveness_equals_apply_liveness(rows, tombs):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from solr_map_reduce_spark.extensions import ann_sidecar
+    from solr_map_reduce_spark.fs import LocalFS
+    from solr_map_reduce_spark.session import local_frame
+
+    spark = _spark()
+    base = StructType([StructField("k", StringType())])
+    with tempfile.TemporaryDirectory() as side:
+        local_frame(
+            spark, tombs, ann_sidecar._tombstone_schema(base, "k")
+        ).write.parquet(os.path.join(side, ann_sidecar.TOMBSTONES))
+        frame = local_frame(spark, rows, StructType(
+            [StructField("k", StringType()),
+             StructField(ann_sidecar.EPOCH_COL, LongType())]))
+        tomb_df = ann_sidecar._read_tombstones(spark, LocalFS(), side, base, "k")
+        want = sorted(
+            tuple(r) for r in ann_sidecar._apply_liveness(frame, tomb_df, "k").collect()
+        )
+        alive = ann_sidecar.alive_mask(
+            pa.array([k for k, _ in rows], pa.string()),
+            np.asarray([e for _, e in rows], dtype=np.int64),
+            ann_sidecar.tombstone_max(LocalFS(), side, base, "k"),
+        )
+    assert sorted(r for r, a in zip(rows, alive) if a) == want
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=3),  # m
+    st.integers(min_value=1, max_value=4),  # ksub
+    st.booleans(),  # residual
+    st.booleans(),  # a NaN codeword: its rows' scores are NULL
+    st.integers(min_value=0, max_value=2**31 - 1),  # seed
+    st.integers(min_value=1, max_value=8),  # k
+)
+def test_driver_adc_equals_pq_topk(m, ksub, residual, poison, seed, k):
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, LongType, ShortType, StructField, StructType,
+    )
+
+    from solr_map_reduce_spark.extensions import ann_sidecar
+    from solr_map_reduce_spark.extensions import similarity as sim
+    from solr_map_reduce_spark.session import local_frame
+
+    rng = np.random.RandomState(seed)
+    dsub, n_buckets, n = 2, 3, 20
+    books = rng.randn(m, ksub, dsub)
+    if poison:
+        books[0, 0, 0] = np.nan
+    codec = sim.PqCodec(
+        books, id_col="id",
+        coarse=rng.randn(n_buckets, m * dsub) if residual else None,
+    )
+    # few distinct codes: equal scores, so the key decides the order
+    rows = [(int(i), int(rng.randint(n_buckets)),
+             [int(c) for c in rng.randint(ksub, size=m)]) for i in rng.permutation(n)]
+    query = rng.randn(m * dsub).tolist()
+    frame = local_frame(_spark(), rows, StructType([
+        StructField("id", LongType()), StructField("bucket", IntegerType()),
+        StructField("pq_code", ArrayType(ShortType()))]))
+    want = [(r["id"], _bits(r["score"]))
+            for r in codec.topk(frame, query, k=k, bucket_col="bucket").collect()]
+    lut, bias = codec.adc_tables(query)
+    scores = sim.adc_lut_sum(lut, np.asarray([c for *_, c in rows], dtype=np.int64))
+    if bias is not None:
+        scores = scores + bias[np.asarray([b for _, b, _ in rows])]
+    keys, top = ann_sidecar._keep_topk([i for i, *_ in rows], scores, k)
+    assert [(key, _bits(s)) for key, s in zip(keys, top.tolist())] == want
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(st.sampled_from([0.0, -0.0, 1.0, -1.0, 2.5, float("inf"),
+                              float("-inf"), float("nan")]),
+             min_size=0, max_size=20),
+    st.integers(min_value=1, max_value=10),
+    st.booleans(),
+)
+def test_driver_topk_order_equals_spark_order(scores, k, string_keys):
+    # the driver's NaN stands for a NULL score
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    from solr_map_reduce_spark.extensions import ann_sidecar
+    from solr_map_reduce_spark.session import local_frame
+
+    # unique keys in shuffled order: every tie falls to the key
+    order = np.random.RandomState(len(scores)).permutation(len(scores))
+    keys = [f"k{int(i):02d}" if string_keys else int(i) for i in order]
+    nulls = [None if s != s else s for s in scores]
+    frame = local_frame(_spark(), list(zip(keys, nulls)), StructType([
+        StructField("key", StringType() if string_keys else LongType()),
+        StructField("score", DoubleType())]))
+    want = [(r["key"], _bits(r["score"]))
+            for r in frame.orderBy(F.desc("score"), F.col("key")).limit(k).collect()]
+    got_keys, got = ann_sidecar._keep_topk(keys, scores, k)
+    assert [(key, _bits(s)) for key, s in zip(got_keys, got.tolist())] == want

@@ -418,16 +418,24 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_read_planning_runs_no_job(spark, base):
-    """On a warm handle over an artifact with every sidecar, planning a
-    search, facet or get runs no Spark job (Bloom probes run in the driver,
-    segment reads are schema-pinned), a sidecar knn answer and a get no
-    segment admits are local frames that collect without a job."""
-    idx = SearchIndex.open(spark, base)
+def test_read_planning_runs_no_job(spark, artifact):
+    """On a warm handle over an artifact with every sidecar, after a
+    ``merge_into`` left an ANN delta and tombstones, planning a search,
+    facet, get or bm25 runs no Spark job (Bloom probes and df lookups run
+    in the driver, segment reads are schema-pinned), a sidecar knn answer
+    (probed in the driver) and a get no segment admits are local frames
+    that collect without a job, and a filtered knn runs one job: the
+    semi-join of the probed pairs with the filter's key set."""
+    _merge(spark, artifact)
+    assert all(os.path.isdir(os.path.join(artifact, "_ann", "embedding", sub))
+               for sub in ("delta", "tombstones"))
+    idx = SearchIndex.open(spark, artifact)
     idx.search(q="w1 AND common", filters={"v": 1}, select=["id"], limit=5).collect()
     idx.facet("v", q="t3").collect()
     idx.get("k001").collect()
+    idx.bm25(["w1", "common"], k=5).collect()
     idx.knn(QUERIES[0].tolist(), k=5).collect()
+    idx.knn(QUERIES[0].tolist(), k=5, filters={"v": 1}).collect()
     # fresh terms and keys: nothing a warm-up could have memoized
     reads = {
         "search": lambda: idx.search(q="w2 AND t4", filters={"v": 1},
@@ -435,13 +443,34 @@ def test_read_planning_runs_no_job(spark, base):
         "facet": lambda: idx.facet("v", q="t5"),
         "get": lambda: idx.get("k007"),
         "get_absent": lambda: idx.get("zzz-absent").collect(),
+        "bm25": lambda: idx.bm25(["w3", "t6"], k=5),
+        "knn": lambda: idx.knn(QUERIES[1].tolist(), k=5).collect(),
+        "knn_filtered": lambda: idx.knn(QUERIES[1].tolist(), k=5,
+                                        filters={"v": 2}).collect(),
     }
-    knn = idx.knn(QUERIES[1].tolist(), k=5)
-    reads["knn_collect"] = knn.collect
     assert {name: _jobs(spark, f"budget-{name}", fn) for name, fn in reads.items()} == {
-        name: 0 for name in reads
+        **{name: 0 for name in reads}, "knn_filtered": 1,
     }
-    assert len(knn.collect()) == 5 and idx.get("zzz-absent").count() == 0
+    assert len(idx.knn(QUERIES[1].tolist(), k=5).collect()) == 5
+    assert idx.get("zzz-absent").count() == 0
+
+
+def test_file_uri_answers_equal_the_plain_path(spark, artifact):
+    """A ``file://`` URI of the artifact goes through ``HadoopFS``, and its
+    driver-side reads (ANN probe files, ``_vocab`` buckets) answer knn,
+    filtered knn and bm25 exactly as the plain path does."""
+    _merge(spark, artifact)
+    plain = SearchIndex.open(spark, artifact)
+    uri = SearchIndex.open(spark, "file://" + os.path.abspath(artifact))
+    assert type(get_fs(uri.path, spark)).__name__ == "HadoopFS"
+    assert uri._ann_sidecar("embedding") is not None
+    for q in QUERIES.tolist():
+        assert uri.knn(q, k=7).collect() == plain.knn(q, k=7).collect()
+        assert (uri.knn(q, k=7, filters={"v": 1}).collect()
+                == plain.knn(q, k=7, filters={"v": 1}).collect())
+    for terms in (["w1", "common"], ["zzmerge", "t3"]):
+        assert (uri.bm25(terms, k=10).select("id", "score").collect()
+                == plain.bm25(terms, k=10).select("id", "score").collect())
 
 
 def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
@@ -526,6 +555,41 @@ def test_engine_reads_are_pinned_to_the_recorded_schema():
     vocab = {rel for rel, tree in _package_trees()
              if {"_VOCAB_SCHEMA", "VOCAB_DIR"} & set(_names(tree))}
     assert vocab == {"search_stats.py"}
+    # driver-side reads: pyarrow.parquet is named only by the one fs
+    # helper, and every read_table passes the recorded schema
+    assert set(_pyarrow_parquet_users()) == {("fs.py", "read_parquet")}
+    unpinned = [(rel, node.lineno) for rel, tree in _package_trees()
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "read_table"
+                and "schema" not in {kw.arg for kw in node.keywords}]
+    assert unpinned == []
+
+
+def _pyarrow_parquet_users():
+    """(module, innermost function) of every place naming pyarrow.parquet:
+    an import of it, of a name from it, or the attribute path itself."""
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        named = (
+            isinstance(node, ast.Import)
+            and any(a.name.startswith("pyarrow.parquet") for a in node.names)
+        ) or (
+            isinstance(node, ast.ImportFrom) and node.module
+            and (node.module.startswith("pyarrow.parquet")
+                 or (node.module == "pyarrow"
+                     and any(a.name == "parquet" for a in node.names)))
+        ) or (isinstance(node, ast.Attribute) and node.attr == "parquet"
+              and isinstance(node.value, ast.Name)
+              and node.value.id in ("pyarrow", "pa"))
+        if named:
+            yield rel, fn
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, rel, fn)
+
+    for rel, tree in _package_trees():
+        yield from visit(tree, rel, None)
 
 
 LOCAL_FRAME_MODULES = ("index_reader.py", "term_blooms.py", "indexing.py",
