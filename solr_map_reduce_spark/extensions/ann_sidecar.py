@@ -666,6 +666,9 @@ def build(
     fs = get_fs(index_path, spark)
     pinned_gen = manifest_generation_hash(fs, index_path)
     side = side_path(index_path, field)
+    # a NULL vector is no vector: its row gets no bucket and stays out of
+    # the base, as delta_upsert keeps it out of the delta
+    base_rows = base_rows.filter(F.col(field).isNotNull())
     # REBUILD ordering: stale the existing meta FIRST, then clear the
     # old delta/tombstones, then write the new base, then the fresh
     # meta last.  The old order (overwrite base, clear delta, write

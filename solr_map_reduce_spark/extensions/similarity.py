@@ -625,16 +625,20 @@ class IvfIndex:
 
     def assign(self, df: DataFrame, bucket_col: str = "bucket") -> DataFrame:
         """Vectorized nearest-centroid assignment: one numpy matmul per Arrow
-        batch."""
+        batch.  A NULL vector gets no bucket (NULL)."""
         cents = self.centroids
         cent_sq = (cents**2).sum(axis=1)
 
         @pandas_udf(T.IntegerType())
         def _nearest(vecs: pd.Series) -> pd.Series:
-            m = np.array(vecs.tolist(), dtype=np.float64)
-            # argmin over ||v-c||^2 = -2 v.c + ||c||^2 (+ ||v||^2 const)
-            d = -2.0 * (m @ cents.T) + cent_sq[None, :]
-            return pd.Series(d.argmin(axis=1).astype(np.int32))
+            out = pd.Series(pd.NA, index=vecs.index, dtype="Int32")
+            present = vecs.notna().to_numpy()
+            if present.any():
+                m = np.array(vecs[present].tolist(), dtype=np.float64)
+                # argmin over ||v-c||^2 = -2 v.c + ||c||^2 (+ ||v||^2 const)
+                d = -2.0 * (m @ cents.T) + cent_sq[None, :]
+                out[present] = d.argmin(axis=1).astype(np.int32)
+            return out
 
         return df.withColumn(bucket_col, _nearest(F.col(self.vec_col)))
 
@@ -1217,8 +1221,9 @@ class PqCodec:
         seed: int = 42,
         coarse: "np.ndarray | None" = None,
     ) -> "PqCodec":
-        sample = _driver_sample(df, vec_col, sample_size, seed)
-        sample = sample / np.linalg.norm(sample, axis=1, keepdims=True)
+        # zero rows stay zero: dividing them by their norm would spread
+        # NaN through k-means into every codebook
+        sample = _unit_rows(_driver_sample(df, vec_col, sample_size, seed))
         if coarse is not None:
             # residual mode: codebooks are k-means of v̂ − c_nearest(v̂)
             # (fit-time assignment approximates build-time's; both pick

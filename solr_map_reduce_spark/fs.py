@@ -26,7 +26,9 @@ Serving lookups whose input is a handful of small files (ANN bucket
 probes, BM25 df lookups) read them in the driver: :func:`data_files` lists
 a dataset dir the way Spark's reader does, and :func:`read_parquet` decodes
 one file's bytes with pyarrow, pinned to the schema its writer recorded.
-Neither runs a Spark job, on any scheme.
+:func:`read_footer` reads only a file's footer (the key-range sidecar's
+per-file spans come from its row-group statistics).  None of them runs a
+Spark job, on any scheme.
 """
 
 from __future__ import annotations
@@ -189,6 +191,28 @@ class HadoopFS:
         finally:
             stream.close()
 
+    def parquet_tail(self, path: str) -> bytes:
+        """A parquet file's tail: its footer, the footer's length and the
+        closing magic.  Two positioned reads at the end of the file; the
+        data pages are never read."""
+        fs = self._fs(path)
+        p = self._path(path)
+        size = int(fs.getFileStatus(p).getLen())
+        if size < 12:
+            raise OSError(f"not a parquet file: {path}")
+        io = self._jvm.org.apache.commons.io.IOUtils
+        stream = fs.open(p)
+        try:
+            stream.seek(size - 8)
+            trailer = bytes(io.toByteArray(stream, 8))
+            n = int.from_bytes(trailer[:4], "little")
+            if trailer[4:] != b"PAR1" or n > size - 12:
+                raise OSError(f"not a parquet file: {path}")
+            stream.seek(size - 8 - n)
+            return bytes(io.toByteArray(stream, n)) + trailer
+        finally:
+            stream.close()
+
     def write_text(self, path: str, text: str) -> None:
         """Write-temp-then-ATOMIC-replace (the LocalFS ``os.replace``
         analog): ``FileContext.rename(..., Options.Rename.OVERWRITE)``
@@ -320,3 +344,15 @@ def read_parquet(fs, path: str, schema, columns=None, filters=None):
         pa.BufferReader(fs.read_bytes(path)), schema=to_arrow_schema(schema),
         columns=columns, filters=filters,
     )
+
+
+def read_footer(fs, path: str):
+    """One parquet file's footer metadata (``pyarrow.parquet.FileMetaData``:
+    row groups, their row counts and column statistics), read in the
+    driver from the footer alone — the data pages are never read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if isinstance(fs, LocalFS):
+        return pq.read_metadata(path)
+    return pq.read_metadata(pa.BufferReader(b"PAR1" + fs.parquet_tail(path)))

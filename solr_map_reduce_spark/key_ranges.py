@@ -23,8 +23,14 @@ other (the monolithic ``_KEY_RANGES.json`` of older builds) reads as no
 sidecar, i.e. unpruned exact scans until the next build or mutation writes
 this one.
 
-Build: one column-pruned pass over the key column grouped by
-``input_file_name()`` — no shuffle wider than (file, min, max).
+Build: from the parquet footers, in the driver — no Spark job.  Every
+data file of a written shard dir has its footer read (``fs.read_footer``:
+the file's tail only, on any scheme); a file's span is the min of its row
+groups' key ``min``, the max of their ``max`` and the sum of their rows,
+which equals Spark's per-file ``min``/``max``/``count``.  A file whose
+footer carries no min/max for the key (a writer may omit them, e.g. for
+values over 4 KB) or whose key type cannot be pruned gets null bounds, and
+null bounds admit every query: answers stay exact, at one extra file read.
 
 Query: ``SearchIndex.get/get_many`` intersect the key with each file's
 [min, max] and read ONLY the admitted files (plus the shard partition
@@ -53,8 +59,8 @@ from __future__ import annotations
 import json
 from bisect import bisect_left, bisect_right
 from collections.abc import Mapping
+from decimal import Decimal
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 KEY_RANGES_DIR = "_key_ranges"
@@ -63,13 +69,6 @@ META = "_META.json"
 # Spark DataType.simpleString() names (what write_key_ranges stores)
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _FLOAT_TYPES = {"float", "double"}
-
-
-def _relative_file(full: str, shard: int) -> str:
-    """File URI → name relative to its shard dir (artifact-relocatable)."""
-    marker = f"shard={shard}/"
-    i = full.rfind(marker)
-    return full[i + len(marker):] if i >= 0 else full.rsplit("/", 1)[-1]
 
 
 def _coerce(kt: str, value):
@@ -85,8 +84,6 @@ def _coerce(kt: str, value):
     if kt in _FLOAT_TYPES:
         return float(value)
     if kt.startswith("decimal"):
-        from decimal import Decimal
-
         return Decimal(str(value))
     if kt != "string":
         # timestamp/date/boolean/binary…: Python-side comparison of the
@@ -318,28 +315,81 @@ def sidecar_exists(fs, path: str) -> bool:
     return fs.exists(fs_join(path, KEY_RANGES_DIR, META))
 
 
+def _nan_last(v):
+    # Spark orders NaN above every double (so does its max): Python's
+    # min/max would answer by argument order instead
+    return (_is_nan(v), v)
+
+
+def _footer_span(meta, key: str, dtype) -> tuple:
+    """``(lo, hi, rows)`` of column ``key`` in one file, from its footer:
+    the min of the row groups' ``min``, the max of their ``max`` and the
+    sum of their rows — what a Spark ``min``/``max``/``count`` over the
+    file returns.  A row group whose key column carries no min/max gives
+    the file null bounds (every query keeps it, ``_ShardSpans.always``);
+    an all-null row group adds nothing, as null keys add nothing to
+    ``min``/``max``.  Key types ``_coerce`` cannot prune get null bounds
+    without reading their statistics."""
+    from pyspark.sql.types import DecimalType
+
+    rows = meta.num_rows
+    kt = dtype.simpleString()
+    if not (kt == "string" or kt in _INT_TYPES or kt in _FLOAT_TYPES
+            or isinstance(dtype, DecimalType)):
+        return None, None, rows
+    col = [meta.schema.column(i).path for i in range(meta.num_columns)].index(key)
+    los, his = [], []
+    for g in range(meta.num_row_groups):
+        rg = meta.row_group(g)
+        st = rg.column(col).statistics
+        if rg.num_rows == 0 or (
+            st is not None and st.has_null_count and st.null_count == rg.num_rows
+        ):
+            continue
+        if st is None or not st.has_min_max:
+            return None, None, rows
+        if isinstance(dtype, DecimalType):
+            # pyarrow cannot extract int-backed decimal statistics: the raw
+            # unscaled integer (big-endian bytes when fixed-length) over
+            # the recorded scale is the value Spark returns
+            lo, hi = (
+                Decimal(r if isinstance(r, int) else int.from_bytes(r, "big", signed=True))
+                .scaleb(-dtype.scale)
+                for r in (st.min_raw, st.max_raw)
+            )
+        else:
+            lo, hi = st.min, st.max
+        los.append(lo)
+        his.append(hi)
+    if not los:
+        return None, None, rows
+    return min(los, key=_nan_last), max(his, key=_nan_last), rows
+
+
 def write_key_ranges(
     spark: SparkSession, path: str, shards: list[int] | None = None
 ) -> dict:
     """Compute and persist per-file (min, max, rows) of the unique key in
-    the shard-partitioned layout (``_key_ranges/``).  ``shards`` restricts
-    the recompute to those shard dirs (partition-pruned scan) and rewrites
-    ONLY those shards' span files — the ``merge_into`` refresh path is
-    O(touched) in the scan, the sidecar write, AND the driver-side reads
-    (untouched shards contribute only their META row totals; their span
-    files are never opened).  A shard META lists but whose span file is
-    missing (torn sidecar) is recomputed from its parquet alongside the
-    touched shards — never written as empty, which would hide its rows.
-    Returns ``{"key_type", "shards": {shard: {file: [lo, hi, rows]}}}``
-    covering the shards this call computed (the full artifact on a full
-    rebuild)."""
-    from solr_map_reduce_spark.fs import get_fs
+    the shard-partitioned layout (``_key_ranges/``), from the parquet
+    footers, in the driver: no Spark job.  ``shards`` restricts the
+    recompute to those shard dirs and rewrites ONLY those shards' span
+    files — the ``merge_into`` refresh path is O(touched) in footer reads,
+    the sidecar write, AND the sidecar reads (untouched shards contribute
+    only their META row totals; their span files are never opened).  A
+    shard META lists but whose span file is missing (torn sidecar) is
+    recomputed from its parquet alongside the touched shards — never
+    written as empty, which would hide its rows.  Returns ``{"key_type",
+    "shards": {shard: {file: [lo, hi, rows]}}}`` covering the shards this
+    call computed (the full artifact on a full rebuild)."""
+    from solr_map_reduce_spark.fs import data_files, get_fs, read_footer
     from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
+    from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, artifact_schema
 
     fs = get_fs(path, spark)
     manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
     key = manifest["unique_key"]
+    dtype = artifact_schema(manifest)[key].dataType
+    key_type = dtype.simpleString()
 
     carried_rows: dict[str, int] = {}  # untouched shard -> prior META total
     if shards is not None:
@@ -371,37 +421,24 @@ def write_key_ranges(
             if torn:
                 shards = sorted({int(s) for s in shards} | torn)
 
-    idx = read_index(spark, path)
-    if shards is not None:
-        idx = idx.filter(F.col(SHARD_COL).isin([int(s) for s in shards]))
-    per_file = (
-        idx.select(
-            F.col(SHARD_COL).alias("_s"),
-            F.input_file_name().alias("_f"),
-            F.col(key).alias("_k"),
-        )
-        .groupBy("_s", "_f")
-        .agg(
-            F.min("_k").alias("_lo"),
-            F.max("_k").alias("_hi"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .collect()
-    )
-
-    key_type = idx.schema[key].dataType.simpleString()
-    shard_maps: dict = {}
-    refreshed: set[str] = set()
-    for row in per_file:
-        s = str(int(row["_s"]))
-        refreshed.add(s)
-        shard_maps.setdefault(s, {})[_relative_file(row["_f"], int(row["_s"]))] = [
-            row["_lo"], row["_hi"], row["_n"],
+    prefix = f"{SHARD_COL}="
+    if shards is None:
+        scanned = [
+            int(d[len(prefix):]) for d in fs.listdir(path)
+            if d.startswith(prefix) and d[len(prefix):].isdigit()
         ]
+    else:
+        scanned = [int(s) for s in shards]
+    shard_maps: dict = {}
+    for s in scanned:
+        for f in data_files(fs, fs_join(path, f"{prefix}{s}")):
+            lo, hi, n = _footer_span(read_footer(fs, f), key, dtype)
+            if n:  # an empty file holds no key (Spark's aggregate skips it)
+                shard_maps.setdefault(str(s), {})[f.rsplit("/", 1)[-1]] = [lo, hi, n]
     if shards is not None:
         # a touched shard whose rewrite produced no rows still needs its
         # stale span file replaced (with an empty one)
-        refreshed.update(str(int(s)) for s in shards)
+        refreshed = {str(int(s)) for s in shards}
     else:
         refreshed = set(shard_maps)
 

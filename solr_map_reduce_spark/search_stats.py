@@ -37,14 +37,19 @@ n_dl`` is exactly what ``avg(dl)`` evaluates to.  The bulk readers of the
 dictionary (delta merge, fuzzy expansion, the term dictionary) keep the
 Spark reader :func:`read_vocab`.
 
-Mutation: ``merge_into`` and ``delete_where`` DELTA-MAINTAIN the sidecar
-(:func:`prepare_stats_delta`): n_docs/sum_dl/n_dl are adjusted by the
-touched shards' before/after difference and the term dictionary gets a
-df-delta merge that READS and REWRITES only the hash buckets containing
-changed terms — the incremental path is O(touched shards + changed-term
-buckets) end to end, never O(corpus) and never O(|vocab|).  At 100 TB a
-term dictionary is billions of rows; a 1 GB batch touches a bounded set
-of buckets instead of rewriting the whole dictionary.  ``compact``
+Mutation: ``merge_into``, ``update_fields`` and ``delete_where``
+DELTA-MAINTAIN the sidecar (:func:`prepare_stats_delta`) with ONE signed
+pass per analyzed field: the touched shards' old rows (sign -1) and
+rewritten rows (+1) are exploded into their distinct visible terms and
+summed by term, which gives every term's df delta; observers carry the
+n_docs/sum_dl/n_dl delta (from the rows before the explode) and the
+changed terms' bucket set (from the aggregate) to the driver, and the
+O(changed terms) delta is checkpointed.  The term dictionary then gets a
+df-delta merge that READS and REWRITES
+only those buckets — the incremental path is O(touched shards +
+changed-term buckets) end to end, never O(corpus) and never O(|vocab|).
+At 100 TB a term dictionary is billions of rows; a 1 GB batch touches a
+bounded set of buckets instead of rewriting the whole dictionary.  ``compact``
 preserves the sidecar unchanged (content is identical).
 
 Crash consistency: ``_SEARCH_STATS.json`` doubles as the COMMIT MARKER.
@@ -207,7 +212,7 @@ def write_search_stats(spark: SparkSession, path: str) -> dict | None:
     return _write_vocab(
         spark, path,
         lambda _field, observed, tokens_col, write: write(
-            _term_df(observed, tokens_col, "df")
+            _term_df(observed, tokens_col)
         ),
     )
 
@@ -298,36 +303,80 @@ def _real_toks(tokens_col: str) -> F.Column:
     return _visible_toks(F.col(tokens_col))
 
 
-def _length_aggs(tokens_col: str) -> list[F.Column]:
+def _length_aggs(tokens_col: str, sign: F.Column | None = None) -> list[F.Column]:
     """A field's BM25 scalars over a DataFrame's rows: the row count and
-    the sum/count of visible token-array lengths."""
-    toks = _real_toks(tokens_col)
+    the sum/count of visible token-array lengths.  With ``sign`` (a +1 or
+    -1 per row) every row adds its sign times what it adds unsigned, so
+    the sums are an exact integer change."""
+    dl = F.size(_real_toks(tokens_col))
+    if sign is None:
+        return [
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(dl).alias("sum_dl"),
+            F.count(dl).alias("n_dl"),
+        ]
     return [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks)).alias("sum_dl"),
-        F.count(F.size(toks)).alias("n_dl"),
+        F.sum(sign).alias("n_docs"),
+        F.sum(sign * dl).alias("sum_dl"),
+        F.sum(F.when(dl.isNotNull(), sign)).alias("n_dl"),
     ]
 
 
 def _length_stats(row) -> dict:
-    return {
-        "n_docs": int(row["n_docs"]),
-        "sum_dl": int(row["sum_dl"] or 0),
-        "n_dl": int(row["n_dl"]),
-    }
+    return {key: int(row[key] or 0) for key in ("n_docs", "sum_dl", "n_dl")}
 
 
-def _field_aggregates(df, tokens_col: str) -> dict:
-    """{n_docs, sum_dl, n_dl} of one token column over ``df``."""
-    return _length_stats(df.agg(*_length_aggs(tokens_col)).collect()[0])
-
-
-def _term_df(df, tokens_col: str, out_name: str):
+def _term_df(df, tokens_col: str):
     return (
         df.select(F.explode(F.array_distinct(_real_toks(tokens_col))).alias("term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias(out_name))
+        .agg(F.count(F.lit(1)).alias("df"))
     )
+
+
+def _signed_delta(old_rows, new_rows, tokens_col: str, n_buckets: int):
+    """The change a rewrite of ``old_rows`` into ``new_rows`` makes to a
+    field's statistics, in ONE pass over both, the old rows signed -1 and
+    the new +1.  Returns ``(scalars, buckets, delta)``: the change of
+    n_docs/sum_dl/n_dl, the sorted hash buckets holding a changed term (at
+    most ``n_buckets`` values), and ``(term, _ddf)`` rows for every
+    visible term whose df changed, ``_ddf = df_new - df_old``,
+    checkpointed (O(changed terms)).
+
+    The scalars are observed on the signed rows before the explode, with
+    ``_length_aggs``' per-row expressions (exact integer sums); the bucket
+    set is observed on the aggregate.  The explode keeps a row with no
+    visible term (as a null term), so the aggregate sees a row whenever
+    either side has one: when it sees none, no observed metric arrives
+    from before it (the empty scans are planned away) and the change is
+    zero."""
+    signed = old_rows.select(F.lit(-1).alias("_sign"), tokens_col).unionByName(
+        new_rows.select(F.lit(1).alias("_sign"), tokens_col)
+    )
+    real, changed = F.col("term").isNotNull(), F.col("_ddf") != 0
+    lengths, groups = Observation(), Observation()
+    delta = (
+        signed.observe(lengths, *_length_aggs(tokens_col, F.col("_sign")))
+        .select(
+            "_sign",
+            F.explode_outer(F.array_distinct(_real_toks(tokens_col))).alias("term"),
+        )
+        .groupBy("term")
+        .agg(F.sum("_sign").alias("_ddf"))
+        .withColumn("bucket", _bucket_expr(n_buckets))
+        .observe(
+            groups,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(F.when(real & changed, F.col("bucket"))).alias("buckets"),
+        )
+        .filter(real & changed)
+        .select("term", "_ddf")
+        .localCheckpoint(eager=True)
+    )
+    seen = groups.get
+    if not seen["n"]:
+        return {"n_docs": 0, "sum_dl": 0, "n_dl": 0}, [], delta
+    return _length_stats(lengths.get), sorted(seen["buckets"]), delta
 
 
 def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
@@ -335,18 +384,18 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
     ``merge_into`` path).  ``old_subset`` is the artifact content of the
     touched shards BEFORE the swap (still readable); ``new_subset`` is the
     rewritten content (read back from the staging dir, already
-    materialized).  All scans run HERE, pre-swap:
+    materialized).  All scans run HERE, pre-swap, per analyzed field:
 
-    - per analyzed field, ``stats' = stats - agg(old) + agg(new)`` (exact
-      integer arithmetic — identical to a full rebuild by associativity of
-      count/sum);
+    - one signed pass over both subsets (:func:`_signed_delta`) gives
+      ``stats' = stats - agg(old) + agg(new)`` (exact integer arithmetic —
+      identical to a full rebuild by associativity of count/sum) and the
+      df delta of every changed term;
     - the term dictionary gets a df-delta merge: ``df'(t) = df_stored(t)
-      - df_old(t) + df_new(t)``, terms reaching 0 dropped.  Only terms in
-      the old/new subsets can change, so the merge reads the stored vocab
-      with a BUCKET-PRUNED scan (partition filter on the changed terms'
-      buckets) and writes only those buckets to a ``<field>__pending``
-      staging dir — the vocab write is O(changed-term buckets), not
-      O(|vocab|).
+      + df_new(t) - df_old(t)``, terms reaching 0 dropped.  Only changed
+      terms can move, so the merge reads the stored vocab with a
+      BUCKET-PRUNED scan (partition filter on the changed terms' buckets)
+      and writes only those buckets to a ``<field>__pending`` staging dir
+      — the vocab write is O(changed-term buckets), not O(|vocab|).
 
     Returns a ``finalize()`` closure to call AFTER the artifact swap; it
     takes the ``_SEARCH_STATS.json`` commit marker DOWN (readers fall
@@ -371,42 +420,23 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
     new_stats: dict = {}
     pending: dict[str, list[int]] = {}  # field -> touched buckets
     for field, info in analyzed.items():
-        tokens_col = info["tokens_col"]
-        o = _field_aggregates(old_subset, tokens_col)
-        n = _field_aggregates(new_subset, tokens_col)
-        s = stats[field]
-        new_stats[field] = {key: int(s[key]) - o[key] + n[key] for key in o}
-        delta = (
-            _term_df(old_subset, tokens_col, "_df_old")
-            .join(_term_df(new_subset, tokens_col, "_df_new"), "term", "full_outer")
-            # a term whose df is identical before and after the rewrite
-            # contributes nothing — dropping it here is what makes the
-            # bucket set O(genuinely-changed terms), not O(shard vocab)
-            .filter(
-                F.coalesce(F.col("_df_old"), F.lit(0))
-                != F.coalesce(F.col("_df_new"), F.lit(0))
-            )
+        change, touched, delta = _signed_delta(
+            old_subset, new_subset, info["tokens_col"], n_buckets
         )
-        delta = delta.withColumn("bucket", _bucket_expr(n_buckets))
-        touched = sorted(
-            int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
-        )
+        new_stats[field] = {k: int(v) + change[k] for k, v in stats[field].items()}
         # pinned schema: untouched buckets are never read, not even to plan
         vocab = read_vocab(spark, path, field, touched)
         merged = (
-            vocab.join(delta.select("term", "_df_old", "_df_new"), "term", "full_outer")
+            vocab.join(delta, "term", "full_outer")
             .select(
                 "term",
-                (
-                    F.coalesce(F.col("df"), F.lit(0))
-                    - F.coalesce(F.col("_df_old"), F.lit(0))
-                    + F.coalesce(F.col("_df_new"), F.lit(0))
-                ).alias("df"),
+                (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("_ddf"), F.lit(0)))
+                .alias("df"),
             )
             .filter(F.col("df") > 0)
         )
-        # materialize NOW (reads old shard files + stored vocab buckets,
-        # both of which move/disappear at swap time)
+        # materialize NOW (reads the stored vocab buckets, which move at
+        # swap time; the delta is already checkpointed)
         _write_buckets(
             merged, n_buckets, fs_join(path, f"{VOCAB_DIR}/{field}__pending")
         )

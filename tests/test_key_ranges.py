@@ -1,15 +1,18 @@
 """Per-segment key-range sidecar (key_ranges.py): file pruning for point
 lookups, mutation-safe refresh — the Lucene per-segment term-dictionary
-cost model over the sharded parquet artifact."""
+cost model over the sharded parquet artifact.  The spans come from the
+parquet footers; Spark's per-file aggregate is their oracle."""
 
 import json
 import os
+import shutil
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 import pytest
 
 from solr_map_reduce_spark.index_reader import SearchIndex
-from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact
+from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact, read_index
 from solr_map_reduce_spark.key_ranges import load_key_ranges, write_key_ranges
 from solr_map_reduce_spark.schema import Field, IndexSchema
 
@@ -567,3 +570,128 @@ class TestSixthReviewRegressions:
         # untouched shard's row total carried forward from the prior META
         assert meta["shard_rows"][str(untouched)] == prior_rows[str(untouched)]
         assert sum(int(n) for n in meta["shard_rows"].values()) == 401
+
+
+# -- spans from the parquet footers -------------------------------------------
+
+# key type -> (field type, the i-th key); every case holds negative or
+# non-ASCII keys, and the double case a NaN
+KEY_CASES = {
+    "string": ("string", lambda i: f"{'kéß中'[i % 4]}{i:04d}"),
+    "int": ("int", lambda i: i * 7 - 500),
+    "bigint": ("long", lambda i: i * 10**12 - 7 * 10**13),
+    "double": ("double", lambda i: float("nan") if i == 11 else i / 3.0 - 20.0),
+    "decimal(7,2)": ("decimal(7,2)", lambda i: Decimal(i * 37 - 3000) / 100),
+    "decimal(30,3)": ("decimal(30,3)", lambda i: Decimal(i * 10**9 - 37) / 1000),
+}
+
+
+def _spark_spans(spark, path, key):
+    """The oracle: Spark's per-file min/max/count of the key."""
+    rows = (
+        read_index(spark, path)
+        .select(F.col("shard").alias("_s"), F.input_file_name().alias("_f"),
+                F.col(key).alias("_k"))
+        .groupBy("_s", "_f")
+        .agg(F.min("_k"), F.max("_k"), F.count(F.lit(1)))
+        .collect()
+    )
+    return {(str(r[0]), r[1].rsplit("/", 1)[-1]): [_plain(r[2]), _plain(r[3]), r[4]]
+            for r in rows}
+
+
+def _stored_spans(path):
+    base = os.path.join(path, "_key_ranges")
+    out = {}
+    for name in os.listdir(base):
+        if name.startswith("shard_"):
+            shard = name[len("shard_"):-len(".json")]
+            with open(os.path.join(base, name)) as fh:
+                for f, lo, hi, n in json.load(fh)["files"]:
+                    out[(shard, f)] = [_plain(lo), _plain(hi), n]
+    return out
+
+
+def _plain(v):
+    # the sidecar stores decimals as strings; NaN never equals itself
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    return str(v) if isinstance(v, Decimal) else v
+
+
+def _key_json(path):
+    base = os.path.join(path, "_key_ranges")
+    out = {}
+    for name in sorted(os.listdir(base)):
+        if name.endswith(".json") and not name.startswith("."):  # not checksums
+            with open(os.path.join(base, name)) as fh:
+                out[name] = fh.read()
+    return out
+
+
+class TestFooterSpans:
+    @pytest.mark.parametrize("kt", sorted(KEY_CASES))
+    def test_spans_equal_the_spark_aggregate(self, spark, tmp_path, kt):
+        field_type, key_of = KEY_CASES[kt]
+        out = str(tmp_path / "idx")
+        schema = IndexSchema(
+            fields=(Field("k", field_type, required=True), Field("val", "long")),
+            unique_key="k",
+        )
+        df = spark.createDataFrame(
+            [(key_of(i), i) for i in range(160)], f"k {kt}, val long"
+        )
+        IndexJob(IndexJobConfig(
+            schema=schema, shards=2, micro_shards=4, dedup="none",
+            routing="native", key_ranges=True, max_records_per_file=30,
+        )).build(df, out)
+        ranges = load_key_ranges(spark, out)
+        assert ranges["key_type"] == kt
+        spans = _stored_spans(out)
+        assert len(spans) > 2 and all(lo is not None for lo, _, _ in spans.values())
+        assert spans == _spark_spans(spark, out, "k")
+
+    def test_file_without_key_statistics_gets_null_bounds(self, spark, artifact, tmp_path):
+        import pyarrow.parquet as pq
+
+        out = str(tmp_path / "idx")
+        shutil.copytree(artifact, out)
+        shard = os.path.join(out, "shard=0")
+        name = sorted(f for f in os.listdir(shard) if f.endswith(".parquet"))[1]
+        table = pq.ParquetFile(os.path.join(shard, name)).read()
+        pq.write_table(table, os.path.join(shard, name), write_statistics=False)
+        os.remove(os.path.join(shard, f".{name}.crc"))  # Spark's stale checksum
+        write_key_ranges(spark, out)
+        spans = _stored_spans(out)
+        assert spans[("0", name)] == [None, None, table.num_rows]
+        # every other file keeps the Spark aggregate's bounds
+        oracle = _spark_spans(spark, out, "id")
+        assert {f: v for f, v in spans.items() if f != ("0", name)} == {
+            f: v for f, v in oracle.items() if f != ("0", name)
+        }
+        # the stats-less file is read for every query: answers stay exact
+        keys = sorted(table.column("id").to_pylist())
+        want = {k: int(k[1:]) for k in keys}
+        idx = SearchIndex.open(spark, out)
+        for k in (keys[0], keys[-1]):
+            assert [r["val"] for r in idx.get(k).collect()] == [want[k]]
+        assert {r["id"]: r["val"] for r in idx.get_many(keys).collect()} == want
+        assert sorted(r["val"] for r in idx.key_range(keys[0], keys[-1]).collect()) == list(
+            range(want[keys[0]], want[keys[-1]] + 1)
+        )
+        prefix = keys[0][:-1]
+        assert sorted(r["id"] for r in idx.prefix_key(prefix).collect()) == [
+            f"k{i:05d}" for i in range(400) if f"k{i:05d}".startswith(prefix)
+        ]
+        assert idx.count() == 400
+
+    def test_file_uri_writes_the_same_json(self, spark, artifact, tmp_path):
+        out = str(tmp_path / "idx")
+        shutil.copytree(artifact, out)
+        write_key_ranges(spark, out)
+        plain = _key_json(out)
+        write_key_ranges(spark, "file://" + os.path.abspath(out))
+        assert _key_json(out) == plain
+        for shards in ([0], [1]):
+            write_key_ranges(spark, "file://" + os.path.abspath(out), shards=shards)
+            assert _key_json(out) == plain

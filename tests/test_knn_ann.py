@@ -585,6 +585,47 @@ class TestStalenessAndVariants:
         assert out == {"affected_buckets": [], "folded": False}
 
 
+class TestDegenerateVectors:
+    """A NULL vector is no vector and an all-zero one has no direction:
+    neither breaks a sidecar build nor its answers."""
+
+    def _artifact(self, spark, out, vec0):
+        rows = [(i, vec0 if i == 0 else [float(x) for x in VECS[i]],
+                 "even" if i % 2 == 0 else "odd") for i in range(N)]
+        _job().build(spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label string"
+        ), out)
+        return SearchIndex.open(spark, out)
+
+    def test_build_ann_over_a_null_vector(self, spark, tmp_path):
+        idx = self._artifact(spark, str(tmp_path / "idx"), None)
+        idx.build_ann("embedding", kind="ivf", n_centroids=NC, nprobe=NC)
+        assert idx._ann_sidecar("embedding") is not None
+        for q in QUERIES.tolist():
+            routed = [r["vec_id"] for r in idx.knn(q, k=10).collect()]
+            exact = [r["vec_id"] for r in idx.knn(q, k=10, exact=True).collect()]
+            assert routed == exact and 0 not in routed
+
+    def test_ivf_assign_leaves_a_null_vector_unbucketed(self, spark):
+        ivf = IvfIndex(VECS[:NC], id_col="vec_id")
+        df = spark.createDataFrame(
+            [(0, None), (1, [float(x) for x in VECS[1]])],
+            "vec_id long, embedding array<double>",
+        )
+        got = {r["vec_id"]: r["bucket"] for r in ivf.assign(df).collect()}
+        assert got == {0: None, 1: 1}
+
+    def test_ivfpq_over_a_zero_vector_serves_finite_scores(self, spark, tmp_path):
+        idx = self._artifact(spark, str(tmp_path / "idx"), [0.0] * DIM)
+        idx.build_ann("embedding", kind="ivfpq", n_centroids=4, nprobe=4,
+                      m=4, ksub=16)
+        assert idx._ann_sidecar("embedding") is not None
+        for q in QUERIES.tolist():
+            rows = idx.knn(q, k=10).collect()
+            assert len(rows) == 10
+            assert all(np.isfinite(r["score"]) for r in rows)
+
+
 class TestJoinFromIndex:
     """{!join fromIndex=...} cross-collection join uses the vector
     fixture artifacts (two handles over distinct corpora)."""

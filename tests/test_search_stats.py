@@ -326,6 +326,35 @@ class TestIncrementalStatsDelta:
         stats = load_search_stats(spark, path)
         assert stats["text"] == {"n_docs": 2, "sum_dl": 4, "n_dl": 2}
 
+    def test_delta_counts_documents_without_terms(self, spark, tmp_path):
+        """A document with no visible term (empty, blank or null text)
+        still counts in n_docs: deleting the only rows of a shard, all of
+        them term-less, and then a rewrite whose old and new sides are
+        both empty, leave the stats equal to a full rebuild."""
+        job = IndexJob(IndexJobConfig(
+            schema=SCHEMA, shards=2, dedup="none", routing="native",
+            term_blooms=True, search_stats=True,
+        ))
+        ids = spark.createDataFrame([(f"d{i}", "") for i in range(40)],
+                                    "id string, text string")
+        shard_of = {r["id"]: r["shard"] for r in job.route(ids).collect()}
+        blank = [k for k, s in sorted(shard_of.items()) if s == 0][:4]
+        worded = [k for k, s in sorted(shard_of.items()) if s == 1][:3]
+        rows = [(blank[0], ""), (blank[1], None), (blank[2], "   ")]
+        rows += [(k, f"alpha w{i}") for i, k in enumerate(worded)]
+        path = str(tmp_path / "blank")
+        job.build(spark.createDataFrame(rows, "id string, text string"), path)
+        assert job.delete_where(spark, path, F.col("id").isin(blank)) == 3
+        stats = load_search_stats(spark, path)
+        assert stats["text"]["n_docs"] == 3
+        assert stats == write_search_stats(spark, path)
+        # shard 0 holds no file now: neither side of this rewrite has a row
+        job.update_fields(
+            spark.createDataFrame([(blank[3], "beta")], "id string, text string"),
+            path, missing="skip",
+        )
+        assert load_search_stats(spark, path) == stats
+
     def test_bm25_scores_after_delta_match_computed(self, spark, built, tmp_path):
         """Serving equality end to end: after an incremental merge, stored-
         stats BM25 must equal the computed-stats path on the same corpus."""

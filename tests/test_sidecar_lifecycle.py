@@ -18,7 +18,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from solr_map_reduce_spark import term_blooms
+from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
 from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.index_reader import SearchIndex
@@ -502,6 +502,27 @@ def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
     assert _rows_of(staged[0]) == _rows_of(rows)
 
 
+def test_merge_maintains_sidecars_in_few_jobs(spark, artifact, monkeypatch):
+    """A merge_into refreshes the key ranges from the parquet footers in
+    the driver (no Spark job) and keeps the BM25 stats by one signed pass
+    over the touched shards (at most 6 jobs); a full key-range write runs
+    no job either."""
+    jobs = {}
+    for mod, name in ((key_ranges, "write_key_ranges"),
+                      (search_stats, "prepare_stats_delta")):
+        def counted(*args, _real=getattr(mod, name), _name=name, **kw):
+            out = []
+            jobs[_name] = _jobs(spark, f"merge-{_name}",
+                                lambda: out.append(_real(*args, **kw)))
+            return out[0]
+
+        monkeypatch.setattr(mod, name, counted)
+    _merge(spark, artifact)
+    assert jobs["write_key_ranges"] == 0 and jobs["prepare_stats_delta"] <= 6, jobs
+    assert _jobs(spark, "full-key-ranges", lambda: write_key_ranges(spark, artifact)) == 0
+    _assert_stats_fresh(spark, artifact)
+
+
 # Modules whose reads of engine-written datasets the guards below cover.
 ENGINE_READ_MODULES = ("indexing.py", "index_reader.py", "search_stats.py",
                        "term_blooms.py", "key_ranges.py",
@@ -555,9 +576,11 @@ def test_engine_reads_are_pinned_to_the_recorded_schema():
     vocab = {rel for rel, tree in _package_trees()
              if {"_VOCAB_SCHEMA", "VOCAB_DIR"} & set(_names(tree))}
     assert vocab == {"search_stats.py"}
-    # driver-side reads: pyarrow.parquet is named only by the one fs
-    # helper, and every read_table passes the recorded schema
-    assert set(_pyarrow_parquet_users()) == {("fs.py", "read_parquet")}
+    # driver-side reads: pyarrow.parquet is named only by the fs helpers
+    # (one data reader, one footer reader), and every read_table passes
+    # the recorded schema
+    assert set(_pyarrow_parquet_users()) == {("fs.py", "read_parquet"),
+                                             ("fs.py", "read_footer")}
     unpinned = [(rel, node.lineno) for rel, tree in _package_trees()
                 for node in ast.walk(tree)
                 if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
