@@ -59,7 +59,7 @@ from __future__ import annotations
 import json
 from bisect import bisect_left, bisect_right
 from collections.abc import Mapping
-from decimal import Decimal
+from decimal import Context, Decimal
 
 from pyspark.sql import SparkSession
 
@@ -351,10 +351,12 @@ def _footer_span(meta, key: str, dtype) -> tuple:
         if isinstance(dtype, DecimalType):
             # pyarrow cannot extract int-backed decimal statistics: the raw
             # unscaled integer (big-endian bytes when fixed-length) over
-            # the recorded scale is the value Spark returns
+            # the recorded scale is the value Spark returns — rescaled in
+            # a context of the type's precision, so no digit is rounded
+            exact = Context(prec=dtype.precision)
             lo, hi = (
                 Decimal(r if isinstance(r, int) else int.from_bytes(r, "big", signed=True))
-                .scaleb(-dtype.scale)
+                .scaleb(-dtype.scale, exact)
                 for r in (st.min_raw, st.max_raw)
             )
         else:

@@ -191,7 +191,7 @@ def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
     for field, info in analyzed.items():
         out = fs_join(path, f"{VOCAB_DIR}/{field}")
         obs = Observation()
-        observed = idx.observe(obs, *_length_aggs(info["tokens_col"]))
+        observed = idx.observe(obs, *_length_aggs(info["tokens_col"], F.lit(1)))
         field_pass(
             field, observed, info["tokens_col"],
             lambda vocab: _write_buckets(vocab, n_buckets, out),
@@ -303,18 +303,12 @@ def _real_toks(tokens_col: str) -> F.Column:
     return _visible_toks(F.col(tokens_col))
 
 
-def _length_aggs(tokens_col: str, sign: F.Column | None = None) -> list[F.Column]:
+def _length_aggs(tokens_col: str, sign: F.Column) -> list[F.Column]:
     """A field's BM25 scalars over a DataFrame's rows: the row count and
-    the sum/count of visible token-array lengths.  With ``sign`` (a +1 or
-    -1 per row) every row adds its sign times what it adds unsigned, so
-    the sums are an exact integer change."""
+    the sum/count of visible token-array lengths, each row weighted by
+    ``sign`` (+1 or -1), so the sums are an exact integer change.  An
+    empty input sums to NULL, which ``_length_stats`` reads as 0."""
     dl = F.size(_real_toks(tokens_col))
-    if sign is None:
-        return [
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(dl).alias("sum_dl"),
-            F.count(dl).alias("n_dl"),
-        ]
     return [
         F.sum(sign).alias("n_docs"),
         F.sum(sign * dl).alias("sum_dl"),

@@ -583,6 +583,12 @@ KEY_CASES = {
     "double": ("double", lambda i: float("nan") if i == 11 else i / 3.0 - 20.0),
     "decimal(7,2)": ("decimal(7,2)", lambda i: Decimal(i * 37 - 3000) / 100),
     "decimal(30,3)": ("decimal(30,3)", lambda i: Decimal(i * 10**9 - 37) / 1000),
+    # 35 significant digits, past decimal's default 28-digit context: keys
+    # alternately end in ...9999999 and ...0000001, so a bound rounded to
+    # 28 digits would land above a file's true min or below its true max
+    "decimal(38,3)": ("decimal(38,3)", lambda i: Decimal(
+        f"{(10**27 + i) * 10**7 + (9_999_999 if i % 2 else 1)}E-3"
+    )),
 }
 
 
@@ -650,6 +656,12 @@ class TestFooterSpans:
         spans = _stored_spans(out)
         assert len(spans) > 2 and all(lo is not None for lo, _, _ in spans.values())
         assert spans == _spark_spans(spark, out, "k")
+        # the spans prune point lookups: every key is still found
+        keys = [key_of(i) for i in range(160) if kt != "double" or i != 11]
+        got = SearchIndex.open(spark, out).get_many(keys).collect()
+        assert sorted(r["val"] for r in got) == [
+            i for i in range(160) if kt != "double" or i != 11
+        ]
 
     def test_file_without_key_statistics_gets_null_bounds(self, spark, artifact, tmp_path):
         import pyarrow.parquet as pq
