@@ -200,7 +200,7 @@ def main() -> None:
                 pass
     # Cold-build accounting (r5, keeps the priming protocol honest): the
     # c9/bm25 queries serve from a one-time per-sf artifact (docs search
-    # index + term-bloom/stats/key-range sidecars).  That build cost is
+    # index + term-bloom/stats sidecars).  That build cost is
     # real but one-time, so it is timed HERE — code paths JIT-warmed by the
     # smoke-scale loop above, artifact cold — and reported as its own JSON
     # key (cold_build_docs_index_sec) next to the steady-state total

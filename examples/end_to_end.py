@@ -56,7 +56,6 @@ def main() -> None:
         IndexJobConfig(
             schema=schema, shards=4, micro_shards=16,
             dedup="retain_most_recent", order_field="n_chars", tiebreak=("id",),
-            key_ranges=True,  # per-segment key spans -> file-pruned lookups
         )
     )
     manifest = job.build(docs, staging)

@@ -125,9 +125,6 @@ def build_parser() -> argparse.ArgumentParser:
     idx.add_argument("--search-stats", action="store_true",
                      help="store BM25 collection stats + term dictionary "
                           "(bm25 served from the artifact)")
-    idx.add_argument("--key-ranges", action="store_true",
-                     help="store per-segment key ranges (segment-pruned "
-                          "point lookups and key-range scans)")
     idx.add_argument("--codec", default=None,
                      help="parquet codec for artifact files (e.g. zstd)")
     idx.add_argument("--with-file-metadata", action="store_true",
@@ -850,7 +847,6 @@ def main(argv: list[str] | None = None) -> int:
             max_records_per_file=args.max_records_per_file,
             term_blooms=args.term_blooms,
             search_stats=args.search_stats,
-            key_ranges=args.key_ranges,
             codec=args.codec,
         )
     )

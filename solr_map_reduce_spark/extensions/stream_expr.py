@@ -1416,19 +1416,9 @@ class StreamCompiler:
         fg_terms = agg.filter(
             (F.col("_gid") == 0) & F.col("term").isNotNull()
         ).select("term", "foreground")
-        # n_docs: O(1) driver-side from the key-range sidecar when one is
-        # stored; otherwise fold a metadata-only count(*) into the plan
-        # as a broadcast 1-row crossJoin — either way compile stays free
-        # of eager scans
-        ranges = src._sidecar("key_ranges")
-        if ranges is not None:
-            n_docs_col = F.lit(float(ranges.total_rows()))
-            n_docs_row = None
-        else:
-            n_docs_col = F.col("_n_docs")
-            n_docs_row = src.df().agg(
-                F.count(F.lit(1)).cast("double").alias("_n_docs")
-            )
+        # n_docs: summed driver-side from the parquet footers, so compile
+        # stays free of eager scans
+        n_docs = F.lit(float(src.count()))
         _fname, bg = src._term_dictionary(field)  # (term, df)
         bg = bg.withColumnRenamed("df", "background")
         joined = fg_terms.join(bg, on="term")
@@ -1436,10 +1426,8 @@ class StreamCompiler:
         if max_df is not None:
             joined = joined.filter(F.col("background") <= int(max_df))
         joined = joined.crossJoin(F.broadcast(fg_docs_row))
-        if n_docs_row is not None:
-            joined = joined.crossJoin(F.broadcast(n_docs_row))
         lift = (F.col("foreground") / F.col("_fg_docs")) / (
-            F.col("background") / n_docs_col
+            F.col("background") / n_docs
         )
         out = (
             joined.select(
@@ -1952,9 +1940,9 @@ class StreamCompiler:
         Plan: docFreq is a groupBy over the collection scan restricted
         FIRST by a broadcast semi-join on the (bounded) node set — the
         aggregation touches only matching docs, never the collection;
-        numDocs is O(1) from the key-range sidecar when the source is a
-        SearchIndex, else a metadata-only count folded in as a broadcast
-        1-row crossJoin."""
+        numDocs is summed from the parquet footers when the source is an
+        index, else a metadata-only count folded in as a broadcast 1-row
+        crossJoin."""
         subs = [a for a in node.args if isinstance(a, Call)
                 and a.name not in _METRICS and a.name not in _EVALUATORS]
         if not subs:
@@ -2009,10 +1997,10 @@ class StreamCompiler:
         joined = stream.join(
             F.broadcast(dfreq), stream["node"] == F.col("_sn_val"), "left"
         ).drop("_sn_val")
-        # numDocs: sidecar O(1), else a metadata-only broadcast 1-row
-        ranges = getattr(src, "_sidecar", lambda _name: None)("key_ranges")
-        if ranges is not None:
-            n_docs = F.lit(float(ranges.total_rows()))
+        # numDocs: an index sums its footers, a DataFrame source folds in
+        # a metadata-only broadcast 1-row count
+        if not isinstance(src, DataFrame):
+            n_docs = F.lit(float(src.count()))
         else:
             n_docs = F.col("_sn_ndocs")
             joined = joined.crossJoin(F.broadcast(

@@ -26,8 +26,8 @@ Serving lookups whose input is a handful of small files (ANN bucket
 probes, BM25 df lookups) read them in the driver: :func:`data_files` lists
 a dataset dir the way Spark's reader does, and :func:`read_parquet` decodes
 one file's bytes with pyarrow, pinned to the schema its writer recorded.
-:func:`read_footer` reads only a file's footer (the key-range sidecar's
-per-file spans come from its row-group statistics).  None of them runs a
+:func:`read_footer` reads only a file's footer (point lookups take each
+file's key span from its row-group statistics).  None of them runs a
 Spark job, on any scheme.
 """
 

@@ -43,7 +43,8 @@ from solr_map_reduce_spark.session import local_frame
 # The read side's sidecar loaders, each run at most once per artifact
 # generation by SearchIndex._sidecar.  A loader returns None for a sidecar
 # that is absent or in a layout this engine does not write; readers then
-# take the exact unpruned / computed path.
+# take the exact unpruned / computed path.  The key spans are never
+# absent: they load from the data files' own parquet footers.
 _SIDECAR_LOADERS = {
     "blooms": term_blooms.load_term_blooms,
     "stats": search_stats.load_search_stats,
@@ -139,7 +140,7 @@ class SearchIndex:
         # generation guard: every engine mutation rewrites the manifest
         # (with a bumped generation counter + fresh uuid), so a CONTENT
         # hash of it detects an artifact mutated UNDER a long-lived
-        # handle — stale cached blooms/key-ranges would silently hide
+        # handle — stale cached blooms/key spans would silently hide
         # rows (false negatives) and stale stats would skew scores.
         # Content, not mtime: filesystem mtime is millisecond-or-coarser
         # granular, so two mutations in one timestamp quantum would slip
@@ -222,15 +223,11 @@ class SearchIndex:
 
     # -- C1 ------------------------------------------------------------
     def count(self) -> int:
-        """Match-all count.  Served O(1) driver-side from the key-range
-        sidecar's per-segment row counts when one is stored (Lucene keeps
-        the same docCount in segment metadata) — every engine mutation
-        refreshes the sidecar, so the counts are exact; without a sidecar,
-        a parquet metadata-only count (still no data scan)."""
-        ranges = self._sidecar("key_ranges")
-        if ranges is not None:
-            return ranges.total_rows()
-        return self.df().count()
+        """Match-all count, summed driver-side from the row counts in the
+        segment files' parquet footers (Lucene keeps the same docCount in
+        segment metadata): no Spark job, and exact because the footers
+        are the data's own."""
+        return self._sidecar("key_ranges").total_rows()
 
     # -- C2: point lookup with shard pruning ---------------------------
     def _shard_of(self, key: str) -> int | None:
@@ -240,21 +237,6 @@ class SearchIndex:
         if self.routing != "solr":
             return None
         return self._router.micro_shard_of(str(key))
-
-    def _segment_pruned(self, keys: Sequence[object]) -> DataFrame | None:
-        """Segment-file pruning via the key-range sidecar
-        (key_ranges.py): a DataFrame over ONLY the segment files whose
-        stored [min, max] admits one of the keys — the Lucene per-segment
-        term-dictionary cost model.  None when no sidecar is stored
-        (callers fall back to the shard-pruned scan).  Works under
-        ``routing="native"`` too, where driver-side shard math is
-        unavailable: the ranges alone restore the pruning."""
-        ranges = self._sidecar("key_ranges")
-        if ranges is None:
-            return None
-        shards = {self._shard_of(str(k)) for k in keys}
-        shard = shards if None not in shards else None
-        return self._files_df(ranges.candidate_files(keys, shard=shard))
 
     @property
     def columns(self) -> list[str]:
@@ -287,12 +269,11 @@ class SearchIndex:
 
     def key_range(self, lo=None, hi=None) -> DataFrame:
         """Contiguous key scan ``lo <= key <= hi`` (either bound None =
-        unbounded), segment-pruned through the key-range sidecar when one
-        is stored: only files whose span overlaps the range are read."""
-        ranges = self._sidecar("key_ranges")
-        out = None
-        if ranges is not None:
-            out = self._files_df(ranges.candidate_files_range(lo=lo, hi=hi))
+        unbounded), segment-pruned by the footer key spans: only files
+        whose span overlaps the range are read."""
+        out = self._files_df(
+            self._sidecar("key_ranges").candidate_files_range(lo=lo, hi=hi)
+        )
         if out is None:
             out = self.df()
         key = F.col(self.unique_key)
@@ -308,11 +289,11 @@ class SearchIndex:
         docs are co-sharded and sort-adjacent, so this touches one shard's
         few segments."""
         out = None
-        # pruning only under a string key: a numeric sidecar coerces the
+        # pruning only under a string key: numeric spans coerce the
         # prefix to a NUMBER, whose range is not the string-prefix range
         # ("12" would wrongly exclude 120)
         ranges = self._sidecar("key_ranges")
-        if ranges is not None and ranges.key_type == "string":
+        if ranges.key_type == "string":
             nxt = key_ranges.next_prefix(prefix)
             out = self._files_df(
                 ranges.candidate_files_range(
@@ -337,26 +318,26 @@ class SearchIndex:
         return list(keys)
 
     def get(self, key: str) -> DataFrame:
-        key = self._coerce_keys([key])[0]
-        cond = F.col(self.unique_key) == key
-        pruned = self._segment_pruned([key])
-        if pruned is not None:
-            return pruned.filter(cond)
-        shard = self._shard_of(key)
-        if shard is not None:
-            cond = (F.col(SHARD_COL) == shard) & cond
-        return self.df().filter(cond)
+        return self.get_many([key])
 
     def get_many(self, keys: Sequence[str]) -> DataFrame:
+        """Rows whose unique key is one of ``keys``, read from ONLY the
+        segment files whose footer key span admits one of them
+        (key_ranges.py: the Lucene per-segment term-dictionary cost
+        model) and, when the routing is reproducible driver-side, only
+        the routed shards' partitions.  Under ``routing="native"`` the
+        spans alone prune; keys the spans cannot compare read the whole
+        artifact."""
         keys = self._coerce_keys(list(keys))
         cond = F.col(self.unique_key).isin(keys)
-        pruned = self._segment_pruned(keys)
-        if pruned is not None:
-            return pruned.filter(cond)
         shards = {self._shard_of(str(k)) for k in keys}
-        if None not in shards:
-            cond = F.col(SHARD_COL).isin(sorted(shards)) & cond
-        return self.df().filter(cond)
+        routed = None if None in shards else shards
+        if routed is not None:
+            cond = F.col(SHARD_COL).isin(sorted(routed)) & cond
+        out = self._files_df(
+            self._sidecar("key_ranges").candidate_files(keys, shard=routed)
+        )
+        return (self.df() if out is None else out).filter(cond)
 
     # -- C4/C5: filter + sort + page + project -------------------------
     def search(
@@ -4194,7 +4175,7 @@ class SearchIndex:
         "fields": {name: {"type", "docs" (non-null count),
         "distinct" (HLL++ estimate), "multi_valued"}}, "top_terms"}``.
 
-        Cost model: num_docs is the O(1) sidecar count; the per-field
+        Cost model: num_docs sums the footers' row counts; the per-field
         report is ONE map-side-combined aggregate pass (count +
         approx_count_distinct per column — sketches, constant memory);
         ``top_terms > 0`` adds the analyzed fields' highest-df terms
@@ -4328,7 +4309,7 @@ class MultiIndex:
 
     Every member keeps its OWN serving structures, and the facade
     composes them instead of flattening: ``count()`` sums the members'
-    O(1) sidecar counts, ``get`` unions the members' shard/segment-pruned
+    footer row counts, ``get`` unions the members' shard/segment-pruned
     point lookups, and ``query`` unions each member's Bloom-pruned scan —
     a term missing from an entire day's artifact skips that artifact's
     data files completely.  At 100 TB split across N time slices that is
@@ -4372,7 +4353,7 @@ class MultiIndex:
         return self._union([m.df() for m in self.members])
 
     def count(self) -> int:
-        """Sum of the members' counts — O(1) per member with sidecars."""
+        """Sum of the members' counts, each from its footers."""
         return sum(m.count() for m in self.members)
 
     def get(self, key: str) -> DataFrame:

@@ -40,7 +40,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
+from solr_map_reduce_spark import search_stats, term_blooms
 from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.fs import join as fs_join
@@ -112,10 +112,10 @@ class IndexJobConfig:
     # _vocab/): bm25 queries serve from build-time structures instead of a
     # per-query stats pass (search_stats.py); delta-maintained on mutation.
     search_stats: bool = False
-    # Per-segment key-range sidecar (_key_ranges/): point lookups read
-    # only the segment files whose [min, max] admits the key — the Lucene
-    # per-segment term-dictionary cost model (key_ranges.py).  One extra
-    # column-pruned pass over the key column at build time.
+    # Accepted and ignored: point lookups prune segment files by the key
+    # spans in the parquet footers, read at query time on every artifact
+    # (key_ranges.py), so there is nothing to build.  Kept because
+    # perfbench/workloads.py still passes it.
     key_ranges: bool = False
     # Parquet codec for artifact files.  None = session default (snappy).
     # At 100 TB prefer "zstd": ~30-40% smaller files for a few % CPU — the
@@ -545,7 +545,7 @@ class IndexJob:
         Scale shape: identical to :meth:`merge_into` — only the shards the
         update keys route to are read and rewritten (partition-pruned join
         against a broadcast-size batch), the stats sidecar delta-maintains,
-        and term-bloom/key-range refreshes touch only those shards."""
+        and the term-bloom refresh touches only those shards."""
         if missing not in ("error", "skip", "insert"):
             raise ValueError(f"missing must be error|skip|insert, got {missing!r}")
         spark = updates.sparkSession
@@ -800,8 +800,8 @@ class IndexJob:
         mutation committed since the caller planned against ``plan_gen``
         (the next generation, also the doc-version stamp); write the
         staging dir; let every present sidecar prepare while the old
-        files are still readable; swap the shard dirs; commit Blooms,
-        stats and key ranges; advance the generation (``body`` replaces
+        files are still readable; swap the shard dirs; commit Blooms
+        and stats; advance the generation (``body`` replaces
         the manifest's content when given); delta or re-pin the ANN
         sidecars, which pin themselves to that generation.  Sidecars
         commit BEFORE the generation moves, so a live handle that reloads
@@ -981,16 +981,6 @@ def _stats_commit(rw: _Rewrite, finalize) -> None:
         search_stats.write_search_stats(rw.spark, rw.path)
 
 
-def _ranges_present(rw: _Rewrite, requested: bool) -> bool:
-    return requested or key_ranges.sidecar_exists(rw.fs, rw.path)
-
-
-def _ranges_write(rw: _Rewrite, _state) -> None:
-    # rewritten shards have new segment file names: a stale entry would
-    # be a false negative
-    key_ranges.write_key_ranges(rw.spark, rw.path, shards=rw.touched)
-
-
 def _ann_present(rw: _Rewrite, _requested: bool) -> bool:
     return bool(ann_sidecar.sidecars(rw.fs, rw.path))
 
@@ -1055,9 +1045,6 @@ _SIDECARS = (
         "delete": (_stats_delta, _stats_commit),
         "same": (_stats_unchanged, _stats_commit),
     }),
-    _Sidecar("key_ranges", _ranges_present, dict.fromkeys(
-        ("build", "upsert", "update", "delete", "same"), (None, _ranges_write)
-    )),
     # "build": an appended build leaves the sidecars stale (readers fall
     # back to the exact scan) until build_ann; they store vectors by key,
     # no file names, so the other effects maintain them in O(batch)

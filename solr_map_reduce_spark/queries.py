@@ -1715,7 +1715,7 @@ def _docs_search_index(spark, sf_dir):
             "doc_id", "text", "lang", "source", "n_chars"
         ),
         shards=4, micro_shards=8, dedup="none", routing="native",
-        term_blooms=True, search_stats=True, key_ranges=True,
+        term_blooms=True, search_stats=True,
     )
 
 
@@ -1859,8 +1859,8 @@ def c9_block_join_child(spark, sf_dir):
 @_register(
     "c2_segment_lookup",
     "SELECT doc_id, text FROM documents WHERE doc_id = 7",
-    "C2 point lookup served through the _key_ranges/ segment sidecar: "
-    "only the segment files whose stored [min, max] admits the key are read "
+    "C2 point lookup segment-pruned by the key spans in the parquet footers: "
+    "only the segment files whose [min, max] admits the key are read "
     "(key_ranges.py — the Lucene per-segment term-dictionary cost model)",
 )
 def c2_segment_lookup(spark, sf_dir):
@@ -1870,7 +1870,7 @@ def c2_segment_lookup(spark, sf_dir):
 @_register(
     "c2_key_range",
     "SELECT doc_id, text FROM documents WHERE doc_id BETWEEN 100 AND 120",
-    "Contiguous key-range scan segment-pruned through _key_ranges/ "
+    "Contiguous key-range scan segment-pruned by the footer key spans "
     "(the composite-id root!* scan shape, key_ranges.py)",
 )
 def c2_key_range(spark, sf_dir):
@@ -2303,7 +2303,7 @@ def _events_search_index(spark, sf_dir):
         job = IndexJob(
             IndexJobConfig(
                 schema=schema, shards=4, micro_shards=8, dedup="none",
-                routing="native", key_ranges=True,
+                routing="native",
             )
         )
         path = os.path.join(tempfile.mkdtemp(prefix="smrs_events_idx_"), "index")
@@ -5441,7 +5441,6 @@ def _alias_index(spark, sf_dir):
                 .filter(F.col("doc_id") % 2 == part)
             ),
             shards=2, dedup="none", routing="native", term_blooms=True,
-            key_ranges=True,
         )
         for part in (0, 1)
     ]

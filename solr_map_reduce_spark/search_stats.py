@@ -184,22 +184,21 @@ def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
         fs.delete(fs_join(path, STATS))
     idx = read_index(spark, path)
     n_buckets = _auto_buckets(_size_estimate(idx))
-    # an artifact with no data file scans no partition, so no observed
-    # metrics ever arrive: its statistics are zero
-    empty = not idx.inputFiles()
     stats: dict = {}
     for field, info in analyzed.items():
         out = fs_join(path, f"{VOCAB_DIR}/{field}")
         obs = Observation()
-        observed = idx.observe(obs, *_length_aggs(info["tokens_col"], F.lit(1)))
+        lengths = _length_aggs(info["tokens_col"], F.lit(1))
         field_pass(
-            field, observed, info["tokens_col"],
+            field, idx.observe(obs, *lengths), info["tokens_col"],
             lambda vocab: _write_buckets(vocab, n_buckets, out),
         )
-        stats[field] = (
-            {"n_docs": 0, "sum_dl": 0, "n_dl": 0} if empty
-            else _length_stats(obs.get)
-        )
+        # with no visible term in the corpus (or no row at all) the vocab
+        # write's shuffle is empty, and adaptive execution plans it away
+        # together with the observer upstream of it: the lengths then take
+        # a job of their own
+        written = fs.isdir(out) and any(n.startswith("bucket=") for n in fs.listdir(out))
+        stats[field] = _length_stats(obs.get if written else idx.agg(*lengths).first())
     _write_vocab_meta(fs, path, n_buckets)
     fs.write_text(fs_join(path, STATS), json.dumps(stats))  # marker UP last
     return stats

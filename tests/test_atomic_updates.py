@@ -23,7 +23,7 @@ SCHEMA = IndexSchema(
 def _job(**over):
     cfg = dict(
         schema=SCHEMA, shards=4, dedup="none", routing="native",
-        term_blooms=True, search_stats=True, key_ranges=True,
+        term_blooms=True, search_stats=True,
     )
     cfg.update(over)
     return IndexJob(IndexJobConfig(**cfg))

@@ -178,7 +178,7 @@ class TestGenerationGuard:
         job = IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, dedup="none", routing="native",
-                term_blooms=True, search_stats=True, key_ranges=True,
+                term_blooms=True, search_stats=True,
             )
         )
         path = str(tmp_path / "idx")
@@ -228,7 +228,7 @@ class TestGenerationGuard:
         )
         live = str(tmp_path / "live")
         IndexJob(
-            IndexJobConfig(schema=schema, shards=2, dedup="none", key_ranges=True)
+            IndexJobConfig(schema=schema, shards=2, dedup="none")
         ).build(df, live)
         idx = SearchIndex.open(spark, live)
         assert idx.count() == 60 and idx.shards == 2
@@ -237,7 +237,7 @@ class TestGenerationGuard:
         # rebuild with 4 shards and promote over the live path
         staged = str(tmp_path / "staged")
         IndexJob(
-            IndexJobConfig(schema=schema, shards=4, dedup="none", key_ranges=True)
+            IndexJobConfig(schema=schema, shards=4, dedup="none")
         ).build(df, staged)
         shutil.rmtree(live)
         shutil.move(staged, live)
@@ -270,7 +270,7 @@ class TestGenerationGuardContentBased:
         job = IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, dedup="none", routing="native",
-                term_blooms=True, key_ranges=True,
+                term_blooms=True,
             )
         )
         path = str(tmp_path / "idx")
@@ -374,7 +374,7 @@ class TestGenerationGuardAllMutators:
         job = IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, dedup="none", routing="native",
-                term_blooms=True, search_stats=True, key_ranges=True,
+                term_blooms=True, search_stats=True,
             )
         )
         path = str(tmp_path / "idx")

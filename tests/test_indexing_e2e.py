@@ -233,7 +233,10 @@ def test_invalid_routing_rejected():
 def test_empty_input_build(spark, tmp_path):
     """Building from zero rows with every sidecar must produce a valid,
     openable artifact: the recorded schema opens it as an empty DataFrame,
-    its BM25 statistics are zero, and a merge onto it writes the batch."""
+    its BM25 statistics are zero, and a merge onto it writes the batch.  A
+    build whose documents hold no visible term (empty and NULL text) writes
+    an empty term dictionary and the statistics the delta path keeps for
+    the same documents: two documents, no token."""
     from solr_map_reduce_spark.index_reader import SearchIndex
     from solr_map_reduce_spark.search_stats import load_search_stats
 
@@ -241,7 +244,7 @@ def test_empty_input_build(spark, tmp_path):
     out = str(tmp_path / "empty_idx")
     job = IndexJob(IndexJobConfig(schema=DOC_SCHEMA, shards=2, dedup="retain_most_recent",
                                   order_field="n_chars", term_blooms=True,
-                                  search_stats=True, key_ranges=True))
+                                  search_stats=True))
     job.build(spark.createDataFrame([], cols), out)
     idx = SearchIndex.open(spark, out)
     assert load_search_stats(spark, out) == {"text": {"n_docs": 0, "sum_dl": 0, "n_dl": 0}}
@@ -260,6 +263,21 @@ def test_empty_input_build(spark, tmp_path):
     assert [r["lang"] for r in got] == ["en", "de"]
     assert [r["id"] for r in idx.bm25(["alpha"], k=5).collect()] == ["a"]
     assert read_index(spark, out).columns == idx.df().columns
+
+    blank_rows = spark.createDataFrame(
+        [("c", "", "en", "web", 0), ("d", None, "de", "web", 0)], cols
+    )
+    blank, merged = str(tmp_path / "blank_idx"), str(tmp_path / "blank_merged")
+    job.build(blank_rows, blank)
+    job.build(spark.createDataFrame([], cols), merged)
+    job.merge_into(blank_rows, merged)
+    stats = load_search_stats(spark, blank)
+    assert stats["text"]["n_docs"] == 2 and stats["text"]["sum_dl"] == 0
+    assert stats == load_search_stats(spark, merged)
+    idx = SearchIndex.open(spark, blank)
+    assert idx.count() == 2
+    assert idx.bm25(["alpha"], k=5).count() == 0
+    assert idx.terms(limit=10).count() == 0
 
 
 def test_merge_into_incremental_reindex(spark, sf_dir, tmp_path):
@@ -789,7 +807,7 @@ class TestGoLive:
             IndexJobConfig(
                 schema=self.SCHEMA, shards=2, dedup="retain_most_recent",
                 order_field="rank", routing="native",
-                term_blooms=True, search_stats=True, key_ranges=True,
+                term_blooms=True, search_stats=True,
             )
         )
 

@@ -1,19 +1,28 @@
-"""Per-segment key-range sidecar (key_ranges.py): file pruning for point
-lookups, mutation-safe refresh — the Lucene per-segment term-dictionary
-cost model over the sharded parquet artifact.  The spans come from the
-parquet footers; Spark's per-file aggregate is their oracle."""
+"""Per-segment key spans (key_ranges.py): file pruning for point lookups
+and ``count()``, read from the parquet footers at query time — the Lucene
+per-segment term-dictionary cost model over the sharded parquet artifact.
+Spark's per-file aggregate is the spans' oracle, and no mutation can leave
+them stale: nothing but the data files holds them."""
 
 import json
 import os
 import shutil
+from collections import Counter
 from decimal import Decimal
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import TimestampType
 
+from solr_map_reduce_spark.fs import LocalFS
 from solr_map_reduce_spark.index_reader import SearchIndex
 from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, compact, read_index
-from solr_map_reduce_spark.key_ranges import load_key_ranges, write_key_ranges
+from solr_map_reduce_spark.key_ranges import (
+    KeyRanges,
+    _ShardSpans,
+    load_key_ranges,
+    write_key_ranges,
+)
 from solr_map_reduce_spark.schema import Field, IndexSchema
 
 SCHEMA = IndexSchema(
@@ -28,7 +37,7 @@ SCHEMA = IndexSchema(
 def _job(**over):
     cfg = dict(
         schema=SCHEMA, shards=2, micro_shards=4, dedup="none",
-        key_ranges=True, max_records_per_file=40,
+        max_records_per_file=40,
     )
     cfg.update(over)
     return IndexJob(IndexJobConfig(**cfg))
@@ -41,17 +50,23 @@ def _docs(spark, n=400, start=0):
     )
 
 
-def _sidecar_at(path, key_type, files):
-    """Write a one-shard sidecar in the current layout (``files``: its
-    ``[name, lo, hi, rows]`` entries) under ``path`` and load it."""
-    base = os.path.join(path, "_key_ranges")
-    os.makedirs(base)
-    with open(os.path.join(base, "shard_0.json"), "w") as f:
-        json.dump({"files": files}, f)
-    with open(os.path.join(base, "_META.json"), "w") as f:
-        rows = {"0": sum(n for *_, n in files)}
-        json.dump({"format": 2, "key_type": key_type, "shard_rows": rows}, f)
-    return load_key_ranges(None, path)
+def _spans(ranges):
+    """Every shard's spans, loaded through the handle:
+    ``{(shard, file): [lo, hi, rows]}``."""
+    return {
+        (s, name): [lo, hi, n]
+        for s in range(ranges._shards)
+        for name, lo, hi, n in ranges._load_spans(s).files
+    }
+
+
+def _parquet_files(path):
+    """(shard, file) of every data file on disk."""
+    return {
+        (int(d.split("=", 1)[1]), f)
+        for d in os.listdir(path) if d.startswith("shard=")
+        for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")
+    }
 
 
 @pytest.fixture(scope="module")
@@ -64,30 +79,17 @@ def artifact(spark, tmp_path_factory):
 class TestSidecar:
     def test_sidecar_covers_every_segment_file(self, spark, artifact):
         ranges = load_key_ranges(spark, artifact)
-        assert ranges is not None and ranges["key_type"] == "string"
-        listed = set()
-        for shard_dir in os.listdir(artifact):
-            if shard_dir.startswith("shard="):
-                s = shard_dir.split("=", 1)[1]
-                for f in os.listdir(os.path.join(artifact, shard_dir)):
-                    if f.endswith(".parquet"):
-                        listed.add((s, f))
-        stored = {
-            (s, f) for s, files in ranges["shards"].items() for f in files
-        }
-        assert stored == listed and len(listed) > 2  # multi-segment fixture
+        assert ranges.key_type == "string"
+        listed = _parquet_files(artifact)
+        assert set(_spans(ranges)) == listed and len(listed) > 2  # multi-segment
 
     def test_ranges_are_sorted_key_spans(self, spark, artifact):
-        ranges = load_key_ranges(spark, artifact)
-        for files in ranges["shards"].values():
-            for lo, hi, n in files.values():
-                assert lo <= hi and n > 0
+        for lo, hi, n in _spans(load_key_ranges(spark, artifact)).values():
+            assert lo <= hi and n > 0
 
     def test_candidate_files_narrow(self, spark, artifact):
-        ranges = load_key_ranges(spark, artifact)
-        total = sum(len(f) for f in ranges["shards"].values())
-        cands = ranges.candidate_files(["k00007"])
-        assert 0 < len(cands) < total
+        cands = load_key_ranges(spark, artifact).candidate_files(["k00007"])
+        assert 0 < len(cands) < len(_parquet_files(artifact))
 
 
 class TestPrunedLookup:
@@ -96,9 +98,7 @@ class TestPrunedLookup:
         hit = idx.get("k00123")
         rows = hit.collect()
         assert len(rows) == 1 and rows[0]["val"] == 123
-        ranges = load_key_ranges(spark, artifact)
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(hit.inputFiles()) < total
+        assert 0 < len(hit.inputFiles()) < len(_parquet_files(artifact))
 
     def test_every_key_retrievable(self, spark, artifact):
         idx = SearchIndex.open(spark, artifact)
@@ -119,16 +119,14 @@ class TestPrunedLookup:
         assert got == {"k00001": 1, "k00250": 250, "k00399": 399}
 
     def test_native_routing_still_prunes(self, spark, tmp_path):
-        # native routing has no driver-side shard math — the sidecar alone
-        # restores point-lookup pruning
+        # native routing has no driver-side shard math — the spans alone
+        # restore point-lookup pruning
         out = str(tmp_path / "idx_native")
         _job(routing="native").build(_docs(spark), out)
         idx = SearchIndex.open(spark, out)
         hit = idx.get("k00042")
         assert [r["val"] for r in hit.collect()] == [42]
-        ranges = load_key_ranges(spark, out)
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(hit.inputFiles()) < total
+        assert 0 < len(hit.inputFiles()) < len(_parquet_files(out))
 
     def test_numeric_key_type(self, spark, tmp_path):
         out = str(tmp_path / "idx_num")
@@ -142,16 +140,14 @@ class TestPrunedLookup:
         IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, micro_shards=4, dedup="none",
-                routing="native", key_ranges=True, max_records_per_file=50,
+                routing="native", max_records_per_file=50,
             )
         ).build(df, out)
         idx = SearchIndex.open(spark, out)
-        ranges = load_key_ranges(spark, out)
-        assert ranges["key_type"] == "bigint"
+        assert load_key_ranges(spark, out).key_type == "bigint"
         rows = idx.get(137).collect()
         assert len(rows) == 1 and rows[0]["val"] == 274
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(idx.get(137).inputFiles()) < total
+        assert 0 < len(idx.get(137).inputFiles()) < len(_parquet_files(out))
 
 
 class TestRangeAndPrefixScan:
@@ -160,9 +156,7 @@ class TestRangeAndPrefixScan:
         out = idx.key_range("k00100", "k00119")
         vals = sorted(r["val"] for r in out.collect())
         assert vals == list(range(100, 120))
-        ranges = load_key_ranges(spark, artifact)
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(out.inputFiles()) < total
+        assert 0 < len(out.inputFiles()) < len(_parquet_files(artifact))
 
     def test_key_range_open_bounds(self, spark, artifact):
         idx = SearchIndex.open(spark, artifact)
@@ -174,9 +168,7 @@ class TestRangeAndPrefixScan:
         idx = SearchIndex.open(spark, artifact)
         out = idx.prefix_key("k0039")
         assert sorted(r["val"] for r in out.collect()) == list(range(390, 400))
-        ranges = load_key_ranges(spark, artifact)
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(out.inputFiles()) < total
+        assert 0 < len(out.inputFiles()) < len(_parquet_files(artifact))
 
     def test_composite_id_prefix_colocated(self, spark, tmp_path):
         # Solr composite ids (root!suffix): a root's docs co-shard AND sort
@@ -190,9 +182,7 @@ class TestRangeAndPrefixScan:
         idx = SearchIndex.open(spark, out)
         hits = idx.prefix_key("c007!")
         assert sorted(r["val"] for r in hits.collect()) == list(range(70, 80))
-        ranges = load_key_ranges(spark, out)
-        total = sum(len(f) for f in ranges["shards"].values())
-        assert 0 < len(hits.inputFiles()) < total
+        assert 0 < len(hits.inputFiles()) < len(_parquet_files(out))
 
     def test_numeric_key_prefix_not_pruned_but_correct(self, spark, tmp_path):
         out = str(tmp_path / "idx_num_prefix")
@@ -203,11 +193,11 @@ class TestRangeAndPrefixScan:
         IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, micro_shards=4, dedup="none",
-                routing="native", key_ranges=True, max_records_per_file=50,
+                routing="native", max_records_per_file=50,
             )
         ).build(df, out)
         idx = SearchIndex.open(spark, out)
-        # "12" must match 12, 120..129 (string semantics) — numeric sidecar
+        # "12" must match 12, 120..129 (string semantics) — numeric span
         # pruning is bypassed, correctness preserved
         got = sorted(r["doc_id"] for r in idx.prefix_key("12").collect())
         assert got == [12] + list(range(120, 130))
@@ -215,7 +205,7 @@ class TestRangeAndPrefixScan:
     def test_string_key_numeric_bounds_skip_pruning(self, spark, artifact):
         # numeric bounds against a string key: Spark casts the COLUMN
         # (ANSI: errors loudly; legacy: numeric compare) — lexicographic
-        # pruning would silently diverge, so the sidecar declines to prune
+        # pruning would silently diverge, so the spans decline to prune
         ranges = load_key_ranges(spark, artifact)
         assert ranges.candidate_files_range(lo=100, hi=109) is None
         assert ranges.candidate_files([100]) is None
@@ -229,7 +219,7 @@ class TestRangeAndPrefixScan:
         IndexJob(
             IndexJobConfig(
                 schema=schema, shards=2, micro_shards=4, dedup="none",
-                routing="native", key_ranges=True, max_records_per_file=25,
+                routing="native", max_records_per_file=25,
             )
         ).build(df, out)
         idx = SearchIndex.open(spark, out)
@@ -251,31 +241,13 @@ class TestMutationRefresh:
         out = str(tmp_path / "idx_merge")
         job = _job()
         job.build(_docs(spark), out)
-        # new keys OUTSIDE every stored range: stale sidecar would miss them
+        # new keys OUTSIDE every earlier span: stale spans would miss them
         job.merge_into(_docs(spark, n=50, start=1000), out)
         idx = SearchIndex.open(spark, out)
         rows = idx.get("k01020").collect()
         assert len(rows) == 1 and rows[0]["val"] == 1020
-        # and the sidecar has no dangling (pre-rewrite) file names
-        ranges = load_key_ranges(spark, out)
-        for s, files in ranges["shards"].items():
-            for f in files:
-                assert os.path.exists(os.path.join(out, f"shard={s}", f))
-
-    def test_meta_bytes_are_stable(self, spark, tmp_path):
-        # a full write and every subset refresh of the same artifact write
-        # byte-equal _META.json: shard_rows is ordered by shard number
-        out = str(tmp_path / "idx_meta")
-        _job().build(_docs(spark), out)
-        meta = os.path.join(out, "_key_ranges", "_META.json")
-        write_key_ranges(spark, out)
-        with open(meta, "rb") as f:
-            full = f.read()
-        assert list(json.loads(full)["shard_rows"]) == ["0", "1"]
-        for shards in ([0], [1]):
-            write_key_ranges(spark, out, shards=shards)
-            with open(meta, "rb") as f:
-                assert f.read() == full, shards
+        # and the spans name exactly the post-rewrite files
+        assert set(_spans(load_key_ranges(spark, out))) == _parquet_files(out)
 
     def test_delete_where_refreshes(self, spark, tmp_path):
         out = str(tmp_path / "idx_del")
@@ -304,13 +276,8 @@ class TestMutationRefresh:
         job = _job()
         job.build(_docs(spark), out)
         compact(spark, out, max_segments=1)
-        from solr_map_reduce_spark.fs import LocalFS
-        from solr_map_reduce_spark.key_ranges import sidecar_exists
-
-        assert sidecar_exists(LocalFS(), out)
-        ranges = load_key_ranges(spark, out)
-        for files in ranges["shards"].values():
-            assert len(files) == 1  # one segment per shard after compact
+        per_shard = Counter(s for s, _ in _spans(load_key_ranges(spark, out)))
+        assert per_shard == {0: 1, 1: 1}  # one segment per shard after compact
         idx = SearchIndex.open(spark, out)
         rows = idx.get("k00333").collect()
         assert len(rows) == 1 and rows[0]["val"] == 333
@@ -318,16 +285,15 @@ class TestMutationRefresh:
 
 class TestReviewRegressions:
     def test_subset_write_without_sidecar_builds_full(self, spark, tmp_path):
-        """write_key_ranges(shards=[0]) with NO existing sidecar must cover
-        every shard — a partial sidecar would hide other shards' rows from
-        pruned lookups and count()."""
-        from solr_map_reduce_spark.key_ranges import write_key_ranges
-
+        """``write_key_ranges`` (a subset call included) is a no-op that
+        writes nothing, and an artifact no writer ever touched still has
+        spans for every shard: they come from its footers."""
         out = str(tmp_path / "idx_partial")
-        _job(key_ranges=False).build(_docs(spark), out)
+        _job().build(_docs(spark), out)
+        before = sorted(os.listdir(out))
         write_key_ranges(spark, out, shards=[0])
-        ranges = load_key_ranges(spark, out)
-        assert set(ranges["shards"]) == {"0", "1"}  # both shards present
+        assert sorted(os.listdir(out)) == before
+        assert {s for s, _ in _spans(load_key_ranges(spark, out))} == {0, 1}
         idx = SearchIndex.open(spark, out)
         assert idx.count() == 400
         assert idx.get("k00399").count() == 1
@@ -341,28 +307,25 @@ class TestReviewRegressions:
             [(1.0,), (2.0,), (float("nan"),)], "k double"
         )
         IndexJob(
-            IndexJobConfig(
-                schema=schema, shards=1, dedup="none", routing="native",
-                key_ranges=True,
-            )
+            IndexJobConfig(schema=schema, shards=1, dedup="none", routing="native")
         ).build(df, out)
         ranges = load_key_ranges(spark, out)
         # the NaN-poisoned span still admits ordinary keys (superset rule)
         cands = ranges.candidate_files([2.0])
-        assert cands, ranges
+        assert cands, _spans(ranges)
         idx = SearchIndex.open(spark, out)
         assert idx.get(2.0).count() == 1
 
 
 class TestThirdReviewRegressions:
     def test_timestamp_key_refuses_pruning(self, tmp_path):
-        ranges = _sidecar_at(str(tmp_path), "timestamp", [
-            ["f0.parquet", "2020-01-05 23:00:00", "2020-01-06 00:00:00", 2],
-        ])
-        # Python string compare of serialized timestamps diverges from
-        # Spark's typed compare ('T' vs ' ') — pruning must decline
+        ranges = KeyRanges(LocalFS(), str(tmp_path), "k", TimestampType(), 1)
+        # Python string compare of timestamps diverges from Spark's typed
+        # compare ('T' vs ' ') — pruning must decline, before any footer
+        # is read
         assert ranges.candidate_files(["2020-01-05T12:00"]) is None
         assert ranges.candidate_files_range(lo="2020-01-05T12:00") is None
+        assert ranges.loaded_shards() == set()
 
     def test_get_many_narrows_to_routed_shards(self, spark, artifact):
         idx = SearchIndex.open(spark, artifact)
@@ -384,28 +347,24 @@ class TestThirdReviewRegressions:
         df = spark.createDataFrame(
             [("a", "xx"), ("b", None), ("c", "keep")], "id string, tag string"
         )
-        IndexJob(
-            IndexJobConfig(schema=schema, shards=2, dedup="none", key_ranges=True)
-        ).build(df, out)
+        IndexJob(IndexJobConfig(schema=schema, shards=2, dedup="none")).build(df, out)
         idx = SearchIndex.open(spark, out)
         res = idx.delete_where(F.col("tag") == "xx", str(tmp_path / "idx_out"))
         ids = sorted(r["id"] for r in res.df().select("id").collect())
         assert ids == ["b", "c"]  # NULL-tag row survives
-        # and the result carries a FRESH key-range sidecar (count + lookup)
+        # and the result's count and lookups come from its own footers
         assert res.count() == 2
         assert res.get("b").count() == 1
 
 
 class TestPartitionedSidecar:
-    """Round-5 layout: per-shard span files (_key_ranges/shard_N.json,
-    spans sorted for bisect) loaded lazily — per-lookup work is bounded by
-    the admitted shard, not total file count; count() is O(1) from META."""
+    """Spans load per shard, lazily: per-lookup work is bounded by the
+    admitted shard, not total file count."""
 
     def test_layout_on_disk(self, spark, artifact):
-        base = os.path.join(artifact, "_key_ranges")
-        assert os.path.isfile(os.path.join(base, "_META.json"))
-        shard_files = [f for f in os.listdir(base) if f.startswith("shard_")]
-        assert len(shard_files) == 2  # one span file per shard
+        # the spans live in the footers only: the artifact holds no
+        # key-range file, in this layout or an older one
+        assert not os.path.exists(os.path.join(artifact, "_key_ranges"))
         assert not os.path.exists(os.path.join(artifact, "_KEY_RANGES.json"))
 
     def test_point_lookup_loads_only_admitted_shard(self, spark, tmp_path):
@@ -421,155 +380,94 @@ class TestPartitionedSidecar:
         assert routed is not None
         hit = idx.get("k00123").collect()
         assert len(hit) == 1 and hit[0]["val"] == 123
-        # the handle inside the SearchIndex loaded ONLY the routed shard's
-        # span file — work bounded by the admitted shard, not total files
-        assert idx._sidecar("key_ranges").loaded_shards() == {str(routed)}
+        # the handle inside the SearchIndex read ONLY the routed shard's
+        # footers — work bounded by the admitted shard, not total files
+        assert idx._sidecar("key_ranges").loaded_shards() == {routed}
         # and the admitted file set is tiny vs the artifact's segment count
-        total_files = sum(
-            len(os.listdir(os.path.join(out, d)))
-            for d in os.listdir(out)
-            if d.startswith("shard=")
-        )
-        assert total_files >= 20
+        assert len(_parquet_files(out)) >= 20
         # ≤ micro-shards-per-shard files can admit a key (their spans
         # interleave within the shard) — far below the 20+ total
         assert 0 < len(idx.get("k00123").inputFiles()) <= 4
 
     def test_count_is_meta_only(self, spark, artifact):
-        ranges = load_key_ranges(spark, artifact)
-        assert ranges.total_rows() == 400
-        assert ranges.loaded_shards() == set()  # no span file was read
+        # count() reads the footers' row counts: parquet metadata only,
+        # no data page and no Spark job
+        sc = spark.sparkContext
+        sc.setJobGroup("kr-count", "kr-count")
+        try:
+            ranges = load_key_ranges(spark, artifact)
+            assert ranges.total_rows() == 400
+        finally:
+            sc.setJobGroup("default", "")
+        assert sc.statusTracker().getJobIdsForGroup("kr-count") == []
+        assert ranges.loaded_shards() == {0, 1}
 
     def test_bisect_matches_linear_walk(self, spark, artifact):
         ranges = load_key_ranges(spark, artifact)
+        spans = _spans(ranges)
 
         def linear(key):
-            return sorted(
-                (int(s), name)
-                for s, files in ranges["shards"].items()
-                for name, (lo, hi, _) in files.items()
-                if lo <= key <= hi
-            )
+            return sorted(f for f, (lo, hi, _) in spans.items() if lo <= key <= hi)
 
         for key in ("k00000", "k00123", "k00399", "zzz"):
             assert ranges.candidate_files([key]) == linear(key)
 
-    def test_subset_refresh_rewrites_only_touched_span_files(self, spark, tmp_path):
-        out = str(tmp_path / "idx_touch")
-        job = _job()
-        job.build(_docs(spark), out)
-        base = os.path.join(out, "_key_ranges")
-        before = {
-            f: os.path.getmtime(os.path.join(base, f))
-            for f in os.listdir(base)
-            if f.startswith("shard_")
-        }
-        # route a one-key batch; merge_into refreshes shards=touched
-        batch = _docs(spark, n=1, start=5000)
-        routed = job.route(batch).select("shard").distinct().collect()
-        touched = {str(r["shard"]) for r in routed}
-        assert len(touched) == 1
-        job.merge_into(batch, out)
-        after = {
-            f: os.path.getmtime(os.path.join(base, f))
-            for f in os.listdir(base)
-            if f.startswith("shard_")
-        }
-        for f in before:
-            s = f[len("shard_"):-len(".json")]
-            if s in touched:
-                assert after[f] != before[f]  # rewritten
-            else:
-                assert after[f] == before[f]  # untouched span file intact
-
-    def test_malformed_bounds_keep_file_superset(self, tmp_path):
-        """ADVICE r4: a hand-edited sidecar entry with null/malformed
-        bounds must not raise out of get()/key_range() — the file is kept
-        (superset rule), matching the NaN-span handling."""
-        ranges = _sidecar_at(str(tmp_path), "bigint", [
-            ["ok.parquet", 10, 20, 5], ["bad.parquet", None, "x", 3],
+    def test_malformed_bounds_keep_file_superset(self):
+        """A file whose bounds are null or cannot be coerced is kept for
+        every query (superset rule), matching the NaN-span handling — for a
+        decimal key too, whose malformed bound raises an ArithmeticError."""
+        spans = _ShardSpans("bigint", [
+            ("ok.parquet", 10, 20, 5), ("bad.parquet", None, "x", 3),
         ])
-        both = [(0, "bad.parquet"), (0, "ok.parquet")]
-        assert ranges.candidate_files([15]) == both
-        assert ranges.candidate_files([999]) == [(0, "bad.parquet")]
-        assert ranges.candidate_files_range(lo=11, hi=12) == both
+        assert sorted(spans.stab(15)) == ["bad.parquet", "ok.parquet"]
+        assert spans.stab(999) == ["bad.parquet"]
+        assert sorted(spans.overlap(11, 12, False)) == ["bad.parquet", "ok.parquet"]
+        dec = _ShardSpans("decimal(7,2)", [
+            ("ok.parquet", Decimal("1.00"), Decimal("2.00"), 5),
+            ("bad.parquet", None, None, 3),
+        ])
+        assert sorted(dec.stab(Decimal("1.50"))) == ["bad.parquet", "ok.parquet"]
+        assert dec.stab(Decimal("9.00")) == ["bad.parquet"]
 
 
-class TestFifthReviewRegressions:
-    def test_missing_span_file_declines_pruning_not_empty(self, spark, tmp_path):
-        """A torn sidecar (META lists a shard whose span file is gone) must
-        fall back to the full scan — never an empty result."""
-        out = str(tmp_path / "idx_torn")
-        _job().build(_docs(spark), out)
-        os.remove(os.path.join(out, "_key_ranges", "shard_1.json"))
-        idx = SearchIndex.open(spark, out)
-        found = sum(
-            idx.get(f"k{i:05d}").count() for i in (0, 123, 250, 399)
-        )
-        assert found == 4  # every key still found
-        assert idx.key_range("k00100", "k00119").count() == 20
+class TestStaleSidecarOnDisk:
+    def test_planted_key_ranges_dir_changes_no_answer(self, spark, artifact, tmp_path):
+        """A ``_key_ranges/`` left on disk (here doctored: every shard's row
+        total 0, every span file empty) is never read: counts and lookups
+        equal those of a copy without it, before and after a merge."""
+        planted, clean = str(tmp_path / "planted"), str(tmp_path / "clean")
+        shutil.copytree(artifact, planted)
+        shutil.copytree(artifact, clean)
+        base = os.path.join(planted, "_key_ranges")
+        os.makedirs(base)
+        for s in (0, 1):
+            with open(os.path.join(base, f"shard_{s}.json"), "w") as fh:
+                json.dump({"files": []}, fh)
+        with open(os.path.join(base, "_META.json"), "w") as fh:
+            json.dump({"format": 2, "key_type": "string",
+                       "shard_rows": {"0": 0, "1": 0}}, fh)
 
+        def rows(df):
+            return sorted((r["id"], r["val"]) for r in df.collect())
 
-class TestSixthReviewRegressions:
-    def test_torn_shard_heals_on_subset_refresh(self, spark, tmp_path):
-        """ADVICE r5 (medium): a touched-shard refresh over a TORN sidecar
-        (an untouched shard's span file missing) must recompute that
-        shard's spans from its parquet — the old code wrote an empty
-        shard_N.json (shard_rows=0), turning the tear into permanent
-        silent false negatives."""
-        out = str(tmp_path / "idx_heal")
-        job = _job()
-        job.build(_docs(spark), out)
-        batch = _docs(spark, n=1, start=9000)
-        routed = {r["shard"] for r in job.route(batch).select("shard").distinct().collect()}
-        assert len(routed) == 1
-        torn = ({0, 1} - routed).pop()
-        os.remove(os.path.join(out, "_key_ranges", f"shard_{torn}.json"))
-        job.merge_into(batch, out)
-        # the torn shard's span file was REGENERATED from parquet, not
-        # synthesized empty
-        with open(os.path.join(out, "_key_ranges", f"shard_{torn}.json")) as f:
-            spans = json.load(f)["files"]
-        assert spans, "torn shard must be recomputed, never written empty"
-        with open(os.path.join(out, "_key_ranges", "_META.json")) as f:
-            meta = json.load(f)
-        assert int(meta["shard_rows"][str(torn)]) > 0
-        idx = SearchIndex.open(spark, out)
-        assert idx.count() == 401
-        # every key routed to the formerly-torn shard is retrievable
-        torn_keys = [
-            f"k{i:05d}" for i in range(400)
-            if idx._shard_of(f"k{i:05d}") == torn
-        ][:3]
-        assert torn_keys
-        for k in torn_keys:
-            assert idx.get(k).count() == 1, k
+        def answers(path):
+            idx = SearchIndex.open(spark, path)
+            return {
+                "count": idx.count(),
+                "get": [rows(idx.get(k)) for k in ("k00000", "k00123", "k00399", "k01007")],
+                "get_many": rows(idx.get_many(["k00001", "k00250", "k01003"])),
+                "key_range": rows(idx.key_range("k00100", "k00119")),
+                "prefix_key": rows(idx.prefix_key("k0039")),
+            }
 
-    def test_subset_refresh_never_opens_untouched_span_files(self, spark, tmp_path):
-        """ADVICE r5 (low): the touched-shard refresh must be O(touched) in
-        driver-side READS too — untouched shards contribute only their
-        META row totals.  Proven by poisoning the untouched shard's span
-        file with invalid JSON: any read would crash the refresh."""
-        out = str(tmp_path / "idx_noread")
-        job = _job()
-        job.build(_docs(spark), out)
-        batch = _docs(spark, n=1, start=9100)
-        routed = {r["shard"] for r in job.route(batch).select("shard").distinct().collect()}
-        assert len(routed) == 1
-        untouched = ({0, 1} - routed).pop()
-        with open(os.path.join(out, "_key_ranges", "_META.json")) as f:
-            prior_rows = json.load(f)["shard_rows"]
-        poison_path = os.path.join(out, "_key_ranges", f"shard_{untouched}.json")
-        with open(poison_path, "w") as f:
-            f.write("NOT JSON {{{")  # any json.loads on this file crashes
-        job.merge_into(batch, out)  # must not read the poisoned file
-        with open(poison_path) as f:
-            assert f.read() == "NOT JSON {{{"  # ... and must not rewrite it
-        with open(os.path.join(out, "_key_ranges", "_META.json")) as f:
-            meta = json.load(f)
-        # untouched shard's row total carried forward from the prior META
-        assert meta["shard_rows"][str(untouched)] == prior_rows[str(untouched)]
-        assert sum(int(n) for n in meta["shard_rows"].values()) == 401
+        want = answers(clean)
+        assert want["count"] == 400 and want["key_range"]
+        assert answers(planted) == want
+        for path in (planted, clean):
+            _job().merge_into(_docs(spark, n=10, start=1000), path)
+        want = answers(clean)
+        assert want["count"] == 410 and want["get"][3] == [("k01007", 1007)]
+        assert answers(planted) == want
 
 
 # -- spans from the parquet footers -------------------------------------------
@@ -602,37 +500,18 @@ def _spark_spans(spark, path, key):
         .agg(F.min("_k"), F.max("_k"), F.count(F.lit(1)))
         .collect()
     )
-    return {(str(r[0]), r[1].rsplit("/", 1)[-1]): [_plain(r[2]), _plain(r[3]), r[4]]
+    return {(r[0], r[1].rsplit("/", 1)[-1]): [_plain(r[2]), _plain(r[3]), r[4]]
             for r in rows}
 
 
-def _stored_spans(path):
-    base = os.path.join(path, "_key_ranges")
-    out = {}
-    for name in os.listdir(base):
-        if name.startswith("shard_"):
-            shard = name[len("shard_"):-len(".json")]
-            with open(os.path.join(base, name)) as fh:
-                for f, lo, hi, n in json.load(fh)["files"]:
-                    out[(shard, f)] = [_plain(lo), _plain(hi), n]
-    return out
+def _loaded_spans(spark, path):
+    return {f: [_plain(lo), _plain(hi), n]
+            for f, (lo, hi, n) in _spans(load_key_ranges(spark, path)).items()}
 
 
 def _plain(v):
-    # the sidecar stores decimals as strings; NaN never equals itself
-    if isinstance(v, float) and v != v:
-        return "NaN"
-    return str(v) if isinstance(v, Decimal) else v
-
-
-def _key_json(path):
-    base = os.path.join(path, "_key_ranges")
-    out = {}
-    for name in sorted(os.listdir(base)):
-        if name.endswith(".json") and not name.startswith("."):  # not checksums
-            with open(os.path.join(base, name)) as fh:
-                out[name] = fh.read()
-    return out
+    # NaN never equals itself
+    return "NaN" if isinstance(v, float) and v != v else v
 
 
 class TestFooterSpans:
@@ -649,11 +528,10 @@ class TestFooterSpans:
         )
         IndexJob(IndexJobConfig(
             schema=schema, shards=2, micro_shards=4, dedup="none",
-            routing="native", key_ranges=True, max_records_per_file=30,
+            routing="native", max_records_per_file=30,
         )).build(df, out)
-        ranges = load_key_ranges(spark, out)
-        assert ranges["key_type"] == kt
-        spans = _stored_spans(out)
+        assert load_key_ranges(spark, out).key_type == kt
+        spans = _loaded_spans(spark, out)
         assert len(spans) > 2 and all(lo is not None for lo, _, _ in spans.values())
         assert spans == _spark_spans(spark, out, "k")
         # the spans prune point lookups: every key is still found
@@ -673,13 +551,12 @@ class TestFooterSpans:
         table = pq.ParquetFile(os.path.join(shard, name)).read()
         pq.write_table(table, os.path.join(shard, name), write_statistics=False)
         os.remove(os.path.join(shard, f".{name}.crc"))  # Spark's stale checksum
-        write_key_ranges(spark, out)
-        spans = _stored_spans(out)
-        assert spans[("0", name)] == [None, None, table.num_rows]
+        spans = _loaded_spans(spark, out)
+        assert spans[(0, name)] == [None, None, table.num_rows]
         # every other file keeps the Spark aggregate's bounds
         oracle = _spark_spans(spark, out, "id")
-        assert {f: v for f, v in spans.items() if f != ("0", name)} == {
-            f: v for f, v in oracle.items() if f != ("0", name)
+        assert {f: v for f, v in spans.items() if f != (0, name)} == {
+            f: v for f, v in oracle.items() if f != (0, name)
         }
         # the stats-less file is read for every query: answers stay exact
         keys = sorted(table.column("id").to_pylist())
@@ -697,13 +574,11 @@ class TestFooterSpans:
         ]
         assert idx.count() == 400
 
-    def test_file_uri_writes_the_same_json(self, spark, artifact, tmp_path):
-        out = str(tmp_path / "idx")
-        shutil.copytree(artifact, out)
-        write_key_ranges(spark, out)
-        plain = _key_json(out)
-        write_key_ranges(spark, "file://" + os.path.abspath(out))
-        assert _key_json(out) == plain
-        for shards in ([0], [1]):
-            write_key_ranges(spark, "file://" + os.path.abspath(out), shards=shards)
-            assert _key_json(out) == plain
+    def test_file_uri_reads_the_same_spans(self, spark, artifact):
+        plain = _loaded_spans(spark, artifact)
+        assert plain == _loaded_spans(spark, "file://" + os.path.abspath(artifact))
+        uri = load_key_ranges(spark, "file://" + os.path.abspath(artifact))
+        assert type(uri._fs).__name__ == "HadoopFS"
+        for shard in (0, 1):
+            assert (uri.candidate_files(["k00123"], shard=shard)
+                    == load_key_ranges(spark, artifact).candidate_files(["k00123"], shard=shard))

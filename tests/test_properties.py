@@ -2,8 +2,6 @@
 cover — vectorized/scalar hash parity on arbitrary unicode, routing range
 totality, dedup resolver laws, complex-phrase window vs brute force."""
 
-import contextlib
-import json
 import os
 import tempfile
 
@@ -193,27 +191,17 @@ def test_pack_weights_laws(weights, budget):
             assert sums[chunks[i - 1]] + weights[i] > budget
 
 
-# -- key-range sidecar pruning laws -----------------------------------------
+# -- key-span pruning laws ----------------------------------------------------
 
-from solr_map_reduce_spark.key_ranges import (  # noqa: E402
-    load_key_ranges,
-    next_prefix,
-)
+from solr_map_reduce_spark.key_ranges import _ShardSpans, next_prefix  # noqa: E402
 
 
-@contextlib.contextmanager
-def _one_shard_sidecar(spans, key_type):
-    """A loaded sidecar, in the layout the engine writes, whose shard 0
-    holds ``spans`` as files f0.parquet, f1.parquet, ..."""
-    files = [[f"f{i}.parquet", lo, hi, 1] for i, (lo, hi) in enumerate(spans)]
-    meta = {"format": 2, "key_type": key_type, "shard_rows": {"0": len(files)}}
-    with tempfile.TemporaryDirectory() as path:
-        base = os.path.join(path, "_key_ranges")
-        os.makedirs(base)
-        for name, body in (("shard_0.json", {"files": files}), ("_META.json", meta)):
-            with open(os.path.join(base, name), "w") as f:
-                json.dump(body, f)
-        yield load_key_ranges(None, path)
+def _one_shard(spans, key_type):
+    """One shard's spans whose files f0.parquet, f1.parquet, ... hold
+    ``spans``."""
+    return _ShardSpans(
+        key_type, [(f"f{i}.parquet", lo, hi, 1) for i, (lo, hi) in enumerate(spans)]
+    )
 
 
 @settings(max_examples=200, deadline=None)
@@ -233,8 +221,7 @@ def test_candidate_files_no_false_negatives_int(spans, data):
     i = data.draw(st.integers(0, len(spans) - 1))
     lo, hi = spans[i]
     key = data.draw(st.integers(lo, hi))
-    with _one_shard_sidecar(spans, "bigint") as ranges:
-        assert (0, f"f{i}.parquet") in ranges.candidate_files([key])
+    assert f"f{i}.parquet" in _one_shard(spans, "bigint").stab(key)
 
 
 @settings(max_examples=200, deadline=None)
@@ -253,12 +240,11 @@ def test_candidate_files_range_overlap_complete_str(spans, data):
     i = data.draw(st.integers(0, len(spans) - 1))
     flo, fhi = spans[i]
     # a query range guaranteed to intersect span i (anchored at its lo)
-    with _one_shard_sidecar(spans, "string") as ranges:
-        cands = ranges.candidate_files_range(lo=flo, hi=fhi)
-    assert (0, f"f{i}.parquet") in cands
+    cands = _one_shard(spans, "string").overlap(flo, fhi, False)
+    assert f"f{i}.parquet" in cands
     for j, (jlo, jhi) in enumerate(spans):
         if jhi >= flo and jlo <= fhi:  # intersects -> must be admitted
-            assert (0, f"f{j}.parquet") in cands
+            assert f"f{j}.parquet" in cands
 
 
 @settings(max_examples=300, deadline=None)
@@ -274,28 +260,22 @@ def test_next_prefix_bounds_every_extension(prefix, suffix):
 
 
 def _bisect_equals_linear(spans, key_type, keys):
-    """The handle's sorted-span bisect admits EXACTLY the files a linear
-    walk over the spans admits, for point keys and for closed, half-open
-    and open-ended ranges."""
+    """The sorted-span bisect admits EXACTLY the files a linear walk over
+    the spans admits, for point keys and for closed, half-open and
+    open-ended ranges."""
 
     def linear(admit):
-        return sorted(
-            (0, f"f{i}.parquet") for i, span in enumerate(spans) if admit(*span)
-        )
+        return sorted(f"f{i}.parquet" for i, span in enumerate(spans) if admit(*span))
 
     lo, hi = min(keys), max(keys)
-    with _one_shard_sidecar(spans, key_type) as ranges:
-        assert ranges.candidate_files(keys) == linear(
-            lambda a, b: any(a <= k <= b for k in keys)
-        )
-        assert ranges.candidate_files_range(lo=lo, hi=hi) == linear(
-            lambda a, b: b >= lo and a <= hi
-        )
-        assert ranges.candidate_files_range(lo=lo, hi=hi, hi_exclusive=True) == linear(
-            lambda a, b: b >= lo and a < hi
-        )
-        assert ranges.candidate_files_range(hi=hi) == linear(lambda a, b: a <= hi)
-        assert ranges.candidate_files_range(lo=lo) == linear(lambda a, b: b >= lo)
+    shard = _one_shard(spans, key_type)
+    assert sorted({f for k in keys for f in shard.stab(k)}) == linear(
+        lambda a, b: any(a <= k <= b for k in keys)
+    )
+    assert sorted(shard.overlap(lo, hi, False)) == linear(lambda a, b: b >= lo and a <= hi)
+    assert sorted(shard.overlap(lo, hi, True)) == linear(lambda a, b: b >= lo and a < hi)
+    assert sorted(shard.overlap(None, hi, False)) == linear(lambda a, b: a <= hi)
+    assert sorted(shard.overlap(lo, None, False)) == linear(lambda a, b: b >= lo)
 
 
 @settings(max_examples=200, deadline=None)

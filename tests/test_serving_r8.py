@@ -402,8 +402,7 @@ class TestMultiIndexAlias:
         for part in (0, 1):
             out = str(base / f"slice{part}")
             IndexJob(
-                IndexJobConfig(schema=schema, shards=2, dedup="none",
-                               key_ranges=True)
+                IndexJobConfig(schema=schema, shards=2, dedup="none")
             ).build(df.filter(F.col("num") % 2 == part), out)
             paths.append(out)
         return (MultiIndex.open(spark, paths),

@@ -1,7 +1,8 @@
 """One sidecar lifecycle for every artifact mutation: after merge_into,
 update_fields, delete_where, compact and an appended build, every serving
-sidecar (term Blooms, BM25 stats + ``_vocab``, key ranges, ANN) answers
-exactly what a fresh rebuild would; a torn stats sidecar is rebuilt by every
+sidecar (term Blooms, BM25 stats + ``_vocab``, ANN) answers exactly what a
+fresh rebuild would, and the key spans, read from the parquet footers, name
+exactly the data files; a torn stats sidecar is rebuilt by every
 path; the reader's delete keeps every sidecar; sidecars commit before the
 generation advance; and the mutation paths reach the sidecars only through
 the one policy table.  On the read side, sidecars load only through one
@@ -18,7 +19,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from solr_map_reduce_spark import key_ranges, search_stats, term_blooms
+from solr_map_reduce_spark import search_stats, term_blooms
 from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.index_reader import SearchIndex
@@ -29,7 +30,6 @@ from solr_map_reduce_spark.indexing import (
     compact,
     read_index,
 )
-from solr_map_reduce_spark.key_ranges import write_key_ranges
 from solr_map_reduce_spark.schema import Field, IndexSchema
 from solr_map_reduce_spark.search_stats import load_search_stats, write_search_stats
 
@@ -50,8 +50,7 @@ QUERIES = np.random.RandomState(3).randn(2, DIM)
 def _job():
     return IndexJob(IndexJobConfig(
         schema=SCHEMA, shards=2, dedup="retain_most_recent", order_field="v",
-        term_blooms=True, search_stats=True, key_ranges=True,
-        max_records_per_file=10,
+        term_blooms=True, search_stats=True, max_records_per_file=10,
     ))
 
 
@@ -124,16 +123,6 @@ def _vocab(spark, path):
     }
 
 
-def _key_range_files(path):
-    base = os.path.join(path, "_key_ranges")
-    out = {}
-    for name in sorted(os.listdir(base)):
-        if name.endswith(".json"):
-            with open(os.path.join(base, name)) as fh:
-                out[name] = json.load(fh)
-    return out
-
-
 def _assert_stats_fresh(spark, path):
     # stats + _vocab equal a fresh rebuild
     stats, vocab = load_search_stats(spark, path), _vocab(spark, path)
@@ -143,10 +132,16 @@ def _assert_stats_fresh(spark, path):
 
 def _assert_sidecars_fresh(spark, path):
     _assert_stats_fresh(spark, path)
-    # key ranges equal a fresh full rebuild
-    ranges = _key_range_files(path)
-    write_key_ranges(spark, path)
-    assert ranges == _key_range_files(path)
+    # no key-range file is written; the footer spans name exactly the data
+    # files and sum to Spark's count
+    assert not os.path.exists(os.path.join(path, "_key_ranges"))
+    ranges = SearchIndex.open(spark, path)._sidecar("key_ranges")
+    spans = {(s, name) for s in range(2) for name, *_ in ranges._load_spans(s).files}
+    assert spans == {
+        (s, f) for s in range(2)
+        for f in os.listdir(os.path.join(path, f"shard={s}")) if f.endswith(".parquet")
+    }
+    assert ranges.total_rows() == spark.read.parquet(path).count()
     # every stored token's shard is still a Bloom candidate
     blooms = term_blooms.load_term_blooms(spark, path)
     per_shard = (
@@ -237,13 +232,11 @@ def test_mutations_return_the_committed_manifest(spark, artifact):
 PKG = os.path.join(os.path.dirname(__file__), os.pardir, "solr_map_reduce_spark")
 SIDECAR_NAMES = {
     "term_blooms", "search_stats", "key_ranges", "ann_sidecar",
-    "BLOOMS", "STATS", "VOCAB_DIR", "VOCAB_META", "KEY_RANGES",
-    "KEY_RANGES_DIR", "ANN_DIR", "ANN_META",
+    "BLOOMS", "STATS", "VOCAB_DIR", "VOCAB_META", "ANN_DIR", "ANN_META",
 }
-SIDECAR_FILES = {
-    "_TERM_BLOOMS.json", "_SEARCH_STATS.json", "_vocab", "_KEY_RANGES.json",
-    "_key_ranges", "_ann",
-}
+SIDECAR_FILES = {"_TERM_BLOOMS.json", "_SEARCH_STATS.json", "_vocab", "_ann"}
+# names of the key-range sidecar, which the key spans in the footers replaced
+KEY_RANGE_FILES = {"_key_ranges", "_KEY_RANGES.json", "KEY_RANGES_DIR", "KEY_RANGES"}
 MUTATORS = {
     "indexing.py": {"IndexJob.merge_into", "IndexJob.update_fields",
                     "IndexJob.delete_where", "IndexJob._build_inner", "compact"},
@@ -319,6 +312,19 @@ def test_only_the_session_reads_the_environment():
     assert readers <= {"session.py"}
 
 
+def test_no_module_names_a_key_range_file():
+    """No package module names a key-range sidecar file or its constant,
+    as a name or a string: nothing writes or reads one."""
+    found = {
+        rel for rel, tree in _package_trees()
+        if KEY_RANGE_FILES & (set(_names(tree)) | {
+            node.value for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        })
+    }
+    assert found == set()
+
+
 LOADERS = {"load_term_blooms", "load_search_stats", "load_key_ranges"}
 
 
@@ -345,15 +351,15 @@ def _rows_of(df):
 
 
 def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
-    """Key ranges only as the monolithic _KEY_RANGES.json, a _vocab without
-    _VOCAB_META.json and an ANN sidecar whose manifest records no base schema
-    are layouts the engine no longer writes: they serve exactly like no
-    sidecar, the next merge writes the current stats layout and leaves the
-    ANN sidecar stale, and a manifest without a recorded schema is
-    refused."""
+    """A monolithic _KEY_RANGES.json, a _vocab without _VOCAB_META.json and
+    an ANN sidecar whose manifest records no base schema are layouts the
+    engine no longer writes: they serve exactly like no sidecar (the key
+    spans come from the footers either way), the next merge writes the
+    current stats layout and leaves the ANN sidecar stale, and a manifest
+    without a recorded schema is refused."""
     bare = str(tmp_path / "bare")
     shutil.copytree(artifact, bare)
-    for side in ("_key_ranges", "_vocab", "_ann"):
+    for side in ("_vocab", "_ann"):
         shutil.rmtree(os.path.join(bare, side))
     os.remove(os.path.join(bare, "_SEARCH_STATS.json"))
     ivf_manifest = os.path.join(artifact, "_ann", "embedding", "_IVF_MANIFEST.json")
@@ -362,10 +368,8 @@ def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
     del ivf["vectors_schema"]
     with open(ivf_manifest, "w") as fh:
         json.dump(ivf, fh)
-    ranges = SearchIndex.open(spark, artifact)._sidecar("key_ranges")
     with open(os.path.join(artifact, "_KEY_RANGES.json"), "w") as fh:
-        json.dump({"key_type": ranges["key_type"], "shards": ranges["shards"]}, fh)
-    shutil.rmtree(os.path.join(artifact, "_key_ranges"))
+        json.dump({"key_type": "string", "shards": {"0": {}, "1": {}}}, fh)
     vocab = os.path.join(artifact, "_vocab")
     text_vocab = os.path.join(vocab, "text")
     flat = spark.read.parquet(text_vocab).select("term", "df").collect()
@@ -373,7 +377,7 @@ def test_older_layouts_read_as_absent(spark, artifact, tmp_path):
     spark.createDataFrame(flat, "term string, df bigint").write.parquet(text_vocab)
 
     older, want = SearchIndex.open(spark, artifact), SearchIndex.open(spark, bare)
-    assert older._sidecar("key_ranges") is None and older._sidecar("stats") is None
+    assert older._sidecar("stats") is None
     assert older._ann_sidecar("embedding") is None
     assert older.count() == want.count() == 60
     for read in (
@@ -476,21 +480,29 @@ def test_file_uri_answers_equal_the_plain_path(spark, artifact):
 def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
     """The reads that pay a live handle's generation reload plan from the
     manifest's recorded schema, as do opening the artifact and reading a
-    rewrite's staging dir back: no footer inference, so no job."""
+    rewrite's staging dir back: no footer inference, so no job.  ``count()``
+    sums the footers' row counts in the driver, on a live handle and on a
+    fresh one, although the artifact was built without asking for key
+    ranges."""
     idx = SearchIndex.open(spark, artifact)
     idx.get("k001").collect()
     _merge(spark, artifact)
+    counts = []
     reads = {
         "get": lambda: idx.get("k070"),
         "get_many": lambda: idx.get_many(["k003", "k070"]),
         "key_range": lambda: idx.key_range("k010", "k020"),
         "prefix_key": lambda: idx.prefix_key("k07"),
+        "count": lambda: counts.append(idx.count()),
+        "count_fresh": lambda: counts.append(SearchIndex.open(spark, artifact).count()),
         "read_index": lambda: read_index(spark, artifact),
     }
+    assert not _job().config.key_ranges
     assert {name: _jobs(spark, f"reload-{name}", fn) for name, fn in reads.items()} == {
         name: 0 for name in reads
     }
     assert idx.get("k070").count() == 1
+    assert counts == [61, 61] == [read_index(spark, artifact).count()] * 2
 
     rows = read_index(spark, artifact)
     tmp = artifact + "._staged_tmp"
@@ -503,23 +515,20 @@ def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
 
 
 def test_merge_maintains_sidecars_in_few_jobs(spark, artifact, monkeypatch):
-    """A merge_into refreshes the key ranges from the parquet footers in
-    the driver (no Spark job) and keeps the BM25 stats by one signed pass
-    over the touched shards (at most 6 jobs); a full key-range write runs
-    no job either."""
-    jobs = {}
-    for mod, name in ((key_ranges, "write_key_ranges"),
-                      (search_stats, "prepare_stats_delta")):
-        def counted(*args, _real=getattr(mod, name), _name=name, **kw):
-            out = []
-            jobs[_name] = _jobs(spark, f"merge-{_name}",
-                                lambda: out.append(_real(*args, **kw)))
-            return out[0]
+    """A merge_into keeps the BM25 stats by one signed pass over the
+    touched shards (at most 6 jobs)."""
+    jobs = []
+    real = search_stats.prepare_stats_delta
 
-        monkeypatch.setattr(mod, name, counted)
+    def counted(*args, **kw):
+        out = []
+        jobs.append(_jobs(spark, "merge-prepare_stats_delta",
+                          lambda: out.append(real(*args, **kw))))
+        return out[0]
+
+    monkeypatch.setattr(search_stats, "prepare_stats_delta", counted)
     _merge(spark, artifact)
-    assert jobs["write_key_ranges"] == 0 and jobs["prepare_stats_delta"] <= 6, jobs
-    assert _jobs(spark, "full-key-ranges", lambda: write_key_ranges(spark, artifact)) == 0
+    assert len(jobs) == 1 and jobs[0] <= 6, jobs
     _assert_stats_fresh(spark, artifact)
 
 

@@ -44,9 +44,10 @@ def test_stream_ingest_upserts(spark, tmp_path):
 
 
 def test_stream_ingest_maintains_key_ranges(spark, tmp_path):
-    """Streaming upsert goes through merge_into, which must keep the
-    key-range sidecar fresh — a stale segment name after the per-batch
-    rewrite would silently hide newly ingested docs from point lookups."""
+    """Streaming upsert goes through merge_into; the key spans, read from
+    the footers, name exactly the rewritten segment files — a stale
+    segment name after the per-batch rewrite would silently hide newly
+    ingested docs from point lookups."""
     from solr_map_reduce_spark.index_reader import SearchIndex
     from solr_map_reduce_spark.key_ranges import load_key_ranges
 
@@ -58,8 +59,7 @@ def test_stream_ingest_maintains_key_ranges(spark, tmp_path):
     )
     batch1.write.parquet(inp)
     cfg = IndexJobConfig(schema=SCHEMA, shards=2, dedup="retain_most_recent",
-                         order_field="version", tiebreak=("id",),
-                         key_ranges=True)
+                         order_field="version", tiebreak=("id",))
     stream_ingest(spark, inp, batch1.schema, cfg, out, ckpt).awaitTermination(120)
     spark.createDataFrame(
         [("z-new", "v1", 1)], "id string, payload string, version long"
@@ -72,9 +72,11 @@ def test_stream_ingest_maintains_key_ranges(spark, tmp_path):
     import os
 
     ranges = load_key_ranges(spark, out)
-    for s, files in ranges["shards"].items():
-        for f in files:
-            assert os.path.exists(os.path.join(out, f"shard={s}", f))
+    for s in range(2):
+        names = [name for name, *_ in ranges._load_spans(s).files]
+        assert sorted(names) == sorted(
+            f for f in os.listdir(os.path.join(out, f"shard={s}")) if f.endswith(".parquet")
+        )
 
 
 def test_windowed_event_counts_batch_semantics(spark, sf_dir, tmp_path):
