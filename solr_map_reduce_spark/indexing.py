@@ -106,7 +106,8 @@ class IndexJobConfig:
     # Per-shard term Bloom bitmaps (_TERM_BLOOMS.json sidecar): term/phrase
     # queries prune to candidate shards before the scan — the Lucene
     # touch-only-the-postings cost model approximated at the shard level.
-    # One extra pass over the stored token column at build time.
+    # Built from the one term pass per analyzed field that the BM25 stats
+    # share (search_stats.py); maintained by it on merge and update.
     term_blooms: bool = False
     # Stored BM25 statistics + term dictionary (_SEARCH_STATS.json +
     # _vocab/): bm25 queries serve from build-time structures instead of a
@@ -800,8 +801,8 @@ class IndexJob:
         mutation committed since the caller planned against ``plan_gen``
         (the next generation, also the doc-version stamp); write the
         staging dir; let every present sidecar prepare while the old
-        files are still readable; swap the shard dirs; commit Blooms
-        and stats; advance the generation (``body`` replaces
+        files are still readable; swap the shard dirs; commit the term
+        sidecars (Blooms, stats); advance the generation (``body`` replaces
         the manifest's content when given); delta or re-pin the ANN
         sidecars, which pin themselves to that generation.  Sidecars
         commit BEFORE the generation moves, so a live handle that reloads
@@ -825,7 +826,7 @@ class IndexJob:
                 touched, self.config.schema.unique_key, old, rows, tmp, keys,
                 frozenset(changed),
             )
-            due = [s for s in _SIDECARS if effect in s.cells and s.present(rw, False)]
+            due = [s for s in _SIDECARS if effect in s.cells and s.present(rw)]
             states = [s.cells[effect][0](rw) if s.cells[effect][0] else None for s in due]
             _swap_shard_dirs(
                 fs, path, tmp, [f"{SHARD_COL}={s}" for s in touched], defer_deletion
@@ -897,8 +898,9 @@ def _job_for(manifest: dict, **overrides) -> IndexJob:
 
 # -- the sidecar lifecycle --------------------------------------------------
 #
-# One table drives the four serving sidecars through every artifact
-# mutation.  A rewrite names its EFFECT on the touched shards:
+# One table drives the serving sidecars (the term Blooms and BM25 stats,
+# which share one row and one term pass, and the ANN sidecars) through
+# every artifact mutation.  A rewrite names its EFFECT on the touched shards:
 #
 #   "upsert"  rows replaced or added (the batch keys)          merge_into
 #   "update"  columns set on matched rows (the batch keys)     update_fields
@@ -930,6 +932,7 @@ class _Rewrite:
     tmp: str | None = None  # the staging dir
     keys: DataFrame | None = None  # batch or deleted keys
     changed: frozenset = frozenset()  # columns whose values may differ
+    config: IndexJobConfig | None = None  # a build's config (the sidecars it asks for)
 
     def staged(self) -> DataFrame:
         # a delete's kept rows are a pure filter over old files still on
@@ -942,46 +945,52 @@ class _Rewrite:
         return self.spark.read.schema(self.rows.schema).parquet(self.tmp)
 
 
-def _blooms_present(rw: _Rewrite, requested: bool) -> bool:
-    return bool(rw.analyzed) and (
-        requested or rw.fs.exists(fs_join(rw.path, term_blooms.BLOOMS))
+def _terms_due(rw: _Rewrite) -> tuple[bool, bool]:
+    """(Blooms, stats): the term sidecars this rewrite maintains, each when
+    the build's config asks for it or the artifact carries it.  "delete"
+    and "same" keep the Blooms: a bitmap over shrunk or unchanged content
+    stays a correct superset."""
+    def due(flag: str, name: str) -> bool:
+        return bool(rw.analyzed) and (
+            getattr(rw.config, flag, False) or rw.fs.exists(fs_join(rw.path, name))
+        )
+
+    return (
+        rw.effect in ("build", "upsert", "update") and due("term_blooms", term_blooms.BLOOMS),
+        due("search_stats", search_stats.STATS),
     )
 
 
-def _blooms_write(rw: _Rewrite, _state) -> None:
-    # new tokens in a touched shard: a stale bitmap would be a false negative
-    term_blooms.write_term_blooms(rw.spark, rw.path, shards=rw.touched)
-
-
-def _stats_present(rw: _Rewrite, requested: bool) -> bool:
-    return bool(rw.analyzed) and (
-        requested or rw.fs.exists(fs_join(rw.path, search_stats.STATS))
+def _terms_delta(rw: _Rewrite):
+    # O(touched): one signed term pass moves the stats and the vocab and
+    # recomputes the touched shards' bitmaps; None when a sidecar is torn
+    blooms, stats = _terms_due(rw)
+    return search_stats.prepare_stats_delta(
+        rw.spark, rw.path, rw.old, rw.staged(), rw.touched, blooms=blooms, stats=stats
     )
 
 
-def _stats_delta(rw: _Rewrite):
-    # O(touched): scalar stats and the term dictionary adjust by
-    # agg(new) - agg(old); None when the stored sidecar is torn
-    return search_stats.prepare_stats_delta(rw.spark, rw.path, rw.old, rw.staged())
+def _terms_unchanged(rw: _Rewrite):
+    # unchanged content keeps a whole stats sidecar as it is
+    whole = search_stats._whole_stats(rw.spark, rw.fs, rw.path, rw.analyzed)
+    return (lambda: None) if whole else None
 
 
-def _stats_unchanged(rw: _Rewrite):
-    # unchanged content keeps a whole sidecar as it is
-    if search_stats._whole_stats(rw.spark, rw.fs, rw.path, rw.analyzed):
-        return lambda: None
-    return None
-
-
-def _stats_commit(rw: _Rewrite, finalize) -> None:
-    # a torn (or never prepared) sidecar is rebuilt over the whole corpus:
-    # stale global statistics would silently skew every score
+def _terms_commit(rw: _Rewrite, finalize) -> None:
+    # a torn (or never prepared) sidecar is rebuilt by the full pass:
+    # stale global statistics would silently skew every score, a missing
+    # bitmap would be a query false negative
     if finalize is not None:
         finalize()
-    else:
-        search_stats.write_search_stats(rw.spark, rw.path)
+        return
+    {
+        (True, True): search_stats.write_search_sidecars,
+        (True, False): term_blooms.write_term_blooms,
+        (False, True): search_stats.write_search_stats,
+    }[_terms_due(rw)](rw.spark, rw.path)
 
 
-def _ann_present(rw: _Rewrite, _requested: bool) -> bool:
+def _ann_present(rw: _Rewrite) -> bool:
     return bool(ann_sidecar.sidecars(rw.fs, rw.path))
 
 
@@ -1024,31 +1033,24 @@ def _ann_delete(rw: _Rewrite, state) -> None:
 
 
 class _Sidecar(NamedTuple):
-    name: str  # the module, and the IndexJobConfig flag requesting it
-    present: Callable  # (rw, requested) -> the sidecar is due
+    present: Callable  # rw -> the sidecar is due
     cells: dict  # effect -> (prepare | None, commit)
     after_generation: bool = False  # commits after the generation advance
 
 
 _SIDECARS = (
-    # "delete"/"same": a bitmap over shrunk or unchanged content stays a
-    # correct superset
-    _Sidecar("term_blooms", _blooms_present, {
-        "build": (None, _blooms_write),
-        "upsert": (None, _blooms_write),
-        "update": (None, _blooms_write),
-    }),
-    _Sidecar("search_stats", _stats_present, {
-        "build": (None, _stats_commit),
-        "upsert": (_stats_delta, _stats_commit),
-        "update": (_stats_delta, _stats_commit),
-        "delete": (_stats_delta, _stats_commit),
-        "same": (_stats_unchanged, _stats_commit),
+    # term Blooms and BM25 stats + _vocab, from one term pass per field
+    _Sidecar(lambda rw: any(_terms_due(rw)), {
+        "build": (None, _terms_commit),
+        "upsert": (_terms_delta, _terms_commit),
+        "update": (_terms_delta, _terms_commit),
+        "delete": (_terms_delta, _terms_commit),
+        "same": (_terms_unchanged, _terms_commit),
     }),
     # "build": an appended build leaves the sidecars stale (readers fall
     # back to the exact scan) until build_ann; they store vectors by key,
     # no file names, so the other effects maintain them in O(batch)
-    _Sidecar("ann_sidecar", _ann_present, {
+    _Sidecar(_ann_present, {
         "upsert": (_ann_changed_rows, _ann_upsert),
         "update": (_ann_changed_rows, _ann_upsert),
         "delete": (_ann_deleted_keys, _ann_delete),
@@ -1064,18 +1066,11 @@ def _build_sidecars(
     or the artifact already carries — an appended build must refresh a
     sidecar an EARLIER config built, or its rows would be invisible to
     pruned lookups (an overwrite wiped the directory, sidecars included)."""
-    rw = _Rewrite(spark, get_fs(path, spark), path, "build", manifest.get("analyzed", {}))
-    due = [
-        s for s in _SIDECARS
-        if "build" in s.cells and s.present(rw, getattr(cfg, s.name, False))
-    ]
-    fused = {"term_blooms", "search_stats"}
-    if fused <= {s.name for s in due}:
-        # ONE tokenized corpus pass per analyzed field serves both
-        search_stats.write_search_sidecars(spark, path)
-        due = [s for s in due if s.name not in fused]
-    for s in due:
-        s.cells["build"][1](rw, None)
+    rw = _Rewrite(spark, get_fs(path, spark), path, "build",
+                  manifest.get("analyzed", {}), config=cfg)
+    for s in _SIDECARS:
+        if "build" in s.cells and s.present(rw):
+            s.cells["build"][1](rw, None)
 
 
 MUTATION_LOCK = "_MUTATION_LOCK"

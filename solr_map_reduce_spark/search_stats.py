@@ -20,9 +20,13 @@ bucketing prunes POINT df lookups to |Q| buckets; in-bucket term order
 prunes PREFIX scans within every bucket.  The repartition also yields
 one file per bucket dir instead of one per writing task.
 
-Build: one pass over the stored token column — ``n_docs`` (all rows),
-``sum_dl``/``n_dl`` (token-array lengths), and the term dictionary via
-``explode(array_distinct) → groupBy(term).count()``.
+Build: ONE term pass per analyzed field (:func:`_term_pass`) writes both
+term sidecars — this one and the term Blooms (term_blooms.py).  It
+groups the stored tokens by term once: each term's df and the set of
+shards holding it.  ``n_docs`` (all rows) and ``sum_dl``/``n_dl``
+(token-array lengths) ride the pass as an Observation on the rows before
+the explode.  A full write is a delta from an empty artifact: zero stored
+stats, an empty stored vocab, every bucket touched.
 
 Query: ``SearchIndex.bm25`` looks up the |Q| needed df values in the
 driver (:func:`term_dfs`): the query terms' buckets are computed with the
@@ -38,19 +42,20 @@ dictionary (delta merge, fuzzy expansion, the term dictionary) keep the
 Spark reader :func:`read_vocab`.
 
 Mutation: ``merge_into``, ``update_fields`` and ``delete_where``
-DELTA-MAINTAIN the sidecar (:func:`prepare_stats_delta`) with ONE signed
-pass per analyzed field: the touched shards' old rows (sign -1) and
-rewritten rows (+1) are exploded into their distinct visible terms and
-summed by term, which gives every term's df delta; observers carry the
-n_docs/sum_dl/n_dl delta (from the rows before the explode) and the
-changed terms' bucket set (from the aggregate) to the driver, and the
-O(changed terms) delta is checkpointed.  The term dictionary then gets a
-df-delta merge that READS and REWRITES
-only those buckets — the incremental path is O(touched shards +
+DELTA-MAINTAIN the sidecar (:func:`prepare_stats_delta`) with the same
+pass, signed: the touched shards' old rows (sign -1) and rewritten rows
+(+1) are exploded into their distinct terms and summed by term, which
+gives every term's df delta; observers carry the n_docs/sum_dl/n_dl delta
+(from the rows before the explode) and the changed terms' bucket set (from
+the aggregate) to the driver, and the O(changed terms) aggregate is
+checkpointed.  The one vocab writer (:func:`_write_vocab`) then READS and
+REWRITES only those buckets — the incremental path is O(touched shards +
 changed-term buckets) end to end, never O(corpus) and never O(|vocab|).
 At 100 TB a term dictionary is billions of rows; a 1 GB batch touches a
-bounded set of buckets instead of rewriting the whole dictionary.  ``compact``
-preserves the sidecar unchanged (content is identical).
+bounded set of buckets instead of rewriting the whole dictionary.  The
+same pass recomputes the touched shards' Bloom bitmaps when that sidecar
+is maintained.  ``compact`` preserves the sidecar unchanged (content is
+identical).
 
 Crash consistency: ``_SEARCH_STATS.json`` doubles as the COMMIT MARKER.
 Every reader gates stored-vocab use on the stats file, so finalize
@@ -58,7 +63,7 @@ deletes it FIRST, promotes the vocab buckets, and rewrites it LAST — a
 crash anywhere between leaves readers on the computed-stats fallback
 (correct scores from the post-swap corpus, merely slower) instead of the
 old skew state (new vocab served against old scalars).
-``write_search_stats`` repairs a torn sidecar from scratch.
+A torn sidecar is repaired by a full write (``write_search_stats``).
 """
 
 from __future__ import annotations
@@ -67,6 +72,7 @@ import json
 import zlib
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import Observation, SparkSession
 
 STATS = "_SEARCH_STATS.json"
@@ -135,19 +141,6 @@ def _write_vocab_meta(fs, path: str, n_buckets: int) -> None:
     )
 
 
-def _write_buckets(vocab, n_buckets: int, out: str) -> None:
-    """Write a ``(term, df)`` dictionary hash-bucketed by term: one
-    term-sorted file per ``bucket=N`` dir."""
-    (
-        vocab.withColumn("bucket", _bucket_expr(n_buckets))
-        .repartition(F.col("bucket"))
-        .sortWithinPartitions("bucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(out)
-    )
-
-
 def read_vocab(spark: SparkSession, path: str, field: str, buckets=None):
     """``field``'s stored term dictionary as ``(term, df)`` rows, read with
     the schema its writer recorded (no footer inference: planning runs no
@@ -160,135 +153,22 @@ def read_vocab(spark: SparkSession, path: str, field: str, buckets=None):
     return vocab.select("term", "df")
 
 
-def _write_vocab(spark: SparkSession, path: str, field_pass) -> dict | None:
-    """The one full build of the stats sidecar: BM25 statistics + the term
-    dictionary for every analyzed field of the artifact at ``path``, one
-    tokenized corpus pass per field.  Per field, ``field_pass(field,
-    observed, tokens_col, write)`` derives the ``(term, df)`` dictionary
-    from ``observed`` (the artifact) and hands it to ``write``; the
-    scalar statistics ride that job as an ``Observation`` on the
-    pre-explode rows instead of running their own corpus scan.  The
-    ``_SEARCH_STATS.json`` commit marker goes DOWN before any vocab dir is
-    in flux and UP last.  Returns the stats (None when the artifact has no
-    analyzed fields)."""
-    from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import MANIFEST, read_index
-
-    fs = get_fs(path, spark)
-    manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
-    analyzed: dict = manifest.get("analyzed", {})
-    if not analyzed:
-        return None
-    if fs.exists(fs_join(path, STATS)):
-        fs.delete(fs_join(path, STATS))
-    idx = read_index(spark, path)
-    n_buckets = _auto_buckets(_size_estimate(idx))
-    stats: dict = {}
-    for field, info in analyzed.items():
-        out = fs_join(path, f"{VOCAB_DIR}/{field}")
-        obs = Observation()
-        lengths = _length_aggs(info["tokens_col"], F.lit(1))
-        field_pass(
-            field, idx.observe(obs, *lengths), info["tokens_col"],
-            lambda vocab: _write_buckets(vocab, n_buckets, out),
-        )
-        # with no visible term in the corpus (or no row at all) the vocab
-        # write's shuffle is empty, and adaptive execution plans it away
-        # together with the observer upstream of it: the lengths then take
-        # a job of their own
-        written = fs.isdir(out) and any(n.startswith("bucket=") for n in fs.listdir(out))
-        stats[field] = _length_stats(obs.get if written else idx.agg(*lengths).first())
-    _write_vocab_meta(fs, path, n_buckets)
-    fs.write_text(fs_join(path, STATS), json.dumps(stats))  # marker UP last
-    return stats
-
-
 def write_search_stats(spark: SparkSession, path: str) -> dict | None:
     """Compute and persist BM25 statistics + the term dictionary for every
-    analyzed field of the artifact at ``path``.  Returns the stats dict
-    (None when the artifact has no analyzed fields)."""
-    return _write_vocab(
-        spark, path,
-        lambda _field, observed, tokens_col, write: write(
-            _term_df(observed, tokens_col)
-        ),
-    )
+    analyzed field of the artifact at ``path``, from scratch (this is also
+    the repair of a torn sidecar).  Returns the stats dict (None when the
+    artifact has no analyzed fields)."""
+    return _stage_terms(spark, path, blooms=False, stats=True)()[1]
 
 
 def write_search_sidecars(
     spark: SparkSession, path: str
 ) -> tuple[dict | None, dict | None]:
-    """Full rebuild of BOTH serving sidecars (term blooms + BM25
-    stats/vocab) from ONE tokenized corpus pass per analyzed field, with
-    outputs byte-identical to ``write_term_blooms`` + ``write_search_stats``.
-
-    Both of those scan + explode the stored token column; here one
-    per-``(term, shard)`` doc-count aggregate serves the two of them —
-    the bloom bitmaps need term PRESENCE per shard (all tokens,
-    reversed-copy markers included), the vocab needs the per-term doc
-    count (visible tokens only), and both are projections of that one
-    aggregate.  The aggregate (|vocab| x |shards| rows, far smaller than
-    the corpus) is persisted across the projections and unpersisted
-    before the next field.
-
-    Equivalences (vs the separate writers, verified byte-identical in
-    tests): a visible term appears in ``array_distinct(tokens)`` iff it
-    appears in ``array_distinct(visible(tokens))`` — the reversed copies
-    are DISTINCT marked tokens, so filtering visibility on the exploded
-    term column commutes with filtering the array before exploding; and
-    ``sum_shards(count_docs(term, shard)) == count_docs(term)`` because
-    every doc lives in exactly one shard.
-
-    Subset refreshes (``write_term_blooms(shards=...)``) and delta
-    maintenance keep the dedicated writers.  Returns ``(blooms_sidecar,
-    stats)`` (both None when the artifact has no analyzed fields)."""
-    from solr_map_reduce_spark.extensions.search import REV_MARK
-    from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import SHARD_COL
-    from solr_map_reduce_spark.term_blooms import (
-        BLOOMS,
-        DEFAULT_K,
-        _auto_bloom_m,
-        _bitmaps,
-        _max_shard_terms,
-    )
-
-    blooms: dict = {}
-
-    def field_pass(field, observed, tokens_col, write) -> None:
-        placement = (
-            observed.select(
-                F.col(SHARD_COL).alias("_s"),
-                F.explode(F.array_distinct(F.col(tokens_col))).alias("term"),
-            )
-            .groupBy("term", "_s")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .persist()
-        )
-        try:
-            # coalesce: a sum is nullable, a count is not — the vocab
-            # files' schema must match write_search_stats'
-            write(
-                placement.filter(~F.col("term").startswith(REV_MARK))
-                .groupBy("term")
-                .agg(F.coalesce(F.sum("_n"), F.lit(0)).alias("df"))
-            )
-            m = _auto_bloom_m(_max_shard_terms(placement))
-            blooms[field] = {
-                "m": m,
-                "k": DEFAULT_K,
-                "shards": _bitmaps(placement, "term", m, DEFAULT_K),
-            }
-        finally:
-            placement.unpersist()
-
-    stats = _write_vocab(spark, path, field_pass)
-    if stats is None:
-        return None, None
-    get_fs(path, spark).write_text(fs_join(path, BLOOMS), json.dumps(blooms))
-    return blooms, stats
+    """Full write of BOTH term sidecars (term Blooms + BM25 stats/vocab)
+    from one term pass per analyzed field (:func:`_term_pass`).  Returns
+    ``(blooms_sidecar, stats)`` (both None when the artifact has no
+    analyzed fields)."""
+    return _stage_terms(spark, path, blooms=True, stats=True)()
 
 
 def _real_toks(tokens_col: str) -> F.Column:
@@ -315,157 +195,249 @@ def _length_aggs(tokens_col: str, sign: F.Column) -> list[F.Column]:
     ]
 
 
+_ZERO = {"n_docs": 0, "sum_dl": 0, "n_dl": 0}
+
+
 def _length_stats(row) -> dict:
-    return {key: int(row[key] or 0) for key in ("n_docs", "sum_dl", "n_dl")}
+    return {key: int(row[key] or 0) for key in _ZERO}
 
 
-def _term_df(df, tokens_col: str):
-    return (
-        df.select(F.explode(F.array_distinct(_real_toks(tokens_col))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+def _term_pass(old_rows, new_rows, tokens_col: str, n_buckets, shards: list[int]):
+    """The one pass over a field's stored token column that both term
+    sidecars come from, for a full write and for a mutation alike.
 
+    The old rows (sign -1; None when only the Blooms are maintained) and the
+    new rows (+1) are exploded into their distinct tokens, reversed-copy
+    markers included, and grouped by term once: ``_ddf`` is the term's df
+    change (``df_new - df_old``) and ``_shards`` the set of ``shards`` whose
+    new rows hold it.  The stats keep the visible terms of ``_ddf``, the
+    Blooms hash ``_shards``.  A visible term appears in
+    ``array_distinct(tokens)`` iff it appears in
+    ``array_distinct(visible(tokens))``, because the reversed copies are
+    DISTINCT marked tokens, so dropping them after the aggregate equals
+    dropping them before the explode.
 
-def _signed_delta(old_rows, new_rows, tokens_col: str, n_buckets: int):
-    """The change a rewrite of ``old_rows`` into ``new_rows`` makes to a
-    field's statistics, in ONE pass over both, the old rows signed -1 and
-    the new +1.  Returns ``(scalars, buckets, delta)``: the change of
-    n_docs/sum_dl/n_dl, the sorted hash buckets holding a changed term (at
-    most ``n_buckets`` values), and ``(term, _ddf)`` rows for every
-    visible term whose df changed, ``_ddf = df_new - df_old``,
-    checkpointed (O(changed terms)).
+    Returns ``(change, buckets, shard_terms, terms)``: the change of
+    n_docs/sum_dl/n_dl, observed on the signed rows before the explode with
+    ``_length_aggs``' exact integer sums; the sorted hash buckets (of
+    ``n_buckets``; none when it is None) holding a visible term whose df
+    changed; each shard's distinct-term count (what a full write sizes the
+    Bloom width from), observed on the aggregate; and the ``(term, _ddf,
+    _shards)`` rows, checkpointed.  The explode keeps a row with no token
+    (as a null term, dropped before the checkpoint), so the aggregate sees
+    a row whenever either side has one; when it sees none, no metric
+    arrives from before it (adaptive execution plans the empty scans away)
+    and the change is zero."""
+    from solr_map_reduce_spark.extensions.search import REV_MARK
+    from solr_map_reduce_spark.indexing import SHARD_COL
 
-    The scalars are observed on the signed rows before the explode, with
-    ``_length_aggs``' per-row expressions (exact integer sums); the bucket
-    set is observed on the aggregate.  The explode keeps a row with no
-    visible term (as a null term), so the aggregate sees a row whenever
-    either side has one: when it sees none, no observed metric arrives
-    from before it (the empty scans are planned away) and the change is
-    zero."""
-    signed = old_rows.select(F.lit(-1).alias("_sign"), tokens_col).unionByName(
-        new_rows.select(F.lit(1).alias("_sign"), tokens_col)
-    )
-    real, changed = F.col("term").isNotNull(), F.col("_ddf") != 0
+    def signed(rows, sign: int):
+        return rows.select(
+            F.lit(sign).alias("_sign"), F.col(SHARD_COL).alias("_s"), tokens_col
+        )
+
+    rows = signed(new_rows, 1)
+    if old_rows is not None:
+        rows = signed(old_rows, -1).unionByName(rows)
+    term, sign = F.col("term"), F.col("_sign")
+    real = term.isNotNull()
+    metrics = [F.count(F.lit(1)).alias("n")] + [
+        F.count_if(real & F.array_contains("_shards", s)).alias(f"shard{s}")
+        for s in shards
+    ]
+    if n_buckets is not None:
+        changed = real & ~term.startswith(REV_MARK) & (F.col("_ddf") != 0)
+        metrics.append(
+            F.collect_set(F.when(changed, _bucket_expr(n_buckets))).alias("buckets")
+        )
     lengths, groups = Observation(), Observation()
-    delta = (
-        signed.observe(lengths, *_length_aggs(tokens_col, F.col("_sign")))
-        .select(
-            "_sign",
-            F.explode_outer(F.array_distinct(_real_toks(tokens_col))).alias("term"),
-        )
+    terms = (
+        rows.observe(lengths, *_length_aggs(tokens_col, sign))
+        .select("_sign", "_s",
+                F.explode_outer(F.array_distinct(F.col(tokens_col))).alias("term"))
         .groupBy("term")
-        .agg(F.sum("_sign").alias("_ddf"))
-        .withColumn("bucket", _bucket_expr(n_buckets))
-        .observe(
-            groups,
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(F.when(real & changed, F.col("bucket"))).alias("buckets"),
-        )
-        .filter(real & changed)
-        .select("term", "_ddf")
-        .localCheckpoint(eager=True)
+        .agg(F.sum(sign).alias("_ddf"),
+             F.collect_set(F.when(sign > 0, F.col("_s"))).alias("_shards"))
+        .observe(groups, *metrics)
+        .filter(real)
+        # serialized blocks (PySpark's MEMORY_AND_DISK): a fifth of the
+        # size of deserialized rows, and both consumers read them
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     seen = groups.get
-    if not seen["n"]:
-        return {"n_docs": 0, "sum_dl": 0, "n_dl": 0}, [], delta
-    return _length_stats(lengths.get), sorted(seen["buckets"]), delta
+    change = _length_stats(lengths.get) if seen["n"] else dict(_ZERO)
+    shard_terms = {s: int(seen[f"shard{s}"]) for s in shards}
+    return change, sorted(seen.get("buckets", [])), shard_terms, terms
 
 
-def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
-    """O(touched) delta maintenance for a touched-shard rewrite (the
-    ``merge_into`` path).  ``old_subset`` is the artifact content of the
-    touched shards BEFORE the swap (still readable); ``new_subset`` is the
-    rewritten content (read back from the staging dir, already
-    materialized).  All scans run HERE, pre-swap, per analyzed field:
+def _write_vocab(spark: SparkSession, path: str, field: str, terms,
+                 n_buckets: int, buckets) -> None:
+    """The one vocab writer: stages ``field``'s new dictionary rows in
+    ``_vocab/<field>__pending``.  The stored rows of the changed-term
+    ``buckets`` (none on a full write, ``buckets`` None) and the df change
+    of every visible term of ``terms`` (a :func:`_term_pass` result) are
+    summed per term after ONE exchange by bucket; terms reaching 0 drop.
+    Each bucket gets one term-sorted file whose ``df`` is a non-nullable
+    bigint, whichever path wrote it."""
+    from solr_map_reduce_spark.extensions.search import REV_MARK
+    from solr_map_reduce_spark.fs import join as fs_join
 
-    - one signed pass over both subsets (:func:`_signed_delta`) gives
-      ``stats' = stats - agg(old) + agg(new)`` (exact integer arithmetic —
-      identical to a full rebuild by associativity of count/sum) and the
-      df delta of every changed term;
-    - the term dictionary gets a df-delta merge: ``df'(t) = df_stored(t)
-      + df_new(t) - df_old(t)``, terms reaching 0 dropped.  Only changed
-      terms can move, so the merge reads the stored vocab with a
-      BUCKET-PRUNED scan (partition filter on the changed terms' buckets)
-      and writes only those buckets to a ``<field>__pending`` staging dir
-      — the vocab write is O(changed-term buckets), not O(|vocab|).
+    rows = terms.filter(
+        ~F.col("term").startswith(REV_MARK) & (F.col("_ddf") != 0)
+    ).select("term", F.col("_ddf").alias("df"))
+    if buckets is not None:
+        # pinned schema: untouched buckets are never read, not even to plan
+        rows = read_vocab(spark, path, field, buckets).unionByName(rows)
+    (
+        rows.withColumn("bucket", _bucket_expr(n_buckets))
+        .repartition(F.col("bucket"))
+        .groupBy("bucket", "term")
+        .agg(F.coalesce(F.sum("df"), F.lit(0)).alias("df"))
+        .filter(F.col("df") > 0)
+        .sortWithinPartitions("bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(fs_join(path, f"{VOCAB_DIR}/{field}__pending"))
+    )
 
-    Returns a ``finalize()`` closure to call AFTER the artifact swap; it
-    takes the ``_SEARCH_STATS.json`` commit marker DOWN (readers fall
-    back to computed stats — correct, never skewed), swaps in the pending
-    bucket dirs (rename-aside, old buckets survive in a trash dir until
-    the new ones are in place), and writes the updated stats file LAST.
-    Returns None when the artifact has no (complete) stats sidecar — the
-    caller should fall back to ``write_search_stats`` or skip."""
+
+def _move(fs, src: str, dst: str) -> None:
+    if fs.exists(src):
+        fs.rename(src, dst)
+
+
+def _swap_vocab(fs, path: str, pending: dict) -> None:
+    """Promote each field's staged buckets: ``pending`` maps a field to
+    its touched buckets, or to None when a full write replaces the whole
+    dir.  A touched bucket with no staged dir lost all its terms and is
+    removed (its old contents would serve stale dfs); old buckets survive
+    in a trash dir until the new ones are in place."""
+    from solr_map_reduce_spark.fs import join as fs_join
+
+    trash = fs_join(path, VOCAB_DIR, "__trash")
+    fs.delete(trash)
+    fs.mkdirs(trash)
+    for field, buckets in pending.items():
+        cur = fs_join(path, VOCAB_DIR, field)
+        pend, old = f"{cur}__pending", fs_join(trash, field)
+        if buckets is None:
+            _move(fs, cur, old)
+            _move(fs, pend, cur)
+            fs.mkdirs(cur)  # an empty dictionary may stage no dir
+            continue
+        fs.mkdirs(old)
+        for b in buckets:
+            name = f"bucket={b}"
+            _move(fs, fs_join(cur, name), fs_join(old, name))
+            _move(fs, fs_join(pend, name), fs_join(cur, name))
+        fs.delete(pend)
+    fs.delete(trash)
+
+
+def _stage_terms(spark: SparkSession, path: str, blooms: bool, stats: bool,
+                 old_rows=None, new_rows=None, touched=None):
+    """Stage the term sidecars' new state from one :func:`_term_pass` per
+    analyzed field; returns the ``finalize()`` that commits it, or None
+    when a stored sidecar is torn.
+
+    ``touched`` None is a full write, treated as a delta from an empty
+    artifact: the new rows are the whole artifact, the stored stats are
+    zeros and the stored vocab empty, the bucket count comes from the
+    artifact's size estimate, every shard and bucket counts as touched,
+    and each Bloom width is sized from the observed per-shard term counts.
+    Otherwise ``old_rows``/``new_rows`` are the ``touched`` shards before
+    and after a rewrite: the stats and the vocab buckets of the changed
+    terms move by the signed change, and the touched shards' bitmaps are
+    recomputed at the stored (m, k).  The stats are torn when
+    :func:`_whole_stats` refuses them, the Blooms when a field has no
+    stored (m, k); the caller then runs the full write.
+
+    ``finalize()`` writes the Blooms, then takes the ``_SEARCH_STATS.json``
+    commit marker DOWN, promotes the staged vocab buckets and writes the
+    stats LAST; it returns ``(blooms_sidecar, stats)``, None for an output
+    not maintained."""
+    from solr_map_reduce_spark import term_blooms
     from solr_map_reduce_spark.fs import get_fs
     from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import MANIFEST
+    from solr_map_reduce_spark.indexing import MANIFEST, read_index
 
     fs = get_fs(path, spark)
     manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
     analyzed: dict = manifest.get("analyzed", {})
-    stats = _whole_stats(spark, fs, path, analyzed)
-    if stats is None:
-        return None
+    if not analyzed:
+        return lambda: (None, None)
+    if touched is None:
+        new_rows = read_index(spark, path)
+        shards = list(range(int(manifest["shards"])))
+        stored, stored_blooms = {f: _ZERO for f in analyzed}, {}
+        n_buckets = _auto_buckets(_size_estimate(new_rows)) if stats else None
+    else:
+        shards = sorted(int(s) for s in touched)
+        stored = _whole_stats(spark, fs, path, analyzed) if stats else {}
+        stored_blooms = (term_blooms.load_term_blooms(spark, path) or {}) if blooms else {}
+        if stored is None or (blooms and not all(
+            {"m", "k"} <= set(stored_blooms.get(f, {})) for f in analyzed
+        )):
+            return None
+        n_buckets = int(load_vocab_meta(fs, path)["n_buckets"]) if stats else None
 
-    n_buckets = int(load_vocab_meta(fs, path)["n_buckets"])
-
-    new_stats: dict = {}
-    pending: dict[str, list[int]] = {}  # field -> touched buckets
+    # field -> its new stats, its touched buckets (None: all), its Blooms
+    new_stats, pending, sidecar = {}, {}, {}
     for field, info in analyzed.items():
-        change, touched, delta = _signed_delta(
-            old_subset, new_subset, info["tokens_col"], n_buckets
+        change, buckets, shard_terms, terms = _term_pass(
+            old_rows if stats else None, new_rows, info["tokens_col"],
+            n_buckets, shards if blooms else [],
         )
-        new_stats[field] = {k: int(v) + change[k] for k, v in stats[field].items()}
-        # pinned schema: untouched buckets are never read, not even to plan
-        vocab = read_vocab(spark, path, field, touched)
-        merged = (
-            vocab.join(delta, "term", "full_outer")
-            .select(
-                "term",
-                (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("_ddf"), F.lit(0)))
-                .alias("df"),
+        if stats:
+            new_stats[field] = {k: int(stored[field][k]) + v for k, v in change.items()}
+            pending[field] = None if touched is None else buckets
+            if touched is None or buckets:
+                # materialize NOW: the stored buckets it reads move at finalize
+                _write_vocab(spark, path, field, terms, n_buckets, pending[field])
+        if blooms:
+            sidecar[field] = term_blooms._field_blooms(
+                field, terms, shard_terms, stored_blooms.get(field)
             )
-            .filter(F.col("df") > 0)
-        )
-        # materialize NOW (reads the stored vocab buckets, which move at
-        # swap time; the delta is already checkpointed)
-        _write_buckets(
-            merged, n_buckets, fs_join(path, f"{VOCAB_DIR}/{field}__pending")
-        )
-        pending[field] = touched
 
-    def finalize() -> dict:
+    def finalize() -> tuple[dict | None, dict | None]:
+        if blooms:
+            fs.write_text(fs_join(path, term_blooms.BLOOMS), json.dumps(sidecar))
+        if not stats:
+            return sidecar, None
         # marker DOWN: from here until the final write, readers see no
         # stats file and fall back to computing statistics — correct
         # post-swap scores, never new-vocab-with-old-scalars skew
-        if fs.exists(fs_join(path, STATS)):
-            fs.delete(fs_join(path, STATS))
-        trash = fs_join(path, VOCAB_DIR, "__trash")
-        if fs.exists(trash):
-            fs.delete(trash)
-        fs.mkdirs(trash)
-        for field, touched in pending.items():
-            cur = fs_join(path, f"{VOCAB_DIR}/{field}")
-            pend = fs_join(path, f"{VOCAB_DIR}/{field}__pending")
-            # swap ONLY the touched buckets' partition dirs; a touched
-            # bucket with no pending dir lost all its terms — remove it
-            # (its old contents would otherwise serve stale dfs)
-            fs.mkdirs(fs_join(trash, field))
-            for b in touched:
-                bname = f"bucket={b}"
-                cur_b = fs_join(cur, bname)
-                if fs.exists(cur_b):
-                    fs.rename(cur_b, fs_join(trash, field, bname))
-                pend_b = fs_join(pend, bname)
-                if fs.exists(pend_b):
-                    fs.rename(pend_b, cur_b)
-            fs.delete(pend)
-        fs.delete(trash)
-        fs.write_text(fs_join(path, STATS), json.dumps(new_stats))
-        return new_stats
+        fs.delete(fs_join(path, STATS))
+        _swap_vocab(fs, path, pending)
+        _write_vocab_meta(fs, path, n_buckets)
+        fs.write_text(fs_join(path, STATS), json.dumps(new_stats))  # marker UP last
+        return (sidecar if blooms else None), new_stats
 
     return finalize
+
+
+def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset,
+                        touched: list[int], *, blooms: bool, stats: bool):
+    """O(touched) maintenance of the term sidecars for a touched-shard
+    rewrite (``merge_into``, ``update_fields``, ``delete_where``).
+    ``old_subset`` is the artifact content of the ``touched`` shards BEFORE
+    the swap (still readable); ``new_subset`` is the rewritten content (read
+    back from the staging dir).  All scans run HERE, pre-swap, in one
+    signed :func:`_term_pass` per analyzed field:
+
+    - ``stats' = stats - agg(old) + agg(new)`` (exact integer arithmetic —
+      identical to a full rebuild by associativity of count/sum);
+    - the term dictionary gets ``df'(t) = df_stored(t) + df_new(t) -
+      df_old(t)``, terms reaching 0 dropped.  Only changed terms can move,
+      so the stored vocab is read with a BUCKET-PRUNED scan and only those
+      buckets are staged (:func:`_write_vocab`) — O(changed-term
+      buckets), not O(|vocab|);
+    - with ``blooms``, the touched shards' bitmaps at the stored (m, k).
+
+    Returns a ``finalize()`` closure to call AFTER the artifact swap (see
+    :func:`_stage_terms`), or None when a maintained sidecar is torn — the
+    caller then runs the full write."""
+    return _stage_terms(spark, path, blooms, stats, old_subset, new_subset, touched)
 
 
 def _whole_stats(spark: SparkSession, fs, path: str, analyzed: dict) -> dict | None:

@@ -8,11 +8,14 @@ a handful of shards.  The sidecar closes that gap:
 
     out/_TERM_BLOOMS.json    {field: {m, k, shards: {"0": base64 bitmap}}}
 
-Build: one pass over the stored token column — ``(shard, token)`` distinct,
-k positions per token via ``xxhash64(token, i) % m`` (JVM-side), distinct
-positions per shard collected and packed into a bitmap driver-side.  The
-width m is sized from the largest per-shard distinct-term count
-(:func:`_auto_bloom_m`, 2^16 to 2^24 bits = 8 KiB to 2 MiB per shard).
+Build: the one term pass per analyzed field that the BM25 stats share
+(``search_stats._term_pass``) groups the stored tokens by term once and
+carries each term's shard set; k positions per (shard, term) via
+``xxhash64(term, i) % m`` (JVM-side), distinct positions per shard
+collected and packed into a bitmap driver-side.  The width m is sized from
+the largest per-shard distinct-term count, which an Observation on the
+pass's aggregate brings to the driver (:func:`_auto_bloom_m`, 2^16 to 2^24
+bits = 8 KiB to 2 MiB per shard).
 
 Query: ``SearchIndex.contains_all/any/phrase`` intersect the query terms
 with each shard's bitmap and add a ``shard IN (candidates)`` partition
@@ -23,8 +26,12 @@ Spark's XXH64 (:func:`_term_positions`), equal bit for bit to the build
 expression :func:`_positions_col`, so a probe runs no Spark job.
 
 Mutation safety: deleting rows leaves bitmaps a superset (still correct);
-``merge_into`` ADDS tokens, so it refreshes the touched shards' bitmaps
-when a sidecar exists (a stale bitmap there would be a false negative).
+``merge_into`` and ``update_fields`` ADD tokens, so when a sidecar exists
+the same term pass that moves the stats (``search_stats.prepare_stats_delta``)
+computes the touched shards' bitmaps at the stored (m, k) before the shard
+swap, and the commit writes them after it, before the generation advances
+(a stale bitmap there would be a false negative).  A sidecar that misses an
+analyzed field is rebuilt by the full pass after the swap.
 """
 
 from __future__ import annotations
@@ -70,25 +77,17 @@ def _positions_col(token: F.Column, m: int, k: int) -> F.Column:
     )
 
 
-def _max_shard_terms(terms) -> int:
-    """Largest per-shard distinct-term count of a distinct ``(_s, term)``
-    set — one cheap job over the (persisted) set the bitmap job reads
-    anyway, not a second corpus pass."""
-    return max(
-        (int(r["count"]) for r in terms.groupBy("_s").count().collect()),
-        default=0,
-    )
-
-
-def _bitmaps(terms, term_col: str, m: int, k: int) -> dict[str, str]:
-    """Base64 bitmap per shard of a distinct ``(_s, term_col)`` set.  The
-    distinct (shard, position) pairs are collected directly and packed
-    driver-side: grouping them per shard first would add a full exchange
-    of the position set only to reshape rows the driver unpacks anyway
-    (the collected volume is bounded by shards x m either way)."""
+def _bitmaps(terms, m: int, k: int) -> dict[str, str]:
+    """Base64 bitmap per shard of a term pass's ``(term, _shards)`` rows
+    (``search_stats._term_pass``).  The distinct (shard, position) pairs
+    are collected directly and packed driver-side: grouping them per shard
+    first would add a full exchange of the position set only to reshape
+    rows the driver unpacks anyway (the collected volume is bounded by
+    shards x m either way)."""
     bitmaps: dict[str, bytearray] = {}
     for row in (
-        terms.select("_s", F.explode(_positions_col(F.col(term_col), m, k)).alias("_p"))
+        terms.select(F.explode("_shards").alias("_s"), "term")
+        .select("_s", F.explode(_positions_col(F.col("term"), m, k)).alias("_p"))
         .distinct()
         .collect()
     ):
@@ -99,6 +98,37 @@ def _bitmaps(terms, term_col: str, m: int, k: int) -> dict[str, str]:
         p = row["_p"]
         bm[p // 8] |= 1 << (p % 8)
     return {s: base64.b64encode(bytes(bm)).decode() for s, bm in bitmaps.items()}
+
+
+def _field_blooms(field: str, terms, shard_terms: dict, stored: dict | None) -> dict:
+    """One field's sidecar entry from a term pass: ``terms`` carries each
+    term's ``_shards`` and ``shard_terms`` each shard's distinct-term
+    count.  A full write (``stored`` None) sizes the width with
+    :func:`_auto_bloom_m` from the largest count.  A refresh ADOPTS the
+    stored (m, k), so the untouched bitmaps stay valid by construction, and
+    replaces only the touched shards' bitmaps; it re-checks saturation: when
+    the touched shards' count leaves the stored width under half the
+    bits-per-term target, a loud warning recommends a full re-size."""
+    n_max = max(shard_terms.values(), default=0)
+    if stored is None:
+        m, k, maps = _auto_bloom_m(n_max), DEFAULT_K, {}
+    else:
+        m, k, maps = int(stored["m"]), int(stored["k"]), dict(stored.get("shards", {}))
+        if n_max and m < n_max * max(_BLOOM_BITS_PER_TERM // 2, 1):
+            # an adopted width never grows, so a corpus that outgrew it
+            # would silently decay to FP ~1: pruning dies while the build
+            # cost stays
+            warnings.warn(
+                f"term-bloom sidecar for field {field!r}: stored "
+                f"m={m} gives {m / n_max:.1f} bits/term for "
+                f"{n_max} distinct terms in the refreshed shards "
+                f"(target {_BLOOM_BITS_PER_TERM}); shard pruning is "
+                "degrading — run a full write_term_blooms(spark, "
+                "path) to re-size the bitmaps",
+                stacklevel=2,
+            )
+    maps.update(_bitmaps(terms, m, k))
+    return {"m": m, "k": k, "shards": maps}
 
 
 _MASK = (1 << 64) - 1
@@ -167,80 +197,16 @@ def _term_positions(term: str, m: int, k: int) -> list[int]:
     return out
 
 
-def write_term_blooms(
-    spark: SparkSession, path: str, shards: list[int] | None = None
-) -> dict | None:
+def write_term_blooms(spark: SparkSession, path: str) -> dict | None:
     """Compute and persist per-shard bitmaps for every analyzed field of the
-    artifact at ``path``.  Returns the sidecar dict (None when the artifact
-    has no analyzed fields).
+    artifact at ``path``, each width sized with :func:`_auto_bloom_m` from
+    the largest per-shard distinct-term count, from the one term pass per
+    field that the BM25 stats share (``search_stats._term_pass``).
+    Returns the sidecar dict (None when the artifact has no analyzed
+    fields)."""
+    from solr_map_reduce_spark.search_stats import _stage_terms
 
-    A full build sizes each field's width with :func:`_auto_bloom_m` from
-    the largest per-shard distinct-term count.  ``shards`` restricts the
-    recompute to those shard dirs (partition-pruned scan) and merges into
-    the existing sidecar — the ``merge_into`` refresh path.  It ADOPTS the
-    stored per-field (m, k), so the untouched bitmaps stay valid by
-    construction; when the sidecar is absent or misses an analyzed field
-    the untouched shards' bitmaps cannot be kept, and the refresh rebuilds
-    in full (a missing shard would be a query false negative).  Adopted
-    refreshes re-check saturation: when the touched shards' distinct-term
-    count leaves the stored width under half the bits-per-term target, a
-    loud warning recommends a full re-size."""
-    from solr_map_reduce_spark.fs import get_fs
-    from solr_map_reduce_spark.fs import join as fs_join
-    from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
-
-    fs = get_fs(path, spark)
-    manifest = json.loads(fs.read_text(fs_join(path, MANIFEST)))
-    analyzed: dict = manifest.get("analyzed", {})
-    if not analyzed:
-        return None
-    existing: dict = {}
-    if shards is not None and fs.exists(fs_join(path, BLOOMS)):
-        existing = json.loads(fs.read_text(fs_join(path, BLOOMS)))
-    # a subset refresh needs a stored (m, k) for every analyzed field
-    if not all({"m", "k"} <= set(existing.get(f, {})) for f in analyzed):
-        shards, existing = None, {}
-
-    idx = read_index(spark, path)
-    if shards is not None:
-        idx = idx.filter(F.col(SHARD_COL).isin([int(s) for s in shards]))
-    sidecar: dict = {}
-    for field, info in analyzed.items():
-        terms = (
-            idx.select(
-                F.col(SHARD_COL).alias("_s"),
-                F.explode(F.array_distinct(F.col(info["tokens_col"]))).alias("_t"),
-            )
-            .distinct()
-            .persist()
-        )
-        try:
-            n_max = _max_shard_terms(terms)
-            if shards is None:
-                m, k = _auto_bloom_m(n_max), DEFAULT_K
-            else:
-                m, k = int(existing[field]["m"]), int(existing[field]["k"])
-                if n_max and m < n_max * max(_BLOOM_BITS_PER_TERM // 2, 1):
-                    # an adopted width never grows, so a corpus that outgrew
-                    # it would silently decay to FP ~1: pruning dies while
-                    # the build cost stays
-                    warnings.warn(
-                        f"term-bloom sidecar for field {field!r}: stored "
-                        f"m={m} gives {m / n_max:.1f} bits/term for "
-                        f"{n_max} distinct terms in the refreshed shards "
-                        f"(target {_BLOOM_BITS_PER_TERM}); shard pruning is "
-                        "degrading — run a full write_term_blooms(spark, "
-                        "path) to re-size the bitmaps",
-                        stacklevel=2,
-                    )
-            shard_maps = dict(existing.get(field, {}).get("shards", {}))
-            shard_maps.update(_bitmaps(terms, "_t", m, k))
-        finally:
-            terms.unpersist()
-        sidecar[field] = {"m": m, "k": k, "shards": shard_maps}
-
-    fs.write_text(fs_join(path, BLOOMS), json.dumps(sidecar))
-    return sidecar
+    return _stage_terms(spark, path, blooms=True, stats=False)()[0]
 
 
 def load_term_blooms(spark: SparkSession, path: str) -> dict | None:

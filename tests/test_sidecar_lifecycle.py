@@ -194,20 +194,28 @@ def test_reader_delete_keeps_pinned_ann_sidecar(spark, artifact, tmp_path):
 
 def test_merge_commits_sidecars_before_the_generation(spark, artifact, monkeypatch):
     # a live handle querying mid-commit must not cache the pre-merge
-    # bitmaps under the post-merge generation (a Bloom false negative)
+    # bitmaps under the post-merge generation (a Bloom false negative):
+    # it queries just before the commit writes _TERM_BLOOMS.json
     idx = SearchIndex.open(spark, artifact)
     assert idx.contains_all(["common"]).count() == 60
-    real = term_blooms.write_term_blooms
+    real, commits = search_stats.prepare_stats_delta, []
 
-    def querying(*a, **kw):
-        try:
-            idx.contains_all(["zzmerge"]).count()
-        except Exception:
-            pass  # the handle may still point at swapped-out files
-        return real(*a, **kw)
+    def preparing(*a, **kw):
+        finalize = real(*a, **kw)
 
-    monkeypatch.setattr(term_blooms, "write_term_blooms", querying)
+        def querying():
+            commits.append(term_blooms.load_term_blooms(spark, artifact))
+            try:
+                idx.contains_all(["zzmerge"]).count()
+            except Exception:
+                pass  # the handle may still point at swapped-out files
+            return finalize()
+        return querying
+
+    monkeypatch.setattr(search_stats, "prepare_stats_delta", preparing)
     _merge(spark, artifact)
+    assert len(commits) == 1  # the hook ran, before the new bitmaps landed
+    assert commits[0] != term_blooms.load_term_blooms(spark, artifact)
     assert idx.contains_all(["zzmerge"]).count() == 2
 
 
@@ -514,22 +522,52 @@ def test_first_read_after_a_mutation_runs_no_job(spark, artifact):
     assert _rows_of(staged[0]) == _rows_of(rows)
 
 
-def test_merge_maintains_sidecars_in_few_jobs(spark, artifact, monkeypatch):
-    """A merge_into keeps the BM25 stats by one signed pass over the
-    touched shards (at most 6 jobs)."""
-    jobs = []
-    real = search_stats.prepare_stats_delta
+def _counted(spark, monkeypatch, module, name, group, jobs):
+    """Wrap ``module.name`` so that the Spark jobs of each call, and of
+    the ``finalize()`` it may return, add up in ``jobs``."""
+    real = getattr(module, name)
 
     def counted(*args, **kw):
         out = []
-        jobs.append(_jobs(spark, "merge-prepare_stats_delta",
-                          lambda: out.append(real(*args, **kw))))
-        return out[0]
+        jobs.append(_jobs(spark, group, lambda: out.append(real(*args, **kw))))
+        if not callable(out[0]):
+            return out[0]
 
-    monkeypatch.setattr(search_stats, "prepare_stats_delta", counted)
+        def finalize():
+            done = []
+            jobs.append(_jobs(spark, group + "-commit", lambda: done.append(out[0]())))
+            return done[0]
+        return finalize
+
+    monkeypatch.setattr(module, name, counted)
+
+
+def test_merge_maintains_sidecars_in_few_jobs(spark, artifact, monkeypatch):
+    """A merge_into keeps the term sidecars, the BM25 stats and the touched
+    shards' Blooms alike, by one signed term pass over the touched shards:
+    at most 6 jobs per analyzed field, its commit included, and no full
+    write."""
+    jobs, full = [], []
+    _counted(spark, monkeypatch, search_stats, "prepare_stats_delta", "merge-terms", jobs)
+    for module, name in ((search_stats, "write_search_sidecars"),
+                         (search_stats, "write_search_stats"),
+                         (term_blooms, "write_term_blooms")):
+        _counted(spark, monkeypatch, module, name, f"merge-{name}", full)
     _merge(spark, artifact)
+    assert len(jobs) == 2 and sum(jobs) <= 6, jobs
+    assert full == []
+    _assert_sidecars_fresh(spark, artifact)
+
+
+def test_build_writes_term_sidecars_in_few_jobs(spark, tmp_path, monkeypatch):
+    """A build writes both term sidecars from one term pass: at most 6
+    jobs per analyzed field."""
+    jobs = []
+    _counted(spark, monkeypatch, search_stats, "write_search_sidecars", "build-terms", jobs)
+    path = str(tmp_path / "idx")
+    _job().build(spark.createDataFrame(_rows(range(60), 1, "base", 1), COLS), path)
     assert len(jobs) == 1 and jobs[0] <= 6, jobs
-    _assert_stats_fresh(spark, artifact)
+    _assert_stats_fresh(spark, path)
 
 
 # Modules whose reads of engine-written datasets the guards below cover.

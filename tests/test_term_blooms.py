@@ -7,13 +7,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from solr_map_reduce_spark.index_reader import SearchIndex
-from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig
+from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, read_index
 from solr_map_reduce_spark.schema import Field, IndexSchema
-from solr_map_reduce_spark.term_blooms import (
-    candidate_shards,
-    load_term_blooms,
-    write_term_blooms,
-)
+from solr_map_reduce_spark.term_blooms import candidate_shards, load_term_blooms
 
 SCHEMA = IndexSchema(
     fields=(
@@ -25,10 +21,10 @@ SCHEMA = IndexSchema(
 
 
 def _cfg(**kw):
-    return IndexJobConfig(
-        schema=SCHEMA, shards=4, dedup="none", routing="native",
-        term_blooms=True, **kw,
-    )
+    return IndexJobConfig(**{
+        "schema": SCHEMA, "shards": 4, "dedup": "none", "routing": "native",
+        "term_blooms": True, **kw,
+    })
 
 
 @pytest.fixture(scope="module")
@@ -111,15 +107,33 @@ def test_no_sidecar_means_full_scan_same_results(spark, tmp_path):
     assert {r["id"] for r in idx.contains_all(["gamma"]).collect()} == {"b"}
 
 
+def _touching(spark, shard: int):
+    """A one-document merge batch routed to ``shard``."""
+    ids = spark.createDataFrame([(f"probe{i}", "") for i in range(64)],
+                                "id string, text string")
+    job = IndexJob(_cfg())
+    key = next(r["id"] for r in job.route(ids).collect() if r["shard"] == shard)
+    return spark.createDataFrame([(key, "common filler fresh")], "id string, text string")
+
+
+def _shard_row(spark, path, shard: int):
+    """One stored document of ``shard``, as a merge batch."""
+    got = read_index(spark, path).filter(F.col("shard") == shard).select("id", "text")
+    return spark.createDataFrame(got.limit(1).collect(), "id string, text string")
+
+
 def test_write_term_blooms_subset_merges(spark, built, tmp_path):
+    """A merge touching one shard rewrites that shard's bitmap only and
+    merges it into the sidecar: every other bitmap is kept as it was."""
     import shutil
 
     path = str(tmp_path / "index2")
     shutil.copytree(built, path)
     before = load_term_blooms(spark, path)["text"]["shards"]
-    write_term_blooms(spark, path, shards=[0])
+    IndexJob(_cfg()).merge_into(_touching(spark, 0), path)
     after = load_term_blooms(spark, path)["text"]["shards"]
     assert set(after) == set(before)  # untouched shards preserved
+    assert after["0"] != before["0"]  # the touched one gained "fresh"
     for s in before:
         if s != "0":
             assert after[s] == before[s]
@@ -155,11 +169,11 @@ def test_no_false_negatives_randomized(spark, tmp_path):
 
 
 def test_subset_refresh_auto_adopts_stored_params(spark, tmp_path, monkeypatch):
-    """A shards= refresh (what merge_into issues) ADOPTS the stored
-    sidecar's (m, k) instead of re-sizing with an O(corpus) full rebuild on
-    every delta touch: touched shards are recomputed at the stored width,
-    untouched bitmaps survive byte-for-byte, and every shard stays present
-    (no query false negatives)."""
+    """The refresh a merge runs ADOPTS the stored sidecar's (m, k) instead
+    of re-sizing with an O(corpus) full rebuild on every delta touch:
+    touched shards are recomputed at the stored width, untouched bitmaps
+    survive byte-for-byte, and every shard stays present (no query false
+    negatives)."""
     from solr_map_reduce_spark import term_blooms as tb
 
     out = str(tmp_path / "idx")
@@ -174,7 +188,9 @@ def test_subset_refresh_auto_adopts_stored_params(spark, tmp_path, monkeypatch):
     before = tb.write_term_blooms(spark, out)["text"]  # non-default width
     monkeypatch.undo()
     assert before["m"] > tb.DEFAULT_M
-    tb.write_term_blooms(spark, out, shards=[0])  # adopt stored, no re-size
+    # a row of shard 0 rewritten with the terms it already held
+    row = _shard_row(spark, out, 0)
+    IndexJob(_cfg(micro_shards=8, routing="solr")).merge_into(row, out)
     info = tb.load_term_blooms(spark, out)["text"]
     assert info["m"] == before["m"] and info["k"] == before["k"]
     assert set(info["shards"]) == {"0", "1", "2", "3"}
@@ -212,7 +228,7 @@ def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from solr_map_reduce_spark import term_blooms as tb
-    from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig
+    from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig, read_index
     from solr_map_reduce_spark.schema import Field, IndexSchema
 
     schema = IndexSchema(
@@ -254,10 +270,10 @@ def test_adaptive_m_above_gate_no_false_negatives(spark, tmp_path):
 
 
 def test_adopted_refresh_warns_on_saturated_width(spark, tmp_path, monkeypatch):
-    """An adopted subset refresh re-checks saturation: a stored width under
-    half the bits-per-term target for the touched shards' distinct-term
-    count warns loudly (the silent-FP-decay failure mode the r13 ADVICE
-    named), while a healthy width stays silent."""
+    """The adopted refresh a merge runs re-checks saturation: a stored
+    width under half the bits-per-term target for the touched shards'
+    distinct-term count warns loudly (a width that silently decays to a
+    false-positive rate near 1), while a healthy width stays silent."""
     import warnings
 
     import solr_map_reduce_spark.term_blooms as tb
@@ -268,20 +284,19 @@ def test_adopted_refresh_warns_on_saturated_width(spark, tmp_path, monkeypatch):
         F.col("id").cast("string").alias("id"),
         F.concat(F.lit("term"), F.col("id").cast("string")).alias("text"),
     )
-    IndexJob(
-        IndexJobConfig(schema=SCHEMA, shards=4, micro_shards=8, dedup="none")
-    ).build(df, out)
+    job = IndexJob(_cfg(micro_shards=8, routing="solr"))
+    job.build(df, out)
+    row = _shard_row(spark, out, 0)
     # healthy width: DEFAULT_M (2^16) over ~150 terms/shard -> silent
-    write_term_blooms(spark, out)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        write_term_blooms(spark, out, shards=[0])
+        job.merge_into(row, out)
     # saturate: a target of 50k bits/term leaves the stored 2^16 width far
     # under half of it for ~150 terms/shard, as a corpus that outgrew its
     # width would
     monkeypatch.setattr(tb, "_BLOOM_BITS_PER_TERM", 50_000)
     with pytest.warns(UserWarning, match="bits/term .* shard pruning is degrading"):
-        write_term_blooms(spark, out, shards=[0])
+        job.merge_into(row, out)
     # the adopted refresh still merged correctly despite the warning
     info = load_term_blooms(spark, out)["text"]
     assert info["m"] == tb.DEFAULT_M and set(info["shards"]) == {"0", "1", "2", "3"}
