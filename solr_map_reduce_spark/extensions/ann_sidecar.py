@@ -40,19 +40,22 @@ arithmetic and cut to a running top-k, so a sidecar knn page runs no
 Spark job on any filesystem scheme.  A ``{!knn preFilter=}`` adds one
 job: finding which probed keys the filter admits.
 
-Crash-safety (two-phase meta): every mutation first writes the meta
-with the NEW epoch but the OLD generation (consuming the epoch — a
-crashed attempt's partial delta/tombstone rows can never be revived by
-a later mutation reusing the number), then appends delta/tombstones,
-then re-pins ``built_generation`` last.  A crash anywhere in between
-leaves the meta stale → exact fallback.  Staleness is STICKY: every
-maintenance function is gated on the meta being pinned to the
+Maintenance is one pass for every mutation (:func:`delta_upsert`, run
+on one batch frame the mutation materialized before its shard swap):
+each sidecar is tombstoned and appended to, or only re-pinned.
+Crash-safety (two-phase meta): a sidecar the batch touches first gets
+its meta written with the NEW epoch but the OLD generation (consuming
+the epoch — a crashed attempt's partial delta/tombstone rows can never
+be revived by a later mutation reusing the number), then its
+delta/tombstones appended, then ``built_generation`` re-pinned last.  A
+crash anywhere in between leaves the meta stale → exact fallback.
+Staleness is STICKY: the pass is gated on each meta being pinned to the
 generation its mutation started from (``pre_gen``), so a sidecar left
-behind by ANY earlier event — crashed phase, legacy-schema skip,
-vector-column rewrite — is never re-pinned by later mutations; only
-``build_ann`` recovers it.  ``compact`` bumps the artifact generation
-before folding so live handles drop their memoized sidecar and serve
-exact during the fold window.
+behind by ANY earlier event — crashed phase, legacy-schema skip — is
+never re-pinned by later mutations; only ``build_ann`` recovers it.
+``compact`` bumps the artifact generation before folding so live
+handles drop their memoized sidecar and serve exact during the fold
+window.
 
 Reference parity: Solr 9's KnnQParser serves from a Lucene HNSW graph
 (sublinear per query, rebuilt per segment on reindex); the
@@ -543,7 +546,7 @@ def _dot_route_stats(spark: SparkSession, side: str, ivf) -> "dict | None":
     (count, Σ‖v‖², max ‖v‖) scalars are kept: ONE map-side-combined
     JVM aggregate over the written vectors table, n_centroids rows
     out.  Upserts fold their batch's stats in (O(batch),
-    :func:`_fold_dot_route`); deletes leave them a superset — the
+    :func:`_fold_batch_norms`); deletes leave them a superset — the
     stats steer probe-ranking QUALITY only, never correctness
     (full-probe exactness and the widening loop don't depend on
     them).  ``None`` when the corpus holds no vectors."""
@@ -579,31 +582,42 @@ def _dot_route_stats(spark: SparkSession, side: str, ivf) -> "dict | None":
     return {"max_norm": mx, "n": n, "sum_nrm2": s2}
 
 
-def _fold_dot_route(meta: dict, staged: DataFrame, field: str,
-                    bucket_col: str) -> None:
-    """Fold an upsert batch's per-bucket norm stats into the MIPS
-    probe-ranking stats (meta["dot_route"]) — O(batch) aggregate,
-    ≤ n_centroids rows collected.  Additive-only: replaced/deleted
-    rows are never subtracted, leaving the stats a superset of the
-    live corpus — acceptable because they steer probe ranking only;
-    build_ann recomputes them exactly."""
+def _fold_batch_norms(meta: dict, assigned: DataFrame, field: str,
+                      bucket_col: str) -> None:
+    """Fold an IVF upsert batch's norms into the meta from ONE per-bucket
+    aggregate over its assigned raw vectors (≤ n_centroids rows
+    collected).  ``unit_norms`` turns off unless every bucket's non-NULL
+    norms pass :func:`_is_unit` (a NaN norm fails it, as it does at build).
+    The MIPS probe-ranking stats (``dot_route``) add the batch's count,
+    Σ‖v‖² and max ‖v‖ over its finite norms only (:func:`_finite`).
+    Additive-only: replaced/deleted rows are never subtracted, leaving the
+    stats a superset of the live corpus — acceptable because they steer
+    probe ranking only; build_ann recomputes them exactly."""
     from solr_map_reduce_spark.extensions.similarity import _as_double, l2_norm
 
     nrm = l2_norm(_as_double(F.col(field)))
+    fin = _finite(nrm)
     got = (
-        staged.filter(_finite(nrm))
-        .groupBy(bucket_col)
+        assigned.groupBy(bucket_col)
         .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(nrm * nrm).alias("s2"),
-            F.max(nrm).alias("mx"),
+            F.count(F.when(fin, 1)).alias("n"),
+            F.sum(F.when(fin, nrm * nrm)).alias("s2"),
+            F.max(F.when(fin, nrm)).alias("mx"),
+            F.min(nrm).alias("lo"),
+            F.max(nrm).alias("hi"),
         )
         .collect()
     )
-    dr = meta["dot_route"]
+    if meta.get("unit_norms") and not all(
+        _is_unit(r["lo"], r["hi"]) for r in got if r["lo"] is not None
+    ):
+        meta["unit_norms"] = False
+    dr = meta.get("dot_route")
+    if not dr:
+        return
     for r in got:
-        b = int(r[bucket_col])
-        if 0 <= b < len(dr["n"]):
+        b = r[bucket_col]
+        if r["n"] and 0 <= b < len(dr["n"]):
             dr["n"][b] += int(r["n"])
             dr["sum_nrm2"][b] += float(r["s2"])
             dr["max_norm"] = max(float(dr["max_norm"]), float(r["mx"]))
@@ -710,11 +724,7 @@ def build(
             ),
         )
         row = obs.get
-        unit_norms = (
-            row["lo"] is not None
-            and abs(row["lo"] - 1.0) <= 1e-6
-            and abs(row["hi"] - 1.0) <= 1e-6
-        )
+        unit_norms = row["lo"] is not None and _is_unit(row["lo"], row["hi"])
         cents = ivf.centroids
         # MIPS probe-ranking stats: lets {!knn similarity=dot} route on
         # NON-unit corpora too (norm-augmented centroids); reads the
@@ -781,10 +791,15 @@ def build(
     return side
 
 
-def _all_unit_norms(
-    rows: DataFrame, field: str, tol: float = 1e-6, empty: bool = False
-) -> bool:
-    """True iff every non-null vector's L2 norm is within ``tol`` of 1 —
+def _is_unit(lo: float, hi: float) -> bool:
+    """Whether norms bounded by [lo, hi] are all unit: both bounds within
+    1e-6 of 1 (a NaN bound fails).  The one definition build and every
+    upsert share."""
+    return abs(lo - 1.0) <= 1e-6 and abs(hi - 1.0) <= 1e-6
+
+
+def _all_unit_norms(rows: DataFrame, field: str, empty: bool = False) -> bool:
+    """True iff every non-null vector's L2 norm passes :func:`_is_unit` —
     ONE map-side-combined min/max aggregate (JVM fold, no UDF).
     ``empty`` is the vacuous-case answer: False at build (an all-null
     corpus must not claim the invariant), True for an upsert batch that
@@ -797,7 +812,7 @@ def _all_unit_norms(
     ).first()
     if row is None or row["lo"] is None:
         return empty
-    return abs(row["lo"] - 1.0) <= tol and abs(row["hi"] - 1.0) <= tol
+    return _is_unit(row["lo"], row["hi"])
 
 
 # -- serve ---------------------------------------------------------------
@@ -1066,126 +1081,95 @@ def _admitted_keys(filter_keys: DataFrame, keys: list) -> set:
 
 # -- delta maintenance ---------------------------------------------------
 
-def delta_delete(
-    spark: SparkSession, index_path: str, deleted_ids: DataFrame,
-    key: str, pre_gen: str | None,
-) -> None:
-    """Delete-by-query delta: tombstone the deleted keys at a fresh
-    epoch and re-pin every sidecar — O(deleted), the sidecar stores no
-    file references so no vector rewrite is needed.
-
-    ``pre_gen`` (the artifact generation BEFORE this mutation) gates
-    every maintenance function: a sidecar whose meta is NOT pinned to
-    pre_gen missed an earlier mutation (crashed phase, legacy skip,
-    vector-rewrite invalidation) — re-pinning it here would REVIVE
-    stale data, so it stays stale until build_ann."""
-    fs = get_fs(index_path, spark)
-    new_gen = manifest_generation_hash(fs, index_path)
-    for _field, side in sidecars(fs, index_path):
-        meta = load_meta(fs, side)
-        if meta is None or new_gen is None:
-            continue
-        if pre_gen is None or meta.get("built_generation") != pre_gen:
-            continue  # already stale before this mutation: stay stale
-        epoch = int(meta.get("epoch", 0)) + 1
-        # phase 1: consume the epoch (old generation kept — a crash
-        # below leaves the sidecar stale, and the number is never reused)
-        meta["epoch"] = epoch
-        write_meta(fs, side, meta)
-        (
-            deleted_ids.select(
-                F.col(key), F.lit(epoch).cast("long").alias("tomb_epoch")
-            )
-            .write.mode("append")
-            .parquet(fs_join(side, TOMBSTONES))
-        )
-        # phase 2: re-pin
-        meta["built_generation"] = new_gen
-        write_meta(fs, side, meta)
-
-
 def delta_upsert(
     spark: SparkSession,
     index_path: str,
-    upserted_rows: DataFrame,
-    batch_keys: DataFrame,
+    frame: DataFrame | None,
     key: str,
     pre_gen: str | None,
 ) -> None:
-    """Upsert delta (merge_into / vector-field update_fields):
-    tombstone every batch key at a fresh epoch and append the
-    POST-RESOLUTION rows' vectors (IVF) / codes (IVF-PQ) at that epoch —
-    the winner of the resolver is what serves, whichever side it came
-    from.  Batch rows with a NULL vector get only the tombstone (their
-    document has no vector → correctly absent from ANN results, the
-    Lucene contract).  ``upserted_rows`` must be MATERIALIZED by the
-    caller before the staging swap.  O(batch) work.
+    """The one maintenance pass of every artifact mutation, run after the
+    generation advance.  ``frame`` is the mutation's batch, MATERIALIZED
+    by the caller before the staging swap:
 
-    Sidecars that do not :func:`load` (an older layout without a
-    recorded base schema, or unreadable), or whose meta is not pinned to
-    ``pre_gen`` (they missed an earlier mutation), are left stale (exact
-    fallback until rebuild)."""
+    - ``(key, vector columns...)`` for an upsert or update that rewrote
+      vector columns: every batch key with its post-rewrite vectors, NULL
+      where the rewrite left the document no vector;
+    - ``(key,)`` for a delete: the deleted keys;
+    - None when no vector column changed (an update of other columns,
+      a compaction).
+
+    Each sidecar pinned to ``pre_gen`` (the generation before this
+    mutation) that the frame touches — a delete touches every one, a
+    batch those whose vector column it carries — tombstones every frame
+    key at a fresh epoch and appends the non-NULL rows' vectors (IVF) /
+    codes (IVF-PQ) at that epoch: the winner of the resolver is what
+    serves, and a document without a vector is correctly absent from ANN
+    results (the Lucene contract).  Every other pinned sidecar only
+    re-pins: its vectors, delta and tombstones are all still exact.
+    O(batch) work.
+
+    A touched sidecar that does not :func:`load` (an older layout without
+    a recorded base schema, or unreadable) is left stale, as is every
+    sidecar not pinned to ``pre_gen`` (it missed an earlier mutation:
+    re-pinning it would revive stale data) — exact fallback until
+    ``build_ann``."""
     from solr_map_reduce_spark.extensions import similarity as sim
 
     fs = get_fs(index_path, spark)
     new_gen = manifest_generation_hash(fs, index_path)
+    cols = [] if frame is None else frame.columns
     for field, side in sidecars(fs, index_path):
         meta = load_meta(fs, side)
         if meta is None or new_gen is None:
             continue
         if pre_gen is None or meta.get("built_generation") != pre_gen:
             continue  # already stale before this mutation: stay stale
-        if field not in upserted_rows.columns:
-            continue  # stale: the batch did not carry this vector column
-        loaded = load(spark, side, meta)
-        if loaded is None:
-            continue  # stale: no epoch-stamped delta can match its base
-        kind, index, _sub, _schema = loaded
-        epoch = int(meta.get("epoch", 0)) + 1
-        meta["epoch"] = epoch
-        vec_rows = upserted_rows.select(key, field).filter(
-            F.col(field).isNotNull()
-        )
-        if meta.get("unit_norms"):
-            # a non-unit upserted vector breaks the invariant dot
-            # routing rests on (either kind): flip the flag (dot falls
-            # back exact; cosine keeps routing) — O(batch) aggregate
-            if not _all_unit_norms(vec_rows, field, empty=True):
-                meta["unit_norms"] = False
-        write_meta(fs, side, meta)  # phase 1: consume the epoch
-        if kind == "ivf":
-            staged = sim.IvfIndex(
-                index.centroids, id_col=key, vec_col=field,
-                bucket_col=index.bucket_col,
-            ).assign(vec_rows)
-        else:
-            ivf = index.ivf
-            assigned = sim.IvfIndex(
-                ivf.centroids, id_col=key, vec_col=field,
-                bucket_col=ivf.bucket_col,
-            ).assign(_unit_normalized(vec_rows, field))
-            staged = index.pq.encode(
-                assigned, code_col="pq_code", bucket_col=ivf.bucket_col
-            ).select(key, ivf.bucket_col, "pq_code")
-        bucket_col = (index if kind == "ivf" else index.ivf).bucket_col
-        if kind == "ivf" and meta.get("dot_route"):
-            # keep the MIPS probe-ranking stats current: fold the
-            # batch's per-bucket norms in (persisted by the phase-2
-            # re-pin write below)
-            _fold_dot_route(meta, staged, field, bucket_col)
-        (
-            staged.withColumn(EPOCH_COL, F.lit(epoch).cast("long"))
-            .write.mode("append")
-            .partitionBy(bucket_col)
-            .parquet(fs_join(side, DELTA))
-        )
-        (
-            batch_keys.select(
-                F.col(key), F.lit(epoch).cast("long").alias("tomb_epoch")
+        if cols == [key] or field in cols:
+            loaded = load(spark, side, meta)
+            if loaded is None:
+                continue  # stale: no epoch-stamped row can match its base
+            kind, index, _sub, _schema = loaded
+            ivf = index if kind == "ivf" else index.ivf
+            epoch = int(meta.get("epoch", 0)) + 1
+            meta["epoch"] = epoch
+            staged = None
+            if field in cols:
+                vec_rows = frame.select(key, field).filter(F.col(field).isNotNull())
+                assigner = sim.IvfIndex(
+                    ivf.centroids, id_col=key, vec_col=field,
+                    bucket_col=ivf.bucket_col,
+                )
+                if kind == "ivf":
+                    staged = assigner.assign(vec_rows)
+                    if meta.get("unit_norms") or meta.get("dot_route"):
+                        _fold_batch_norms(meta, staged, field, ivf.bucket_col)
+                else:
+                    # a non-unit vector breaks the invariant dot routing
+                    # rests on: dot falls back exact, cosine keeps routing
+                    if meta.get("unit_norms") and not _all_unit_norms(
+                        vec_rows, field, empty=True
+                    ):
+                        meta["unit_norms"] = False
+                    staged = index.pq.encode(
+                        assigner.assign(_unit_normalized(vec_rows, field)),
+                        code_col="pq_code", bucket_col=ivf.bucket_col,
+                    ).select(key, ivf.bucket_col, "pq_code")
+            # phase 1: consume the epoch (old generation kept — a crash
+            # below leaves the sidecar stale, and the number is never reused)
+            write_meta(fs, side, meta)
+            if staged is not None:
+                (
+                    staged.withColumn(EPOCH_COL, F.lit(epoch).cast("long"))
+                    .write.mode("append")
+                    .partitionBy(ivf.bucket_col)
+                    .parquet(fs_join(side, DELTA))
+                )
+            (
+                frame.select(F.col(key), F.lit(epoch).cast("long").alias("tomb_epoch"))
+                .write.mode("append")
+                .parquet(fs_join(side, TOMBSTONES))
             )
-            .write.mode("append")
-            .parquet(fs_join(side, TOMBSTONES))
-        )
         meta["built_generation"] = new_gen
         write_meta(fs, side, meta)  # phase 2: re-pin
 
@@ -1314,24 +1298,3 @@ def compact(spark: SparkSession, index_path: str, field: str) -> dict:
         write_meta(fs, side, meta)
         return {"affected_buckets": affected, "folded": True}
 
-
-def repin_only(spark: SparkSession, index_path: str,
-               changed_fields: "set[str]", pre_gen: str | None) -> None:
-    """A mutation that provably did not touch a sidecar's vector column
-    (update_fields on other columns) just re-pins the generation —
-    vectors, delta, and tombstones are all still exact.  Sidecars not
-    pinned to ``pre_gen`` missed an earlier mutation and stay stale."""
-    fs = get_fs(index_path, spark)
-    new_gen = manifest_generation_hash(fs, index_path)
-    if new_gen is None:
-        return
-    for field, side in sidecars(fs, index_path):
-        if field in changed_fields:
-            continue  # vector column rewritten: leave stale (rebuild)
-        meta = load_meta(fs, side)
-        if meta is None:
-            continue
-        if pre_gen is None or meta.get("built_generation") != pre_gen:
-            continue  # already stale before this mutation: stay stale
-        meta["built_generation"] = new_gen
-        write_meta(fs, side, meta)

@@ -801,13 +801,15 @@ class IndexJob:
         mutation committed since the caller planned against ``plan_gen``
         (the next generation, also the doc-version stamp); write the
         staging dir; let every present sidecar prepare while the old
-        files are still readable; swap the shard dirs; commit the term
-        sidecars (Blooms, stats); advance the generation (``body`` replaces
-        the manifest's content when given); delta or re-pin the ANN
-        sidecars, which pin themselves to that generation.  Sidecars
-        commit BEFORE the generation moves, so a live handle that reloads
-        on the new generation never caches a pre-rewrite sidecar under
-        it.  Returns the committed manifest."""
+        files are still readable (the ANN sidecars materialize one batch
+        frame); swap the shard dirs; commit the term sidecars (Blooms,
+        stats); advance the generation (``body`` replaces the manifest's
+        content when given); run the one ANN pass over that frame, which
+        tombstones and appends to, or only re-pins, each ANN sidecar and
+        pins it to the new generation.  The term sidecars commit BEFORE
+        the generation moves, so a live handle that reloads on the new
+        generation never caches a pre-rewrite sidecar under it.  Returns
+        the committed manifest."""
         fs = get_fs(path, spark)
         with _mutation_lock(fs, path, op):
             if self._next_generation(path) != plan_gen:
@@ -994,42 +996,30 @@ def _ann_present(rw: _Rewrite) -> bool:
     return bool(ann_sidecar.sidecars(rw.fs, rw.path))
 
 
-def _ann_changed_rows(rw: _Rewrite):
+def _ann_frame(rw: _Rewrite):
     # the pre-rewrite generation gates the maintenance (a sidecar pinned
-    # elsewhere missed an earlier mutation and stays stale); the batch
-    # keys and their post-rewrite vectors are materialized before the swap
-    # renames the files their plans read — O(batch) rows
+    # elsewhere missed an earlier mutation and stays stale); the batch is
+    # materialized before the swap renames the files its plan reads, as
+    # one O(batch) frame: every batch key with its post-rewrite vectors
+    # (NULL: none left), the deleted keys alone, or None when no vector
+    # column changed (a re-pin).  The staged scan is filtered in place by
+    # the broadcast keys, so only batch rows reach a shuffle however large
+    # the touched shards are; the keys' non-NULL filter (the one the semi
+    # join infers) makes both uses of the keys share one shuffle
     pre_gen = ann_sidecar.manifest_generation_hash(rw.fs, rw.path)
+    if rw.effect == "delete":
+        return pre_gen, rw.keys.localCheckpoint(eager=True)
     vec = [f for f, _s in ann_sidecar.sidecars(rw.fs, rw.path) if f in rw.changed]
     if not vec:
-        return pre_gen, None, None
-    keys = rw.keys.localCheckpoint(eager=True)
-    rows = (
-        rw.staged().select(rw.key, *vec)
-        .join(keys, on=rw.key, how="left_semi")
-        .localCheckpoint(eager=True)
-    )
-    return pre_gen, keys, rows
+        return pre_gen, None
+    keys = rw.keys.filter(F.col(rw.key).isNotNull())
+    rows = rw.staged().select(rw.key, *vec).join(F.broadcast(keys), rw.key, "left_semi")
+    return pre_gen, keys.join(rows, rw.key, "left").localCheckpoint(eager=True)
 
 
-def _ann_upsert(rw: _Rewrite, state) -> None:
-    # epoch append + tombstones for the rewritten vectors; every sidecar
-    # whose vector column provably did not change just re-pins
-    pre_gen, keys, rows = state
-    if rows is not None:
-        ann_sidecar.delta_upsert(rw.spark, rw.path, rows, keys, rw.key, pre_gen)
-    ann_sidecar.repin_only(rw.spark, rw.path, rw.changed, pre_gen)
-
-
-def _ann_deleted_keys(rw: _Rewrite):
-    return (
-        ann_sidecar.manifest_generation_hash(rw.fs, rw.path),
-        rw.keys.localCheckpoint(eager=True),
-    )
-
-
-def _ann_delete(rw: _Rewrite, state) -> None:
-    ann_sidecar.delta_delete(rw.spark, rw.path, state[1], rw.key, state[0])
+def _ann_commit(rw: _Rewrite, state) -> None:
+    pre_gen, frame = state
+    ann_sidecar.delta_upsert(rw.spark, rw.path, frame, rw.key, pre_gen)
 
 
 class _Sidecar(NamedTuple):
@@ -1049,13 +1039,11 @@ _SIDECARS = (
     }),
     # "build": an appended build leaves the sidecars stale (readers fall
     # back to the exact scan) until build_ann; they store vectors by key,
-    # no file names, so the other effects maintain them in O(batch)
-    _Sidecar(_ann_present, {
-        "upsert": (_ann_changed_rows, _ann_upsert),
-        "update": (_ann_changed_rows, _ann_upsert),
-        "delete": (_ann_deleted_keys, _ann_delete),
-        "same": (_ann_changed_rows, _ann_upsert),  # nothing changed: re-pin
-    }, after_generation=True),
+    # no file names, so every other effect maintains them in O(batch) by
+    # one pass over one frame ("same" changed no vector: a re-pin)
+    _Sidecar(_ann_present, dict.fromkeys(
+        ("upsert", "update", "delete", "same"), (_ann_frame, _ann_commit)
+    ), after_generation=True),
 )
 
 

@@ -615,6 +615,37 @@ class TestDegenerateVectors:
         got = {r["vec_id"]: r["bucket"] for r in ivf.assign(df).collect()}
         assert got == {0: None, 1: 1}
 
+    def test_merge_of_null_vectors_tombstones_and_appends_nothing(
+        self, spark, tmp_path
+    ):
+        # an existing key's vector set to NULL and a new key without one:
+        # both keys are tombstoned, neither reaches the delta
+        import pyarrow.parquet as pq
+
+        idx = self._artifact(spark, str(tmp_path / "idx"),
+                             [float(x) for x in VECS[0]])
+        side = idx.build_ann("embedding", kind="ivf", n_centroids=NC, nprobe=NC)
+        gone = _exact_ids(QUERIES[0], 1)[0]
+        batch = spark.createDataFrame(
+            [(gone, None, "x"), (700, None, "x")],
+            "vec_id long, embedding array<double>, label string",
+        )
+        _job("retain_most_recent").merge_into(batch, idx.path)
+        assert idx._ann_sidecar("embedding") is not None
+        for q in QUERIES.tolist():
+            routed = [r["vec_id"] for r in idx.knn(q, k=10).collect()]
+            exact = [r["vec_id"] for r in idx.knn(q, k=10, exact=True).collect()]
+            assert routed == exact and not {gone, 700} & set(routed)
+
+        def keys(sub):
+            return {k for root, _d, files in os.walk(os.path.join(side, sub))
+                    for f in files if f.endswith(".parquet")
+                    for k in pq.read_table(os.path.join(root, f),
+                                           columns=["vec_id"])["vec_id"].to_pylist()}
+
+        assert keys("tombstones") == {gone, 700}
+        assert keys("delta") == set()
+
     def test_ivfpq_over_a_zero_vector_serves_finite_scores(self, spark, tmp_path):
         idx = self._artifact(spark, str(tmp_path / "idx"), [0.0] * DIM)
         idx.build_ann("embedding", kind="ivfpq", n_centroids=4, nprobe=4,
@@ -1403,13 +1434,18 @@ class TestDotRouting:
         q = QUERIES[2]
         # upsert a LONG (non-unit) vector aligned with the query: it
         # must top the dot ranking but not cosine's by magnitude
+        # and a NaN vector, which turns unit_norms off but must not poison
+        # the MIPS stats
         batch = spark.createDataFrame(
-            [(900, [float(5.0 * x) for x in (q / np.linalg.norm(q))], "x")],
+            [(900, [float(5.0 * x) for x in (q / np.linalg.norm(q))], "x"),
+             (902, [float("nan")] * DIM, "x")],
             "vec_id long, embedding array<double>, label string",
         )
         _job("retain_most_recent").merge_into(batch, idx.path)
         meta = json.loads(open(os.path.join(side, "_ANN_META.json")).read())
         assert meta["unit_norms"] is False  # invariant broken by batch
+        dr = meta["dot_route"]
+        assert np.isfinite([dr["max_norm"], *dr["sum_nrm2"]]).all()
         # dot: serves the long vector first (r12: routed MIPS at full
         # probe — was the exact fallback before the dot_route stats)
         got = [r["vec_id"] for r in idx.query(

@@ -19,7 +19,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from solr_map_reduce_spark import search_stats, term_blooms
+from solr_map_reduce_spark import indexing, search_stats, term_blooms
 from solr_map_reduce_spark.extensions import ann_sidecar
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.index_reader import SearchIndex
@@ -559,6 +559,89 @@ def test_merge_maintains_sidecars_in_few_jobs(spark, artifact, monkeypatch):
     _assert_sidecars_fresh(spark, artifact)
 
 
+def test_ann_pass_runs_few_jobs(spark, artifact, monkeypatch):
+    """The ANN row maintains its sidecar with one prepare (one checkpointed
+    batch frame, before the swap) and one commit: a merge_into runs 4 jobs
+    for the frame and 4 for the commit (the batch's per-bucket norm
+    aggregate, the delta write, the tombstone write), a delete_where 1 and
+    1."""
+    jobs = {}
+    ann = next(s for s in indexing._SIDECARS if s.after_generation)
+
+    def counted(fn, phase):
+        def run(rw, *state):
+            out = []
+            jobs.setdefault(rw.effect, []).append(_jobs(
+                spark, f"ann-{rw.effect}-{phase}", lambda: out.append(fn(rw, *state))
+            ))
+            return out[0]
+        return run
+
+    cells = {effect: (counted(prepare, "prepare"), counted(commit, "commit"))
+             for effect, (prepare, commit) in ann.cells.items()}
+    monkeypatch.setattr(indexing, "_SIDECARS", tuple(
+        s._replace(cells=cells) if s is ann else s for s in indexing._SIDECARS
+    ))
+    _merge(spark, artifact)
+    _delete(spark, artifact)
+    assert set(jobs) == {"upsert", "delete"}
+    assert jobs["upsert"][0] <= 4 and jobs["upsert"][1] <= 4, jobs
+    assert jobs["delete"] == [1, 1], jobs
+    assert SearchIndex.open(spark, artifact)._ann_sidecar("embedding") is not None
+
+
+def _depth(line):
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def test_ann_frame_shuffles_only_batch_rows(spark, artifact, monkeypatch):
+    """The ANN batch frame filters the staged scan by the batch keys before
+    any shuffle, also when the touched shards are too large to broadcast
+    (the broadcast threshold is lowered below the fixture's shard size)."""
+    ann = next(s for s in indexing._SIDECARS if s.after_generation)
+    prepare, commit = ann.cells["upsert"]
+    plans = []
+
+    def recorded(rw):
+        frame_class = type(rw.keys)
+        checkpoint = frame_class.localCheckpoint
+
+        def record(df, *a, **kw):
+            out = checkpoint(df, *a, **kw)
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(frame_class, "localCheckpoint", record)
+            return prepare(rw)
+
+    monkeypatch.setattr(indexing, "_SIDECARS", tuple(
+        s._replace(cells={**s.cells, "upsert": (recorded, commit)}) if s is ann else s
+        for s in indexing._SIDECARS
+    ))
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "100")
+    try:
+        _merge(spark, artifact)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert len(plans) == 1, plans
+    lines = plans[0].split("== Initial Plan ==")[0].splitlines()
+    scans = [i for i, line in enumerate(lines) if "FileScan parquet" in line]
+    assert scans, plans[0]
+    for i in scans:
+        # the operators above the scan, innermost first, up to the semi join
+        above, depth = [], _depth(lines[i])
+        for line in reversed(lines[:i]):
+            if _depth(line) < depth:
+                depth = _depth(line)
+                above.append(line)
+                if "LeftSemi" in line:
+                    break
+        assert "LeftSemi" in above[-1], plans[0]
+        assert not any("Exchange" in line for line in above), plans[0]
+
+
 def test_build_writes_term_sidecars_in_few_jobs(spark, tmp_path, monkeypatch):
     """A build writes both term sidecars from one term pass: at most 6
     jobs per analyzed field."""
@@ -682,6 +765,37 @@ def _enclosing_functions(tree, name):
 
     visit(tree, None)
     return found
+
+
+def _writes_naming(tree, names):
+    """Innermost functions holding a ``.write...parquet(path)`` whose path
+    expression names one of ``names``."""
+    found = set()
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and "write" in _chain(node.func.value, {})
+                and names & {n.id for a in node.args for n in ast.walk(a)
+                             if isinstance(n, ast.Name)}):
+            found.add(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_one_ann_pass_writes_every_mutation():
+    """Every mutation maintains the ANN sidecars through one pass: in
+    ann_sidecar.py only build, compact and that pass (delta_upsert) write
+    a meta, and only that pass appends delta rows or tombstones."""
+    with open(os.path.join(PKG, "extensions", "ann_sidecar.py")) as fh:
+        tree = ast.parse(fh.read())
+    assert _enclosing_functions(tree, "write_meta") == {"build", "compact", "delta_upsert"}
+    assert _writes_naming(tree, {"DELTA", "TOMBSTONES"}) == {"delta_upsert"}
 
 
 def test_local_frames_are_built_only_by_the_helper():
