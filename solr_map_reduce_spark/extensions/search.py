@@ -8,18 +8,18 @@ answers them natively:
 - ``contains_all`` / ``contains_any`` — boolean term queries over the token
   array (C9's ``array_contains`` shape).
 - ``bm25_search`` — Okapi BM25 ranking (Robertson/Sparck Jones; the classic
-  ``(k1+1)`` formulation) computed as a DataFrame plan: one explode for
-  postings, tiny broadcast joins for document frequencies and corpus stats.
+  ``(k1+1)`` formulation) computed as a DataFrame plan: one projection of
+  per-document term frequencies, scored against the corpus statistics.
 
-Scale shape: the postings explode is a narrow map; ``df_t`` (per-term doc
-freq, |Q| rows) and corpus stats (1 row) broadcast; the only shuffle of
-consequence is the per-(doc,term) tf aggregation, keyed on the query's terms
-only — documents without query terms are filtered before the shuffle.
+Scale shape: the term frequencies are a narrow map; stored statistics
+(``df_t`` per query term, ``n_docs``, ``avgdl``) are literal columns of that
+map, and computed ones are a one-row aggregate broadcast back; the top-k is
+a TakeOrdered with no shuffle of document rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -152,6 +152,29 @@ def _bm25_term_expr(
     return F.when(tf > 0, raw).otherwise(F.lit(0.0))
 
 
+def _with_stats(
+    compact: DataFrame, stored: "Mapping[str, float] | None",
+    aggs: "Callable[[], list[F.Column]]",
+) -> DataFrame:
+    """``compact``'s rows with the BM25 statistics beside them as columns,
+    the one step :func:`bm25_search` and :func:`bm25_dismax` share.
+    ``stored`` (column name -> the sidecar's value) become literal columns
+    of the one scan: no join, so no job beyond the scan's own.  The
+    optimizer then folds each term's idf to a constant with the same
+    ``StrictMath.log`` and IEEE arithmetic that codegen runs, so scores
+    stay bit-identical to the computed path.  Without them, ``aggs()``
+    derive the statistics in a one-row aggregate over the checkpointed
+    compact table (small at any scale: an id, dls and tfs per document;
+    its two consumers share one tokenization), broadcast back to every
+    row."""
+    if stored is not None:
+        return compact.select(
+            "*", *[F.lit(v).alias(name) for name, v in stored.items()]
+        )
+    compact = compact.localCheckpoint(eager=False)
+    return compact.join(F.broadcast(compact.agg(*aggs())))
+
+
 def bm25_search(
     df: DataFrame,
     query_terms: Sequence[str],
@@ -181,11 +204,12 @@ def bm25_search(
 
     ``stored_stats=(n_docs, sum_dl, n_dl)`` + ``stored_dfs={term: df}`` switch to
     the serve-from-the-artifact path: corpus statistics come from the build
-    time sidecar instead of a per-query stats pass, so the plan is ONE scan
-    (which the caller may additionally shard-prune) + TakeOrdered.  Scores
-    are bit-identical to the computed-stats path: dl sums and df counts are
-    integers, exact in IEEE doubles far beyond any corpus size, so
-    ``avgdl = sum_dl/n_docs`` reproduces ``avg(dl)`` exactly.
+    time sidecar instead of a per-query stats pass, as literal columns of
+    the scan, so the plan is ONE scan (which the caller may additionally
+    shard-prune) + TakeOrdered, with no join: one Spark job to collect.
+    Scores are bit-identical to the computed-stats path: dl sums and df
+    counts are integers, exact in IEEE doubles far beyond any corpus size,
+    so ``avgdl = sum_dl/n_docs`` reproduces ``avg(dl)`` exactly.
 
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene-style bounded idf);
     score = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)).
@@ -196,10 +220,11 @@ def bm25_search(
     Plan shape (one corpus pass, zero wide shuffles): a single tokenize
     projection reduces each document to a compact "norms" row
     ``(id, dl, tf per query term)`` — the analog of Lucene's norms +
-    query-term postings.  That small table is checkpointed (so its two
-    consumers don't re-tokenize the corpus), a one-row aggregate computes
-    ``n_docs``/``avgdl``/``df_t`` for every term simultaneously, and scoring
-    is a broadcast of that row + a per-row expression + TakeOrdered(k).
+    query-term postings.  Without stored statistics that small table is
+    checkpointed (so its two consumers don't re-tokenize the corpus), a
+    one-row aggregate computes ``n_docs``/``avgdl``/``df_t`` for every
+    term simultaneously, and scoring is a broadcast of that row + a
+    per-row expression + TakeOrdered(k) (see :func:`_with_stats`).
     The earlier explode -> groupBy(id, term) -> groupBy(term) formulation
     evaluated the tokenizer three times and shuffled twice (~4x slower at
     sf0.1).
@@ -226,31 +251,26 @@ def bm25_search(
         F.col(id_col), F.size(toks).cast("double").alias("dl"), *tf_cols,
         *boost_proj,
     )
+    stored = None
     if stored_stats is not None and stored_dfs is not None:
         # n_docs = count(*) (idf denominator base); avgdl = sum(dl)/count(dl)
         # over non-null dl — exactly F.avg's semantics, exact because both
         # are integer-valued
         n_docs, sum_dl, n_dl = stored_stats
-        stats_cols = [
-            F.lit(float(n_docs)).alias("n_docs"),
-            F.lit(float(sum_dl) / float(n_dl) if n_dl else 0.0).alias("avgdl"),
-        ] + [
-            F.lit(float(stored_dfs.get(term, 0))).alias(f"_df{i}")
-            for i, term in enumerate(terms)
-        ]
-        stats = df.sparkSession.range(1).select(*stats_cols)
-    else:
-        # Small at any scale: (id, dl, |Q| tfs) per doc.  Checkpoint so the
-        # stats aggregate and the scoring pass share one tokenization.
-        compact = compact.localCheckpoint(eager=False)
-        stats = compact.agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            *[
-                F.sum((F.col(f"_tf{i}") > 0).cast("double")).alias(f"_df{i}")
-                for i in range(len(terms))
-            ],
-        )
+        stored = {
+            "n_docs": float(n_docs),
+            "avgdl": float(sum_dl) / float(n_dl) if n_dl else 0.0,
+            **{f"_df{i}": float(stored_dfs.get(term, 0))
+               for i, term in enumerate(terms)},
+        }
+    compact = _with_stats(compact, stored, lambda: [
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+        *[
+            F.sum((F.col(f"_tf{i}") > 0).cast("double")).alias(f"_df{i}")
+            for i in range(len(terms))
+        ],
+    ])
 
     norm_boosts = {t.lower(): float(w) for t, w in (boosts or {}).items()}
 
@@ -280,11 +300,7 @@ def bm25_search(
         c = F.col(f"_tf{i}") > 0
         hit = c if hit is None else (hit | c)
 
-    scored = (
-        compact.join(F.broadcast(stats))
-        .filter(hit)
-        .select(F.col(id_col), total.alias("score"))
-    )
+    scored = compact.filter(hit).select(F.col(id_col), total.alias("score"))
     if k is not None:  # k=None: every matching doc, unordered (rerank feeds)
         scored = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
     return scored if with_score else scored.select(id_col)
@@ -371,10 +387,11 @@ def bm25_dismax(
     the per-field analysis happens at the CALLER (each field analyzes
     the raw words with its own analyzer, Solr's per-field query
     analysis), and BM25 statistics are PER FIELD (Lucene's per-field
-    norms/docCount).  When every field carries stored stats the plan is
-    ONE scan + TakeOrdered; otherwise one extra aggregate over the same
-    checkpointed compact projection derives all fields' statistics
-    simultaneously.
+    norms/docCount).  When every field carries stored stats they are
+    literal columns of the scan and the plan is ONE scan + TakeOrdered,
+    with no join; otherwise one extra aggregate over the checkpointed
+    compact projection derives all fields' statistics simultaneously and
+    is broadcast back (:func:`_with_stats`, shared with bm25_search).
 
     ``exact_sum`` routes each (word, field) contribution through
     DECIMAL(18,6) before the max/tie/sum combination, making scores
@@ -384,7 +401,7 @@ def bm25_dismax(
 
     MAINTENANCE: this intentionally mirrors bm25_search's machinery
     (compact tf projection, stored-vs-computed stats, the BM25 term
-    expression, broadcast + TakeOrdered tail) generalized to per-field
+    expression, TakeOrdered tail) generalized to per-field
     statistics and the word-level max/tie combiner.  A change to the
     scoring formula or stats handling in either function must be
     mirrored in the other — their score parity is pinned by
@@ -458,33 +475,31 @@ def bm25_dismax(
         and field_specs[f].get("stored_dfs") is not None
         for f in fields
     )
+    stored = None
     if all_stored:
-        scols = []
+        stored = {}
         for f in fields:
             n, sdl, ndl = field_specs[f]["stored_stats"]
-            scols.append(F.lit(float(n)).alias(f"_n_{f}"))
-            scols.append(
-                F.lit(float(sdl) / float(ndl) if ndl else 0.0).alias(f"_avgdl_{f}")
-            )
+            stored[f"_n_{f}"] = float(n)
+            stored[f"_avgdl_{f}"] = float(sdl) / float(ndl) if ndl else 0.0
         for (f, t), i in tok_idx.items():
-            scols.append(
-                F.lit(float(field_specs[f]["stored_dfs"].get(t, 0))).alias(f"_df_{i}")
-            )
-        stats = df.sparkSession.range(1).select(*scols)
-    else:
-        compact = compact.localCheckpoint(eager=False)
-        aggs = []
+            stored[f"_df_{i}"] = float(field_specs[f]["stored_dfs"].get(t, 0))
+
+    def aggs() -> list:
+        cols = []
         for f in fields:
             # count(*), not count(dl): the stored-stats path's n_docs
             # counts ALL rows (search_stats counts the corpus), so the
             # derived path must too or idf diverges when a field is NULL
-            aggs.append(F.count(F.lit(1)).cast("double").alias(f"_n_{f}"))
-            aggs.append(F.avg(f"_dl_{f}").alias(f"_avgdl_{f}"))
+            cols.append(F.count(F.lit(1)).cast("double").alias(f"_n_{f}"))
+            cols.append(F.avg(f"_dl_{f}").alias(f"_avgdl_{f}"))
         for (_f, _t), i in tok_idx.items():
-            aggs.append(
+            cols.append(
                 F.sum((F.col(f"_tf_{i}") > 0).cast("double")).alias(f"_df_{i}")
             )
-        stats = compact.agg(*aggs)
+        return cols
+
+    compact = _with_stats(compact, stored, aggs)
 
     def tok_score(f: str, i: int) -> F.Column:
         return _bm25_term_expr(
@@ -564,8 +579,7 @@ def bm25_dismax(
             cnt = cnt + c.cast("int")
         hit = cnt >= req
     scored = (
-        compact.join(F.broadcast(stats))
-        .filter(hit)
+        compact.filter(hit)
         .select(F.col(id_col), total.alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

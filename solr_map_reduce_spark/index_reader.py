@@ -87,6 +87,17 @@ def _float_local_param(params: dict, name: str, default: float) -> float:
         ) from None
 
 
+def _sort_buckets(counts: DataFrame, order: "Sequence[F.Column]") -> DataFrame:
+    """Facet buckets in ``order``: one exchange into a single partition,
+    then a sort inside it.  A global ``orderBy`` would range-partition,
+    and its partitioner runs a sampling job on every read.  The final
+    aggregate before the exchange stays parallel, and only one row per
+    bucket crosses it.  (``coalesce(1)`` would save the exchange but run
+    that final aggregate in one task.)  Offset and limit then page the
+    one sorted partition, in the order ``orderBy`` gives."""
+    return counts.repartition(1).sortWithinPartitions(*order)
+
+
 def _int_local_param(params: dict, name: str, default: int) -> int:
     """Integer local param with a clean QuerySyntaxError on garbage
     (int('abc') would surface as a raw ValueError traceback)."""
@@ -435,6 +446,9 @@ class SearchIndex:
         ``mincount`` drops buckets below the floor (``facet.mincount``,
         a HAVING filter on the aggregate); ``offset`` skips leading
         buckets (``facet.offset``, facet paging — combine with ``top``).
+        Plan: one scan, a map-side-combined aggregate, and the buckets
+        sorted in one partition (:func:`_sort_buckets`), with no range
+        partitioning.
 
         ``filters`` are fq equality filters (field -> value, or a list of
         admitted values); ``exclude`` names filter KEYS to ignore while
@@ -512,7 +526,7 @@ class SearchIndex:
             # Solr facet.mincount: buckets below the floor drop — a
             # HAVING filter after the aggregate, before sort/paging
             out = out.filter(F.col("cnt") >= mincount)
-        out = out.orderBy(*order)
+        out = _sort_buckets(out, order)
         if offset:
             # Solr facet.offset: skip the first N buckets (facet paging)
             out = out.offset(offset)
@@ -4681,7 +4695,8 @@ class MultiIndex:
         global map-side-combined aggregate over the union.  Same Solr
         contract as the single-artifact facet (results identical to the
         unpartitioned collection): the NULL bucket is excluded unless
-        ``missing=True``; ``sort="index"`` orders by value."""
+        ``missing=True``; ``sort="index"`` orders by value.  The buckets
+        are sorted in one partition (:func:`_sort_buckets`)."""
         if sort not in ("count", "index"):
             raise ValueError(f"facet sort must be count|index, got {sort!r}")
         scans = [
@@ -4700,11 +4715,8 @@ class MultiIndex:
             [F.asc(field)] if sort == "index"
             else [F.desc("cnt"), F.asc(field)]
         )
-        out = (
-            unioned
-            .groupBy(field)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(*order)
+        out = _sort_buckets(
+            unioned.groupBy(field).agg(F.count(F.lit(1)).alias("cnt")), order
         )
         return out.limit(top) if top is not None else out
 

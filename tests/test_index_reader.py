@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from solr_map_reduce_spark.index_reader import SearchIndex
+from solr_map_reduce_spark.index_reader import MultiIndex, SearchIndex
 from solr_map_reduce_spark.indexing import IndexJob, IndexJobConfig
 from solr_map_reduce_spark.schema import Field, IndexSchema
 
@@ -422,3 +422,63 @@ class TestGenerationGuardAllMutators:
         assert idx.count() == 30
         assert idx.contains_all(["alpha"]).count() == 30
         assert idx.get("7").count() == 1
+
+
+# bucket counts with ties at 3 and 1 and a NULL bucket of 3, so count
+# order must break ties by value and place NULL by Spark's null ordering
+_CATS = ["c"] * 5 + ["a", "b", "e"] * 3 + ["d", "f", "g"] + [None] * 3
+
+
+def _want_facet(values, sort="count", missing=False, mincount=0, offset=0, top=None):
+    """The facet rows in order, counted and sorted in Python: count
+    descending then value ascending, or value ascending; NULL sorts first
+    in either (Spark's ascending default)."""
+    counts = {}
+    for v in values:
+        if v is not None or missing:
+            counts[v] = counts.get(v, 0) + 1
+    rows = [(v, n) for v, n in counts.items() if n >= mincount]
+    rows.sort(key=lambda r: (r[0] is not None, r[0] or ""))
+    if sort == "count":
+        rows.sort(key=lambda r: -r[1])  # stable: ties keep value order
+    rows = rows[offset:]
+    return rows if top is None else rows[:top]
+
+
+@pytest.fixture(scope="module")
+def facet_indexes(spark, tmp_path_factory):
+    schema = IndexSchema(
+        fields=(Field("id", "string", required=True), Field("cat", "string")),
+        unique_key="id",
+    )
+    rows = [(f"d{i:02d}", c) for i, c in enumerate(_CATS)]
+    paths = []
+    for part in (rows[0::2], rows[1::2]):
+        out = str(tmp_path_factory.mktemp("facet") / "idx")
+        IndexJob(IndexJobConfig(schema=schema, shards=3, dedup="none")).build(
+            spark.createDataFrame(part, "id string, cat string"), out
+        )
+        paths.append(out)
+    whole = str(tmp_path_factory.mktemp("facet") / "whole")
+    IndexJob(IndexJobConfig(schema=schema, shards=3, dedup="none")).build(
+        spark.createDataFrame(rows, "id string, cat string"), whole
+    )
+    return SearchIndex.open(spark, whole), MultiIndex.open(spark, paths)
+
+
+@pytest.mark.parametrize("kw", [
+    {}, {"missing": True}, {"sort": "index"}, {"sort": "index", "missing": True},
+    {"top": 3}, {"missing": True, "top": 2},
+    {"offset": 2, "top": 3}, {"sort": "index", "offset": 1, "top": 4},
+    {"mincount": 3}, {"mincount": 2, "missing": True, "offset": 1},
+])
+def test_facet_rows_and_order_match_a_python_sort(facet_indexes, kw):
+    """Facet rows, in order, equal a Python count-and-sort of the values:
+    count ties by value ascending, the NULL bucket with ``missing=True``,
+    ``sort="index"``, ``offset`` with ``top``, and ``mincount`` — on one
+    artifact and on an alias of two that split the rows."""
+    idx, multi = facet_indexes
+    want = _want_facet(_CATS, **kw)
+    assert [tuple(r) for r in idx.facet("cat", **kw).collect()] == want
+    if not {"offset", "mincount"} & set(kw):  # the alias facet has neither
+        assert [tuple(r) for r in multi.facet("cat", **kw).collect()] == want

@@ -338,9 +338,10 @@ def test_c9_search_request_single_scan_take_ordered(spark, sf_dir):
 
 
 def test_dismax_is_one_scan_plus_takeordered(spark, sf_dir):
-    """Round-8 dismax with per-field stored stats: the WHOLE multi-field
-    ranked query is ONE corpus scan + a broadcast of the one-row stats +
-    TakeOrdered — no per-field scan, no shuffle of document rows."""
+    """Dismax with per-field stored stats: the WHOLE multi-field ranked
+    query is ONE corpus scan, with the stats as literal columns, +
+    TakeOrdered — no per-field scan, no join of a stats row, no shuffle
+    of document rows."""
     from solr_map_reduce_spark.queries import _dismax_search_index
 
     idx = _dismax_search_index(spark, sf_dir)
@@ -350,7 +351,23 @@ def test_dismax_is_one_scan_plus_takeordered(spark, sf_dir):
     )
     assert plan.count("FileScan parquet") == 1
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    assert "Join" not in plan and "Exchange" not in plan
+
+
+def test_facet_sorts_without_range_partitioning(spark, sf_dir):
+    """A facet's buckets are sorted inside one partition: no
+    range-partitioning exchange, whose partitioner would run a sampling
+    job on every read, on the single-artifact or the alias path."""
+    from solr_map_reduce_spark.index_reader import MultiIndex
+    from solr_map_reduce_spark.queries import _dismax_search_index
+
+    idx = _dismax_search_index(spark, sf_dir)
+    for out in (idx.facet("lang"), idx.facet("lang", sort="index", offset=1),
+                MultiIndex([idx, idx]).facet("lang")):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan.lower()
+        assert "SinglePartition" in plan
 
 
 def test_range_facet_broadcasts_bucket_spine(spark, sf_dir):

@@ -83,9 +83,11 @@ def test_stored_plan_is_single_pass(spark, built):
         ._jdf.queryExecution().executedPlan().toString()
     )
     # the computed path checkpoints the compact table; the stored path must
-    # not (no scan of an RDD checkpoint, one FileScan of the artifact)
+    # not (no scan of an RDD checkpoint, one FileScan of the artifact), and
+    # its statistics are literal columns of that scan, not a joined row
     assert "ExistingRDD" not in plan and "Scan ExistingRDD" not in plan
     assert plan.count("FileScan parquet") == 1
+    assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
 
 

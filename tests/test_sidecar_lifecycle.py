@@ -17,6 +17,7 @@ import shutil
 
 import numpy as np
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from solr_map_reduce_spark import indexing, search_stats, term_blooms
@@ -32,6 +33,7 @@ from solr_map_reduce_spark.indexing import (
 )
 from solr_map_reduce_spark.schema import Field, IndexSchema
 from solr_map_reduce_spark.search_stats import load_search_stats, write_search_stats
+from solr_map_reduce_spark.session import get_spark
 
 DIM, NC = 8, 4
 COLS = "id string, text string, v long, embedding array<double>"
@@ -465,6 +467,73 @@ def test_read_planning_runs_no_job(spark, artifact):
     }
     assert len(idx.knn(QUERIES[1].tolist(), k=5).collect()) == 5
     assert idx.get("zzz-absent").count() == 0
+
+
+def test_collected_reads_run_their_job_budget(spark, artifact):
+    """The jobs each read kind runs when collected, on a warm handle after
+    a ``merge_into``: a get reads its admitted segments (1), a bm25 with
+    stored statistics is one scan with the statistics as literal columns
+    (1, no broadcast of a stats row), a sorted search is one TakeOrdered
+    (1), a facet is the aggregate's shuffle map, the single-partition
+    sort and the result (3, no range-partition sampling) and a sidecar
+    knn is a local frame (0)."""
+    _merge(spark, artifact)
+    idx = SearchIndex.open(spark, artifact)
+    idx.search(q="w1 AND common", filters={"v": 1}, sort=[("id", "asc")],
+               select=["id"], limit=5).collect()
+    idx.facet("v", q="t3").collect()
+    idx.get("k001").collect()
+    idx.bm25(["w1", "common"], k=5).collect()
+    idx.knn(QUERIES[0].tolist(), k=5).collect()
+    reads = {
+        "get": lambda: idx.get("k007").collect(),
+        "bm25": lambda: idx.bm25(["w3", "t6"], k=5).collect(),
+        "search": lambda: idx.search(q="w2 AND t4", filters={"v": 1},
+                                     sort=[("id", "asc")], select=["id"],
+                                     limit=5).collect(),
+        "facet": lambda: idx.facet("v", q="t5").collect(),
+        "knn": lambda: idx.knn(QUERIES[1].tolist(), k=5).collect(),
+    }
+    assert {name: _jobs(spark, f"collect-{name}", fn) for name, fn in reads.items()} == {
+        "get": 1, "bm25": 1, "search": 1, "facet": 3, "knn": 0,
+    }
+
+
+def _round_trips(spark, fn):
+    """py4j commands ``fn`` sends to the JVM, counted by wrapping the
+    gateway client's ``send_command``."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    sent = []
+
+    def counting(self, *args, **kwargs):
+        sent.append(1)
+        return send(self, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return len(sent)
+
+
+def test_bm25_planning_stays_under_a_round_trip_bound(spark, artifact, monkeypatch):
+    """Planning a 2-term bm25 on a warm handle sends about 250 py4j
+    commands with the engine session's call-site capture off (about 900
+    with it on: every DataFrame and Column call then reads the session
+    and its conf, and sets and clears the JVM-side origin).  The session
+    reports the flag off, and ``extra_conf`` hands the builder of a new
+    session the caller's value instead (the flag is static, so it is
+    checked at the builder, not on the running session)."""
+    flag = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(flag) == "false"
+    idx = SearchIndex.open(spark, artifact)
+    idx.bm25(["w1", "common"], k=5)
+    assert _round_trips(spark, lambda: idx.bm25(["w3", "t6"], k=5)) < 350
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: b._options)
+    assert get_spark()[flag] == "false"
+    assert get_spark(extra_conf={flag: "true"})[flag] == "true"
 
 
 def test_file_uri_answers_equal_the_plain_path(spark, artifact):
